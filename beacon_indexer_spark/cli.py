@@ -31,6 +31,7 @@ from beacon_indexer_spark.sources.beacon_api import (
     FetchConfig,
     LOADERS,
     bootstrap_schedule,
+    fetch_slot_list_distributed,
     fetch_slots_distributed,
 )
 from beacon_indexer_spark.sources.beacon_api import FetchMetrics
@@ -137,6 +138,24 @@ ROLLUP_SPECS: dict = {
 }
 
 
+def _fetch_range(spark, fetch_cfg, spec, start, end, schedule, chunk_size,
+                 api_factory, metrics=None):
+    """Distributed fetch of one loader over a slot range. Daily-snapshot
+    loaders (validators, pending queues) fetch only the last slot of each
+    UTC day in it, as the realtime loop does."""
+    if spec.daily:
+        day_ends = L.daily_slots(spark, start, end, schedule.genesis_time,
+                                 schedule.seconds_per_slot)
+        return fetch_slot_list_distributed(
+            spark, fetch_cfg, spec, day_ends, schedule,
+            slots_per_task=chunk_size, api_factory=api_factory, metrics=metrics,
+        )
+    return fetch_slots_distributed(
+        spark, fetch_cfg, spec, start, end, schedule,
+        slots_per_task=chunk_size, api_factory=api_factory, metrics=metrics,
+    )
+
+
 def _services(args, spark: SparkSession):
     if args.bootstrap:
         schedule, _, _ = bootstrap_schedule(BeaconAPI(args.beacon_url))
@@ -181,10 +200,9 @@ def main(
             )
             ledger.append(chunks)
             fm = FetchMetrics(spark, name)
-            df = fetch_slots_distributed(
+            df = _fetch_range(
                 spark, fetch_cfg, spec, args.start_slot, args.end_slot,
-                lake.schedule, slots_per_task=cfg.chunk_size,
-                api_factory=api_factory, metrics=fm,
+                lake.schedule, cfg.chunk_size, api_factory, metrics=fm,
             )
             lake.write(spec.raw_table, df)
             fm.fold()
@@ -340,9 +358,9 @@ def main(
 
             for run in _coalesce_ranges(load_ranges):
                 s, e = run[0][0], run[-1][1]
-                df = fetch_slots_distributed(
+                df = _fetch_range(
                     spark, fetch_cfg, spec, s, e, lake.schedule,
-                    slots_per_task=cfg.chunk_size, api_factory=api_factory,
+                    cfg.chunk_size, api_factory,
                 )
                 lake.write(spec.raw_table, df)
             ledger.mark(failed_loads, L.COMPLETED)

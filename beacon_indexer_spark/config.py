@@ -58,6 +58,15 @@ class ForkSchedule:
     def slot_to_timestamp(self, slot: int) -> int:
         return self.genesis_time + slot * self.seconds_per_slot
 
+    def utc_day_bounds(self, start_slot: int, end_slot: int) -> tuple[int, int]:
+        """First slot of ``start_slot``'s UTC day and last slot of
+        ``end_slot``'s — the slots of the daily ``date=`` partitions the
+        range's rows are stored in."""
+        g, sps, day = self.genesis_time, self.seconds_per_slot, 86400
+        first_ts = self.slot_to_timestamp(start_slot) // day * day
+        end_ts = self.slot_to_timestamp(end_slot) // day * day + day
+        return max(0, -(-(first_ts - g) // sps)), (end_ts - 1 - g) // sps
+
     def as_rows(self) -> list[tuple[str, int, int]]:
         """(fork, activation_epoch, activation_slot) rows for a broadcast
         fork-schedule DataFrame; FAR_FUTURE forks excluded."""
@@ -150,7 +159,6 @@ class EngineConfig:
         "pending_partial_withdrawals",
         "data_column_sidecars",
     )
-    validators_daily_mode: bool = True  # snapshot last slot of each UTC day
 
 
 def default_config() -> EngineConfig:

@@ -123,12 +123,18 @@ def minhash_signatures(
     ``shingled``: pass a pre-built ``(id_col, __sh)`` shingle-array frame
     (e.g. a checkpoint shared with an exact-Jaccard side) to skip the
     tokenize+shingle stage here — callers that consume the shingle sets
-    AND the signatures pay the regexp-heavy pass once (r13, §1.2).
+    AND the signatures pay the regexp-heavy pass once (r13, §1.2). Its
+    columns must be exactly ``(id_col, "__sh")`` (a schema check, no job).
     """
     if shingled is None:
         shingled = df.select(
             F.col(id_col).cast("long").alias(id_col),
             word_shingles(text_col, shingle_n).alias("__sh"),
+        )
+    elif tuple(shingled.columns) != (id_col, "__sh"):
+        raise ValueError(
+            f"shingled frame must have columns ({id_col!r}, '__sh'), "
+            f"got {tuple(shingled.columns)}"
         )
     hashed = shingled.select(
         F.col(id_col),
@@ -654,24 +660,6 @@ def winnow_pairs(
     return counted.filter(F.col("n_shared") >= min_shared)
 
 
-# extra pointer jumps per CC round on the BROADCAST path (see
-# connected_components): each jump is one more probe of the same in-memory
-# broadcast relation (no job, no exchange) and extends path compression from
-# label[label[n]] to label^(1+jumps)[n], cutting the number of serial rounds
-# on chain-shaped components. 0 = the r12 single-jump plan (A/B hook).
-#
-# MEASURED 0 (r13, tools/ab_cc.py interleaved same-JVM, sf0.1, 32 cores):
-# jumps=2 lost on every LSH->CC spine query (+0.43..+0.67 s medians over
-# corpus_dedup_summary / source_token_budget / dedup_cluster_size_dist /
-# split_leakage_guard / doc_keep_list) and jumps=1 lost too (+0.18..+0.54).
-# Dup components on real near-dup corpora are SHALLOW (mostly 2-3 nodes),
-# so extra jumps never cut the round count — they only push |V| more rows
-# per jump through the broadcast join into the min-aggregate every round.
-# The hook + equivalence tests stay so a chain-heavy corpus can flip it
-# after measuring (tools/ab_cc.py).
-_CC_BROADCAST_EXTRA_JUMPS = 0
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -680,7 +668,6 @@ def connected_components(
     node_col: str = "node",
     label_col: str = "cluster_id",
     broadcast_rows: int | None = 4_000_000,
-    extra_jumps: int | None = None,
 ) -> DataFrame:
     """Duplicate-cluster assignment from candidate pairs: (node, cluster_id)
     where cluster_id = the minimum id reachable through the pair graph —
@@ -767,8 +754,6 @@ def connected_components(
     )
     n_labels = int(obs0.get["n"] or 0)
     null_l = F.lit(None).cast(pairs.schema[id_a].dataType)
-    if extra_jumps is None:
-        extra_jumps = _CC_BROADCAST_EXTRA_JUMPS
     for i in range(max_iter):
         # the label frame is node-deduplicated and exactly counted by the
         # previous round's observation — broadcast it into the per-round
@@ -807,39 +792,6 @@ def connected_components(
         looked_up = requests.join(
             lab, requests["__key"] == lab["node"]
         ).select(F.col("__out").alias("node"), "label", "__old")
-        # r13 extra pointer jumps (BROADCAST path only): with the label
-        # frame already an in-memory broadcast relation, each further
-        # label^(j)[n] delivery is one more probe of the SAME broadcast
-        # (ReuseExchange — no new job, no exchange, |V| extra rows into
-        # the existing aggregate) and multiplies per-round path
-        # compression, cutting the count of serial rounds on chain
-        # components. The shuffle fallback keeps the r12 single-jump
-        # plan: there an extra jump would be a full |V| shuffle join per
-        # level — exactly the wrong trade at raw-crawl scale. Depth is
-        # physical-plan-only: any jump depth converges to the same
-        # min-reachable fixpoint, and changed == 0 still certifies the
-        # standard operator's fixpoint (the jump deliveries are a
-        # superset of the standard ones).
-        if bcast and extra_jumps > 0:
-            cur = labels.select(
-                F.col("node").alias("__out"), F.col("label").alias("__key")
-            )
-            # advance to label^2 (already delivered by the main lookup),
-            # then deliver label^3 .. label^(2+extra_jumps)
-            cur = cur.join(lab, cur["__key"] == lab["node"]).select(
-                F.col("__out"), F.col("label").alias("__key")
-            )
-            for _j in range(extra_jumps):
-                cur = cur.join(lab, cur["__key"] == lab["node"]).select(
-                    F.col("__out"), F.col("label").alias("__key")
-                )
-                looked_up = looked_up.unionByName(
-                    cur.select(
-                        F.col("__out").alias("node"),
-                        F.col("__key").alias("label"),
-                        null_l.alias("__old"),
-                    )
-                )
         obs = Observation(f"cc_round_{i}")
         merged = (
             looked_up

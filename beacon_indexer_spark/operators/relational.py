@@ -22,48 +22,6 @@ def top_k(
     return df.orderBy(*order_by).limit(k)
 
 
-def top_k_per_group(
-    df: DataFrame,
-    group_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    k: int,
-) -> DataFrame:
-    """Top-k rows per group via row_number window."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*group_by).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def grouped_status_counts(
-    df: DataFrame, group_cols: Sequence[str], status_col: str, statuses: Sequence[str]
-) -> DataFrame:
-    """countIf-style pivot (reference A3, src/services/clickhouse.py:266-284):
-    one row per group with a count column per status value. Partial
-    aggregation map-side; single shuffle."""
-    aggs = [
-        F.sum(F.when(F.col(status_col) == s, 1).otherwise(0)).alias(f"n_{s}")
-        for s in statuses
-    ]
-    return df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n_total"), *aggs)
-
-
-def time_bucketed(
-    df: DataFrame,
-    ts_col: str,
-    granularity: str,
-    aggs: dict[str, Column],
-) -> DataFrame:
-    """GROUP BY toStartOfHour/Day (reference A8,
-    docs/CLICKHOUSE_GUIDE.md:363-375) — `date_trunc` + groupBy."""
-    bucket = F.date_trunc(granularity, F.col(ts_col)).alias("bucket")
-    return df.groupBy(bucket).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
 def detect_gaps(
     df: DataFrame, key_col: str, start: int | None = None, end: int | None = None
 ) -> DataFrame:
@@ -84,21 +42,6 @@ def detect_gaps(
         return spark.range(0).select(F.col("id").alias(key_col))
     expected = spark.range(start, end + 1).select(F.col("id").alias(key_col))
     return expected.join(keyed, key_col, "left_anti")
-
-
-def gap_stats(df: DataFrame, key_col: str) -> DataFrame:
-    """Gap % summary (reference A5 + C12): expected vs actual distinct keys."""
-    return df.agg(
-        F.min(key_col).cast("long").alias("min_key"),
-        F.max(key_col).cast("long").alias("max_key"),
-        F.count_distinct(key_col).alias("actual"),
-    ).select(
-        "min_key",
-        "max_key",
-        "actual",
-        (F.col("max_key") - F.col("min_key") + 1).alias("expected"),
-        (F.col("max_key") - F.col("min_key") + 1 - F.col("actual")).alias("missing"),
-    )
 
 
 def untransformed_ranges(
@@ -417,18 +360,6 @@ def interval_overlap_join(
             & (F.col("__b") == claim)
         )
         .drop("__b")
-    )
-
-
-def grouped_concat(
-    df: DataFrame, group_by: Sequence[str], value_col: str, sep: str = ","
-) -> DataFrame:
-    """GROUP_CONCAT with deterministic ordering (reference A7,
-    scripts/maintenance.py:140-146): sort_array(collect_list) + array_join."""
-    return df.groupBy(*group_by).agg(
-        F.array_join(F.array_sort(F.collect_list(F.col(value_col).cast("string"))), sep).alias(
-            "concat"
-        )
     )
 
 

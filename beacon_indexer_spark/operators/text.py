@@ -390,28 +390,10 @@ def punct_count(text: ColumnOrName) -> Column:
     return F.size(F.regexp_extract_all(_col(text), F.lit(r"[^\w\s]"), 0))
 
 
-def digit_ratio(text: ColumnOrName) -> Column:
-    t = _col(text)
-    return F.when(F.length(t) > 0,
-                  F.size(F.regexp_extract_all(t, F.lit(r"[0-9]"), 0)) / F.length(t)
-                  ).otherwise(F.lit(0.0))
-
-
 def mean_token_length(text: ColumnOrName) -> Column:
     tk = tokens(text)
     total = F.aggregate(tk, F.lit(0), lambda a, t: a + F.length(t))
     return F.when(F.size(tk) > 0, total / F.size(tk)).otherwise(F.lit(0.0))
-
-
-_STOPWORDS_EN = ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"]
-
-
-def stopword_ratio(text: ColumnOrName, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are stopwords."""
-    sw = stopwords or _STOPWORDS_EN
-    tk = tokens(F.lower(_col(text)))
-    n_sw = F.size(F.filter(tk, lambda t: t.isin(sw)))
-    return F.when(F.size(tk) > 0, n_sw / F.size(tk)).otherwise(F.lit(0.0))
 
 
 def quality_score(text: ColumnOrName) -> Column:

@@ -171,8 +171,16 @@ class BeaconPipeline:
 
     def repair_range(self, raw_table: str, start_slot: int, end_slot: int) -> dict[str, int]:
         """Re-transform a range and overwrite only the affected daily
-        partitions — the DELETE-free repair (reference C9→ SURVEY §4)."""
-        return self.transform_range(raw_table, start_slot, end_slot, mode="overwrite")
+        partitions — the DELETE-free repair (reference C9→ SURVEY §4).
+
+        The overwrite replaces whole ``date=`` partitions, so the
+        re-transform covers every slot of the range's UTC days; progress
+        is recorded for the requested range only."""
+        first, last = self.schedule.utc_day_bounds(start_slot, end_slot)
+        return self.transform_range(
+            raw_table, first, last, mode="overwrite",
+            record_ranges=[(start_slot, end_slot)],
+        )
 
 
 class CurationRun:

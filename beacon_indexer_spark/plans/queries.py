@@ -2,6 +2,9 @@
 
 Each entry couples a Spark implementation ``(spark, sf_dir) -> DataFrame``
 with an ANSI-SQL oracle string DuckDB runs on the same parquet tables.
+Both registries are derived from the module's names (see the end of the
+file): a query is a module-level ``q_<name>`` function, and its oracle is
+the ``ORACLE_<NAME>`` string or the zero-argument ``_oracle_<name>_sql()``.
 Coverage maps to SURVEY §2's operator inventory (IDs in each docstring)
 plus the training-data-pipeline operators (dedup / similarity / text).
 
@@ -150,18 +153,9 @@ def _spread_as(
     n = spark.sparkContext.defaultParallelism
     if _scan_parts(spark, sf_dir, name) < n:
         if by:
-            if not _SPREAD_BY_ENABLED:  # A/B harness hook (tests only)
-                return df
             return df.repartition(n, *[F.col(c) for c in by])
         return df.repartition(n)
     return df
-
-
-# flipped by the optimization-round A/B harness to compare keyed-spread
-# plans against the unspread baseline INSIDE one JVM (interleaved reps
-# cancel JVM aging, the dominant noise in cross-process A/Bs); always
-# True in production and in the bench
-_SPREAD_BY_ENABLED = True
 
 
 def _ts(
@@ -827,6 +821,9 @@ FROM hashed
 """
 
 
+ORACLE_DEDUP_MINHASH = _oracle_minhash_sql()
+
+
 def q_dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs (band-bucket equi-join)."""
     docs = _ts(spark, sf_dir, "documents")
@@ -870,6 +867,9 @@ FROM keyed a JOIN keyed b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.
 """
 
 
+ORACLE_DEDUP_MINHASH_LSH_PAIRS = _oracle_minhash_lsh_sql()
+
+
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash 64-bit fingerprints (majority vote over token md5 bits)."""
     docs = _ts(spark, sf_dir, "documents")
@@ -906,6 +906,9 @@ def _oracle_simhash_sql() -> str:
 WITH {_dd_simhash_ctes()}
 SELECT doc_id, simhash FROM sh
 """
+
+
+ORACLE_DEDUP_SIMHASH = _oracle_simhash_sql()
 
 
 # ===========================================================================
@@ -969,7 +972,7 @@ def q_embedding_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_embedding_near_dupes_sql(n_bits: int = 16, bands: int = 4) -> str:
+def _oracle_embedding_near_dupes_sql(n_bits: int = 32, bands: int = 4) -> str:
     # inline the deterministic hyperplanes used by lsh_band_keys (dim=64):
     # band b's key = the sign bits of its contiguous hyperplane segment;
     # candidate pairs share ANY band key (OR-join mirror of the banded
@@ -2254,6 +2257,9 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST({ham} AS BIGINT) AS hamming
 FROM sh a JOIN sh b ON a.doc_id < b.doc_id AND ({any_band})
 WHERE {ham} <= {max_dist}
 """
+
+
+ORACLE_DEDUP_SIMHASH_HAMMING = _oracle_simhash_hamming_sql(3)
 
 
 def q_doc_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4319,6 +4325,9 @@ FROM z GROUP BY 1
 """
 
 
+ORACLE_DOC_ZORDER_LAYOUT = _oracle_doc_zorder_sql()
+
+
 def q_dedup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dup-graph audit: the degree HISTOGRAM of the LSH candidate-pair
     graph — the health metric that catches boilerplate storms (a fat
@@ -6075,6 +6084,9 @@ FROM gk LEFT JOIN win ON gk.doc_id = win.doc_id
 """
 
 
+ORACLE_DOC_DSIR_WEIGHTS = _oracle_doc_dsir_sql(256, 128)
+
+
 _SWEEP_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
 
@@ -6205,6 +6217,9 @@ FROM grid g
 LEFT JOIN np ON np.threshold = g.threshold
 LEFT JOIN nd ON nd.threshold = g.threshold
 """
+
+
+ORACLE_DEDUP_THRESHOLD_SWEEP = _oracle_threshold_sweep_sql()
 
 
 def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6451,6 +6466,9 @@ FROM pairs p
 JOIN sigs sa ON sa.doc_id = p.id_a
 JOIN sigs sb ON sb.doc_id = p.id_b
 """
+
+
+ORACLE_DEDUP_MINHASH_BBIT = _oracle_minhash_bbit_sql()
 
 
 def q_events_type_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6711,6 +6729,9 @@ per_doc AS (
          list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
            list(c ORDER BY t)), (a, x) -> a + x) AS score
   FROM scored GROUP BY 1)"""
+
+
+ORACLE_DOC_BM25_TOPK = _oracle_doc_bm25_sql()
 
 
 _N_SHARDS = 16
@@ -23037,729 +23058,27 @@ FROM sc
 """
 
 
+# ---------------------------------------------------------------------------
+# registry, derived from the names above (see the module docstring)
+# ---------------------------------------------------------------------------
+
 QUERIES: dict[str, QueryFn] = {
-    "pruned_scan_topk": q_pruned_scan_topk,
-    "pricing_summary": q_pricing_summary,
-    "region_revenue": q_region_revenue,
-    "top_users": q_top_users,
-    "latest_event_per_user": q_latest_event_per_user,
-    "event_gaps": q_event_gaps,
-    "customers_without_orders": q_customers_without_orders,
-    "events_hourly": q_events_hourly,
-    "event_type_stats": q_event_type_stats,
-    "distinct_users": q_distinct_users,
-    "table_counts": q_table_counts,
-    "first_orders_per_customer": q_first_orders_per_customer,
-    "nation_status_concat": q_nation_status_concat,
-    "daily_last_slot": q_daily_last_slot,
-    "events_json_extract": q_events_json_extract,
-    "user_running_value": q_user_running_value,
-    "events_sessionize": q_events_sessionize,
-    "doc_fingerprints": q_doc_fingerprints,
-    "doc_text_stats": q_doc_text_stats,
-    "doc_langid": q_doc_langid,
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash": q_dedup_minhash,
-    "dedup_minhash_lsh_pairs": q_dedup_minhash_lsh_pairs,
-    "dedup_simhash": q_dedup_simhash,
-    "similarity_bruteforce": q_similarity_bruteforce,
-    "embedding_near_dupes": q_embedding_near_dupes,
-    "embedding_incremental": q_embedding_incremental,
-    "multimodal_image_stats": q_multimodal_image_stats,
-    "similarity_ivf": q_similarity_ivf,
-    "orders_asof_event": q_orders_asof_event,
-    "events_range_join": q_events_range_join,
-    "dedup_clusters": q_dedup_clusters,
-    "doc_sample_stratified": q_doc_sample_stratified,
-    "doc_tfidf_top_terms": q_doc_tfidf_top_terms,
-    "doc_pack_sequences": q_doc_pack_sequences,
-    "doc_length_quantiles": q_doc_length_quantiles,
-    "embedding_quantize": q_embedding_quantize,
-    "doc_repetition_ratio": q_doc_repetition_ratio,
-    "doc_decontaminate": q_doc_decontaminate,
-    "doc_quality_filter": q_doc_quality_filter,
-    "events_user_churn": q_events_user_churn,
-    "similarity_quantized": q_similarity_quantized,
-    "dedup_simhash_hamming": q_dedup_simhash_hamming,
-    "doc_pack_stats": q_doc_pack_stats,
-    "doc_source_quality": q_doc_source_quality,
-    "corpus_token_topk": q_corpus_token_topk,
-    "doc_chunk_windows": q_doc_chunk_windows,
-    "dedup_ngram_containment": q_dedup_ngram_containment,
-    "doc_keep_list": q_doc_keep_list,
-    "doc_mixture_plan": q_doc_mixture_plan,
-    "embedding_label_centroids": q_embedding_label_centroids,
-    "embedding_outliers": q_embedding_outliers,
-    "token_pmi_top": q_token_pmi_top,
-    "corpus_vocab_stats": q_corpus_vocab_stats,
-    "events_funnel": q_events_funnel,
-    "events_retention": q_events_retention,
-    "semantic_dedup": q_semantic_dedup,
-    "similarity_pq": q_similarity_pq,
-    "events_nearest_event": q_events_nearest_event,
-    "events_zscore_anomaly": q_events_zscore_anomaly,
-    "orders_shipping_priority": q_orders_shipping_priority,
-    "doc_unigram_logprob": q_doc_unigram_logprob,
-    "doc_passage_dup_rate": q_doc_passage_dup_rate,
-    "doc_winnow_pairs": q_doc_winnow_pairs,
-    "corpus_substring_spans": q_corpus_substring_spans,
-    "corpus_substring_dup_rate": q_corpus_substring_dup_rate,
-    "partsupp_value_concentration": q_partsupp_value_concentration,
-    "supplier_excess_capacity": q_supplier_excess_capacity,
-    "embedding_stream_recall": q_embedding_stream_recall,
-    "nation_product_profit": q_nation_product_profit,
-    "part_supplier_counts": q_part_supplier_counts,
-    "corpus_decontamination_spans": q_corpus_decontamination_spans,
-    "corpus_decontaminated_stats": q_corpus_decontaminated_stats,
-    "domain_temperature_sampling": q_domain_temperature_sampling,
-    "source_epoch_allocation": q_source_epoch_allocation,
-    "doc_train_order": q_doc_train_order,
-    "doc_curriculum_interleave": q_doc_curriculum_interleave,
-    "multimodal_video_scene_cuts": q_multimodal_video_scene_cuts,
-    "multimodal_audio_silence": q_multimodal_audio_silence,
-    "corpus_substring_incremental": q_corpus_substring_incremental,
-    "corpus_substring_summary": q_corpus_substring_summary,
-    "source_shingle_kmv_jaccard": q_source_shingle_kmv_jaccard,
-    "corpus_substring_dedup_plan": q_corpus_substring_dedup_plan,
-    "doc_contamination_verdict": q_doc_contamination_verdict,
-    "corpus_decontamination_summary": q_corpus_decontamination_summary,
-    "embedding_kmeans": q_embedding_kmeans,
-    "multimodal_audio_stats": q_multimodal_audio_stats,
-    "multimodal_video_frames": q_multimodal_video_frames,
-    "multimodal_image_near_dupes": q_multimodal_image_near_dupes,
-    "dedup_graph_degrees": q_dedup_graph_degrees,
-    "events_top_values_ranked": q_events_top_values_ranked,
-    "events_lateness_profile": q_events_lateness_profile,
-    "customers_orders_reconcile": q_customers_orders_reconcile,
-    "users_retained_intersect": q_users_retained_intersect,
-    "doc_zorder_layout": q_doc_zorder_layout,
-    "orders_priority_rollup": q_orders_priority_rollup,
-    "sales_rollup_topk": q_sales_rollup_topk,
-    "margin_rollup_rank": q_margin_rollup_rank,
-    "events_type_hour_cube": q_events_type_hour_cube,
-    "channel_cumulative_compare": q_channel_cumulative_compare,
-    "events_channel_intersect_counts": q_events_channel_intersect_counts,
-    "part_cross_priority_revenue": q_part_cross_priority_revenue,
-    "customer_bulk_order_tickets": q_customer_bulk_order_tickets,
-    "doc_streaming_admit": q_doc_streaming_admit,
-    "doc_classifier_score": q_doc_classifier_score,
-    "lineitem_returnflag_pivot": q_lineitem_returnflag_pivot,
-    "events_hopping_windows": q_events_hopping_windows,
-    "user_moving_avg": q_user_moving_avg,
-    "events_value_histogram": q_events_value_histogram,
-    "doc_pii_redact": q_doc_pii_redact,
-    "doc_split_assign": q_doc_split_assign,
-    "corpus_shingle_kmv": q_corpus_shingle_kmv,
-    "doc_source_cap": q_doc_source_cap,
-    "corpus_postings": q_corpus_postings,
-    "orders_profile": q_orders_profile,
-    "lineitem_small_qty_revenue": q_lineitem_small_qty_revenue,
-    "orders_value_ntile": q_orders_value_ntile,
-    "part_fuzzy_pairs": q_part_fuzzy_pairs,
-    "dup_graph_pagerank": q_dup_graph_pagerank,
-    "events_hourly_gapfill": q_events_hourly_gapfill,
-    "dedup_minhash_est": q_dedup_minhash_est,
-    "orders_quality_checks": q_orders_quality_checks,
-    "local_supplier_volume": q_local_supplier_volume,
-    "returned_item_report": q_returned_item_report,
-    "events_value_winsorize": q_events_value_winsorize,
-    "large_volume_customers": q_large_volume_customers,
-    "doc_curation_manifest": q_doc_curation_manifest,
-    "doc_curation_decision": q_doc_curation_decision,
-    "dedup_incremental": q_dedup_incremental,
-    "events_value_mad": q_events_value_mad,
-    "doc_langid_confusion": q_doc_langid_confusion,
-    "corpus_dedup_summary": q_corpus_dedup_summary,
-    "doc_passage_scrub": q_doc_passage_scrub,
-    "corpus_term_drift": q_corpus_term_drift,
-    "forecast_revenue_change": q_forecast_revenue_change,
-    "orders_status_cube": q_orders_status_cube,
-    "doc_dsir_weights": q_doc_dsir_weights,
-    "dedup_threshold_sweep": q_dedup_threshold_sweep,
-    "doc_ngram_novelty": q_doc_ngram_novelty,
-    "embedding_dim_stats": q_embedding_dim_stats,
-    "doc_mixture_temperature": q_doc_mixture_temperature,
-    "dedup_minhash_bbit": q_dedup_minhash_bbit,
-    "events_type_sequences": q_events_type_sequences,
-    "doc_keep_best": q_doc_keep_best,
-    "doc_bm25_topk": q_doc_bm25_topk,
-    "doc_shard_plan": q_doc_shard_plan,
-    "corpus_bpe_merges": q_corpus_bpe_merges,
-    "doc_bigram_logprob": q_doc_bigram_logprob,
-    "source_ngram_kl": q_source_ngram_kl,
-    "embedding_hard_negatives": q_embedding_hard_negatives,
-    "source_dup_matrix": q_source_dup_matrix,
-    "doc_curriculum_order": q_doc_curriculum_order,
-    "label_centroid_sim": q_label_centroid_sim,
-    "source_token_budget": q_source_token_budget,
-    "split_leakage_guard": q_split_leakage_guard,
-    "doc_char_entropy": q_doc_char_entropy,
-    "doc_code_detect": q_doc_code_detect,
-    "lang_token_fertility": q_lang_token_fertility,
-    "embedding_whiten": q_embedding_whiten,
-    "doc_lexical_diversity": q_doc_lexical_diversity,
-    "corpus_heaps_curve": q_corpus_heaps_curve,
-    "embedding_dim_corr": q_embedding_dim_corr,
-    "dedup_cluster_size_dist": q_dedup_cluster_size_dist,
-    "events_cooccurrence_lift": q_events_cooccurrence_lift,
-    "corpus_dup_rate_by_length": q_corpus_dup_rate_by_length,
-    "doc_lsh_precision_audit": q_doc_lsh_precision_audit,
-    "orders_seasonality": q_orders_seasonality,
-    "user_rfm_segments": q_user_rfm_segments,
-    "events_burstiness": q_events_burstiness,
-    "doc_langid_margin": q_doc_langid_margin,
-    "events_dau_wau": q_events_dau_wau,
-    "doc_quality_vs_dup_grid": q_doc_quality_vs_dup_grid,
-    "corpus_ngram_coverage": q_corpus_ngram_coverage,
-    "orders_cohort_ltv": q_orders_cohort_ltv,
-    "events_aqp_estimate": q_events_aqp_estimate,
-    "supplier_concentration_hhi": q_supplier_concentration_hhi,
-    "embedding_ann_recall": q_embedding_ann_recall,
-    "corpus_source_overlap": q_corpus_source_overlap,
-    "events_value_benford": q_events_value_benford,
-    "orders_backlog_aging": q_orders_backlog_aging,
-    "doc_len_quality_corr": q_doc_len_quality_corr,
-    "events_markov_transitions": q_events_markov_transitions,
-    "corpus_quality_sweep": q_corpus_quality_sweep,
-    "embedding_ivf_balance": q_embedding_ivf_balance,
-    "events_hour_dow_profile": q_events_hour_dow_profile,
-    "customer_returns_rate": q_customer_returns_rate,
-    "events_user_gini": q_events_user_gini,
-    "part_price_regression": q_part_price_regression,
-    "corpus_char_bigram_entropy": q_corpus_char_bigram_entropy,
-    "lineitem_ship_latency": q_lineitem_ship_latency,
-    "doc_hapax_ratio": q_doc_hapax_ratio,
-    "events_first_touch": q_events_first_touch,
-    "events_daily_volume_anomaly": q_events_daily_volume_anomaly,
-    "doc_keep_policy_bias": q_doc_keep_policy_bias,
-    "embedding_norm_profile": q_embedding_norm_profile,
-    "part_cheapest_supplier": q_part_cheapest_supplier,
-    "part_promo_revenue": q_part_promo_revenue,
-    "events_ewma_anomaly": q_events_ewma_anomaly,
-    "embedding_fisher_separation": q_embedding_fisher_separation,
-    "simhash_bit_balance": q_simhash_bit_balance,
-    "customer_pareto_coverage": q_customer_pareto_coverage,
-    "doc_oov_rate": q_doc_oov_rate,
-    "events_type_audience_overlap": q_events_type_audience_overlap,
-    "corpus_zipf_fit": q_corpus_zipf_fit,
-    "embedding_dim_quantiles": q_embedding_dim_quantiles,
-    "orders_interarrival_dist": q_orders_interarrival_dist,
-    "doc_prefix_dup_rate": q_doc_prefix_dup_rate,
-    "events_funnel_conversion_lag": q_events_funnel_conversion_lag,
-    "embedding_intrinsic_dim": q_embedding_intrinsic_dim,
-    "source_js_divergence": q_source_js_divergence,
-    "embedding_quant_sweep": q_embedding_quant_sweep,
-    "dedup_detector_agreement": q_dedup_detector_agreement,
-    "corpus_bigram_cond_entropy": q_corpus_bigram_cond_entropy,
-    "embedding_knn_label_agreement": q_embedding_knn_label_agreement,
-    "corpus_minhash_k_sweep": q_corpus_minhash_k_sweep,
-    "events_session_depth_dist": q_events_session_depth_dist,
-    "doc_embedding_quality_norm_corr": q_doc_embedding_quality_norm_corr,
-    "corpus_head_coverage_curve": q_corpus_head_coverage_curve,
-    "user_value_deciles": q_user_value_deciles,
-    "events_conversion_by_first_touch": q_events_conversion_by_first_touch,
-    "dedup_lsh_bucket_stats": q_dedup_lsh_bucket_stats,
-    "embedding_residual_energy": q_embedding_residual_energy,
-    "embedding_mean_pairwise_cosine": q_embedding_mean_pairwise_cosine,
-    "doc_length_lognormal_fit": q_doc_length_lognormal_fit,
-    "events_value_hour_anova": q_events_value_hour_anova,
-    "events_periodicity_autocorr": q_events_periodicity_autocorr,
-    "events_new_vs_returning": q_events_new_vs_returning,
-    "orders_basket_value_corr": q_orders_basket_value_corr,
-    "doc_lang_length_chisq": q_doc_lang_length_chisq,
-    "events_repeat_purchase_curve": q_events_repeat_purchase_curve,
-    "source_signature_terms": q_source_signature_terms,
-    "embedding_knn_confusion": q_embedding_knn_confusion,
-    "supplier_latency_outliers": q_supplier_latency_outliers,
-    "corpus_split_half_jsd": q_corpus_split_half_jsd,
-    "events_weekend_lift": q_events_weekend_lift,
-    "doc_token_length_profile": q_doc_token_length_profile,
-    "part_type_price_premium": q_part_type_price_premium,
-    "part_bracket_revenue": q_part_bracket_revenue,
-    "customer_sales_opportunity": q_customer_sales_opportunity,
-    "orders_with_returns_by_priority": q_orders_with_returns_by_priority,
-    "nation_trade_flow": q_nation_trade_flow,
-    "nation_market_share": q_nation_market_share,
-    "part_basket_pairs": q_part_basket_pairs,
-    "events_hill_tail_index": q_events_hill_tail_index,
-    "corpus_token_gini": q_corpus_token_gini,
-    "embedding_silhouette": q_embedding_silhouette,
-    "embedding_knn_radius": q_embedding_knn_radius,
-    "source_embedding_centroids": q_source_embedding_centroids,
-    "events_value_cusum": q_events_value_cusum,
-    "events_props_key_profile": q_events_props_key_profile,
-    "lineitem_order_date_integrity": q_lineitem_order_date_integrity,
-    "doc_hapax_burden_topk": q_doc_hapax_burden_topk,
-    "embedding_knn_purity_sweep": q_embedding_knn_purity_sweep,
-    "customer_segment_revenue_trend": q_customer_segment_revenue_trend,
-    "events_error_rate_wilson": q_events_error_rate_wilson,
-    "supplier_assortment": q_supplier_assortment,
-    "part_brand_price_iqr": q_part_brand_price_iqr,
-    "events_bot_burst_screen": q_events_bot_burst_screen,
-    "orders_qoq_growth": q_orders_qoq_growth,
-    "customer_value_quadrants": q_customer_value_quadrants,
-    "orders_line_status_consistency": q_orders_line_status_consistency,
-    "events_value_ks_test": q_events_value_ks_test,
-    "corpus_source_token_hhi": q_corpus_source_token_hhi,
-    "events_hour_entropy_by_type": q_events_hour_entropy_by_type,
-    "events_weekly_retention_triangle": q_events_weekly_retention_triangle,
-    "doc_embedding_coverage": q_doc_embedding_coverage,
-    "orders_basket_size_profile": q_orders_basket_size_profile,
-    "lineitem_price_qty_elasticity": q_lineitem_price_qty_elasticity,
-    "nation_revenue_rank_shift": q_nation_revenue_rank_shift,
-    "customer_concentration_by_year": q_customer_concentration_by_year,
-    "events_type_trigrams_topk": q_events_type_trigrams_topk,
-    "lineitem_return_rate_by_discount": q_lineitem_return_rate_by_discount,
-    "doc_ingestion_drift_deciles": q_doc_ingestion_drift_deciles,
-    "supplier_customer_repeat_affinity": q_supplier_customer_repeat_affinity,
-    "customer_spend_migration": q_customer_spend_migration,
-    "orders_fulfillment_span": q_orders_fulfillment_span,
-    "doc_priority_sample": q_doc_priority_sample,
-    "events_value_equidepth_hist": q_events_value_equidepth_hist,
-    "corpus_df_truncation_impact": q_corpus_df_truncation_impact,
-    "part_size_ladder_gaps": q_part_size_ladder_gaps,
-    "events_user_type_entropy_profile": q_events_user_type_entropy_profile,
-    "events_session_concurrency_peak": q_events_session_concurrency_peak,
-    "customer_order_dispersion": q_customer_order_dispersion,
-    "events_km_conversion_survival": q_events_km_conversion_survival,
-    "embedding_dim_ablation_recall": q_embedding_dim_ablation_recall,
-    "events_value_bootstrap_ci": q_events_value_bootstrap_ci,
-    "orders_revenue_trend_robust": q_orders_revenue_trend_robust,
-    "dup_graph_triangles": q_dup_graph_triangles,
-    "orders_join_skew_audit": q_orders_join_skew_audit,
-    "lineitem_bloom_join_planner": q_lineitem_bloom_join_planner,
-    "events_converter_type_enrichment": q_events_converter_type_enrichment,
-    "lineitem_simpsons_check": q_lineitem_simpsons_check,
-    "events_neyman_allocation": q_events_neyman_allocation,
-    "events_daily_runs_test": q_events_daily_runs_test,
-    "events_dow_seasonality_strength": q_events_dow_seasonality_strength,
-    "embedding_label_auc": q_embedding_label_auc,
-    "events_value_expected_shortfall": q_events_value_expected_shortfall,
-    "embedding_top_component": q_embedding_top_component,
-    "orders_seasonal_naive_backtest": q_orders_seasonal_naive_backtest,
-    "corpus_lang_source_nmi": q_corpus_lang_source_nmi,
-    "doc_text_embedding_agreement": q_doc_text_embedding_agreement,
-    "events_aa_test_validator": q_events_aa_test_validator,
-    "events_markov_stationary": q_events_markov_stationary,
-    "corpus_chunk_dedup_planner": q_corpus_chunk_dedup_planner,
-    "part_price_dispersion": q_part_price_dispersion,
-    "corpus_audit_sample_planner": q_corpus_audit_sample_planner,
-    "events_hourly_holt_forecast": q_events_hourly_holt_forecast,
-    "orders_duplicate_screen": q_orders_duplicate_screen,
-    "corpus_postings_compression_estimate":
-        q_corpus_postings_compression_estimate,
-    "orders_revenue_reconcile": q_orders_revenue_reconcile,
-    "events_value_twap": q_events_value_twap,
-    "corpus_junk_token_profile": q_corpus_junk_token_profile,
-    "embedding_ingestion_drift": q_embedding_ingestion_drift,
-    "part_brand_type_cramers_v": q_part_brand_type_cramers_v,
-    "events_attribution_comparison": q_events_attribution_comparison,
-    "dedup_fingerprint_ladder": q_dedup_fingerprint_ladder,
-    "part_size_price_spearman": q_part_size_price_spearman,
-    "events_value_spc_xbar": q_events_value_spc_xbar,
-    "corpus_term_burstiness": q_corpus_term_burstiness,
-    "events_value_max_drawdown": q_events_value_max_drawdown,
-    "events_conversion_micro_macro": q_events_conversion_micro_macro,
-    "doc_length_psi_drift": q_doc_length_psi_drift,
-    "part_dual_sourcing": q_part_dual_sourcing,
-    "embedding_knn_reciprocity": q_embedding_knn_reciprocity,
-    "supplier_wait_fault": q_supplier_wait_fault,
-    "customer_order_count_dist": q_customer_order_count_dist,
-    "lineitem_shipmode_priority": q_lineitem_shipmode_priority,
-    "top_revenue_supplier": q_top_revenue_supplier,
-    "similarity_ivfpq_residual": q_similarity_ivfpq_residual,
-    "events_heavy_hitters_mg": q_events_heavy_hitters_mg,
-    "customer_untapped_balance": q_customer_untapped_balance,
-    "doc_hybrid_retrieval_rrf": q_doc_hybrid_retrieval_rrf,
-    "similarity_ivfpq_rerank": q_similarity_ivfpq_rerank,
-    "events_user_hll": q_events_user_hll,
-    "events_user_countmin": q_events_user_countmin,
-    "embedding_mmr_rerank": q_embedding_mmr_rerank,
-    "events_value_quantile_sketch": q_events_value_quantile_sketch,
-    "events_k_anonymity": q_events_k_anonymity,
-    "user_type_scd2": q_user_type_scd2,
-    "embedding_ann_ndcg": q_embedding_ann_ndcg,
-    "events_shapley_attribution": q_events_shapley_attribution,
-    "user_session_copresence": q_user_session_copresence,
-    "user_value_rolling_7d": q_user_value_rolling_7d,
-    "events_salted_user_enrich": q_events_salted_user_enrich,
-    "customer_returns_above_nation_avg": q_customer_returns_above_nation_avg,
+    name[2:]: fn
+    for name, fn in list(globals().items())
+    if name.startswith("q_") and callable(fn)
 }
 
 
+def _oracle(name: str) -> str:
+    const = globals().get(f"ORACLE_{name.upper()}")
+    build = globals().get(f"_oracle_{name}_sql")
+    if (const is None) == (build is None):
+        raise LookupError(
+            f"query {name!r} needs exactly one of ORACLE_{name.upper()} "
+            f"and _oracle_{name}_sql()"
+        )
+    return const if const is not None else build()
+
+
 def oracles() -> dict[str, str]:
-    return {
-        "pruned_scan_topk": ORACLE_PRUNED_SCAN_TOPK,
-        "pricing_summary": ORACLE_PRICING_SUMMARY,
-        "region_revenue": ORACLE_REGION_REVENUE,
-        "top_users": ORACLE_TOP_USERS,
-        "latest_event_per_user": ORACLE_LATEST_EVENT_PER_USER,
-        "event_gaps": ORACLE_EVENT_GAPS,
-        "customers_without_orders": ORACLE_CUSTOMERS_WITHOUT_ORDERS,
-        "events_hourly": ORACLE_EVENTS_HOURLY,
-        "event_type_stats": ORACLE_EVENT_TYPE_STATS,
-        "distinct_users": ORACLE_DISTINCT_USERS,
-        "table_counts": ORACLE_TABLE_COUNTS,
-        "first_orders_per_customer": ORACLE_FIRST_ORDERS_PER_CUSTOMER,
-        "nation_status_concat": ORACLE_NATION_STATUS_CONCAT,
-        "daily_last_slot": ORACLE_DAILY_LAST_SLOT,
-        "events_json_extract": ORACLE_EVENTS_JSON_EXTRACT,
-        "user_running_value": ORACLE_USER_RUNNING_VALUE,
-        "events_sessionize": ORACLE_EVENTS_SESSIONIZE,
-        "doc_fingerprints": ORACLE_DOC_FINGERPRINTS,
-        "doc_text_stats": ORACLE_DOC_TEXT_STATS,
-        "doc_langid": ORACLE_DOC_LANGID,
-        "dedup_exact": ORACLE_DEDUP_EXACT,
-        "dedup_ngram_jaccard": ORACLE_DEDUP_NGRAM_JACCARD,
-        "dedup_minhash": _oracle_minhash_sql(),
-        "dedup_minhash_lsh_pairs": _oracle_minhash_lsh_sql(),
-        "dedup_simhash": _oracle_simhash_sql(),
-        "similarity_bruteforce": ORACLE_SIMILARITY_BRUTEFORCE,
-        "embedding_near_dupes": _oracle_embedding_near_dupes_sql(32, 4),
-        "embedding_incremental": _oracle_embedding_incremental_sql(32, 4),
-        "multimodal_image_stats": ORACLE_MULTIMODAL_IMAGE_STATS,
-        "similarity_ivf": _oracle_similarity_ivf_sql(),
-        "orders_asof_event": ORACLE_ORDERS_ASOF_EVENT,
-        "events_range_join": ORACLE_EVENTS_RANGE_JOIN,
-        "dedup_clusters": _oracle_dedup_clusters_sql(),
-        "doc_sample_stratified": _oracle_doc_sample_stratified_sql(),
-        "doc_tfidf_top_terms": ORACLE_DOC_TFIDF_TOP_TERMS,
-        "doc_pack_sequences": ORACLE_DOC_PACK_SEQUENCES,
-        "doc_length_quantiles": ORACLE_DOC_LENGTH_QUANTILES,
-        "embedding_quantize": ORACLE_EMBEDDING_QUANTIZE,
-        "doc_repetition_ratio": ORACLE_DOC_REPETITION_RATIO,
-        "doc_decontaminate": ORACLE_DOC_DECONTAMINATE,
-        "doc_quality_filter": ORACLE_DOC_QUALITY_FILTER,
-        "events_user_churn": ORACLE_EVENTS_USER_CHURN,
-        "similarity_quantized": ORACLE_SIMILARITY_QUANTIZED,
-        "dedup_simhash_hamming": _oracle_simhash_hamming_sql(3),
-        "doc_pack_stats": ORACLE_DOC_PACK_STATS,
-        "doc_source_quality": ORACLE_DOC_SOURCE_QUALITY,
-        "corpus_token_topk": ORACLE_CORPUS_TOKEN_TOPK,
-        "doc_chunk_windows": ORACLE_DOC_CHUNK_WINDOWS,
-        "dedup_ngram_containment": ORACLE_DEDUP_NGRAM_CONTAINMENT,
-        "doc_keep_list": _oracle_doc_keep_list_sql(),
-        "doc_mixture_plan": ORACLE_DOC_MIXTURE_PLAN,
-        "embedding_label_centroids": ORACLE_EMBEDDING_LABEL_CENTROIDS,
-        "embedding_outliers": ORACLE_EMBEDDING_OUTLIERS,
-        "token_pmi_top": ORACLE_TOKEN_PMI_TOP,
-        "corpus_vocab_stats": ORACLE_CORPUS_VOCAB_STATS,
-        "events_funnel": ORACLE_EVENTS_FUNNEL,
-        "events_retention": ORACLE_EVENTS_RETENTION,
-        "semantic_dedup": _oracle_semantic_dedup_sql(),
-        "similarity_pq": _oracle_similarity_pq_sql(),
-        "events_nearest_event": ORACLE_EVENTS_NEAREST_EVENT,
-        "events_zscore_anomaly": ORACLE_EVENTS_ZSCORE_ANOMALY,
-        "orders_shipping_priority": ORACLE_ORDERS_SHIPPING_PRIORITY,
-        "doc_unigram_logprob": ORACLE_DOC_UNIGRAM_LOGPROB,
-        "doc_passage_dup_rate": ORACLE_DOC_PASSAGE_DUP_RATE,
-        "doc_winnow_pairs": ORACLE_DOC_WINNOW_PAIRS,
-        "corpus_substring_spans": ORACLE_CORPUS_SUBSTRING_SPANS,
-        "corpus_substring_dup_rate": ORACLE_CORPUS_SUBSTRING_DUP_RATE,
-        "partsupp_value_concentration": ORACLE_PARTSUPP_VALUE_CONCENTRATION,
-        "supplier_excess_capacity": ORACLE_SUPPLIER_EXCESS_CAPACITY,
-        "embedding_stream_recall": _oracle_embedding_stream_recall_sql(),
-        "nation_product_profit": ORACLE_NATION_PRODUCT_PROFIT,
-        "part_supplier_counts": ORACLE_PART_SUPPLIER_COUNTS,
-        "corpus_decontamination_spans": ORACLE_CORPUS_DECONTAMINATION_SPANS,
-        "corpus_decontaminated_stats": ORACLE_CORPUS_DECONTAMINATED_STATS,
-        "domain_temperature_sampling": ORACLE_DOMAIN_TEMPERATURE_SAMPLING,
-        "source_epoch_allocation": ORACLE_SOURCE_EPOCH_ALLOCATION,
-        "doc_train_order": ORACLE_DOC_TRAIN_ORDER,
-        "doc_curriculum_interleave": ORACLE_DOC_CURRICULUM_INTERLEAVE,
-        "multimodal_video_scene_cuts": ORACLE_MULTIMODAL_VIDEO_SCENE_CUTS,
-        "multimodal_audio_silence": ORACLE_MULTIMODAL_AUDIO_SILENCE,
-        "corpus_substring_incremental": ORACLE_CORPUS_SUBSTRING_INCREMENTAL,
-        "corpus_substring_summary": ORACLE_CORPUS_SUBSTRING_SUMMARY,
-        "source_shingle_kmv_jaccard": _oracle_source_shingle_kmv_jaccard_sql(),
-        "corpus_substring_dedup_plan": ORACLE_CORPUS_SUBSTRING_DEDUP_PLAN,
-        "doc_contamination_verdict": ORACLE_DOC_CONTAMINATION_VERDICT,
-        "corpus_decontamination_summary": ORACLE_CORPUS_DECONTAMINATION_SUMMARY,
-        "embedding_kmeans": _oracle_embedding_kmeans_sql(),
-        "multimodal_audio_stats": ORACLE_MULTIMODAL_AUDIO_STATS,
-        "multimodal_video_frames": ORACLE_MULTIMODAL_VIDEO_FRAMES,
-        "multimodal_image_near_dupes": _oracle_multimodal_image_near_dupes_sql(3),
-        "dedup_graph_degrees": _oracle_dedup_graph_degrees_sql(),
-        "events_top_values_ranked": ORACLE_EVENTS_TOP_VALUES_RANKED,
-        "events_lateness_profile": ORACLE_EVENTS_LATENESS_PROFILE,
-        "customers_orders_reconcile": ORACLE_CUSTOMERS_ORDERS_RECONCILE,
-        "users_retained_intersect": ORACLE_USERS_RETAINED_INTERSECT,
-        "doc_zorder_layout": _oracle_doc_zorder_sql(),
-        "orders_priority_rollup": ORACLE_ORDERS_PRIORITY_ROLLUP,
-        "sales_rollup_topk": ORACLE_SALES_ROLLUP_TOPK,
-        "margin_rollup_rank": ORACLE_MARGIN_ROLLUP_RANK,
-        "events_type_hour_cube": ORACLE_EVENTS_TYPE_HOUR_CUBE,
-        "channel_cumulative_compare": ORACLE_CHANNEL_CUMULATIVE_COMPARE,
-        "events_channel_intersect_counts":
-            ORACLE_EVENTS_CHANNEL_INTERSECT_COUNTS,
-        "part_cross_priority_revenue": ORACLE_PART_CROSS_PRIORITY_REVENUE,
-        "customer_bulk_order_tickets": ORACLE_CUSTOMER_BULK_ORDER_TICKETS,
-        "doc_streaming_admit": _oracle_doc_streaming_admit_sql(),
-        "doc_classifier_score": _oracle_doc_classifier_score_sql(),
-        "lineitem_returnflag_pivot": ORACLE_LINEITEM_RETURNFLAG_PIVOT,
-        "events_hopping_windows": ORACLE_EVENTS_HOPPING_WINDOWS,
-        "user_moving_avg": ORACLE_USER_MOVING_AVG,
-        "events_value_histogram": ORACLE_EVENTS_VALUE_HISTOGRAM,
-        "doc_pii_redact": _oracle_doc_pii_redact_sql(),
-        "doc_split_assign": _oracle_doc_split_assign_sql(),
-        "corpus_shingle_kmv": _oracle_corpus_shingle_kmv_sql(),
-        "doc_source_cap": ORACLE_DOC_SOURCE_CAP,
-        "corpus_postings": ORACLE_CORPUS_POSTINGS,
-        "orders_profile": _oracle_orders_profile_sql(),
-        "lineitem_small_qty_revenue": ORACLE_LINEITEM_SMALL_QTY_REVENUE,
-        "orders_value_ntile": ORACLE_ORDERS_VALUE_NTILE,
-        "part_fuzzy_pairs": ORACLE_PART_FUZZY_PAIRS,
-        "dup_graph_pagerank": _oracle_dup_graph_pagerank_sql(),
-        "events_hourly_gapfill": ORACLE_EVENTS_HOURLY_GAPFILL,
-        "dedup_minhash_est": _oracle_dedup_minhash_est_sql(),
-        "orders_quality_checks": ORACLE_ORDERS_QUALITY_CHECKS,
-        "local_supplier_volume": ORACLE_LOCAL_SUPPLIER_VOLUME,
-        "returned_item_report": ORACLE_RETURNED_ITEM_REPORT,
-        "events_value_winsorize": ORACLE_EVENTS_VALUE_WINSORIZE,
-        "large_volume_customers": ORACLE_LARGE_VOLUME_CUSTOMERS,
-        "doc_curation_manifest": _oracle_doc_curation_manifest_sql(),
-        "doc_curation_decision": _oracle_doc_curation_decision_sql(),
-        "dedup_incremental": _oracle_dedup_incremental_sql(),
-        "events_value_mad": ORACLE_EVENTS_VALUE_MAD,
-        "doc_langid_confusion": _oracle_doc_langid_confusion_sql(),
-        "corpus_dedup_summary": _oracle_corpus_dedup_summary_sql(),
-        "doc_passage_scrub": _oracle_doc_passage_scrub_sql(),
-        "corpus_term_drift": ORACLE_CORPUS_TERM_DRIFT,
-        "forecast_revenue_change": ORACLE_FORECAST_REVENUE_CHANGE,
-        "orders_status_cube": ORACLE_ORDERS_STATUS_CUBE,
-        "doc_dsir_weights": _oracle_doc_dsir_sql(256, 128),
-        "dedup_threshold_sweep": _oracle_threshold_sweep_sql(),
-        "doc_ngram_novelty": ORACLE_DOC_NGRAM_NOVELTY,
-        "embedding_dim_stats": ORACLE_EMBEDDING_DIM_STATS,
-        "doc_mixture_temperature": ORACLE_DOC_MIXTURE_TEMPERATURE,
-        "dedup_minhash_bbit": _oracle_minhash_bbit_sql(),
-        "events_type_sequences": ORACLE_EVENTS_TYPE_SEQUENCES,
-        "doc_keep_best": _oracle_doc_keep_best_sql(),
-        "doc_bm25_topk": _oracle_doc_bm25_sql(),
-        "doc_shard_plan": _oracle_doc_shard_plan_sql(),
-        "corpus_bpe_merges": ORACLE_CORPUS_BPE_MERGES,
-        "doc_bigram_logprob": ORACLE_DOC_BIGRAM_LOGPROB,
-        "source_ngram_kl": ORACLE_SOURCE_NGRAM_KL,
-        "embedding_hard_negatives": ORACLE_EMBEDDING_HARD_NEGATIVES,
-        "source_dup_matrix": _oracle_source_dup_matrix_sql(),
-        "doc_curriculum_order": ORACLE_DOC_CURRICULUM_ORDER,
-        "label_centroid_sim": ORACLE_LABEL_CENTROID_SIM,
-        "source_token_budget": _oracle_source_token_budget_sql(),
-        "split_leakage_guard": _oracle_split_leakage_guard_sql(),
-        "doc_char_entropy": ORACLE_DOC_CHAR_ENTROPY,
-        "doc_code_detect": ORACLE_DOC_CODE_DETECT,
-        "lang_token_fertility": ORACLE_LANG_TOKEN_FERTILITY,
-        "embedding_whiten": ORACLE_EMBEDDING_WHITEN,
-        "doc_lexical_diversity": ORACLE_DOC_LEXICAL_DIVERSITY,
-        "corpus_heaps_curve": ORACLE_CORPUS_HEAPS_CURVE,
-        "embedding_dim_corr": ORACLE_EMBEDDING_DIM_CORR,
-        "dedup_cluster_size_dist": _oracle_dedup_cluster_size_dist_sql(),
-        "events_cooccurrence_lift": ORACLE_EVENTS_COOCCURRENCE_LIFT,
-        "corpus_dup_rate_by_length": _oracle_corpus_dup_rate_by_length_sql(),
-        "doc_lsh_precision_audit": _oracle_doc_lsh_precision_audit_sql(),
-        "orders_seasonality": ORACLE_ORDERS_SEASONALITY,
-        "user_rfm_segments": ORACLE_USER_RFM_SEGMENTS,
-        "events_burstiness": ORACLE_EVENTS_BURSTINESS,
-        "doc_langid_margin": _oracle_doc_langid_margin_sql(),
-        "events_dau_wau": ORACLE_EVENTS_DAU_WAU,
-        "doc_quality_vs_dup_grid": _oracle_doc_quality_vs_dup_grid_sql(),
-        "corpus_ngram_coverage": _oracle_corpus_ngram_coverage_sql(),
-        "orders_cohort_ltv": ORACLE_ORDERS_COHORT_LTV,
-        "events_aqp_estimate": _oracle_events_aqp_estimate_sql(),
-        "supplier_concentration_hhi": ORACLE_SUPPLIER_CONCENTRATION_HHI,
-        "embedding_ann_recall": _oracle_embedding_ann_recall_sql(),
-        "corpus_source_overlap": ORACLE_CORPUS_SOURCE_OVERLAP,
-        "events_value_benford": ORACLE_EVENTS_VALUE_BENFORD,
-        "orders_backlog_aging": ORACLE_ORDERS_BACKLOG_AGING,
-        "doc_len_quality_corr": _oracle_doc_len_quality_corr_sql(),
-        "events_markov_transitions": ORACLE_EVENTS_MARKOV_TRANSITIONS,
-        "corpus_quality_sweep": _oracle_corpus_quality_sweep_sql(),
-        "embedding_ivf_balance": _oracle_embedding_ivf_balance_sql(),
-        "events_hour_dow_profile": ORACLE_EVENTS_HOUR_DOW_PROFILE,
-        "customer_returns_rate": ORACLE_CUSTOMER_RETURNS_RATE,
-        "events_user_gini": ORACLE_EVENTS_USER_GINI,
-        "part_price_regression": ORACLE_PART_PRICE_REGRESSION,
-        "corpus_char_bigram_entropy": ORACLE_CORPUS_CHAR_BIGRAM_ENTROPY,
-        "lineitem_ship_latency": ORACLE_LINEITEM_SHIP_LATENCY,
-        "doc_hapax_ratio": ORACLE_DOC_HAPAX_RATIO,
-        "events_first_touch": ORACLE_EVENTS_FIRST_TOUCH,
-        "events_daily_volume_anomaly": ORACLE_EVENTS_DAILY_VOLUME_ANOMALY,
-        "doc_keep_policy_bias": _oracle_doc_keep_policy_bias_sql(),
-        "embedding_norm_profile": ORACLE_EMBEDDING_NORM_PROFILE,
-        "part_cheapest_supplier": ORACLE_PART_CHEAPEST_SUPPLIER,
-        "part_promo_revenue": ORACLE_PART_PROMO_REVENUE,
-        "events_ewma_anomaly": ORACLE_EVENTS_EWMA_ANOMALY,
-        "embedding_fisher_separation": ORACLE_EMBEDDING_FISHER_SEPARATION,
-        "simhash_bit_balance": _oracle_simhash_bit_balance_sql(),
-        "customer_pareto_coverage": ORACLE_CUSTOMER_PARETO_COVERAGE,
-        "doc_oov_rate": ORACLE_DOC_OOV_RATE,
-        "events_type_audience_overlap": ORACLE_EVENTS_TYPE_AUDIENCE_OVERLAP,
-        "corpus_zipf_fit": ORACLE_CORPUS_ZIPF_FIT,
-        "embedding_dim_quantiles": ORACLE_EMBEDDING_DIM_QUANTILES,
-        "orders_interarrival_dist": ORACLE_ORDERS_INTERARRIVAL_DIST,
-        "doc_prefix_dup_rate": ORACLE_DOC_PREFIX_DUP_RATE,
-        "events_funnel_conversion_lag": ORACLE_EVENTS_FUNNEL_CONVERSION_LAG,
-        "embedding_intrinsic_dim": ORACLE_EMBEDDING_INTRINSIC_DIM,
-        "source_js_divergence": ORACLE_SOURCE_JS_DIVERGENCE,
-        "embedding_quant_sweep": _oracle_embedding_quant_sweep_sql(),
-        "dedup_detector_agreement": _oracle_dedup_detector_agreement_sql(),
-        "corpus_bigram_cond_entropy": ORACLE_CORPUS_BIGRAM_COND_ENTROPY,
-        "embedding_knn_label_agreement": ORACLE_EMBEDDING_KNN_LABEL_AGREEMENT,
-        "corpus_minhash_k_sweep": _oracle_corpus_minhash_k_sweep_sql(),
-        "events_session_depth_dist": ORACLE_EVENTS_SESSION_DEPTH_DIST,
-        "doc_embedding_quality_norm_corr": ORACLE_DOC_EMBEDDING_QUALITY_NORM_CORR,
-        "corpus_head_coverage_curve": _oracle_corpus_head_coverage_curve_sql(),
-        "user_value_deciles": ORACLE_USER_VALUE_DECILES,
-        "events_conversion_by_first_touch": ORACLE_EVENTS_CONVERSION_BY_FIRST_TOUCH,
-        "dedup_lsh_bucket_stats": _oracle_dedup_lsh_bucket_stats_sql(),
-        "embedding_residual_energy": _oracle_embedding_residual_energy_sql(),
-        "embedding_mean_pairwise_cosine": ORACLE_EMBEDDING_MEAN_PAIRWISE_COSINE,
-        "doc_length_lognormal_fit": ORACLE_DOC_LENGTH_LOGNORMAL_FIT,
-        "events_value_hour_anova": ORACLE_EVENTS_VALUE_HOUR_ANOVA,
-        "events_periodicity_autocorr": ORACLE_EVENTS_PERIODICITY_AUTOCORR,
-        "events_new_vs_returning": ORACLE_EVENTS_NEW_VS_RETURNING,
-        "orders_basket_value_corr": ORACLE_ORDERS_BASKET_VALUE_CORR,
-        "doc_lang_length_chisq": ORACLE_DOC_LANG_LENGTH_CHISQ,
-        "events_repeat_purchase_curve": ORACLE_EVENTS_REPEAT_PURCHASE_CURVE,
-        "source_signature_terms": ORACLE_SOURCE_SIGNATURE_TERMS,
-        "embedding_knn_confusion": ORACLE_EMBEDDING_KNN_CONFUSION,
-        "supplier_latency_outliers": ORACLE_SUPPLIER_LATENCY_OUTLIERS,
-        "corpus_split_half_jsd": ORACLE_CORPUS_SPLIT_HALF_JSD,
-        "events_weekend_lift": ORACLE_EVENTS_WEEKEND_LIFT,
-        "doc_token_length_profile": ORACLE_DOC_TOKEN_LENGTH_PROFILE,
-        "part_type_price_premium": ORACLE_PART_TYPE_PRICE_PREMIUM,
-        "part_bracket_revenue": ORACLE_PART_BRACKET_REVENUE,
-        "customer_sales_opportunity": ORACLE_CUSTOMER_SALES_OPPORTUNITY,
-        "orders_with_returns_by_priority":
-            ORACLE_ORDERS_WITH_RETURNS_BY_PRIORITY,
-        "nation_trade_flow": ORACLE_NATION_TRADE_FLOW,
-        "nation_market_share": ORACLE_NATION_MARKET_SHARE,
-        "part_basket_pairs": ORACLE_PART_BASKET_PAIRS,
-        "events_hill_tail_index": ORACLE_EVENTS_HILL_TAIL_INDEX,
-        "corpus_token_gini": ORACLE_CORPUS_TOKEN_GINI,
-        "embedding_silhouette": ORACLE_EMBEDDING_SILHOUETTE,
-        "embedding_knn_radius": ORACLE_EMBEDDING_KNN_RADIUS,
-        "source_embedding_centroids": ORACLE_SOURCE_EMBEDDING_CENTROIDS,
-        "events_value_cusum": ORACLE_EVENTS_VALUE_CUSUM,
-        "events_props_key_profile": ORACLE_EVENTS_PROPS_KEY_PROFILE,
-        "lineitem_order_date_integrity":
-            ORACLE_LINEITEM_ORDER_DATE_INTEGRITY,
-        "doc_hapax_burden_topk": ORACLE_DOC_HAPAX_BURDEN_TOPK,
-        "embedding_knn_purity_sweep": ORACLE_EMBEDDING_KNN_PURITY_SWEEP,
-        "customer_segment_revenue_trend":
-            ORACLE_CUSTOMER_SEGMENT_REVENUE_TREND,
-        "events_error_rate_wilson": ORACLE_EVENTS_ERROR_RATE_WILSON,
-        "supplier_assortment": ORACLE_SUPPLIER_ASSORTMENT,
-        "part_brand_price_iqr": ORACLE_PART_BRAND_PRICE_IQR,
-        "events_bot_burst_screen": ORACLE_EVENTS_BOT_BURST_SCREEN,
-        "orders_qoq_growth": ORACLE_ORDERS_QOQ_GROWTH,
-        "customer_value_quadrants": ORACLE_CUSTOMER_VALUE_QUADRANTS,
-        "orders_line_status_consistency":
-            ORACLE_ORDERS_LINE_STATUS_CONSISTENCY,
-        "events_value_ks_test": ORACLE_EVENTS_VALUE_KS_TEST,
-        "corpus_source_token_hhi": ORACLE_CORPUS_SOURCE_TOKEN_HHI,
-        "events_hour_entropy_by_type": ORACLE_EVENTS_HOUR_ENTROPY_BY_TYPE,
-        "events_weekly_retention_triangle":
-            ORACLE_EVENTS_WEEKLY_RETENTION_TRIANGLE,
-        "doc_embedding_coverage": ORACLE_DOC_EMBEDDING_COVERAGE,
-        "orders_basket_size_profile": ORACLE_ORDERS_BASKET_SIZE_PROFILE,
-        "lineitem_price_qty_elasticity":
-            ORACLE_LINEITEM_PRICE_QTY_ELASTICITY,
-        "nation_revenue_rank_shift": ORACLE_NATION_REVENUE_RANK_SHIFT,
-        "customer_concentration_by_year":
-            ORACLE_CUSTOMER_CONCENTRATION_BY_YEAR,
-        "events_type_trigrams_topk": ORACLE_EVENTS_TYPE_TRIGRAMS_TOPK,
-        "lineitem_return_rate_by_discount":
-            ORACLE_LINEITEM_RETURN_RATE_BY_DISCOUNT,
-        "doc_ingestion_drift_deciles":
-            _oracle_doc_ingestion_drift_deciles_sql(),
-        "supplier_customer_repeat_affinity":
-            ORACLE_SUPPLIER_CUSTOMER_REPEAT_AFFINITY,
-        "customer_spend_migration": ORACLE_CUSTOMER_SPEND_MIGRATION,
-        "orders_fulfillment_span": ORACLE_ORDERS_FULFILLMENT_SPAN,
-        "doc_priority_sample": _oracle_doc_priority_sample_sql(),
-        "events_value_equidepth_hist": ORACLE_EVENTS_VALUE_EQUIDEPTH_HIST,
-        "corpus_df_truncation_impact": ORACLE_CORPUS_DF_TRUNCATION_IMPACT,
-        "part_size_ladder_gaps": ORACLE_PART_SIZE_LADDER_GAPS,
-        "events_user_type_entropy_profile":
-            ORACLE_EVENTS_USER_TYPE_ENTROPY_PROFILE,
-        "events_session_concurrency_peak":
-            ORACLE_EVENTS_SESSION_CONCURRENCY_PEAK,
-        "customer_order_dispersion": ORACLE_CUSTOMER_ORDER_DISPERSION,
-        "events_km_conversion_survival":
-            ORACLE_EVENTS_KM_CONVERSION_SURVIVAL,
-        "embedding_dim_ablation_recall":
-            ORACLE_EMBEDDING_DIM_ABLATION_RECALL,
-        "events_value_bootstrap_ci": _oracle_events_value_bootstrap_ci_sql(),
-        "orders_revenue_trend_robust": ORACLE_ORDERS_REVENUE_TREND_ROBUST,
-        "dup_graph_triangles": _oracle_dup_graph_triangles_sql(),
-        "orders_join_skew_audit": ORACLE_ORDERS_JOIN_SKEW_AUDIT,
-        "lineitem_bloom_join_planner":
-            _oracle_lineitem_bloom_join_planner_sql(),
-        "events_converter_type_enrichment":
-            ORACLE_EVENTS_CONVERTER_TYPE_ENRICHMENT,
-        "lineitem_simpsons_check": ORACLE_LINEITEM_SIMPSONS_CHECK,
-        "events_neyman_allocation": ORACLE_EVENTS_NEYMAN_ALLOCATION,
-        "events_daily_runs_test": ORACLE_EVENTS_DAILY_RUNS_TEST,
-        "events_dow_seasonality_strength":
-            ORACLE_EVENTS_DOW_SEASONALITY_STRENGTH,
-        "embedding_label_auc": ORACLE_EMBEDDING_LABEL_AUC,
-        "events_value_expected_shortfall":
-            ORACLE_EVENTS_VALUE_EXPECTED_SHORTFALL,
-        "embedding_top_component": _oracle_embedding_top_component_sql(),
-        "orders_seasonal_naive_backtest":
-            ORACLE_ORDERS_SEASONAL_NAIVE_BACKTEST,
-        "corpus_lang_source_nmi": ORACLE_CORPUS_LANG_SOURCE_NMI,
-        "doc_text_embedding_agreement":
-            _oracle_doc_text_embedding_agreement_sql(),
-        "events_aa_test_validator": _oracle_events_aa_test_validator_sql(),
-        "events_markov_stationary": _oracle_events_markov_stationary_sql(),
-        "corpus_chunk_dedup_planner": _oracle_corpus_chunk_dedup_planner_sql(),
-        "part_price_dispersion": ORACLE_PART_PRICE_DISPERSION,
-        "corpus_audit_sample_planner":
-            _oracle_corpus_audit_sample_planner_sql(),
-        "events_hourly_holt_forecast":
-            _oracle_events_hourly_holt_forecast_sql(),
-        "orders_duplicate_screen": ORACLE_ORDERS_DUPLICATE_SCREEN,
-        "corpus_postings_compression_estimate":
-            _oracle_corpus_postings_compression_estimate_sql(),
-        "orders_revenue_reconcile": ORACLE_ORDERS_REVENUE_RECONCILE,
-        "events_value_twap": ORACLE_EVENTS_VALUE_TWAP,
-        "corpus_junk_token_profile": _oracle_corpus_junk_token_profile_sql(),
-        "embedding_ingestion_drift": ORACLE_EMBEDDING_INGESTION_DRIFT,
-        "part_brand_type_cramers_v": ORACLE_PART_BRAND_TYPE_CRAMERS_V,
-        "events_attribution_comparison":
-            ORACLE_EVENTS_ATTRIBUTION_COMPARISON,
-        "dedup_fingerprint_ladder": _oracle_dedup_fingerprint_ladder_sql(),
-        "part_size_price_spearman": ORACLE_PART_SIZE_PRICE_SPEARMAN,
-        "events_value_spc_xbar": ORACLE_EVENTS_VALUE_SPC_XBAR,
-        "corpus_term_burstiness": _oracle_corpus_term_burstiness_sql(),
-        "events_value_max_drawdown": ORACLE_EVENTS_VALUE_MAX_DRAWDOWN,
-        "events_conversion_micro_macro":
-            ORACLE_EVENTS_CONVERSION_MICRO_MACRO,
-        "doc_length_psi_drift": _oracle_doc_length_psi_drift_sql(),
-        "part_dual_sourcing": ORACLE_PART_DUAL_SOURCING,
-        "embedding_knn_reciprocity": ORACLE_EMBEDDING_KNN_RECIPROCITY,
-        "supplier_wait_fault": ORACLE_SUPPLIER_WAIT_FAULT,
-        "customer_order_count_dist": ORACLE_CUSTOMER_ORDER_COUNT_DIST,
-        "lineitem_shipmode_priority": ORACLE_LINEITEM_SHIPMODE_PRIORITY,
-        "top_revenue_supplier": ORACLE_TOP_REVENUE_SUPPLIER,
-        "similarity_ivfpq_residual": _oracle_similarity_ivfpq_residual_sql(),
-        "events_heavy_hitters_mg": ORACLE_EVENTS_HEAVY_HITTERS_MG,
-        "customer_untapped_balance": ORACLE_CUSTOMER_UNTAPPED_BALANCE,
-        "doc_hybrid_retrieval_rrf": _oracle_doc_hybrid_retrieval_rrf_sql(),
-        "similarity_ivfpq_rerank": _oracle_similarity_ivfpq_rerank_sql(),
-        "events_user_hll": _oracle_events_user_hll_sql(),
-        "events_user_countmin": _oracle_events_user_countmin_sql(),
-        "embedding_mmr_rerank": _oracle_embedding_mmr_rerank_sql(),
-        "events_value_quantile_sketch": _oracle_events_value_quantile_sketch_sql(),
-        "events_k_anonymity": ORACLE_EVENTS_K_ANONYMITY,
-        "user_type_scd2": ORACLE_USER_TYPE_SCD2,
-        "embedding_ann_ndcg": _oracle_embedding_ann_ndcg_sql(),
-        "events_shapley_attribution": _oracle_events_shapley_attribution_sql(),
-        "user_session_copresence": ORACLE_USER_SESSION_COPRESENCE,
-        "user_value_rolling_7d": ORACLE_USER_VALUE_ROLLING_7D,
-        "events_salted_user_enrich": ORACLE_EVENTS_SALTED_USER_ENRICH,
-        "customer_returns_above_nation_avg": ORACLE_CUSTOMER_RETURNS_ABOVE_NATION_AVG,
-    }
+    return {name: _oracle(name) for name in QUERIES}

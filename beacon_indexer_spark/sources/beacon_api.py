@@ -424,11 +424,12 @@ def fetch_slot_list_distributed(
     schedule: ForkSchedule,
     slots_per_task: int = 100,
     api_factory: Callable[[], BeaconAPI] | None = None,
+    metrics: FetchMetrics | None = None,
 ) -> DataFrame:
     """Distributed fetch of an explicit slot list (column ``slot``) — the
     backfill path for daily-snapshot loaders (validators, pending queues),
-    fed by ``control.ledger.daily_slots``. Same fork gating and envelope as
-    :func:`fetch_slots_distributed`."""
+    fed by ``control.ledger.daily_slots``. Same fork gating, envelope and
+    ``metrics`` as :func:`fetch_slots_distributed`."""
     if loader.fork_gate is not None:
         gate = schedule.activation_slot(loader.fork_gate)
         if gate is None:
@@ -443,12 +444,18 @@ def fetch_slot_list_distributed(
 
     fetch, sched = loader.fetch, schedule
     make_api = api_factory or cfg.build
+    slots_acc = metrics.slots if metrics else None
+    rows_acc = metrics.rows if metrics else None
 
     def run(parts: Iterator) -> Iterator[tuple]:
         api = make_api()
         spec = LoaderSpec(loader.name, fetch, loader.fork_gate, loader.daily)
         for row in parts:
+            if slots_acc is not None:
+                slots_acc.add(1)
             for out in fetch_slots_local(api, spec, [row["slot"]], sched):
+                if rows_acc is not None:
+                    rows_acc.add(1)
                 yield (out["slot"], out["payload"], out["payload_hash"],
                        out["retrieved_at"])
 

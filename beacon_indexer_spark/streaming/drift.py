@@ -249,6 +249,7 @@ def ann_recall_monitor(
     Σ hits / (n·k) — exact integer arithmetic until one final double
     division."""
     from beacon_indexer_spark.operators.similarity import (
+        _HIER_THRESHOLD,
         brute_force_topk,
         ivf_exact_scored,
         ivf_topk,
@@ -267,7 +268,7 @@ def ann_recall_monitor(
             .drop("__r")
             .localCheckpoint(eager=False)
         )
-    if len(centroids) < 32:
+    if len(centroids) < _HIER_THRESHOLD:
         # ONE corpus scan for both rankings (r13, §1.2): the exact
         # control already scores every pair the IVF side could surface,
         # so IVF membership is a flag on the control's scored frame and

@@ -16,7 +16,7 @@ import time as _time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from beacon_indexer_spark.config import EngineConfig, ForkSchedule
+from beacon_indexer_spark.config import EngineConfig
 from beacon_indexer_spark.control.ledger import FAILED
 from beacon_indexer_spark.plans.pipeline import BeaconPipeline
 from beacon_indexer_spark.plans.transform import TRANSFORMS
@@ -28,13 +28,6 @@ from beacon_indexer_spark.sources.beacon_api import (
     fetch_slots_local,
 )
 from beacon_indexer_spark.sources.storage import ParquetLake
-
-
-def _is_last_slot_of_day(slot: int, schedule: ForkSchedule) -> bool:
-    day = 86400
-    t1 = schedule.slot_to_timestamp(slot) // day
-    t2 = schedule.slot_to_timestamp(slot + 1) // day
-    return t1 != t2
 
 
 @dataclass
@@ -81,8 +74,8 @@ class RealtimeLoop:
     def _loader_slots(self, spec: LoaderSpec, ws: int, we: int) -> list[int]:
         sched = self.lake.schedule
         slots = range(ws, we + 1)
-        if spec.daily and self.config.validators_daily_mode:
-            return [s for s in slots if _is_last_slot_of_day(s, sched)]
+        if spec.daily:
+            return [s for s in slots if sched.utc_day_bounds(s, s)[1] == s]
         return list(slots)
 
     def process_window(self, ws: int, we: int) -> dict[str, int]:

@@ -219,6 +219,25 @@ def test_pipeline_end_to_end_and_repair(spark, tmp_path, lake):
     assert sorted(r["proposer_index"] for r in fixed.collect()) == [100, 101, 103, 104, 777]
 
 
+def test_pipeline_sub_day_repair_keeps_rest_of_day(spark, tmp_path, lake):
+    """Repairing a few slots overwrites their whole ``date=`` partition,
+    so the rest of that UTC day must be re-transformed, not dropped."""
+    prog = L.ProgressManifest(spark, str(tmp_path / "progress"))
+    pipe = BeaconPipeline(lake, progress=prog, tables={"raw_blocks": ["blocks"]})
+    day = GNOSIS.slot_to_timestamp(SLOT0) // 86400
+    assert GNOSIS.slot_to_timestamp(SLOT0 + 19) // 86400 == day
+
+    rows = [FX.raw_row(s, FX.block_payload(s)) for s in range(SLOT0, SLOT0 + 20)]
+    lake.write("raw_blocks", _raw_df(spark, rows))
+    pipe.transform_range("raw_blocks", SLOT0, SLOT0 + 19)
+    assert lake.read_latest("blocks").count() == 20
+
+    pipe.repair_range("raw_blocks", SLOT0 + 5, SLOT0 + 9)
+    assert lake.read_latest("blocks").count() == 20
+    done = prog.completed_ranges("raw_blocks").collect()
+    assert (SLOT0 + 5, SLOT0 + 9) in {(r["start_slot"], r["end_slot"]) for r in done}
+
+
 def test_pipeline_discovery_loop(spark, tmp_path, lake):
     prog = L.ProgressManifest(spark, str(tmp_path / "progress"))
     led = L.ChunkLedger(spark, str(tmp_path / "ledger"))

@@ -2,25 +2,21 @@
 on Spark and its oracle_sql() on DuckDB over the same parquet tables, then
 compare row count, column names, and (order-insensitively) values.
 
-Values are compared exactly for ints/strings and to 1e-9 relative for
-floats — stricter than any reasonable value-hash, so passing here means the
-driver's hash compare passes too.
+The comparison is tools/run_oracle_gate.py's `oracle_match`: values are
+compared exactly for ints/strings and to 1e-9 relative for floats — stricter
+than any reasonable value-hash, so passing here means the driver's hash
+compare passes too.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tools.run_oracle_gate import TABLES, _normalize, oracle_match
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -36,82 +32,27 @@ def ddb():
     con.close()
 
 
-def _row_sort_key(vals):
-    # rounding-insensitive row order (mirrors tools/run_oracle_gate.py):
-    # non-float fields lead, floats join at 1e-6 rounding so a 1e-9
-    # boundary can't flip the positional pairing of in-tolerance rows
-    lead = [repr(v) for (t, v) in vals if t != "f"]
-    tail = [
-        repr(round(v, 6)) if isinstance(v, float) else repr(v)
-        for (t, v) in vals
-        if t == "f"
-    ]
-    return (lead, tail)
-
-
-def _normalize(rows, cols):
-    out = []
-    for row in rows:
-        vals = []
-        for c in cols:
-            v = row[c]
-            if isinstance(v, float):
-                vals.append(("f", round(v, 9)))
-            else:
-                vals.append((type(v).__name__[:1], v))
-        out.append(tuple(vals))
-    out.sort(key=_row_sort_key)
-    return out
-
-
-def _values_match(a, b) -> bool:
-    if len(a) != len(b):
-        return False
-    for ra, rb in zip(a, b):
-        for (ta, va), (tb, vb) in zip(ra, rb):
-            if ta == "f" and tb == "f":
-                if not (
-                    va == vb
-                    or (isinstance(va, float) and isinstance(vb, float)
-                        and math.isclose(va, vb, rel_tol=1e-9, abs_tol=1e-9))
-                ):
-                    return False
-            elif va != vb:
-                return False
-    return True
-
-
 QUERY_NAMES = sorted(entry_mod.queries().keys())
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, ddb, name):
-    qfn = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql().get(name)
-    sdf = qfn(spark, SF_DIR)
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
     spark_rows = [r.asDict() for r in sdf.collect()]
-    if sql is None:
-        # declared rows-only entry (non-SQL-expressible op): the driver runs
-        # a weaker check; locally require a non-degenerate, stable result
-        assert len(spark_rows) > 0, f"{name}: rows-only query returned nothing"
-        assert len(sdf.schema.fields) > 0
-        rerun = sorted(repr(r.asDict()) for r in qfn(spark, SF_DIR).collect())
-        assert rerun == sorted(repr(r) for r in spark_rows), f"{name}: nondeterministic"
-        return
-    ora = ddb.execute(sql)
+    ora = ddb.execute(entry_mod.oracle_sql()[name])
     ora_cols = [d[0] for d in ora.description]
     ora_rows = [dict(zip(ora_cols, row)) for row in ora.fetchall()]
 
-    assert sorted(sdf.columns) == sorted(ora_cols), (
+    res = oracle_match(sdf.columns, spark_rows, ora_cols, ora_rows)
+    assert res["schema_match"], (
         f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(ora_cols)}"
     )
-    assert len(spark_rows) == len(ora_rows), (
+    assert res["rows_match"], (
         f"{name}: row count {len(spark_rows)} vs {len(ora_rows)}"
     )
-    cols = sorted(sdf.columns)
-    sn = _normalize(spark_rows, cols)
-    on = _normalize(ora_rows, cols)
-    if not _values_match(sn, on):
+    if not res["values_match"]:
+        cols = sorted(sdf.columns)
+        sn, on = _normalize(spark_rows, cols), _normalize(ora_rows, cols)
         diffs = [(x, y) for x, y in zip(sn, on) if x != y][:5]
         pytest.fail(f"{name}: value mismatch, first diffs: {diffs}")
 

@@ -294,13 +294,53 @@ def test_realtime_daily_loader_filters_slots(spark, tmp_path):
         return 200, json.dumps(FX.VALIDATORS_PAYLOAD)
 
     api = B.BeaconAPI("http://fake", transport=transport, sleep=lambda s: None)
-    cfg = EngineConfig(chunk_size=20_000, validators_daily_mode=True)
+    cfg = EngineConfig(chunk_size=20_000)
     loop = RealtimeLoop(api=api, lake=lake, pipeline=pipe, config=cfg,
                         loaders=("validators",), sleep=lambda s: None)
     # one gnosis day = 17280 slots → exactly 1 day-boundary slot in 20k
     loop.process_window(0, 19_999)
     assert len(calls) == 1
     assert lake.read_latest("validators").count() == 2  # fixture has 2 entries
+
+
+def test_cli_backfill_daily_loader_fetches_day_ends(spark, tmp_path, capsys):
+    """`load backfill` honours LoaderSpec.daily: over a range holding two
+    UTC day ends, validators are fetched exactly twice, at those slots."""
+    from beacon_indexer_spark.cli import main
+
+    def ts(s):
+        return GNOSIS.slot_to_timestamp(s) // 86400
+
+    day = 86400 // GNOSIS.seconds_per_slot
+    first_end = next(s for s in range(SLOT0, SLOT0 + day) if ts(s) != ts(s + 1))
+    start, end = first_end - 5, first_end + day + 5
+    log = str(tmp_path / "requests.log")
+
+    # nested closure → cloudpickle ships it by value to the executors,
+    # which record each request in a file the driver reads back
+    def fake_api():
+        from beacon_indexer_spark.sources.beacon_api import BeaconAPI
+
+        def transport(url, params, timeout):
+            with open(log, "a") as f:
+                f.write(url + "\n")
+            return 200, '{"data": []}'
+
+        return BeaconAPI("http://fake", transport=transport, sleep=lambda s: None)
+
+    rc = main(
+        ["--lake-dir", str(tmp_path / "lake"), "load", "backfill",
+         "--start-slot", str(start), "--end-slot", str(end),
+         "--loaders", "validators"],
+        spark=spark, api_factory=fake_api,
+    )
+    assert rc == 0
+    capsys.readouterr()
+    with open(log) as f:
+        urls = f.read().split()
+    assert sorted(int(u.split("/")[-2]) for u in urls) == [first_end, first_end + day]
+    lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
+    assert lake.read("raw_validators").count() == 2
 
 
 # ---------------------------------------------------------------------------

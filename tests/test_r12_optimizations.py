@@ -283,25 +283,6 @@ def test_spread_as_keyed_spreads_and_preserves_rows(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_spread_by_disabled_flag_returns_input(spark, sf_dir):
-    """The A/B-harness flag turns keyed spreads into identity — and the
-    results are identical either way (the equivalence the whole A/B
-    methodology rests on)."""
-    from beacon_indexer_spark.plans import queries as Q
-
-    try:
-        Q._SPREAD_BY_ENABLED = False
-        off = Q._ts(spark, sf_dir, "orders", by=("o_custkey",))
-        n_off = off.rdd.getNumPartitions()
-    finally:
-        Q._SPREAD_BY_ENABLED = True
-    on = Q._ts(spark, sf_dir, "orders", by=("o_custkey",))
-    assert n_off < on.rdd.getNumPartitions()
-    assert sorted(map(tuple, off.collect())) == sorted(
-        map(tuple, on.collect())
-    )
-
-
 def test_fuzzy_name_pairs_spread_input_identical(spark):
     """fuzzy_name_pairs' under-parallel block-key spread changes the
     physical placement only: pairs from a 1-partition input equal pairs

@@ -47,7 +47,7 @@ def test_broadcast_if_small_expect_known_raises_on_shed_count(spark, monkeypatch
     assert rows == want
 
 
-# ------------------------------------------------------ CC round variants
+# ----------------------------------------------------- CC vs union-find
 
 
 def _cc_expected(pairs):
@@ -69,43 +69,45 @@ def _cc_expected(pairs):
     return sorted((n, find(n)) for n in nodes)
 
 
-def test_cc_extra_jumps_equivalent_on_chains(spark):
-    """Any extra-jump depth converges to the same min-reachable labels —
-    chains force multiple rounds, so the jump ladder actually exercises
-    path compression (r13 CC change)."""
+def test_cc_matches_union_find_on_chains(spark):
+    """The broadcast-path labels equal union-find ground truth — chains
+    force multiple rounds, so pointer jumping is actually exercised."""
     from beacon_indexer_spark.operators.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(1, 24)]
     extra = [(100, 101), (101, 103), (102, 103), (200, 300)]
     pairs = spark.createDataFrame(chain + extra, "id_a long, id_b long")
-    want = _cc_expected(chain + extra)
-    for jumps in (0, 1, 3):
-        got = sorted(
-            map(
-                tuple,
-                connected_components(pairs, extra_jumps=jumps).collect(),
-            )
-        )
-        assert got == want, f"extra_jumps={jumps}"
+    got = sorted(map(tuple, connected_components(pairs).collect()))
+    assert got == _cc_expected(chain + extra)
 
 
-def test_cc_extra_jumps_shuffle_path_equivalent(spark):
-    """The shuffle fallback (broadcast_rows=None) ignores extra jumps by
-    design and still lands on the identical labels."""
+def test_cc_shuffle_path_matches_union_find(spark):
+    """The shuffle fallback (broadcast_rows=None) lands on the identical
+    union-find labels."""
     from beacon_indexer_spark.operators.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(1, 16)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    want = _cc_expected(chain)
     got = sorted(
         map(
             tuple,
-            connected_components(
-                pairs, broadcast_rows=None, extra_jumps=3
-            ).collect(),
+            connected_components(pairs, broadcast_rows=None).collect(),
         )
     )
-    assert got == want
+    assert got == _cc_expected(chain)
+
+
+def test_minhash_signatures_rejects_misshapen_shingled(spark):
+    """A staged shingle frame must be exactly (id_col, "__sh"): anything
+    else would be hashed while text_col/shingle_n are silently ignored."""
+    from beacon_indexer_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    wrong = docs.select("doc_id", F.split("text", " ").alias("shingles"))
+    with pytest.raises(ValueError, match="__sh"):
+        minhash_signatures(docs, "doc_id", "text", shingled=wrong)
+    ok = wrong.withColumnRenamed("shingles", "__sh")
+    assert minhash_signatures(docs, "doc_id", "text", k=2, shingled=ok).count() == 1
 
 
 # --------------------------------------------- ANN single-scan quality gates

@@ -280,25 +280,25 @@ def test_curriculum_interleave_strides_groups(spark):
 
 
 def test_query_registry_integrity():
-    """The registry bug class round 11 hit: a new query accidentally
-    reusing an existing function name makes the later def shadow the
-    earlier one — both dict entries silently point at the new
-    implementation and the unique surface shrinks. Pin: no duplicate
-    q_* defs, no duplicate dict keys, and every declared query has an
-    oracle (or is a deliberate rows-only entry, currently none)."""
+    """The registries are derived from the module's names, so pin the
+    declaration rules: a reused q_* function name would make the later
+    def shadow the earlier one and silently shrink the surface; every
+    query resolves to exactly one oracle; and no ORACLE_* constant is
+    left behind by a renamed or deleted query."""
     import re
     from collections import Counter
 
     import beacon_indexer_spark.plans.queries as Q
 
-    src = open(Q.__file__).read()
-    defs = re.findall(r"^def (q_\w+)\(", src, re.M)
+    assert len(Q.QUERIES) == 346
+    defs = re.findall(r"^def (q_\w+)\(", open(Q.__file__).read(), re.M)
     dup_defs = [k for k, c in Counter(defs).items() if c > 1]
     assert not dup_defs, f"duplicate query function defs: {dup_defs}"
-    m = re.search(r"QUERIES\s*[:=][^{]*\{(.*?)\n\}", src, re.S)
-    keys = re.findall(r'"([a-z0-9_]+)":', m.group(1))
-    dup_keys = [k for k, c in Counter(keys).items() if c > 1]
-    assert not dup_keys, f"duplicate QUERIES keys: {dup_keys}"
-    assert len(keys) == len(Q.QUERIES)
-    missing_oracles = set(Q.QUERIES) - set(Q.oracles())
-    assert not missing_oracles, f"queries without oracles: {missing_oracles}"
+    assert sorted(defs) == sorted(f"q_{n}" for n in Q.QUERIES)
+    for name in Q.QUERIES:
+        assert Q._oracle(name).strip(), f"{name}: empty oracle"
+    orphans = [
+        k for k in vars(Q)
+        if k.startswith("ORACLE_") and k[len("ORACLE_"):].lower() not in Q.QUERIES
+    ]
+    assert not orphans, f"oracles without a query: {orphans}"

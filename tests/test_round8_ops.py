@@ -1297,8 +1297,6 @@ def test_oracle_gate_sort_key_negative_zero_and_tiebreak():
     (b) tie-break equal 1e-6-rounded keys by full precision so rows
     separated by more than the compare tolerance sort deterministically
     (ADVICE r7)."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     from tools.run_oracle_gate import _row_sort_key
 
     neg = _row_sort_key([("f", -1e-10)])

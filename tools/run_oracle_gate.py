@@ -7,9 +7,10 @@ Why this exists: the driver's per-round correctness gate samples ~50 of the
 declared queries, so at any time half the surface has no on-disk
 driver-witnessed evidence. This tool produces that evidence for the WHOLE
 surface at the driver's own scale, as a committed artifact regenerated each
-round. The comparison mirrors tests/test_entry_oracle.py (columns sorted by
-name, order-insensitive rows, exact ints/strings, 1e-9 float tolerance —
-stricter than the driver's value hash, so green here implies green there).
+round. `oracle_match` is the one row comparison, shared with
+tests/test_entry_oracle.py (columns sorted by name, order-insensitive rows,
+exact ints/strings, 1e-9 float tolerance — stricter than the driver's value
+hash, so green here implies green there).
 
 Usage:
     python tools/run_oracle_gate.py            # sf0.01, writes ORACLE_GATE.json
@@ -94,6 +95,23 @@ def _values_match(a, b) -> bool:
     return True
 
 
+def oracle_match(spark_cols, spark_rows, ora_cols, ora_rows) -> dict:
+    """Compare Spark rows with oracle rows (both lists of column->value
+    dicts): ``rows_match`` / ``schema_match`` / ``values_match`` flags;
+    values are compared only when the row counts and columns agree."""
+    rec = {
+        "rows_match": len(spark_rows) == len(ora_rows),
+        "schema_match": sorted(spark_cols) == sorted(ora_cols),
+        "values_match": False,
+    }
+    if rec["rows_match"] and rec["schema_match"]:
+        cols = sorted(spark_cols)
+        rec["values_match"] = _values_match(
+            _normalize(spark_rows, cols), _normalize(ora_rows, cols)
+        )
+    return rec
+
+
 def main() -> None:
     import duckdb
 
@@ -134,41 +152,17 @@ def main() -> None:
     for name, fn in qs.items():
         rec: dict = {
             "rows_match": False, "schema_match": False,
-            "values_match": False, "rows_only": False, "err": None,
+            "values_match": False, "err": None,
         }
         try:
             sdf = fn(spark, sf_dir)
             spark_rows = [r.asDict() for r in sdf.collect()]
             rec["spark_rows"] = len(spark_rows)
-            sql = oracles.get(name)
-            if sql is None:
-                # declared rows-only (non-SQL-expressible): require a
-                # non-degenerate, deterministic result, like the local gate
-                rerun = sorted(
-                    repr(r.asDict()) for r in fn(spark, sf_dir).collect()
-                )
-                stable = rerun == sorted(repr(r) for r in spark_rows)
-                rec.update(
-                    rows_only=True,
-                    rows_match=len(spark_rows) > 0 and stable,
-                    schema_match=len(sdf.schema.fields) > 0,
-                    values_match=stable,
-                )
-            else:
-                ora = con.execute(sql)
-                ora_cols = [d[0] for d in ora.description]
-                ora_rows = [
-                    dict(zip(ora_cols, row)) for row in ora.fetchall()
-                ]
-                rec["oracle_rows"] = len(ora_rows)
-                rec["rows_match"] = len(spark_rows) == len(ora_rows)
-                rec["schema_match"] = sorted(sdf.columns) == sorted(ora_cols)
-                if rec["rows_match"] and rec["schema_match"]:
-                    cols = sorted(sdf.columns)
-                    rec["values_match"] = _values_match(
-                        _normalize(spark_rows, cols),
-                        _normalize(ora_rows, cols),
-                    )
+            ora = con.execute(oracles[name])
+            ora_cols = [d[0] for d in ora.description]
+            ora_rows = [dict(zip(ora_cols, row)) for row in ora.fetchall()]
+            rec["oracle_rows"] = len(ora_rows)
+            rec.update(oracle_match(sdf.columns, spark_rows, ora_cols, ora_rows))
         except Exception:  # noqa: BLE001 - gate must report, not die
             rec["err"] = traceback.format_exc(limit=3)
         results[name] = rec
