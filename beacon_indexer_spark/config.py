@@ -148,8 +148,6 @@ class EngineConfig:
     realtime_slot_delay: int = 2  # re-org lateness guard (ref REALTIME_SLOT_DELAY)
     poll_interval_s: float = 6.0  # head-poll cadence
     error_sleep_s: float = 12.0
-    api_retries: int = 3
-    api_backoff_s: float = 5.0
     enabled_loaders: tuple[str, ...] = (
         "blocks",
         "validators",

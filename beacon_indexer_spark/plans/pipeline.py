@@ -1,9 +1,9 @@
 """End-to-end batch pipeline: raw lake → transform → structured lake.
 
 The Spark shape of the reference's ``transform run`` lifecycle (SURVEY §3.2):
-discovery (anti-join) → range read (latest-wins) → parse projections →
-parallel table writes → progress record. Steps that were processes/asyncio
-in the reference collapse into one Spark job per chunk range; the repair
+discovery (anti-join) → range read → latest-wins parse projections → one
+write per table → progress record. Steps that were processes/asyncio in the
+reference collapse into one Spark job per chunk range; the repair
 entry point (reference ``maintain fix``, ``src/services/maintenance.py:77-138``)
 becomes re-transform + dynamic partition overwrite.
 """
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from beacon_indexer_spark.config import ForkSchedule
@@ -22,7 +22,7 @@ from beacon_indexer_spark.control.ledger import (
     ProgressManifest,
     untransformed_chunks,
 )
-from beacon_indexer_spark.plans.transform import TRANSFORMS, transform_blocks
+from beacon_indexer_spark.plans.transform import TRANSFORMS, TransformResult, transform_blocks
 from beacon_indexer_spark.schemas.structured import RAW_TO_STRUCTURED
 from beacon_indexer_spark.sources.storage import ParquetLake, ParquetSink
 
@@ -47,15 +47,34 @@ def transform_tables(
     schedule: ForkSchedule,
     tables: list[str] | None = None,
     insert_version: int | None = None,
-) -> dict[str, DataFrame]:
+) -> TransformResult:
     """Uniform transform entry: any raw table → {structured_table: df}."""
     if raw_table == "raw_blocks":
         return transform_blocks(raw, schedule, tables=tables, insert_version=insert_version)
     fn = TRANSFORMS[raw_table]
     name = RAW_TO_STRUCTURED[raw_table][0]
     if tables is not None and name not in tables:
-        return {}
-    return {name: fn(raw, schedule, insert_version=insert_version)}
+        return TransformResult()
+    return TransformResult({name: fn(raw, schedule, insert_version=insert_version)})
+
+
+def write_tables(sink, outs: TransformResult, mode: str = "append") -> dict[str, int]:
+    """Write each transformed frame once; returns {table: rows_written}.
+    Each count is an ``Observation`` on the written frame (no job of its
+    own), so ``sink.write`` must execute the frame. Releases the shared
+    parse cache of ``transform_blocks`` whether or not the writes succeed."""
+    from beacon_indexer_spark import observability as O
+
+    counts: dict[str, int] = {}
+    try:
+        for name, df in outs.items():
+            obs = Observation()
+            sink.write(name, df.observe(obs, F.count(F.lit(1)).alias("rows")), mode=mode)
+            counts[name] = obs.get["rows"]
+            O.METRICS.inc("beacon_indexer_rows_written_total", {"table": name}, counts[name])
+    finally:
+        outs.unpersist()
+    return counts
 
 
 class BeaconPipeline:
@@ -86,6 +105,11 @@ class BeaconPipeline:
         feeds. Returns {table: rows_written}. Any failure marks the whole
         range failed (reference semantics, transformer.py:299-302).
 
+        The range is read as stored, duplicates included: the transform's
+        ``dedup_raw`` is its one latest-wins step. ``write_tables`` writes
+        each table once and counts its rows during that write. ``/health``
+        reports ``failed`` (error and range) or ``ok`` (last good slot).
+
         ``record_ranges`` records progress per constituent chunk while the
         transform itself runs as ONE Spark job over the merged range — the
         batched-discovery path (at 100× chunk counts, per-chunk job launch
@@ -94,30 +118,14 @@ class BeaconPipeline:
         """
         from beacon_indexer_spark import observability as O
 
-        counts: dict[str, int] = {}
-        outs = None
         ranges = record_ranges or [(start_slot, end_slot)]
         t0 = time.monotonic()
         try:
-            raw = self.lake.read_latest(raw_table, (start_slot, end_slot)).drop("date")
-            outs = transform_tables(
-                raw,
-                raw_table,
-                self.schedule,
-                tables=self.allow.get(raw_table),
-                insert_version=time.time_ns(),
-            )
-            for name, df in outs.items():
-                # cache around write+count: otherwise the progress count
-                # re-executes the whole parse for every table
-                df = df.cache()
-                try:
-                    self.sink.write(name, df, mode=mode)
-                    counts[name] = df.count()
-                    O.METRICS.inc("beacon_indexer_rows_written_total",
-                                  {"table": name}, counts[name])
-                finally:
-                    df.unpersist()
+            raw = self.lake.read(raw_table).filter(F.col("slot").between(start_slot, end_slot))
+            outs = transform_tables(raw.drop("date"), raw_table, self.schedule,
+                                    tables=self.allow.get(raw_table),
+                                    insert_version=time.time_ns())
+            counts = write_tables(self.sink, outs, mode)
             if self.progress:
                 total = sum(counts.values())
                 # merged runs attribute the row total to the first chunk so
@@ -134,19 +142,20 @@ class BeaconPipeline:
                               time.monotonic() - t0,
                               {"loader": raw_table, "operation": "transform"},
                               buckets=O.CHUNK_DURATION_BUCKETS)
+            O.update_health(status="ok", operation=f"transform {raw_table}",
+                            last_good_slot=end_slot, error=None, failed_range=None)
             return counts
         except Exception as e:  # noqa: BLE001 — record then re-raise
             if self.progress:
                 self.progress.record_many(
-                    [(raw_table, s, e, FAILED, 0, 0, str(e)[:500]) for s, e in ranges]
+                    [(raw_table, lo, hi, FAILED, 0, 0, str(e)[:500]) for lo, hi in ranges]
                 )
             O.METRICS.inc("beacon_indexer_transform_failures_total",
                           {"loader": raw_table})
+            O.update_health(status="failed", operation=f"transform {raw_table}",
+                            error=str(e)[:500],
+                            failed_range=[raw_table, start_slot, end_slot])
             raise
-        finally:
-            # release the shared cached parse frame (transform_blocks)
-            if outs is not None and hasattr(outs, "unpersist"):
-                outs.unpersist()
 
     def transform_pending(self, ledger_current: DataFrame, raw_table: str, limit: int = 50):
         """Discovery + execution: the reference's transform-batch loop body.

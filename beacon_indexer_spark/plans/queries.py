@@ -972,25 +972,37 @@ def q_embedding_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_embedding_near_dupes_sql(n_bits: int = 32, bands: int = 4) -> str:
-    # inline the deterministic hyperplanes used by lsh_band_keys (dim=64):
-    # band b's key = the sign bits of its contiguous hyperplane segment;
-    # candidate pairs share ANY band key (OR-join mirror of the banded
-    # bucket groupBy)
+def _oracle_band_cols(n_bits: int, bands: int) -> str:
+    """DuckDB band-key columns ``band0..`` mirroring `lsh_band_keys`
+    (dim=64): band b's key is the sign bits of its contiguous segment of
+    the deterministic hyperplanes. Each dot product is a sequential fold
+    over ``list_zip(embedding, hyperplane)``, so the hyperplane literal is
+    built once per row, not once per element."""
     per = n_bits // bands
     bit_sql = []
     for b in range(n_bits):
-        arr = "list_value(" + ", ".join(str(x) for x in S._hyperplane(64, b)) + ")"
+        hp = "[" + ", ".join(str(x) for x in S._hyperplane(64, b)) + "]"
         dotb = (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(generate_series(1, 64),"
-            f" i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), (a,b) -> a + b)"
+            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip(embedding,"
+            f" {hp}), p -> CAST(p[1] AS DOUBLE) * p[2])), (a,b) -> a + b)"
         )
         bit_sql.append(f"CASE WHEN {dotb} >= 0 THEN '1' ELSE '0' END")
-    band_cols = ", ".join(
+    return ", ".join(
         "(" + " || ".join(bit_sql[b * per : (b + 1) * per]) + f") AS band{b}"
         for b in range(bands)
     )
-    any_band = " OR ".join(f"a.band{b} = b.band{b}" for b in range(bands))
+
+
+def _oracle_embedding_near_dupes_sql(n_bits: int = 32, bands: int = 4) -> str:
+    # candidate pairs share ANY band key: a UNION of per-band equi-joins
+    # over the materialized keys (DuckDB inlines a plain CTE, and an
+    # OR-join would recompute every dot product per candidate pair)
+    band_cols = _oracle_band_cols(n_bits, bands)
+    cand = " UNION ".join(
+        f"SELECT a.vec_id AS ia, b.vec_id AS ib FROM kb a JOIN kb b"
+        f" ON a.band{b} = b.band{b} AND a.vec_id < b.vec_id"
+        for b in range(bands)
+    )
     dotp = (
         "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(generate_series(1, 64),"
         " i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y)"
@@ -1000,11 +1012,14 @@ def _oracle_embedding_near_dupes_sql(n_bits: int = 32, bands: int = 4) -> str:
         " i -> CAST({e}.embedding[i] AS DOUBLE) * CAST({e}.embedding[i] AS DOUBLE))), (x,y) -> x + y))"
     )
     return f"""
-WITH kb AS (SELECT vec_id, embedding, {band_cols} FROM embeddings)
-SELECT CAST(a.vec_id AS BIGINT) id_a, CAST(b.vec_id AS BIGINT) id_b,
-       round({dotp} / ({norm.format(e='a')} * {norm.format(e='b')}), 6) AS cos_sim
-FROM kb a JOIN kb b ON a.vec_id < b.vec_id AND ({any_band})
-WHERE {dotp} / ({norm.format(e='a')} * {norm.format(e='b')}) >= 0.35
+WITH kb AS MATERIALIZED (SELECT vec_id, {band_cols} FROM embeddings),
+cand AS MATERIALIZED ({cand}),
+scored AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         {dotp} / ({norm.format(e='a')} * {norm.format(e='b')}) AS cos
+  FROM cand JOIN embeddings a ON a.vec_id = cand.ia JOIN embeddings b ON b.vec_id = cand.ib)
+SELECT CAST(id_a AS BIGINT) id_a, CAST(id_b AS BIGINT) id_b, round(cos, 6) AS cos_sim
+FROM scored WHERE cos >= 0.35
 """
 
 
@@ -2955,21 +2970,15 @@ def _oracle_semantic_dedup_sql(
         )
         + ")"
     )
-    per = n_bits // bands
-    bit_sql = []
-    for b in range(n_bits):
-        arr = "list_value(" + ", ".join(str(x) for x in S._hyperplane(64, b)) + ")"
-        dotb = (
-            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-            " list_transform(generate_series(1, 64),"
-            f" i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), (a,b) -> a + b)"
-        )
-        bit_sql.append(f"CASE WHEN {dotb} >= 0 THEN '1' ELSE '0' END")
-    band_cols = ", ".join(
-        "(" + " || ".join(bit_sql[b * per : (b + 1) * per]) + f") AS band{b}"
+    band_cols = _oracle_band_cols(n_bits, bands)
+    # candidates share the cluster and ANY band: a UNION of per-band
+    # equi-joins over materialized band keys (DuckDB inlines a plain CTE,
+    # and an OR-join would recompute every dot product per candidate pair)
+    cand = " UNION ".join(
+        "SELECT a.vec_id AS id_a, b.vec_id AS id_b FROM vband a JOIN vband b"
+        f" ON a.cid = b.cid AND a.band{b} = b.band{b} AND a.vec_id < b.vec_id"
         for b in range(bands)
     )
-    any_band = " OR ".join(f"a.band{b} = b.band{b}" for b in range(bands))
     return f"""
 WITH RECURSIVE cents AS (
   SELECT cid, cv FROM (
@@ -3016,15 +3025,12 @@ vlist_hier AS (
   WHERE rk = 1),
 vlist AS (
   SELECT * FROM vlist_flat UNION ALL SELECT * FROM vlist_hier),
-kb AS (SELECT vec_id, {band_cols} FROM embeddings),
-vband AS (
+kb AS MATERIALIZED (SELECT vec_id, {band_cols} FROM embeddings),
+vband AS MATERIALIZED (
   SELECT v.vec_id, v.cid, {", ".join(f"kb.band{b}" for b in range(bands))}
   FROM vlist v JOIN kb ON kb.vec_id = v.vec_id),
-cand AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM vband a JOIN vband b
-    ON a.cid = b.cid AND a.vec_id < b.vec_id AND ({any_band})),
-pairs AS (
+cand AS ({cand}),
+pairs AS MATERIALIZED (
   SELECT id_a, id_b
   FROM cand
   JOIN embeddings ea ON ea.vec_id = id_a
@@ -3032,7 +3038,7 @@ pairs AS (
   WHERE CASE WHEN ({nrm.format(e='ea')}) * ({nrm.format(e='eb')}) > 0
              THEN ({dot_ab}) / (({nrm.format(e='ea')}) * ({nrm.format(e='eb')}))
              ELSE 0.0 END >= {threshold}),
-edges AS (SELECT id_a AS s, id_b AS t FROM pairs
+edges AS MATERIALIZED (SELECT id_a AS s, id_b AS t FROM pairs
           UNION SELECT id_b, id_a FROM pairs),
 reach AS (SELECT s, t FROM edges
           UNION SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s

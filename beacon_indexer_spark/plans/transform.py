@@ -13,11 +13,12 @@ DataFrame column expressions:
   row-at-a-time dict parsing that bottlenecks the reference disappears into
   whole-stage codegen.
 
-Scale notes: the only wide operation here is the latest-wins dedup of the
-raw input (shuffle by slot, map-side combined via max_by). Every projection
-afterwards is narrow; writing N tables re-reads the deduped batch N times,
-so callers should ``.cache()`` / checkpoint the deduped+parsed frame when
-fanning out (see ``transform_blocks``).
+Scale notes: each transform's ``dedup_raw`` is the one wide operation and
+the only latest-wins step (shuffle by slot, map-side combined via max_by);
+callers pass the raw range as read. Every projection afterwards is narrow.
+``transform_blocks`` caches its deduped+parsed frame, so its 13 tables
+share one parse; ``plans.pipeline.write_tables`` writes each table once,
+counts its rows while writing, and releases that cache.
 """
 
 from __future__ import annotations
@@ -78,8 +79,9 @@ def dedup_raw(raw: DataFrame) -> DataFrame:
 
 class TransformResult(dict):
     """{table: DataFrame} plus a handle on the shared cached parse frame so
-    batch drivers can release it after the fan-out writes (otherwise every
-    transformed chunk leaks one cached DataFrame for the session lifetime)."""
+    writers can release it after the fan-out writes (otherwise every
+    transformed range leaks one cached DataFrame for the session lifetime).
+    Single-table results carry no parse cache (``parsed`` stays None)."""
 
     parsed: DataFrame | None = None
 
@@ -126,28 +128,31 @@ def transform_blocks(
     schedule: ForkSchedule,
     tables: list[str] | None = None,
     insert_version: int | None = None,
-    cache: bool = True,
-) -> dict[str, DataFrame]:
+) -> TransformResult:
     """raw_blocks → {blocks, attestations, deposits, voluntary_exits,
     proposer_slashings, attester_slashings, sync_aggregates,
     execution_payloads, transactions, withdrawals, bls_changes,
     blob_commitments, execution_requests}.
 
-    ``tables`` is the loader allow-list (reference P8); None = all.
+    ``tables`` is the loader allow-list (reference P8); None = all. The
+    parse frame is cached for the fan-out; call ``unpersist()`` on the
+    result once its tables are written.
     """
     iv = insert_version if insert_version is not None else time.time_ns()
     want = set(tables) if tables is not None else None
-    parsed = _parse_blocks(raw, schedule, want)
     out = TransformResult()
-    if cache:
-        parsed = parsed.cache()
-        out.parsed = parsed
+    parsed = out.parsed = _parse_blocks(raw, schedule, want).cache()
 
     def wanted(name: str) -> bool:
         return want is None or name in want
 
     def add(name: str, df: DataFrame) -> None:
         out[name] = _stamp(df, schedule, iv)
+
+    def fan_out(arr: Column, index: str, alias: str, *cols: Column) -> DataFrame:
+        """One row per element (``alias``) of ``arr``, with its position."""
+        rows = parsed.select("slot", F.posexplode(arr).alias(index, alias))
+        return rows.select("slot", F.col(index).cast("int"), *cols)
 
     body = F.col(_B)
     cnt = lambda c: F.coalesce(F.size(c), F.lit(0)).cast("int")  # noqa: E731
@@ -187,12 +192,8 @@ def transform_blocks(
     )
 
     def _build_attestations() -> DataFrame:
-        att = parsed.select(
-            "slot", F.posexplode(body["attestations"]).alias("attestation_index", "a")
-        )
-        return att.select(
-            "slot",
-            F.col("attestation_index").cast("int"),
+        return fan_out(
+            body["attestations"], "attestation_index", "a",
             safe_int_col("a.data.index").alias("committee_index"),
             F.col("a.aggregation_bits").alias("aggregation_bits"),
             F.col("a.committee_bits").alias("committee_bits"),  # Electra+
@@ -206,12 +207,8 @@ def transform_blocks(
         )
 
     def _build_deposits() -> DataFrame:
-        dep = parsed.select(
-            "slot", F.posexplode(body["deposits"]).alias("deposit_index", "d")
-        )
-        return dep.select(
-            "slot",
-            F.col("deposit_index").cast("int"),
+        return fan_out(
+            body["deposits"], "deposit_index", "d",
             F.col("d.data.pubkey").alias("pubkey"),
             F.col("d.data.withdrawal_credentials").alias("withdrawal_credentials"),
             safe_int_col("d.data.amount").alias("amount"),
@@ -220,22 +217,14 @@ def transform_blocks(
         )
 
     def _build_voluntary_exits() -> DataFrame:
-        vex = parsed.select(
-            "slot", F.posexplode(body["voluntary_exits"]).alias("exit_index", "v")
-        )
-        return vex.select(
-            "slot",
-            F.col("exit_index").cast("int"),
+        return fan_out(
+            body["voluntary_exits"], "exit_index", "v",
             safe_int_col("v.message.epoch").alias("epoch"),
             safe_int_col("v.message.validator_index").alias("validator_index"),
             F.col("v.signature").alias("signature"),
         )
 
     def _build_proposer_slashings() -> DataFrame:
-        psl = parsed.select(
-            "slot", F.posexplode(body["proposer_slashings"]).alias("slashing_index", "s")
-        )
-
         def _header(side: int) -> list[Column]:
             h = F.col(f"s.signed_header_{side}")
             return [
@@ -249,15 +238,11 @@ def transform_blocks(
                 h["signature"].alias(f"header_{side}_signature"),
             ]
 
-        return psl.select(
-            "slot", F.col("slashing_index").cast("int"), *_header(1), *_header(2)
+        return fan_out(
+            body["proposer_slashings"], "slashing_index", "s", *_header(1), *_header(2)
         )
 
     def _build_attester_slashings() -> DataFrame:
-        asl = parsed.select(
-            "slot", F.posexplode(body["attester_slashings"]).alias("slashing_index", "s")
-        )
-
         def _att_side(side: int) -> list[Column]:
             a = F.col(f"s.attestation_{side}")
             idxs = F.transform(a["attesting_indices"], lambda x: safe_int_col(x))
@@ -277,9 +262,8 @@ def transform_blocks(
                 F.transform(F.col("s.attestation_2.attesting_indices"), lambda x: safe_int_col(x)),
             )
         )
-        return asl.select(
-            "slot",
-            F.col("slashing_index").cast("int"),
+        return fan_out(
+            body["attester_slashings"], "slashing_index", "s",
             *_att_side(1),
             *_att_side(2),
             slashed.alias("slashed_validators"),
@@ -352,12 +336,8 @@ def transform_blocks(
         )
 
     def _build_withdrawals() -> DataFrame:
-        wd = parsed.select(
-            "slot", F.posexplode(ep["withdrawals"]).alias("withdrawal_index", "w")
-        )
-        return wd.select(
-            "slot",
-            F.col("withdrawal_index").cast("int"),
+        return fan_out(
+            ep["withdrawals"], "withdrawal_index", "w",
             safe_int_col("w.index").alias("index"),
             safe_int_col("w.validator_index").alias("validator_index"),
             F.col("w.address").alias("address"),
@@ -365,12 +345,8 @@ def transform_blocks(
         )
 
     def _build_bls_changes() -> DataFrame:
-        bls = parsed.select(
-            "slot", F.posexplode(body["bls_to_execution_changes"]).alias("change_index", "c")
-        )
-        return bls.select(
-            "slot",
-            F.col("change_index").cast("int"),
+        return fan_out(
+            body["bls_to_execution_changes"], "change_index", "c",
             safe_int_col("c.message.validator_index").alias("validator_index"),
             F.col("c.message.from_bls_pubkey").alias("from_bls_pubkey"),
             F.col("c.message.to_execution_address").alias("to_execution_address"),
@@ -378,11 +354,8 @@ def transform_blocks(
         )
 
     def _build_blob_commitments() -> DataFrame:
-        bc = parsed.select(
-            "slot", F.posexplode(body["blob_kzg_commitments"]).alias("commitment_index", "k")
-        )
-        return bc.select(
-            "slot", F.col("commitment_index").cast("int"), F.col("k").alias("commitment")
+        return fan_out(
+            body["blob_kzg_commitments"], "commitment_index", "k", F.col("k").alias("commitment")
         )
 
     def _build_execution_requests() -> DataFrame:
@@ -426,8 +399,35 @@ def transform_blocks(
 
 
 # ---------------------------------------------------------------------------
-# snapshot/state tables
+# single-table transforms (snapshots, queues, sidecars, rewards)
 # ---------------------------------------------------------------------------
+
+def _transform_rows(
+    raw: DataFrame,
+    schedule: ForkSchedule,
+    payload_schema,
+    project: list[Column],
+    insert_version: int | None,
+    explode=F.explode,
+) -> DataFrame:
+    """Dedup → ``from_json`` → one row per ``data`` entry → project → stamp.
+
+    ``explode`` is ``F.explode`` (entry as ``e``), ``F.posexplode`` (entry
+    as ``e`` plus its ``queue_index``) or None (``data`` is one object:
+    one row per slot, null payloads dropped)."""
+    iv = insert_version if insert_version is not None else time.time_ns()
+    data = F.from_json("payload", payload_schema)["data"]
+    slot = F.col("slot").cast("long").alias("slot")
+    deduped = dedup_raw(raw)
+    if explode is None:
+        rows = deduped.select(slot, data.alias("e")).filter(F.col("e").isNotNull())
+    elif explode is F.posexplode:
+        rows = deduped.select(slot, explode(data).alias("queue_index", "e"))
+        project = [F.col("queue_index").cast("int"), *project]
+    else:
+        rows = deduped.select(slot, explode(data).alias("e"))
+    return _stamp(rows.select("slot", *project), schedule, iv)
+
 
 def transform_validators(
     raw: DataFrame, schedule: ForkSchedule, insert_version: int | None = None
@@ -435,120 +435,73 @@ def transform_validators(
     """raw_validators → validators. The ~400k-entry state snapshot that OOMs
     the reference's row-at-a-time parser (src/config.py:59-65) is a single
     explode here — Spark streams it through codegen."""
-    iv = insert_version if insert_version is not None else time.time_ns()
-    deduped = dedup_raw(raw)
-    rows = deduped.select(
-        F.col("slot").cast("long").alias("slot"),
-        F.explode(F.from_json("payload", P.VALIDATORS_PAYLOAD)["data"]).alias("v"),
-    )
-    out = rows.select(
-        "slot",
-        safe_int_col("v.index").alias("validator_index"),
-        safe_int_col("v.balance").alias("balance"),
-        F.col("v.status").alias("status"),
-        F.col("v.validator.pubkey").alias("pubkey"),
-        F.col("v.validator.withdrawal_credentials").alias("withdrawal_credentials"),
-        safe_int_col("v.validator.effective_balance").alias("effective_balance"),
-        F.coalesce(F.col("v.validator.slashed").cast("int"), F.lit(0)).alias("slashed"),
-        epoch_col("v.validator.activation_eligibility_epoch").alias(
+    cols = [
+        safe_int_col("e.index").alias("validator_index"),
+        safe_int_col("e.balance").alias("balance"),
+        F.col("e.status").alias("status"),
+        F.col("e.validator.pubkey").alias("pubkey"),
+        F.col("e.validator.withdrawal_credentials").alias("withdrawal_credentials"),
+        safe_int_col("e.validator.effective_balance").alias("effective_balance"),
+        F.coalesce(F.col("e.validator.slashed").cast("int"), F.lit(0)).alias("slashed"),
+        epoch_col("e.validator.activation_eligibility_epoch").alias(
             "activation_eligibility_epoch"
         ),
-        epoch_col("v.validator.activation_epoch").alias("activation_epoch"),
-        epoch_col("v.validator.exit_epoch").alias("exit_epoch"),
-        epoch_col("v.validator.withdrawable_epoch").alias("withdrawable_epoch"),
-    )
-    return _stamp(out, schedule, iv)
+        epoch_col("e.validator.activation_epoch").alias("activation_epoch"),
+        epoch_col("e.validator.exit_epoch").alias("exit_epoch"),
+        epoch_col("e.validator.withdrawable_epoch").alias("withdrawable_epoch"),
+    ]
+    return _transform_rows(raw, schedule, P.VALIDATORS_PAYLOAD, cols, insert_version)
 
 
 def transform_rewards(
     raw: DataFrame, schedule: ForkSchedule, insert_version: int | None = None
 ) -> DataFrame:
     """raw_rewards → rewards (data is a single dict → 1 row)."""
-    iv = insert_version if insert_version is not None else time.time_ns()
-    deduped = dedup_raw(raw)
-    d = F.from_json("payload", P.REWARDS_PAYLOAD)["data"]
-    out = deduped.select(
-        F.col("slot").cast("long").alias("slot"), d.alias("d")
-    ).filter(F.col("d").isNotNull()).select(
-        "slot",
-        safe_int_col("d.proposer_index").alias("proposer_index"),
-        safe_int_col("d.total").alias("total"),
-        safe_int_col("d.attestations").alias("attestations"),
-        safe_int_col("d.sync_aggregate").alias("sync_aggregate"),
-        safe_int_col("d.proposer_slashings").alias("proposer_slashings"),
-        safe_int_col("d.attester_slashings").alias("attester_slashings"),
-    )
-    return _stamp(out, schedule, iv)
-
-
-def _transform_queue(
-    raw: DataFrame,
-    schedule: ForkSchedule,
-    payload_schema,
-    project,
-    insert_version: int | None,
-) -> DataFrame:
-    iv = insert_version if insert_version is not None else time.time_ns()
-    deduped = dedup_raw(raw)
-    rows = deduped.select(
-        F.col("slot").cast("long").alias("slot"),
-        F.posexplode(F.from_json("payload", payload_schema)["data"]).alias(
-            "queue_index", "e"
-        ),
-    )
-    return _stamp(
-        rows.select("slot", F.col("queue_index").cast("int"), *project), schedule, iv
-    )
+    cols = [
+        safe_int_col(f"e.{c}").alias(c)
+        for c in ("proposer_index", "total", "attestations", "sync_aggregate",
+                  "proposer_slashings", "attester_slashings")
+    ]
+    return _transform_rows(raw, schedule, P.REWARDS_PAYLOAD, cols, insert_version,
+                           explode=None)
 
 
 def transform_pending_consolidations(
     raw: DataFrame, schedule: ForkSchedule, insert_version: int | None = None
 ) -> DataFrame:
-    return _transform_queue(
-        raw,
-        schedule,
-        P.PENDING_CONSOLIDATIONS_PAYLOAD,
-        [
-            safe_int_col("e.source_index").alias("source_index"),
-            safe_int_col("e.target_index").alias("target_index"),
-        ],
-        insert_version,
-    )
+    cols = [
+        safe_int_col("e.source_index").alias("source_index"),
+        safe_int_col("e.target_index").alias("target_index"),
+    ]
+    return _transform_rows(raw, schedule, P.PENDING_CONSOLIDATIONS_PAYLOAD, cols,
+                           insert_version, explode=F.posexplode)
 
 
 def transform_pending_deposits(
     raw: DataFrame, schedule: ForkSchedule, insert_version: int | None = None
 ) -> DataFrame:
     # entry "slot" is the deposit's origin slot, not the snapshot slot
-    return _transform_queue(
-        raw,
-        schedule,
-        P.PENDING_DEPOSITS_PAYLOAD,
-        [
-            F.col("e.pubkey").alias("pubkey"),
-            F.col("e.withdrawal_credentials").alias("withdrawal_credentials"),
-            safe_int_col("e.amount").alias("amount"),
-            F.col("e.signature").alias("signature"),
-            safe_int_col("e.slot").alias("deposit_slot"),
-        ],
-        insert_version,
-    )
+    cols = [
+        F.col("e.pubkey").alias("pubkey"),
+        F.col("e.withdrawal_credentials").alias("withdrawal_credentials"),
+        safe_int_col("e.amount").alias("amount"),
+        F.col("e.signature").alias("signature"),
+        safe_int_col("e.slot").alias("deposit_slot"),
+    ]
+    return _transform_rows(raw, schedule, P.PENDING_DEPOSITS_PAYLOAD, cols,
+                           insert_version, explode=F.posexplode)
 
 
 def transform_pending_partial_withdrawals(
     raw: DataFrame, schedule: ForkSchedule, insert_version: int | None = None
 ) -> DataFrame:
-    return _transform_queue(
-        raw,
-        schedule,
-        P.PENDING_PARTIAL_WITHDRAWALS_PAYLOAD,
-        [
-            safe_int_col("e.validator_index").alias("validator_index"),
-            safe_int_col("e.amount").alias("amount"),
-            epoch_col("e.withdrawable_epoch").alias("withdrawable_epoch"),
-        ],
-        insert_version,
-    )
+    cols = [
+        safe_int_col("e.validator_index").alias("validator_index"),
+        safe_int_col("e.amount").alias("amount"),
+        epoch_col("e.withdrawable_epoch").alias("withdrawable_epoch"),
+    ]
+    return _transform_rows(raw, schedule, P.PENDING_PARTIAL_WITHDRAWALS_PAYLOAD, cols,
+                           insert_version, explode=F.posexplode)
 
 
 def transform_data_column_sidecars(
@@ -557,31 +510,25 @@ def transform_data_column_sidecars(
     """raw_data_column_sidecars → data_column_sidecars (Fulu): per-sidecar
     metadata — cells/bytes/counts + sha256 identities of the column,
     commitments and proofs (canonical JSON of the string arrays)."""
-    iv = insert_version if insert_version is not None else time.time_ns()
-    deduped = dedup_raw(raw)
-    rows = deduped.select(
-        F.col("slot").cast("long").alias("slot"),
-        F.explode(F.from_json("payload", P.DATA_COLUMN_SIDECARS_PAYLOAD)["data"]).alias("s"),
-    )
-    out = rows.select(
-        "slot",
-        safe_int_col("s.index").alias("column_index"),
-        safe_int_col("s.signed_block_header.message.proposer_index").alias("proposer_index"),
-        safe_int_col("s.signed_block_header.message.slot").alias("header_slot"),
-        F.col("s.signed_block_header.message.body_root").alias("body_root"),
-        F.coalesce(F.size("s.column"), F.lit(0)).cast("int").alias("column_cells"),
-        F.coalesce(hex_array_byte_length(F.col("s.column")), F.lit(0)).alias("column_bytes"),
-        F.coalesce(F.size("s.kzg_commitments"), F.lit(0)).cast("int").alias(
+    cols = [
+        safe_int_col("e.index").alias("column_index"),
+        safe_int_col("e.signed_block_header.message.proposer_index").alias("proposer_index"),
+        safe_int_col("e.signed_block_header.message.slot").alias("header_slot"),
+        F.col("e.signed_block_header.message.body_root").alias("body_root"),
+        F.coalesce(F.size("e.column"), F.lit(0)).cast("int").alias("column_cells"),
+        F.coalesce(hex_array_byte_length(F.col("e.column")), F.lit(0)).alias("column_bytes"),
+        F.coalesce(F.size("e.kzg_commitments"), F.lit(0)).cast("int").alias(
             "kzg_commitments_count"
         ),
-        F.coalesce(F.size("s.kzg_proofs"), F.lit(0)).cast("int").alias("kzg_proofs_count"),
+        F.coalesce(F.size("e.kzg_proofs"), F.lit(0)).cast("int").alias("kzg_proofs_count"),
         # canonical-JSON sha256 identities (reference F5): a JSON array of
         # strings is canonical as-is (no keys to sort) — to_json is compact
-        F.sha2(F.to_json(F.col("s.column")), 256).alias("column_hash"),
-        F.sha2(F.to_json(F.col("s.kzg_commitments")), 256).alias("commitments_hash"),
-        F.sha2(F.to_json(F.col("s.kzg_proofs")), 256).alias("proofs_hash"),
-    )
-    return _stamp(out, schedule, iv)
+        F.sha2(F.to_json(F.col("e.column")), 256).alias("column_hash"),
+        F.sha2(F.to_json(F.col("e.kzg_commitments")), 256).alias("commitments_hash"),
+        F.sha2(F.to_json(F.col("e.kzg_proofs")), 256).alias("proofs_hash"),
+    ]
+    return _transform_rows(raw, schedule, P.DATA_COLUMN_SIDECARS_PAYLOAD, cols,
+                           insert_version)
 
 
 def transform_blob_sidecars(
@@ -589,24 +536,17 @@ def transform_blob_sidecars(
 ) -> DataFrame:
     """raw_blob_sidecars → blob_sidecars (Deneb): blob size + deterministic
     placeholder blob id (reference F16 semantics)."""
-    iv = insert_version if insert_version is not None else time.time_ns()
-    deduped = dedup_raw(raw)
-    rows = deduped.select(
-        F.col("slot").cast("long").alias("slot"),
-        F.explode(F.from_json("payload", P.BLOB_SIDECARS_PAYLOAD)["data"]).alias("s"),
-    )
-    out = rows.select(
-        "slot",
-        safe_int_col("s.index").alias("blob_index"),
-        F.col("s.kzg_commitment").alias("kzg_commitment"),
-        F.col("s.kzg_proof").alias("kzg_proof"),
-        F.coalesce(hex_byte_length(F.col("s.blob")), F.lit(0)).alias("blob_size"),
-        F.concat(F.lit("0x"), F.substring(F.sha2(F.col("s.blob"), 256), 1, 16)).alias(
+    cols = [
+        safe_int_col("e.index").alias("blob_index"),
+        F.col("e.kzg_commitment").alias("kzg_commitment"),
+        F.col("e.kzg_proof").alias("kzg_proof"),
+        F.coalesce(hex_byte_length(F.col("e.blob")), F.lit(0)).alias("blob_size"),
+        F.concat(F.lit("0x"), F.substring(F.sha2(F.col("e.blob"), 256), 1, 16)).alias(
             "blob_hash"
         ),
-        safe_int_col("s.signed_block_header.message.proposer_index").alias("proposer_index"),
-    )
-    return _stamp(out, schedule, iv)
+        safe_int_col("e.signed_block_header.message.proposer_index").alias("proposer_index"),
+    ]
+    return _transform_rows(raw, schedule, P.BLOB_SIDECARS_PAYLOAD, cols, insert_version)
 
 
 # registry: raw table name → transform entry point

@@ -25,7 +25,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Callable, Iterable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -295,14 +295,49 @@ class FetchConfig:
     timeout: float = 600.0
 
     def build(self) -> BeaconAPI:
-        return BeaconAPI(
-            base_url=self.base_url,
-            api_key=self.api_key,
-            api_key_param=self.api_key_param,
-            max_retries=self.max_retries,
-            retry_delay=self.retry_delay,
-            timeout=self.timeout,
-        )
+        return BeaconAPI(**asdict(self))
+
+
+def _first_fetchable_slot(loader: LoaderSpec, schedule: ForkSchedule) -> int | None:
+    """The fork gate of a fetch (S9): the first slot ``loader`` may fetch,
+    0 when it is ungated, None when its fork never activates."""
+    if loader.fork_gate is None:
+        return 0
+    return schedule.activation_slot(loader.fork_gate)
+
+
+def _fetch_stage(
+    spark: SparkSession,
+    cfg: FetchConfig,
+    loader: LoaderSpec,
+    slots: DataFrame,
+    schedule: ForkSchedule,
+    api_factory: Callable[[], BeaconAPI] | None,
+    metrics: FetchMetrics | None,
+) -> DataFrame:
+    """The distributed fetch body shared by both entry points: one HTTP
+    client per task, reused across the task's slots (column ``slot``),
+    each slot fetched and enveloped by :func:`fetch_slots_local`."""
+    make_api = api_factory or cfg.build
+    slots_acc = metrics.slots if metrics else None
+    rows_acc = metrics.rows if metrics else None
+
+    def run(parts: Iterator) -> Iterator[tuple]:
+        api = make_api()
+        for row in parts:
+            if slots_acc is not None:
+                slots_acc.add(1)
+            for out in fetch_slots_local(api, loader, [row["slot"]], schedule):
+                if rows_acc is not None:
+                    rows_acc.add(1)
+                yield (out["slot"], out["payload"], out["payload_hash"],
+                       out["retrieved_at"])
+
+    return spark.createDataFrame(slots.rdd.mapPartitions(run), raw_envelope())
+
+
+def _n_tasks(n_slots: int, slots_per_task: int) -> int:
+    return max(1, min(n_slots // max(1, slots_per_task) + 1, 2048))
 
 
 def fetch_slots_distributed(
@@ -320,43 +355,18 @@ def fetch_slots_distributed(
     partitioned into ~CHUNK_SIZE tasks, each task fetching its slots over
     HTTP inside ``mapPartitions`` and emitting raw envelope rows.
 
-    Fork gating prunes the range *before* any task is scheduled (a filter
-    on the range DataFrame — no wasted tasks, reference S9). One HTTP
-    client per task, reused across its slots. ``api_factory`` overrides the
-    client construction for tests (must be picklable). ``metrics``
-    accumulates executor-side fetch counts; call ``metrics.fold()`` after
-    the job's action.
+    Fork gating prunes the range *before* any task is scheduled (no wasted
+    tasks, reference S9). ``api_factory`` overrides the client construction
+    for tests (must be picklable). ``metrics`` accumulates executor-side
+    fetch counts; call ``metrics.fold()`` after the job's action.
     """
-    if loader.fork_gate is not None:
-        gate = schedule.activation_slot(loader.fork_gate)
-        if gate is None:
-            return spark.createDataFrame([], raw_envelope())
-        start_slot = max(start_slot, gate)
-        if start_slot > end_slot:
-            return spark.createDataFrame([], raw_envelope())
-
-    n_slots = end_slot - start_slot + 1
-    n_parts = max(1, min(n_slots // max(1, slots_per_task) + 1, 2048))
-    slots = spark.range(start_slot, end_slot + 1, numPartitions=n_parts)
-
-    fetch, sched = loader.fetch, schedule
-    make_api = api_factory or cfg.build
-    slots_acc = metrics.slots if metrics else None
-    rows_acc = metrics.rows if metrics else None
-
-    def run(parts: Iterator) -> Iterator[tuple]:
-        api = make_api()
-        spec = LoaderSpec(loader.name, fetch, loader.fork_gate, loader.daily)
-        for row in parts:
-            if slots_acc is not None:
-                slots_acc.add(1)
-            for out in fetch_slots_local(api, spec, [row["id"]], sched):
-                if rows_acc is not None:
-                    rows_acc.add(1)
-                yield (out["slot"], out["payload"], out["payload_hash"],
-                       out["retrieved_at"])
-
-    return spark.createDataFrame(slots.rdd.mapPartitions(run), raw_envelope())
+    gate = _first_fetchable_slot(loader, schedule)
+    if gate is None or max(start_slot, gate) > end_slot:
+        return spark.createDataFrame([], raw_envelope())
+    start_slot = max(start_slot, gate)
+    n_parts = _n_tasks(end_slot - start_slot + 1, slots_per_task)
+    slots = spark.range(start_slot, end_slot + 1, numPartitions=n_parts).toDF("slot")
+    return _fetch_stage(spark, cfg, loader, slots, schedule, api_factory, metrics)
 
 
 # ---------------------------------------------------------------------------
@@ -430,33 +440,14 @@ def fetch_slot_list_distributed(
     backfill path for daily-snapshot loaders (validators, pending queues),
     fed by ``control.ledger.daily_slots``. Same fork gating, envelope and
     ``metrics`` as :func:`fetch_slots_distributed`."""
-    if loader.fork_gate is not None:
-        gate = schedule.activation_slot(loader.fork_gate)
-        if gate is None:
-            return spark.createDataFrame([], raw_envelope())
+    gate = _first_fetchable_slot(loader, schedule)
+    if gate is None:
+        return spark.createDataFrame([], raw_envelope())
+    if gate:
         slots = slots.filter(slots["slot"] >= gate)
-
     n = slots.count()
     if n == 0:
         return spark.createDataFrame([], raw_envelope())
-    n_parts = max(1, min(n // max(1, slots_per_task) + 1, 2048))
-    part = slots.select(F.col("slot").cast("long").alias("slot")).repartition(n_parts)
-
-    fetch, sched = loader.fetch, schedule
-    make_api = api_factory or cfg.build
-    slots_acc = metrics.slots if metrics else None
-    rows_acc = metrics.rows if metrics else None
-
-    def run(parts: Iterator) -> Iterator[tuple]:
-        api = make_api()
-        spec = LoaderSpec(loader.name, fetch, loader.fork_gate, loader.daily)
-        for row in parts:
-            if slots_acc is not None:
-                slots_acc.add(1)
-            for out in fetch_slots_local(api, spec, [row["slot"]], sched):
-                if rows_acc is not None:
-                    rows_acc.add(1)
-                yield (out["slot"], out["payload"], out["payload_hash"],
-                       out["retrieved_at"])
-
-    return spark.createDataFrame(part.rdd.mapPartitions(run), raw_envelope())
+    part = slots.select(F.col("slot").cast("long").alias("slot"))
+    return _fetch_stage(spark, cfg, loader, part.repartition(_n_tasks(n, slots_per_task)),
+                        schedule, api_factory, metrics)

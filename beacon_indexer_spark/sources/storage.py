@@ -12,7 +12,7 @@ Semantics (reference ReplacingMergeTree, SURVEY §1.3):
   expected (re-fetch, re-transform, re-org).
 - **latest-wins on read**: ``read_latest`` applies the ``latest()`` dedup on
   the table's declared key/version — the FINAL-read analogue.
-- **repair = partition overwrite**: ``overwrite_date_partitions`` replaces
+- **repair = partition overwrite**: ``write(mode="overwrite")`` replaces
   only the affected daily partitions (dynamic partitionOverwriteMode),
   standing in for the reference's ``ALTER TABLE ... DELETE`` + mutation
   throttle (``src/services/maintenance.py:207-275``) with a plain
@@ -43,25 +43,14 @@ from beacon_indexer_spark.schemas.structured import STRUCTURED_TABLES
 _UNPARTITIONED = {"genesis", "specs", "raw_genesis", "raw_specs", "time_helpers"}
 
 
-def compact_manifest(spark: SparkSession, path: str, keys: list[str],
-                     version: str, schema) -> None:
-    """Latest-wins rewrite for a control manifest (ledger / progress): the
-    append-per-status-change model accumulates one tiny file per transition
-    — this collapses the directory to current state in one file. Same
-    tmp-swap discipline as :meth:`ParquetLake.compact` (never overwrite a
-    path while reading it)."""
-    import shutil
-
-    from beacon_indexer_spark.functions.core import latest
-
-    if not os.path.isdir(path):
-        return
-    df = spark.read.schema(schema).parquet(path)
-    deduped = latest(df, keys, version, method="window")
-    tmp = path + "__compact_tmp"
+def _swap_in(path: str, tmp: str, write) -> None:
+    """The compaction swap: ``write()`` fills the temp directory ``tmp``,
+    which then replaces ``path``. Never overwrite a path while reading it:
+    a mid-write cache eviction or executor loss would recompute lineage
+    from files the overwrite is concurrently deleting."""
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
-    deduped.coalesce(1).write.mode("overwrite").parquet(tmp)
+    write()
     old = path + "__pre_compact"
     if os.path.isdir(old):
         shutil.rmtree(old)
@@ -70,8 +59,25 @@ def compact_manifest(spark: SparkSession, path: str, keys: list[str],
     shutil.rmtree(old)
 
 
+def compact_manifest(spark: SparkSession, path: str, keys: list[str],
+                     version: str, schema) -> None:
+    """Latest-wins rewrite for a control manifest (ledger / progress): the
+    append-per-status-change model accumulates one tiny file per transition
+    — this collapses the directory to current state in one file."""
+    if not os.path.isdir(path):
+        return
+    df = spark.read.schema(schema).parquet(path)
+    deduped = latest(df, keys, version, method="window").coalesce(1)
+    tmp = path + "__compact_tmp"
+    _swap_in(path, tmp, lambda: deduped.write.mode("overwrite").parquet(tmp))
+
+
 class ParquetSink:
-    """Structured-table writer into the Parquet lake (default backend)."""
+    """Structured-table writer into the Parquet lake (default backend).
+
+    ``write`` must execute ``df``: ``plans.pipeline.write_tables`` counts
+    rows with an ``Observation`` on the frame, and ``Observation.get``
+    blocks until the frame has run."""
 
     def __init__(self, lake: "ParquetLake"):
         self.lake = lake
@@ -84,7 +90,8 @@ class ClickHouseSink:
     """Structured-table writer into ClickHouse via JDBC. Always appends —
     ClickHouse's ReplacingMergeTree is the upsert (repair overwrites become
     version-winning inserts, reference SURVEY §1.3), so ``mode`` is
-    accepted for interface parity and ignored."""
+    accepted for interface parity and ignored. Like every sink, ``write``
+    must execute ``df`` (``write_tables`` blocks on its ``Observation``)."""
 
     def __init__(self, url: str, **kw):
         self.url = url
@@ -190,15 +197,7 @@ class ParquetLake:
             for f in files
         )
         if not has_data:
-            import shutil
-
             shutil.rmtree(target, ignore_errors=True)
-
-    def overwrite_date_partitions(self, table: str, df: DataFrame) -> None:
-        """Repair path: replace exactly the daily partitions present in
-        ``df`` (requires spark.sql.sources.partitionOverwriteMode=dynamic,
-        set by session.get_spark)."""
-        self.write(table, df, mode="overwrite")
 
     # -- read -------------------------------------------------------------
 
@@ -222,26 +221,13 @@ class ParquetLake:
     def compact(self, table: str) -> None:
         """Rewrite the table keeping only the latest version per key — the
         ReplacingMergeTree background-merge analogue, run explicitly.
-
-        Writes to a temp sibling directory and swaps it in: overwriting the
-        path being read relies on cache retention, and a mid-write cache
-        eviction or executor loss would recompute lineage from files the
-        overwrite is concurrently deleting — destroying the table."""
-        import shutil
-
+        Writes to a temp sibling lake and swaps the table in (``_swap_in``)."""
         tmp = ParquetLake(self.spark, self.base_dir + "__compact_tmp", self.schedule)
-        if os.path.isdir(tmp.path(table)):
-            shutil.rmtree(tmp.path(table))
         # keep inserted_at: compaction is physical maintenance, not new
         # data — preserving stamps keeps it invisible to watermark readers
         deduped = self.read_latest(table).drop("date")
-        tmp.write(table, deduped, mode="overwrite")
-        old = self.path(table) + "__pre_compact"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(self.path(table), old)
-        os.rename(tmp.path(table), self.path(table))
-        shutil.rmtree(old)
+        _swap_in(self.path(table), tmp.path(table),
+                 lambda: tmp.write(table, deduped, mode="overwrite"))
 
     def write_bucketed(
         self,
@@ -341,7 +327,7 @@ class ParquetLake:
         if "date" not in out.columns:
             raise ValueError("rollup agg_fn output must keep the 'date' column")
         out = out.join(F.broadcast(src_w), "date", "left")
-        self.overwrite_date_partitions(rollup_table, out)
+        self.write(rollup_table, out, mode="overwrite")
         return {"refreshed_dates": sorted(str(d) for d in dates)}
 
     def table_stats(self, table: str) -> dict:

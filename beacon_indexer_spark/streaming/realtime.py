@@ -20,6 +20,7 @@ from beacon_indexer_spark.config import EngineConfig
 from beacon_indexer_spark.control.ledger import FAILED
 from beacon_indexer_spark.plans.pipeline import BeaconPipeline
 from beacon_indexer_spark.plans.transform import TRANSFORMS
+from beacon_indexer_spark.schemas.raw import raw_envelope
 from beacon_indexer_spark.sources.beacon_api import (
     BeaconAPI,
     BeaconAPIError,
@@ -108,11 +109,7 @@ class RealtimeLoop:
             O.METRICS.set_gauge("beacon_indexer_highest_raw_slot", we,
                                 {"loader": name})
             if rows:
-                df = self.lake.spark.createDataFrame(
-                    [(r["slot"], r["payload"], r["payload_hash"], r["retrieved_at"])
-                     for r in rows],
-                    "slot long, payload string, payload_hash string, retrieved_at timestamp",
-                )
+                df = self.lake.spark.createDataFrame(rows, raw_envelope())
                 self.lake.write(spec.raw_table, df)
             counts[spec.raw_table] = len(rows)
             if rows and spec.raw_table in TRANSFORMS:
@@ -138,11 +135,14 @@ class RealtimeLoop:
                 target = head - self.config.realtime_slot_delay
                 ws = self._next_window_start()
                 we = ws + cs - 1
+                # lag: slots between the head and the last processed slot
+                O.update_health(head_slot=head, lag_slots=head - ws + 1)
                 if we > target:  # window not complete yet
                     self.sleep(self.config.poll_interval_s)
                     continue
                 self.process_window(ws, we)
                 self._cursor = we + 1  # advance even if tail slots were empty
+                O.update_health(lag_slots=head - we)
                 processed += 1
             except BeaconAPIError:
                 self.sleep(self.config.error_sleep_s)

@@ -4,7 +4,7 @@ The Spark-native expression of the reference's ``transform --continuous``
 (``src/services/transformer.py:152-233``): instead of polling a progress
 ledger, the raw table directory *is* the stream — new parquet files landing
 in ``raw_*`` are discovered by the file source, and ``foreachBatch`` applies
-the same batch transform fan-out used by the batch pipeline, with the
+the same transform and ``write_tables`` used by the batch pipeline, with the
 checkpoint directory supplying exactly-once bookkeeping (replacing the
 ``transformer_progress`` ledger's claim semantics, SURVEY §2.12).
 
@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from beacon_indexer_spark.plans.pipeline import transform_tables
+from beacon_indexer_spark.plans.pipeline import transform_tables, write_tables
 from beacon_indexer_spark.schemas.raw import RAW_TABLES
-from beacon_indexer_spark.sources.storage import ParquetLake
+from beacon_indexer_spark.sources.storage import ParquetLake, ParquetSink
 
 
 def stream_transform(
@@ -50,14 +50,10 @@ def stream_transform(
         .parquet(lake.path(raw_table))
     )
 
+    sink = ParquetSink(lake)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        outs = transform_tables(batch_df, raw_table, lake.schedule, tables=tables)
-        try:
-            for name, df in outs.items():
-                lake.write(name, df)
-        finally:
-            if hasattr(outs, "unpersist"):
-                outs.unpersist()
+        write_tables(sink, transform_tables(batch_df, raw_table, lake.schedule, tables=tables))
 
     writer = raw_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -244,6 +244,30 @@ def test_fetch_distributed_fork_gate_prunes_range(spark):
         spark, cfg, B.LOADERS["data_column_sidecars"], 0, 100, MAINNET,
     )
     assert df.count() == 0  # fulu never active on mainnet → no tasks at all
+    # the slot-list path shares the gate: nothing to fetch either
+    df = B.fetch_slot_list_distributed(
+        spark, cfg, B.LOADERS["data_column_sidecars"],
+        spark.range(0, 101).toDF("slot"), MAINNET,
+    )
+    assert df.count() == 0
+
+    def fake_api():
+        import json as _json
+
+        from beacon_indexer_spark.sources.beacon_api import BeaconAPI
+
+        def transport(url, params, timeout):
+            return 200, _json.dumps({"data": []})
+
+        return BeaconAPI("http://fake", transport=transport, sleep=lambda s: None)
+
+    # a gate inside the list keeps only the slots at or after activation
+    gate = GNOSIS.activation_slot("electra")
+    df = B.fetch_slot_list_distributed(
+        spark, cfg, B.LOADERS["pending_consolidations"],
+        spark.range(gate - 2, gate + 2).toDF("slot"), GNOSIS, api_factory=fake_api,
+    )
+    assert sorted(r["slot"] for r in df.collect()) == [gate, gate + 1]
 
 
 # ---------------------------------------------------------------------------

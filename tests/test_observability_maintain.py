@@ -140,6 +140,56 @@ class _SpySink:
         self.writes.append((table, df.count(), mode))
 
 
+class _FailingSink:
+    def write(self, table, df, mode="append"):
+        raise RuntimeError("sink down")
+
+
+def test_health_reports_failed_transform_then_recovers(spark, tmp_path, monkeypatch):
+    """/health answers 503 with the error and the range after a failed
+    transform range, then 200 with the last good slot after a good one."""
+    import urllib.error
+    import urllib.request
+
+    from pyspark.sql import functions as F
+
+    # a fresh health state and server slot, both restored at teardown
+    monkeypatch.setattr(O, "_health_state", {"status": "starting", "operation": ""})
+    monkeypatch.setattr(O, "_metrics_server", None)
+    monkeypatch.setattr(O, "_metrics_registry", None)
+    lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
+    rows = [FX.raw_row(SLOT0 + i, FX.block_payload(SLOT0 + i)) for i in range(5)]
+    lake.write("raw_blocks", spark.createDataFrame(rows, schema=raw_envelope()))
+    prog = L.ProgressManifest(spark, str(tmp_path / "prog"))
+    pipe = BeaconPipeline(lake, progress=prog, tables={"raw_blocks": ["blocks"]},
+                          sink=_FailingSink())
+    server = O.start_metrics_server(0)
+    url = f"http://127.0.0.1:{server.server_address[1]}/health"
+    try:
+        with pytest.raises(RuntimeError, match="sink down"):
+            pipe.transform_range("raw_blocks", SLOT0, SLOT0 + 4)
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(url, timeout=10)
+        assert err.value.code == 503
+        body = json.loads(err.value.read())
+        assert body["status"] == "failed" and "sink down" in body["error"]
+        assert body["failed_range"] == ["raw_blocks", SLOT0, SLOT0 + 4]
+        # the progress row keeps the error text, not a slot number
+        failed = prog.current().filter(F.col("status") == L.FAILED).collect()
+        assert [r["error_message"] for r in failed] == ["sink down"]
+
+        pipe.sink = ParquetSink(lake)
+        assert pipe.transform_range("raw_blocks", SLOT0, SLOT0 + 4) == {"blocks": 5}
+        with urllib.request.urlopen(url, timeout=10) as resp:
+            assert resp.status == 200
+            body = json.loads(resp.read())
+        assert body["status"] == "ok" and body["last_good_slot"] == SLOT0 + 4
+        assert body["error"] is None and body["failed_range"] is None
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
 def test_make_sink_routing(spark, tmp_path):
     lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
     assert isinstance(make_sink("parquet", lake), ParquetSink)

@@ -66,7 +66,7 @@ def test_damaged_payloads_never_throw(spark, ops, corrupt_json):
     if corrupt_json:
         rows.append(FX.raw_row(SLOT0 + 2, "}{ total garbage"))
     raw = spark.createDataFrame(rows, schema=raw_envelope())
-    out = T.transform_blocks(raw, GNOSIS, insert_version=1, cache=False)
+    out = T.transform_blocks(raw, GNOSIS, insert_version=1)
 
     blocks = out["blocks"].collect()
     slots = sorted(r["slot"] for r in blocks)
@@ -83,6 +83,7 @@ def test_damaged_payloads_never_throw(spark, ops, corrupt_json):
     for name in ("attestations", "transactions", "withdrawals"):
         child_slots = {r["slot"] for r in out[name].collect()}
         assert child_slots <= {SLOT0, SLOT0 + 1}
+    out.unpersist()
 
 
 @settings(max_examples=5, deadline=None,

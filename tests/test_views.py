@@ -21,16 +21,21 @@ def test_register_views_and_documented_sql(spark, tmp_path):
     # plus a re-org duplicate that the FINAL view must collapse at transform
     rows.append(FX.raw_row(SLOT0, FX.block_payload(SLOT0, proposer=99),
                            retrieved_at=FX.T0 + dt.timedelta(hours=1)))
+    # and an exact duplicate re-fetch, which the transform's dedup collapses
+    rows.append(FX.raw_row(SLOT0 + 2, FX.block_payload(SLOT0 + 2, proposer=2)))
     lake.write("raw_blocks", spark.createDataFrame(rows, schema=raw_envelope()))
-    BeaconPipeline(lake, tables={"raw_blocks": ["blocks"]}).transform_range(
+    counts = BeaconPipeline(lake, tables={"raw_blocks": ["blocks"]}).transform_range(
         "raw_blocks", SLOT0, SLOT0 + 5
     )
+    assert counts == {"blocks": 6}
 
     views = register_views(lake)
     assert {"raw_blocks", "raw_blocks_raw", "blocks", "blocks_raw"} <= set(views)
 
-    # history view keeps both re-org versions; FINAL view collapses
-    assert spark.sql("SELECT COUNT(*) c FROM raw_blocks_raw").first()["c"] == 7
+    # history view keeps every raw version; FINAL view collapses
+    assert spark.sql("SELECT COUNT(*) c FROM raw_blocks_raw").first()["c"] == 8
+    # the transform wrote one row per slot: the structured history matches
+    assert spark.sql("SELECT COUNT(*) c FROM blocks_raw").first()["c"] == 6
     assert spark.sql("SELECT COUNT(*) c FROM blocks").first()["c"] == 6
 
     top = spark.sql(DOCUMENTED_SQL["top_proposers"]).collect()
