@@ -234,10 +234,10 @@ def main(
         ]
 
     elif (args.command, args.subcommand) == ("curate", "run"):
-        # production curation: the STAGED pipeline (plans/pipeline.py
-        # CurationRun) computes LSH→connected-components ONCE and derives
+        # production curation: ONE staged run (plans/pipeline.py
+        # CurationRun) computes LSH→connected-components once and derives
         # keep-list / manifest / summary from that staged frame — the
-        # standalone oracle queries would rebuild it three times. The
+        # three one-shot queries would each stage their own run. The
         # progress manifest records the run like any transform batch.
         from beacon_indexer_spark.plans.pipeline import CurationRun
 

@@ -847,12 +847,12 @@ def broadcast_if_small(
     materialization is reused, never repeated. Same observe/probe
     pattern as `cross_corpus_overlap`'s eval-side guard.
 
-    r12: frames that already KNOW their row count (CC output carries the
+    Frames that already KNOW their row count (CC output carries the
     final round's observed count as ``_bis_rows``) skip the probe job
-    entirely — one fewer serial job per cluster-spine query, identical
-    verdict (the observed count IS the count the probe would measure).
+    entirely, with the same verdict (the observed count IS the count the
+    probe would measure).
 
-    r13: ``_bis_rows`` is a plain Python attribute, so ANY intervening
+    ``_bis_rows`` is a plain Python attribute, so ANY intervening
     DataFrame transformation sheds it and the probe job silently
     returns — correct, but a silent de-optimization. Callers that hand
     this function a frame that SHOULD carry the count (CC output taken

@@ -197,20 +197,15 @@ class CurationRun:
     duplicate-cluster frame ONCE, then derive the keep-list, the curation
     manifest, and the executive summary from that one staged frame.
 
-    The standalone queries (`doc_keep_list`, `doc_curation_manifest`,
-    `corpus_dedup_summary` in plans/queries.py) must each stand alone for
-    the oracle gate, so each re-runs minhash→banding→CC from the raw
-    corpus — on the sf0.1 bench that repeated LSH→CC work is ~10 s of a
-    ~70 s total. A production curation run pays it once: the CC output is
-    already `localCheckpoint`-backed, `broadcast_if_small` probes its row
-    count once (the probe doubles as the materialization job), and every
-    derived frame reads the staged blocks — one signature/banding pass
-    per run, machine-asserted by
+    This is the only implementation of the dedup outputs: the spine
+    queries in plans/queries.py (`doc_keep_list`, `doc_curation_manifest`,
+    `corpus_dedup_summary`, ...) each build one run and return one of its
+    frames, so the DuckDB oracle gate checks this code. The CC output is
+    `localCheckpoint`-backed and carries its observed row count, so
+    `broadcast_if_small` decides broadcast or shuffle join without a
+    probe job, and every derived frame reads the staged blocks — one
+    signature/banding pass per run, machine-asserted by
     tests/test_custom_joins_curation.py::test_curation_run_stages_clusters_once.
-
-    Outputs are column-identical to the standalone queries, so a caller
-    can swap between the audited one-shot queries and the staged run
-    without downstream changes.
 
     With ``test_docs`` set, the run also stages benchmark DECONTAMINATION
     on the same discipline: the contamination-span frame is computed once
@@ -273,7 +268,7 @@ class CurationRun:
             # staged once: checkpoint-backed, conditionally broadcast-
             # hinted (raw-crawl dup rates fall back to a shuffle join);
             # node_col at the source keeps CC's observed row count on the
-            # frame so broadcast_if_small skips its probe job (r12)
+            # frame so broadcast_if_small skips its probe job
             return broadcast_if_small(
                 connected_components(pairs, node_col=id_col),
                 expect_rows_known=True,
@@ -282,13 +277,11 @@ class CurationRun:
         if test_docs is None:
             self.clusters = _stage_clusters()
         else:
-            # r12: the two stagings are INDEPENDENT — the LSH→CC cluster
-            # chain (bucket probe + per-round CC jobs) and the decon gram
-            # join don't read each other — so materialize them from two
-            # driver threads and let the scheduler interleave their jobs
-            # (the overlap-independent-jobs idiom). Each staged frame is
-            # still computed exactly once; only the serial wall-clock of
-            # "clusters, THEN contamination" is removed.
+            # the two stagings are INDEPENDENT — the LSH→CC cluster chain
+            # (bucket probe + per-round CC jobs) and the decon gram join
+            # don't read each other — so materialize them from two driver
+            # threads and let the scheduler interleave their jobs. Each
+            # staged frame is still computed exactly once.
             from concurrent.futures import ThreadPoolExecutor
 
             from pyspark import inheritable_thread_target
@@ -325,9 +318,9 @@ class CurationRun:
         return (F.row_number().over(w) == 1).cast("int")
 
     def keep_list(self) -> DataFrame:
-        """(doc_id, cluster_id, [q6,] keep) — column-identical to
-        `doc_keep_list` (min_id policy) / `doc_keep_best` (best_quality
-        policy), reading the staged cluster frame."""
+        """(doc_id, cluster_id, [q6,] keep) — `doc_keep_list` (min_id
+        policy) / `doc_keep_best` (best_quality policy), reading the
+        staged cluster frame."""
         from beacon_indexer_spark.operators.text import quality_score
 
         spine = self._spine()
@@ -345,8 +338,8 @@ class CurationRun:
 
     def manifest(self) -> DataFrame:
         """(doc_id, cluster_id, keep, q6, q_pass, split, include) —
-        column-identical to `doc_curation_manifest`; under
-        ``best_quality`` the keep flag follows `doc_keep_best`."""
+        `doc_curation_manifest`; under ``best_quality`` the keep flag
+        follows `doc_keep_best`."""
         from beacon_indexer_spark.operators.sampling import split_assign
         from beacon_indexer_spark.operators.text import quality_score
 
@@ -372,7 +365,7 @@ class CurationRun:
         )
 
     def summary(self) -> DataFrame:
-        """One-row rollup — column-identical to `corpus_dedup_summary`."""
+        """One-row rollup — `corpus_dedup_summary`."""
         tot = self.docs.agg(F.count(F.lit(1)).alias("n_docs"))
         stats = (
             self.clusters.groupBy("cluster_id")
@@ -391,13 +384,15 @@ class CurationRun:
             F.col("n_clusters").cast("long").alias("n_clusters"),
             F.col("max_cluster_size").cast("long").alias("max_cluster_size"),
             (F.col("n_docs") - removed).cast("long").alias("n_kept"),
-            F.round(removed.cast("double") / F.col("n_docs"), 6).alias("dup_rate"),
+            # NULL on an empty corpus, like the SQL oracle (ANSI `/` raises)
+            F.round(F.try_divide(removed.cast("double"), F.col("n_docs")), 6)
+            .alias("dup_rate"),
         )
 
     def cluster_size_dist(self) -> DataFrame:
-        """(cluster_size, n_clusters, n_docs) — column-identical to
-        `dedup_cluster_size_dist`, reading the staged cluster frame
-        (singletons included via the coalesce-to-own-id spine)."""
+        """(cluster_size, n_clusters, n_docs) — `dedup_cluster_size_dist`,
+        reading the staged cluster frame (singletons included via the
+        coalesce-to-own-id spine)."""
         joined = self._spine().join(self.clusters, self.id_col, "left")
         cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
         sizes = joined.select(cid.alias("__cid")).groupBy("__cid").agg(
@@ -444,8 +439,8 @@ class CurationRun:
 
     def token_budget(self, source_col: str = "source") -> DataFrame:
         """(source, n_docs, n_kept, tokens_total, tokens_kept, kept_frac)
-        — column-identical to `source_token_budget` under the min_id
-        policy; under best_quality the kept copy is the highest-q6 one."""
+        — `source_token_budget` under the min_id policy; under
+        best_quality the kept copy is the highest-q6 one."""
         kf = self._keep_frame(source_col)
         return (
             kf.groupBy("source")
@@ -459,16 +454,19 @@ class CurationRun:
             )
             .withColumn(
                 "kept_frac",
+                # NULL for a source whose docs have no tokens
                 F.round(
-                    F.col("tokens_kept").cast("double")
-                    / F.col("tokens_total").cast("double"),
+                    F.try_divide(
+                        F.col("tokens_kept").cast("double"),
+                        F.col("tokens_total").cast("double"),
+                    ),
                     6,
                 ),
             )
         )
 
     def dup_rate_by_length(self) -> DataFrame:
-        """(len_band, n_docs, n_dups, dup_rate) — column-identical to
+        """(len_band, n_docs, n_dups, dup_rate) —
         `corpus_dup_rate_by_length` (fixed token-length CASE bands)."""
         # no source column needed: the id stands in for the unused
         # "source" slot of the shared keep frame
@@ -497,10 +495,9 @@ class CurationRun:
     def leakage_split(
         self, train_rate: float = 0.9, salt: int = 7
     ) -> DataFrame:
-        """(doc_id, cluster_id, split, naive_split, moved) — column-
-        identical to `split_leakage_guard`: split verdicts hash the
-        staged CLUSTER id so near-copies never straddle the eval
-        boundary."""
+        """(doc_id, cluster_id, split, naive_split, moved) —
+        `split_leakage_guard`: split verdicts hash the staged CLUSTER id
+        so near-copies never straddle the eval boundary."""
         from beacon_indexer_spark.operators.sampling import leakage_safe_split
 
         return leakage_safe_split(
@@ -581,15 +578,10 @@ class CurationRun:
         way out). Both staged frames (clusters, contamination spans) are
         read from checkpoint blocks — no LSH/CC or gram join re-runs.
 
-        r13 (§2.4, §3.1): the verdict derivation is COLLAPSED into the
-        manifest spine — one corpus scan computes q6, split AND the
-        token count the contamination rate divides by, then the tiny
-        per-doc coverage aggregate (contaminated docs only, read from
-        the staged span checkpoint) left-joins in. The old shape built
-        `manifest()` and `contamination_verdict()` as two independent
-        full-corpus frames — a second corpus scan+tokenize and a
-        full-width sort-merge join of two corpus-sized sides — to
-        produce byte-identical columns."""
+        One corpus scan computes q6, split AND the token count the
+        contamination rate divides by; the tiny per-doc coverage
+        aggregate (contaminated docs only) left-joins in, so the verdict
+        costs no second corpus scan or corpus-sized join."""
         from beacon_indexer_spark.operators.sampling import split_assign
         from beacon_indexer_spark.operators.text import quality_score
 

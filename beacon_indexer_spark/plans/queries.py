@@ -39,6 +39,7 @@ from beacon_indexer_spark.operators import sampling as SP
 from beacon_indexer_spark.operators import similarity as S
 from beacon_indexer_spark.operators import sketch as KV
 from beacon_indexer_spark.operators import text as X
+from beacon_indexer_spark.plans.pipeline import CurationRun
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -780,6 +781,16 @@ WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.1
 
 _MINHASH_K = 8
 _MINHASH_BANDS = 4
+_SPLIT_FRACS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
+
+
+def _curation(spark: SparkSession, sf_dir: str, **kw) -> CurationRun:
+    """The staged curation run over the documents table with the query
+    surface's LSH and split constants."""
+    return CurationRun(
+        _ts(spark, sf_dir, "documents"), k=_MINHASH_K, bands=_MINHASH_BANDS,
+        shingle_n=3, split_fracs=_SPLIT_FRACS, **kw,
+    )
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,20 +1060,14 @@ def q_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_embedding_incremental_sql(n_bits: int = 32, bands: int = 4) -> str:
-    per = n_bits // bands
-    bit_sql = []
-    for b in range(n_bits):
-        arr = "list_value(" + ", ".join(str(x) for x in S._hyperplane(64, b)) + ")"
-        dotb = (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(generate_series(1, 64),"
-            f" i -> CAST(embedding[i] AS DOUBLE) * ({arr})[i])), (a,b) -> a + b)"
-        )
-        bit_sql.append(f"CASE WHEN {dotb} >= 0 THEN '1' ELSE '0' END")
-    band_cols = ", ".join(
-        "(" + " || ".join(bit_sql[b * per : (b + 1) * per]) + f") AS band{b}"
+    # new/stored band-key hits: a UNION of per-band equi-joins over the
+    # materialized keys, as in `_oracle_embedding_near_dupes_sql`
+    band_cols = _oracle_band_cols(n_bits, bands)
+    hits = " UNION ".join(
+        f"SELECT a.vec_id AS nid, b.vec_id AS oid FROM newb a JOIN oldb b"
+        f" ON a.band{b} = b.band{b}"
         for b in range(bands)
     )
-    any_band = " OR ".join(f"a.band{b} = b.band{b}" for b in range(bands))
     dotp = (
         "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(generate_series(1, 64),"
         " i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE))), (x,y) -> x + y)"
@@ -1072,12 +1077,10 @@ def _oracle_embedding_incremental_sql(n_bits: int = 32, bands: int = 4) -> str:
         " i -> CAST({e}.embedding[i] AS DOUBLE) * CAST({e}.embedding[i] AS DOUBLE))), (x,y) -> x + y))"
     )
     return f"""
-WITH kb AS (SELECT vec_id, embedding, {band_cols} FROM embeddings),
-newb AS (SELECT * FROM kb WHERE vec_id % 5 = 4),
-oldb AS (SELECT * FROM kb WHERE vec_id % 5 <> 4),
-hits AS (
-  SELECT DISTINCT a.vec_id AS nid, b.vec_id AS oid
-  FROM newb a JOIN oldb b ON ({any_band})),
+WITH kb AS MATERIALIZED (SELECT vec_id, {band_cols} FROM embeddings),
+newb AS MATERIALIZED (SELECT * FROM kb WHERE vec_id % 5 = 4),
+oldb AS MATERIALIZED (SELECT * FROM kb WHERE vec_id % 5 <> 4),
+hits AS MATERIALIZED ({hits}),
 ver AS (
   SELECT nid, oid
   FROM hits
@@ -1692,13 +1695,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: LSH candidate pairs → connected components
     (min-label propagation, O(diameter) rounds). The oracle computes the
     identical transitive closure with a recursive CTE."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    out = D.connected_components(pairs)
-    return out.select(
-        F.col("node").cast("long").alias("doc_id"),
+    clusters = _curation(spark, sf_dir).clusters
+    return clusters.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
     )
 
@@ -2481,27 +2480,12 @@ WHERE CAST(n_common AS DOUBLE) / least(sa.n, sb.n) >= 0.8
 
 
 def q_doc_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup ACTION: canonical-document selection. LSH candidates →
-    connected components → keep the minimum id of each duplicate cluster
-    plus every unclustered document — the filter actually applied to a
-    corpus after dedup analysis. cluster_id coalesces to the doc's own id
-    (singleton semantics) so the output is a total keep/drop verdict per
-    document. The cluster frame is broadcast only when its PROBED row
-    count allows (high-dup raw-crawl corpora fall back to a shuffle
-    join — see `broadcast_if_small`)."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-    joined = spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    return joined.select(
-        "doc_id",
-        cid.cast("long").alias("cluster_id"),
-        (cid == F.col("doc_id")).cast("int").alias("keep"),
-    )
+    """The dedup ACTION: canonical-document selection. Keep the minimum
+    id of each duplicate cluster plus every unclustered document — the
+    filter actually applied to a corpus after dedup analysis. cluster_id
+    coalesces to the doc's own id (singleton semantics) so the output is
+    a total keep/drop verdict per document."""
+    return _curation(spark, sf_dir).keep_list()
 
 
 _CLUSTERS_FINAL_SELECT = "SELECT CAST(s AS BIGINT) AS doc_id,"
@@ -4501,9 +4485,6 @@ FROM m GROUP BY 1
 """
 
 
-_SPLIT_FRACS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
-
-
 def q_doc_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment (operators/sampling.py
     `split_assign`): md5-bucketed by doc_id, stable across runs,
@@ -5422,41 +5403,11 @@ ORDER BY total_qty DESC, o_orderkey LIMIT 100
 
 
 def q_doc_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The END-TO-END curation pipeline as ONE DAG — the manifest a
-    training run consumes: per document, the dedup verdict (LSH →
-    connected components → min-id keep), the quality gate (score ≥ 0.5),
-    the train/val/test split, and the final include flag
-    (keep ∧ quality). Composes `minhash_lsh_candidates`,
-    `connected_components`, `quality_score`, and `split_assign` into a
-    single plan: the dup-cluster frame holds only docs WITH duplicates
-    and is broadcast only when its probed row count stays under the
-    ceiling (raw crawls with 30-80% dup rates fall back to a shuffle
-    join — `broadcast_if_small`); quality and split are narrow
-    expressions on the spine — one corpus scan feeds everything but the
-    LSH shuffle."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.round(X.quality_score("text"), 6).alias("q6"),
-        SP.split_assign(F.col("doc_id"), _SPLIT_FRACS).alias("split"),
-    )
-    joined = spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    keep = (cid == F.col("doc_id")).cast("int")
-    q_pass = (F.col("q6") >= 0.5).cast("int")
-    return joined.select(
-        "doc_id",
-        cid.cast("long").alias("cluster_id"),
-        keep.alias("keep"),
-        "q6",
-        q_pass.alias("q_pass"),
-        "split",
-        (keep.cast("boolean") & q_pass.cast("boolean")).cast("int").alias("include"),
-    )
+    """The END-TO-END curation manifest a training run consumes: per
+    document, the dedup verdict (min-id keep), the quality gate
+    (score ≥ 0.5), the train/val/test split, and the final include flag
+    (keep ∧ quality)."""
+    return _curation(spark, sf_dir).manifest()
 
 
 def _oracle_doc_curation_manifest_sql() -> str:
@@ -5501,17 +5452,15 @@ FROM q LEFT JOIN cl ON cl.doc_id = q.doc_id
 
 def q_doc_curation_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL curation decision from ONE staged run — this query
-    executes `plans/pipeline.py CurationRun.decision()` itself, so the
-    staged pipeline (not just its standalone query twins) is
-    oracle-gated end-to-end: src0 plays the held-out benchmark, the rest
-    of the corpus is the training candidate set, and every train doc
-    gets dedup keep + quality gate + split + decon keep/trim/drop + the
-    final ``admit`` flag. Clusters and contamination spans are staged
-    once (localCheckpoint) and every derived column reads the staged
-    blocks; the oracle re-derives the identical decision from raw SQL
-    (train-restricted LSH→CC recursive closure + gram-join decon)."""
-    from beacon_indexer_spark.plans.pipeline import CurationRun
-
+    executes `plans/pipeline.py CurationRun.decision()`, so the decon
+    stage is oracle-gated end-to-end like the other spine queries: src0
+    plays the held-out benchmark, the rest of the corpus is the training
+    candidate set, and every train doc gets dedup keep + quality gate +
+    split + decon keep/trim/drop + the final ``admit`` flag. Clusters
+    and contamination spans are staged once (localCheckpoint) and every
+    derived column reads the staged blocks; the oracle re-derives the
+    identical decision from raw SQL (train-restricted LSH→CC recursive
+    closure + gram-join decon)."""
     docs = _ts(spark, sf_dir, "documents")
     train = docs.filter(F.col("source") != "src0")
     test = docs.filter(F.col("source") == "src0")
@@ -5737,36 +5686,8 @@ FROM p GROUP BY 1, 2
 def q_corpus_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The executive dedup rollup: corpus size, docs in duplicate
     clusters, cluster count, largest cluster, kept docs, and the dup
-    rate — the one-row report a curation run logs. Every input is an
-    already-bounded frame (CC output = only docs WITH duplicates), so
-    the final assembly is cross-joins of one-row aggregates."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs)
-    tot = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    # one pass over the CC output: per-cluster sizes, then SUM/COUNT/MAX
-    # in a single global aggregate (sum of sizes == member count)
-    stats = (
-        clusters.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("__sz"))
-        .agg(
-            F.coalesce(F.sum("__sz"), F.lit(0)).alias("n_dup_docs"),
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.coalesce(F.max("__sz"), F.lit(0)).alias("max_cluster_size"),
-        )
-    )
-    j = tot.crossJoin(F.broadcast(stats))
-    removed = F.col("n_dup_docs") - F.col("n_clusters")
-    return j.select(
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_dup_docs").cast("long").alias("n_dup_docs"),
-        F.col("n_clusters").cast("long").alias("n_clusters"),
-        F.col("max_cluster_size").cast("long").alias("max_cluster_size"),
-        (F.col("n_docs") - removed).cast("long").alias("n_kept"),
-        F.round(removed.cast("double") / F.col("n_docs"), 6).alias("dup_rate"),
-    )
+    rate — the one-row report a curation run logs."""
+    return _curation(spark, sf_dir).summary()
 
 
 def _oracle_corpus_dedup_summary_sql() -> str:
@@ -6566,33 +6487,8 @@ def q_doc_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware dedup ACTION: within each near-dup cluster keep the
     HIGHEST-QUALITY document (q6 desc, doc_id asc tie-break) instead of
     the min-id canonical — the keep policy real curation uses (Dolma,
-    FineWeb: among near-dups, keep the best copy, not the first). Same
-    LSH→CC spine as `doc_keep_list`; the winner is a per-cluster
-    partitioned window (never global), and singletons keep themselves by
-    construction."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.round(X.quality_score("text"), 6).alias("q6"),
-    )
-    joined = spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    staged = joined.select(
-        "doc_id", cid.cast("long").alias("cluster_id"), "q6"
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("q6"), F.asc("doc_id")
-    )
-    return staged.select(
-        "doc_id",
-        "cluster_id",
-        "q6",
-        (F.row_number().over(w) == 1).cast("int").alias("keep"),
-    )
+    FineWeb: among near-dups, keep the best copy, not the first)."""
+    return _curation(spark, sf_dir, keep_policy="best_quality").keep_list()
 
 
 def _oracle_doc_keep_best_sql() -> str:
@@ -7120,42 +7016,11 @@ FROM j GROUP BY 1, 2
 
 def q_source_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-dedup token budget per source: the keep-list verdict
-    (LSH → connected components → min-id canonical, q_doc_keep_list
-    semantics) joined to per-doc token counts and rolled up per source —
-    the number that actually feeds a training-mix planner (raw token
-    counts overstate sources that are mostly self-copies). One keyed
-    left join (probe-guarded broadcast) + one |sources|-bounded agg."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "source",
-        X.token_count("text").cast("long").alias("__nt"),
-    )
-    joined = base.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    keep = F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
-    return (
-        joined.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(keep.cast("long")).cast("long").alias("n_kept"),
-            F.sum("__nt").cast("long").alias("tokens_total"),
-            F.sum(F.when(keep, F.col("__nt")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("tokens_kept"),
-        )
-        .withColumn(
-            "kept_frac",
-            F.round(
-                F.col("tokens_kept").cast("double")
-                / F.col("tokens_total").cast("double"),
-                6,
-            ),
-        )
-    )
+    (`doc_keep_list` semantics) joined to per-doc token counts and
+    rolled up per source — the number that actually feeds a training-mix
+    planner (raw token counts overstate sources that are mostly
+    self-copies)."""
+    return _curation(spark, sf_dir).token_budget()
 
 
 def _oracle_source_token_budget_sql() -> str:
@@ -7189,17 +7054,8 @@ def q_split_leakage_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     leakage_safe_split): split verdicts hash the CLUSTER id, so near-
     copies never straddle the eval boundary; `moved` flags docs a naive
     per-doc hash split would have leaked to the other side."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    return SP.leakage_safe_split(
-        docs,
-        D.broadcast_if_small(clusters, expect_rows_known=True),
-        "doc_id",
-        train_rate=_SPLIT_TRAIN_RATE,
-        salt=_SPLIT_SALT,
+    return _curation(spark, sf_dir).leakage_split(
+        train_rate=_SPLIT_TRAIN_RATE, salt=_SPLIT_SALT
     )
 
 
@@ -7454,31 +7310,9 @@ ORDER BY abs(cov) DESC, pos_i, pos_j LIMIT 20
 
 def q_dedup_cluster_size_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster size distribution (the power-law health report
-    every dedup run ships with): LSH → CC → cluster sizes (singletons
-    included via the coalesce-to-own-id spine) → docs/clusters per size.
-    Aggregations keyed by cluster then by size — output-bounded."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    spine = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-    cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    sizes = (
-        spine.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-        .select(cid.alias("__cid"))
-        .groupBy("__cid")
-        .agg(F.count(F.lit(1)).alias("__sz"))
-    )
-    return (
-        sizes.groupBy("__sz")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_clusters"),
-            F.sum("__sz").cast("long").alias("n_docs"),
-        )
-        .select(F.col("__sz").cast("long").alias("cluster_size"),
-                "n_clusters", "n_docs")
-    )
+    every dedup run ships with): docs and clusters per cluster size,
+    singletons included."""
+    return _curation(spark, sf_dir).cluster_size_dist()
 
 
 def _oracle_dedup_cluster_size_dist_sql() -> str:
@@ -7535,39 +7369,8 @@ def q_corpus_dup_rate_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate rate stratified by document length band — are the
     duplicates concentrated in short boilerplate or long mirrored
     content? Drives whether dedup effort targets short-doc blocking or
-    long-doc fingerprints. Fixed CASE bands (no quantile dependence);
-    the keep verdict rides the LSH → CC spine."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        X.token_count("text").cast("long").alias("__nt"),
-    )
-    joined = base.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
-    keep = F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
-    band = (
-        F.when(F.col("__nt") <= 32, "a_le32")
-        .when(F.col("__nt") <= 64, "b_le64")
-        .when(F.col("__nt") <= 128, "c_le128")
-        .when(F.col("__nt") <= 256, "d_le256")
-        .otherwise("e_gt256")
-    )
-    return (
-        joined.select(band.alias("len_band"), keep.cast("long").alias("__k"))
-        .groupBy("len_band")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.lit(1) - F.col("__k")).cast("long").alias("n_dups"),
-            F.round(
-                F.sum(F.lit(1) - F.col("__k")).cast("double")
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ).alias("dup_rate"),
-        )
-    )
+    long-doc fingerprints. Fixed CASE bands (no quantile dependence)."""
+    return _curation(spark, sf_dir).dup_rate_by_length()
 
 
 def _oracle_corpus_dup_rate_by_length_sql() -> str:
@@ -7947,19 +7750,14 @@ def q_doc_quality_vs_dup_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation quadrant report: quality-pass x keep cross-tab with doc
     and token mass per cell — 'how much HIGH-quality content is the
     dedup pass deleting' (top-right cell) is the tradeoff number a
-    curation review asks for first. Rides the LSH → CC spine; one
-    4-group aggregate."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
+    curation review asks for first. One 4-group aggregate."""
+    run = _curation(spark, sf_dir)
+    base = run.docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.round(X.quality_score("text"), 6).alias("__q6"),
         X.token_count("text").cast("long").alias("__nt"),
     )
-    joined = base.join(D.broadcast_if_small(clusters, expect_rows_known=True), "doc_id", "left")
+    joined = base.join(run.clusters, "doc_id", "left")
     keep = (
         F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
     ).cast("int")
@@ -9198,15 +8996,11 @@ def q_doc_keep_policy_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies, plus the fraction of clusters where some dropped copy is
     longer — the number that justifies switching to the best_quality
     policy. Cluster-keyed aggregate + one-row rollup."""
-    docs = _ts(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(
-        docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
-    )
-    clusters = D.connected_components(pairs, node_col="doc_id")
-    base = docs.select(
+    run = _curation(spark, sf_dir)
+    base = run.docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         X.token_count("text").cast("long").alias("__nt"),
-    ).join(clusters, "doc_id")
+    ).join(run.clusters, "doc_id")
     per_cluster = base.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("__m"),
         F.sum("__nt").alias("__sum"),

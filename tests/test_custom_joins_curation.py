@@ -494,7 +494,10 @@ def test_curation_run_stages_clusters_once(spark):
     from beacon_indexer_spark.plans.pipeline import CurationRun
 
     run = CurationRun(_curation_docs(spark), k=8, bands=4, shingle_n=3)
-    for frame in (run.keep_list(), run.manifest(), run.summary()):
+    best = CurationRun(_curation_docs(spark), k=8, bands=4, shingle_n=3,
+                       keep_policy="best_quality")
+    for frame in (run.keep_list(), run.manifest(), run.summary(),
+                  best.keep_list()):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "Scan ExistingRDD" in plan  # staged checkpoint blocks
         # the minhash signature pipeline's fingerprints: the universal-hash
@@ -505,6 +508,28 @@ def test_curation_run_stages_clusters_once(spark):
     # exactly two sources: the docs spine and the staged cluster blocks —
     # a standalone recomputation would add the whole signature pipeline
     assert man_plan.count("Scan ExistingRDD") == 2
+
+
+def test_curation_run_ratios_null_on_zero_denominators(spark):
+    """Under ANSI division an empty corpus (summary's dup_rate) and a
+    source whose docs have no tokens (token_budget's kept_frac) must give
+    NULL ratios, as the SQL oracles do, instead of DIVIDE_BY_ZERO."""
+    from beacon_indexer_spark.plans.pipeline import CurationRun
+
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    [s] = CurationRun(empty, k=8, bands=4, shingle_n=3).summary().collect()
+    assert (s["n_docs"], s["n_dup_docs"], s["n_clusters"], s["n_kept"]) == (0, 0, 0, 0)
+    assert s["dup_rate"] is None
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(1, "", "blank"), (2, "   ", "blank"), (3, base, "web")],
+        "doc_id long, text string, source string",
+    )
+    tb = {r["source"]: r for r in
+          CurationRun(docs, k=8, bands=4, shingle_n=3).token_budget().collect()}
+    assert tb["blank"]["tokens_total"] == 0 and tb["blank"]["kept_frac"] is None
+    assert tb["web"]["kept_frac"] == 1.0
 
 
 def test_curation_run_best_quality_policy(spark):
