@@ -208,13 +208,11 @@ def main(
             fm.fold()
             # mark ONLY this run's range completed — stale pending chunks
             # from an interrupted earlier backfill must stay pending
+            first = (args.start_slot // cfg.chunk_size) * cfg.chunk_size
             ledger.mark(
-                ledger.with_status(L.PENDING).filter(
-                    (F.col("loader_name") == name)
-                    & (F.col("start_slot") >= (args.start_slot // cfg.chunk_size)
-                       * cfg.chunk_size)
-                    & (F.col("end_slot") <= args.end_slot)
-                ),
+                [c for c in ledger.with_status(L.PENDING)
+                 if c["loader_name"] == name and c["start_slot"] >= first
+                 and c["end_slot"] <= args.end_slot],
                 L.COMPLETED,
             )
             out[name] = lake.table_stats(spec.raw_table)
@@ -241,6 +239,21 @@ def main(
         # progress manifest records the run like any transform batch.
         from beacon_indexer_spark.plans.pipeline import CurationRun
 
+        report_fns = {
+            "size_dist": CurationRun.cluster_size_dist,
+            "token_budget": CurationRun.token_budget,
+            "dup_by_length": CurationRun.dup_rate_by_length,
+            "leakage_split": CurationRun.leakage_split,
+        }
+        # validate before any work: a misspelt name must not fail the
+        # command after it has replaced the previous run's tables
+        requested = [r for r in args.reports.split(",") if r]
+        for rep in requested:
+            if rep not in report_fns:
+                raise SystemExit(
+                    f"unknown --reports entry {rep!r}; "
+                    f"choose from {sorted(report_fns)}"
+                )
         if "/" in args.docs or args.docs.endswith(".parquet"):
             docs = spark.read.parquet(args.docs)
         else:
@@ -261,21 +274,9 @@ def main(
         lake.write(f"{args.prefix}_manifest", run.manifest(), mode="overwrite")
         summary = run.summary()
         lake.write(f"{args.prefix}_summary", summary, mode="overwrite")
-        report_fns = {
-            "size_dist": run.cluster_size_dist,
-            "token_budget": run.token_budget,
-            "dup_by_length": run.dup_rate_by_length,
-            "leakage_split": run.leakage_split,
-        }
         extra_tables = []
-        requested = [r for r in args.reports.split(",") if r]
         for rep in requested:
-            if rep not in report_fns:
-                raise SystemExit(
-                    f"unknown --reports entry {rep!r}; "
-                    f"choose from {sorted(report_fns)}"
-                )
-            lake.write(f"{args.prefix}_{rep}", report_fns[rep](), mode="overwrite")
+            lake.write(f"{args.prefix}_{rep}", report_fns[rep](run), mode="overwrite")
             extra_tables.append(f"{args.prefix}_{rep}")
         # a re-run with a narrower --reports set must not leave a prior
         # run's report tables beside the fresh keep_list/manifest —
@@ -305,8 +306,8 @@ def main(
         }
 
     elif (args.command, args.subcommand) == ("maintain", "status"):
-        out["chunks"] = [r.asDict() for r in ledger.counts().collect()]
-        out["transform"] = [r.asDict() for r in progress.stats().collect()]
+        out["chunks"] = ledger.counts()
+        out["transform"] = progress.stats()
         out["tables"] = [
             lake.table_stats(t)
             for t in ["raw_blocks", *RAW_TO_STRUCTURED.get("raw_blocks", [])]
@@ -317,15 +318,9 @@ def main(
 
             stale_to = timedelta(minutes=args.stale_minutes)
             out["debug_counts"] = ledger.debug_counts()
-            out["stale_claimed"] = [
-                r.asDict() for r in ledger.stale_claimed(stale_to).collect()
-            ]
-            out["recent_failures"] = [
-                r.asDict() for r in progress.failed_ranges().collect()
-            ]
-            out["recent_activity"] = [
-                r.asDict() for r in progress.recent().collect()
-            ]
+            out["stale_claimed"] = ledger.stale_claimed(stale_to)
+            out["recent_failures"] = progress.failed_ranges()
+            out["recent_activity"] = progress.recent()
 
     elif (args.command, args.subcommand) == ("maintain", "gaps"):
         raw = lake.read(args.raw_table)
@@ -345,13 +340,10 @@ def main(
         # anything loaded-but-untransformed. One command, zero gaps after.
         loader_name = args.raw_table.removeprefix("raw_")
         spec = LOADERS[loader_name]
-        failed_loads = ledger.with_status(L.FAILED).filter(
-            F.col("loader_name") == loader_name
-        )
-        load_ranges = [
-            (r["start_slot"], r["end_slot"])
-            for r in failed_loads.select("start_slot", "end_slot").collect()
+        failed_loads = [
+            c for c in ledger.with_status(L.FAILED) if c["loader_name"] == loader_name
         ]
+        load_ranges = [(c["start_slot"], c["end_slot"]) for c in failed_loads]
         if load_ranges:
             fetch_cfg = FetchConfig(base_url=args.beacon_url)
             from beacon_indexer_spark.plans.pipeline import _coalesce_ranges
@@ -365,10 +357,10 @@ def main(
                 lake.write(spec.raw_table, df)
             ledger.mark(failed_loads, L.COMPLETED)
         out["reloaded_ranges"] = load_ranges
-        failed = progress.current().filter(
-            (F.col("raw_table_name") == args.raw_table)
-            & (F.col("status") == L.FAILED)
-        ).collect()
+        failed = [
+            r for r in progress.current()
+            if r["raw_table_name"] == args.raw_table and r["status"] == L.FAILED
+        ]
         fixed = []
         for r in failed:
             pipe.repair_range(args.raw_table, r["start_slot"], r["end_slot"])

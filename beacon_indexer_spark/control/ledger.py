@@ -13,24 +13,32 @@ latest-wins model over Parquet so the ledger itself is idempotent and
 re-org-safe:
 
 - ``mark(...)`` appends status rows (pending→claimed→completed|failed);
-- readers dedup on ``chunk_id`` keeping max ``updated_at`` — the FINAL read;
+- readers dedup on the key keeping max version — the FINAL read;
 - discovery queries are anti-joins, not mutations.
 
-Scale notes: the ledger is tiny (one row per 1000-slot chunk — ~10M slots →
-~10k rows), so every join against it broadcasts. Gap analysis anti-joins a
-generated ``spark.range`` against the *distinct* slots actually present —
-the distinct is a map-side-combined agg on the already-pruned slot column.
+Scale notes: the manifests are tiny (one row per 1000-slot chunk — ~10M
+slots → ~10k rows), so the driver reads and writes them with pyarrow and
+launches no Spark job; readers return lists of row dicts. The files keep
+the Spark schemas, so Spark reads a manifest and this reads Spark's. Gap
+analysis reads the raw lake, so it stays in Spark: a generated
+``spark.range`` anti-joined against the *distinct* slots present.
 """
 
 from __future__ import annotations
 
+import os
+import time
 import uuid
 from datetime import datetime, timedelta, timezone
+from operator import itemgetter
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from beacon_indexer_spark.functions.core import last_slot_of_day, latest
+from beacon_indexer_spark.functions.core import last_slot_of_day
 from beacon_indexer_spark.schemas.raw import LOAD_STATE_CHUNKS, TRANSFORMER_PROGRESS
 
 PENDING, CLAIMED, COMPLETED, FAILED = "pending", "claimed", "completed", "failed"
@@ -41,25 +49,9 @@ def _now() -> datetime:
     return datetime.now(timezone.utc)
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Manifest read that treats a never-written manifest as empty."""
-    import os
-
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # chunk generation (reference C1, src/services/loader.py:487-758)
 # ---------------------------------------------------------------------------
-
-def chunk_id(loader_name: str, start_slot: int, end_slot: int) -> str:
-    """Deterministic chunk identity — same range → same id, so re-planning
-    is idempotent (the reference uses uuid4 + dedup-by-range; deterministic
-    ids make the dedup structural)."""
-    return f"{loader_name}_{start_slot}_{end_slot}"
-
 
 def generate_chunks(
     spark: SparkSession,
@@ -67,35 +59,28 @@ def generate_chunks(
     end_slot: int,
     chunk_size: int,
     loader_name: str,
-    completed: DataFrame | None = None,
-) -> DataFrame:
+    completed: list[dict] | None = None,
+) -> list[dict]:
     """Partition [start_slot, end_slot] into CHUNK_SIZE-aligned pending
     chunks, floor-aligning the start (reference behavior) and skipping
-    ranges already completed (anti-join on the cached completed set,
-    reference ``src/services/loader.py:492-528``)."""
-    aligned_start = (start_slot // chunk_size) * chunk_size
-    ids = spark.range(aligned_start, end_slot + 1, chunk_size).select(
-        F.col("id").alias("start_slot"),
-        F.least(F.col("id") + chunk_size - 1, F.lit(end_slot)).alias("end_slot"),
-    )
-    now = F.lit(_now()).cast("timestamp")
-    chunks = ids.select(
-        F.concat_ws("_", F.lit(loader_name), "start_slot", "end_slot").alias("chunk_id"),
-        "start_slot",
-        "end_slot",
-        F.lit(loader_name).alias("loader_name"),
-        F.lit(PENDING).alias("status"),
-        F.lit(None).cast("string").alias("worker_id"),
-        now.alias("created_at"),
-        now.alias("updated_at"),
-    )
-    if completed is not None:
-        chunks = chunks.join(
-            F.broadcast(completed.select("start_slot", "end_slot", "loader_name")),
-            ["start_slot", "end_slot", "loader_name"],
-            "left_anti",
-        )
-    return chunks
+    ranges already completed by this loader (reference
+    ``src/services/loader.py:492-528``). The chunk id is the range, so
+    re-planning is idempotent (the reference uses uuid4 + dedup-by-range;
+    deterministic ids make the dedup structural)."""
+    done = {
+        (c["start_slot"], c["end_slot"])
+        for c in completed or ()
+        if c["loader_name"] == loader_name
+    }
+    now = _now()
+    starts = range((start_slot // chunk_size) * chunk_size, end_slot + 1, chunk_size)
+    ranges = [(s, min(s + chunk_size - 1, end_slot)) for s in starts]
+    return [
+        {"chunk_id": f"{loader_name}_{s}_{e}", "start_slot": s, "end_slot": e,
+         "loader_name": loader_name, "status": PENDING, "worker_id": None,
+         "created_at": now, "updated_at": now}
+        for s, e in ranges if (s, e) not in done
+    ]
 
 
 def daily_slots(
@@ -116,83 +101,126 @@ def daily_slots(
 
 
 # ---------------------------------------------------------------------------
+# append-only Parquet manifest, read latest-wins on the driver
+# ---------------------------------------------------------------------------
+
+class _Manifest:
+    """A directory of Parquet files in the Spark schema ``SCHEMA``, one per
+    append; the FINAL read keeps the row with the max ``VERSION`` per
+    ``KEYS``, and on a tie the later append. ``spark`` is unused: nothing
+    here runs on the cluster."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.path = path
+        self._arrow = to_arrow_schema(self.SCHEMA)
+
+    def _files(self) -> list[str]:
+        """Data files in append order. Names starting with ``.`` or ``_``
+        are skipped, as Spark skips them: Spark's ``_SUCCESS`` and ``.crc``
+        files, and the temp file of an append in flight."""
+        if not os.path.isdir(self.path):
+            return []
+        files = [f"{self.path}/{n}" for n in os.listdir(self.path)
+                 if n.endswith(".parquet") and n[0] not in "._"]
+        return sorted(files, key=lambda f: (os.stat(f).st_mtime_ns, f))
+
+    def _read(self, files: list[str]) -> list[dict]:
+        # the cast reads Spark's INT96 timestamps as UTC micros
+        return [
+            r for f in files
+            for r in pq.read_table(f, columns=self._arrow.names).cast(self._arrow).to_pylist()
+        ]
+
+    def _latest(self, rows: list[dict]) -> list[dict]:
+        best: dict[tuple, dict] = {}
+        for r in rows:
+            k = tuple(r[c] for c in self.KEYS)
+            if k not in best or r[self.VERSION] >= best[k][self.VERSION]:
+                best[k] = r
+        return list(best.values())
+
+    def _write(self, rows: list[dict]) -> None:
+        """One new file, made visible whole: written under a ``.`` name
+        that every reader skips, then renamed. The time-ordered name keeps
+        append order among files that share an mtime."""
+        if not rows:
+            return
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
+        pq.write_table(pa.Table.from_pylist(rows, self._arrow), f"{self.path}/.{name}")
+        os.replace(f"{self.path}/.{name}", f"{self.path}/{name}")
+
+    def current(self) -> list[dict]:
+        """FINAL read: the latest row per key."""
+        return self._latest(self._read(self._files()))
+
+    def compact(self) -> None:
+        """Collapse the manifest to current state in one file — the
+        control-plane small-file hygiene pass. Only the files read are
+        deleted, so an append that lands meanwhile survives."""
+        files = self._files()
+        self._write(self._latest(self._read(files)))
+        for f in files:
+            os.remove(f)
+
+
+# ---------------------------------------------------------------------------
 # ledger (append-only + latest-wins, reference C2/C3)
 # ---------------------------------------------------------------------------
 
-class ChunkLedger:
+class ChunkLedger(_Manifest):
     """``load_state_chunks`` as an append-only Parquet manifest."""
 
-    TABLE = "load_state_chunks"
+    SCHEMA, KEYS, VERSION = LOAD_STATE_CHUNKS, ("chunk_id",), "updated_at"
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def append(self, df: DataFrame) -> None:
-        df.select([f.name for f in LOAD_STATE_CHUNKS.fields]).write.mode("append").parquet(
-            self.path
-        )
+    def append(self, chunks: list[dict]) -> None:
+        self._write(chunks)
 
     def mark(
-        self, chunks: DataFrame, status: str, worker_id: str | None = None
+        self, chunks: list[dict], status: str, worker_id: str | None = None
     ) -> None:
         """Status transition = INSERT of a new version row (reference
         ``src/services/clickhouse.py:206-238``)."""
-        self.append(
-            chunks.withColumn("status", F.lit(status))
-            .withColumn("worker_id", F.lit(worker_id).cast("string"))
-            .withColumn("updated_at", F.lit(_now()).cast("timestamp"))
-        )
+        now = _now()
+        self.append([{**c, "status": status, "worker_id": worker_id, "updated_at": now}
+                     for c in chunks])
 
-    def current(self) -> DataFrame:
-        """FINAL read: latest status row per chunk_id."""
-        raw = _read_or_empty(self.spark, self.path, LOAD_STATE_CHUNKS)
-        return latest(raw, ["chunk_id"], "updated_at", method="window")
+    def with_status(self, status: str) -> list[dict]:
+        return [r for r in self.current() if r["status"] == status]
 
-    def with_status(self, status: str) -> DataFrame:
-        return self.current().filter(F.col("status") == status)
-
-    def counts(self) -> DataFrame:
-        """Grouped chunk counts (reference A2/A3 overview,
+    def counts(self) -> list[dict]:
+        """Per-loader chunk counts (reference A2/A3 overview,
         ``src/services/clickhouse.py:240-284``)."""
-        return (
-            self.current()
-            .groupBy("loader_name")
-            .agg(
-                F.count(F.lit(1)).alias("total"),
-                *[
-                    F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
-                    for s in (PENDING, CLAIMED, COMPLETED, FAILED)
-                ],
+        statuses = (PENDING, CLAIMED, COMPLETED, FAILED)
+        out: dict[str, dict] = {}
+        for r in self.current():
+            c = out.setdefault(
+                r["loader_name"],
+                {"loader_name": r["loader_name"], "total": 0, **dict.fromkeys(statuses, 0)},
             )
-        )
+            c["total"] += 1
+            if r["status"] in statuses:
+                c[r["status"]] += 1
+        return sorted(out.values(), key=itemgetter("loader_name"))
 
     def debug_counts(self) -> dict:
         """Raw (append-only) vs FINAL (latest-wins) row counts — the
         reference's duplicate-awareness check (``scripts/chunks.py:99-136``:
         counting without FINAL overstates; the delta is the un-compacted
         version history, normal for the append model)."""
-        raw = _read_or_empty(self.spark, self.path, LOAD_STATE_CHUNKS).count()
-        return {"raw_rows": raw, "final_rows": self.current().count()}
+        raw = self._read(self._files())
+        return {"raw_rows": len(raw), "final_rows": len(self._latest(raw))}
 
-    def stale_claimed(self, timeout: timedelta = timedelta(minutes=30)) -> DataFrame:
+    def stale_claimed(self, timeout: timedelta = timedelta(minutes=30)) -> list[dict]:
         """Chunks claimed longer than ``timeout`` ago with no newer status —
         the stuck-worker inspection (reference ``scripts/chunks.py`` +
         maintenance stale handling). Read through current() so a completed
         re-claim doesn't false-positive (the FINAL trap)."""
         cutoff = _now() - timeout
-        return self.current().filter(
-            (F.col("status") == CLAIMED) & (F.col("updated_at") < F.lit(cutoff))
-        )
-
-    def compact(self) -> None:
-        """Collapse the append-only ledger to current state — the control-
-        plane small-file hygiene pass (run alongside table compaction)."""
-        from beacon_indexer_spark.sources.storage import compact_manifest
-
-        compact_manifest(
-            self.spark, self.path, ["chunk_id"], "updated_at", LOAD_STATE_CHUNKS
-        )
+        return [
+            r for r in self.current()
+            if r["status"] == CLAIMED and r["updated_at"] < cutoff
+        ]
 
     def reset(
         self,
@@ -202,27 +230,22 @@ class ChunkLedger:
     ) -> int:
         """Reset chunks to pending (reference C11,
         ``src/services/maintenance.py:669-715``); returns count reset."""
-        cur = self.current().filter(F.col("status").isin(*statuses))
-        if slot_range is not None:
-            cur = cur.filter(
-                (F.col("start_slot") >= slot_range[0]) & (F.col("end_slot") <= slot_range[1])
-            )
-        if loaders is not None:
-            cur = cur.filter(F.col("loader_name").isin(*loaders))
-        n = cur.count()
-        if n:
-            self.mark(cur, PENDING)
-        return n
+        cur = [
+            r for r in self.current()
+            if r["status"] in statuses
+            and (slot_range is None
+                 or (r["start_slot"] >= slot_range[0] and r["end_slot"] <= slot_range[1]))
+            and (loaders is None or r["loader_name"] in loaders)
+        ]
+        self.mark(cur, PENDING)
+        return len(cur)
 
 
-class ProgressManifest:
+class ProgressManifest(_Manifest):
     """``transformer_progress`` as an append-only Parquet manifest."""
 
-    TABLE = "transformer_progress"
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
+    SCHEMA, KEYS = TRANSFORMER_PROGRESS, ("raw_table_name", "start_slot", "end_slot")
+    VERSION = "processed_at"
 
     def record(
         self,
@@ -245,83 +268,55 @@ class ProgressManifest:
         """Batch progress append: N status rows in ONE parquet file —
         the small-file guard for batched transforms and stale resets
         (one file per row would accumulate thousands of tiny manifests)."""
-        if not rows:
-            return
         now = _now()
-        stamped = [(*r, now) for r in rows]
-        self.spark.createDataFrame(
-            stamped, TRANSFORMER_PROGRESS
-        ).coalesce(1).write.mode("append").parquet(self.path)
+        self._write([dict(zip(self._arrow.names, (*r, now))) for r in rows])
 
-    def current(self) -> DataFrame:
-        raw = _read_or_empty(self.spark, self.path, TRANSFORMER_PROGRESS)
-        return latest(
-            raw, ["raw_table_name", "start_slot", "end_slot"], "processed_at",
-            method="window",
-        )
-
-    def completed_ranges(self, raw_table: str) -> DataFrame:
-        return self.current().filter(
-            (F.col("raw_table_name") == raw_table) & (F.col("status") == COMPLETED)
-        )
+    def completed_ranges(self, raw_table: str) -> list[dict]:
+        return [
+            r for r in self.current()
+            if r["raw_table_name"] == raw_table and r["status"] == COMPLETED
+        ]
 
     def reset_stale(self, timeout: timedelta = timedelta(minutes=30)) -> int:
         """processing >timeout → failed, at job start (reference C7,
         ``src/services/transformer.py:104-129``)."""
         cutoff = _now() - timeout
-        stale = self.current().filter(
-            (F.col("status") == PROCESSING) & (F.col("processed_at") < F.lit(cutoff))
-        )
-        rows = stale.collect()
-        self.record_many(
-            [
-                (r["raw_table_name"], r["start_slot"], r["end_slot"], FAILED,
-                 0, 0, "stale processing reset")
-                for r in rows
-            ]
-        )
-        return len(rows)
+        stale = [
+            (r["raw_table_name"], r["start_slot"], r["end_slot"], FAILED,
+             0, 0, "stale processing reset")
+            for r in self.current()
+            if r["status"] == PROCESSING and r["processed_at"] < cutoff
+        ]
+        self.record_many(stale)
+        return len(stale)
 
-    def failed_ranges(self, limit: int = 5) -> DataFrame:
+    def failed_ranges(self, limit: int = 5) -> list[dict]:
         """Most recent failed transform ranges with error messages
         (reference ``scripts/transformer_status.py:40-55``)."""
-        return (
-            self.current()
-            .filter(F.col("status") == FAILED)
-            .orderBy(F.desc("processed_at"))
-            .limit(limit)
-        )
+        return [r for r in self.recent(None) if r["status"] == FAILED][:limit]
 
-    def recent(self, limit: int = 10) -> DataFrame:
+    def recent(self, limit: int | None = 10) -> list[dict]:
         """Most recent progress activity, FINAL-read (reference
         ``scripts/transformer_status.py:57-80``)."""
-        return self.current().orderBy(F.desc("processed_at")).limit(limit)
+        return sorted(self.current(), key=itemgetter("processed_at"), reverse=True)[:limit]
 
-    def compact(self) -> None:
-        """Collapse the append-only progress manifest to current state."""
-        from beacon_indexer_spark.sources.storage import compact_manifest
-
-        compact_manifest(
-            self.spark, self.path, ["raw_table_name", "start_slot", "end_slot"],
-            "processed_at", TRANSFORMER_PROGRESS,
-        )
-
-    def stats(self) -> DataFrame:
-        """Transform progress rollup (reference A4/A6,
+    def stats(self) -> list[dict]:
+        """Transform progress rollup per raw table (reference A4/A6,
         ``src/services/transformer.py:630-641``)."""
-        return (
-            self.current()
-            .groupBy("raw_table_name")
-            .agg(
-                F.sum(F.when(F.col("status") == COMPLETED, 1).otherwise(0)).alias("completed"),
-                F.sum(F.when(F.col("status") == FAILED, 1).otherwise(0)).alias("failed"),
-                F.max(F.when(F.col("status") == COMPLETED, F.col("end_slot"))).alias(
-                    "max_completed_slot"
-                ),
-                F.sum("processed_count").alias("total_processed"),
-                F.sum("failed_count").alias("total_failed_rows"),
-            )
-        )
+        out: dict[str, dict] = {}
+        for r in self.current():
+            s = out.setdefault(r["raw_table_name"], {
+                "raw_table_name": r["raw_table_name"], "completed": 0, "failed": 0,
+                "max_completed_slot": None, "total_processed": 0, "total_failed_rows": 0,
+            })
+            if r["status"] == COMPLETED:
+                s["completed"] += 1
+                s["max_completed_slot"] = max(r["end_slot"], s["max_completed_slot"] or 0)
+            elif r["status"] == FAILED:
+                s["failed"] += 1
+            s["total_processed"] += r["processed_count"] or 0
+            s["total_failed_rows"] += r["failed_count"] or 0
+        return sorted(out.values(), key=itemgetter("raw_table_name"))
 
 
 # ---------------------------------------------------------------------------
@@ -329,34 +324,35 @@ class ProgressManifest:
 # ---------------------------------------------------------------------------
 
 def untransformed_chunks(
-    loaded: DataFrame, progress: DataFrame, raw_table: str, limit: int | None = 50
-) -> DataFrame:
+    loaded: list[dict], progress: list[dict], raw_table: str, limit: int | None = 50
+) -> list[dict]:
     """Completed load chunks FOR THE LOADER THAT FEEDS ``raw_table`` not yet
     transformed — the J1 anti-join (``src/services/transformer.py:240-262``),
     ordered by start_slot. Chunks of other loaders must not match: a range
     loaded only by e.g. the validators loader is not raw_blocks work."""
     loader_name = raw_table.removeprefix("raw_")
-    done = progress.filter(
-        (F.col("raw_table_name") == raw_table) & (F.col("status") == COMPLETED)
-    ).select("start_slot", "end_slot")
-    todo = (
-        loaded.filter(
-            (F.col("status") == COMPLETED) & (F.col("loader_name") == loader_name)
-        )
-        .select("start_slot", "end_slot", "loader_name")
-        .join(F.broadcast(done), ["start_slot", "end_slot"], "left_anti")
-        .orderBy("start_slot")
+    done = {
+        (p["start_slot"], p["end_slot"]) for p in progress
+        if p["raw_table_name"] == raw_table and p["status"] == COMPLETED
+    }
+    todo = sorted(
+        (c for c in loaded
+         if c["status"] == COMPLETED and c["loader_name"] == loader_name
+         and (c["start_slot"], c["end_slot"]) not in done),
+        key=itemgetter("start_slot"),
     )
-    return todo.limit(limit) if limit else todo
+    return todo[:limit] if limit else todo
 
 
 def integrity_check(ledger: ChunkLedger, progress: ProgressManifest, raw_table: str) -> dict:
     """Failed chunks + loaded-but-untransformed report (reference C8,
     ``src/services/maintenance.py:577-667``)."""
     cur = ledger.current()
-    failed = cur.filter(F.col("status") == FAILED).count()
-    untrans = untransformed_chunks(cur, progress.current(), raw_table, limit=None).count()
-    return {"failed_chunks": failed, "untransformed_chunks": untrans}
+    untrans = untransformed_chunks(cur, progress.current(), raw_table, limit=None)
+    return {
+        "failed_chunks": sum(r["status"] == FAILED for r in cur),
+        "untransformed_chunks": len(untrans),
+    }
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """Core helpers: latest-wins dedup, slot clock, payload hashing, hex math.
 
 Reference parity (citations into /root/reference):
-- ``latest``        — ReplacingMergeTree + FINAL / window dedup
+- ``latest``        — ReplacingMergeTree + FINAL dedup
                       (src/services/transformer.py:356-367)
 - ``payload_hash``  — sha256 of canonical JSON truncated to 16 hex chars
                       (src/loaders/base.py:17-31)
@@ -36,41 +36,22 @@ def _col(c: ColumnOrName) -> Column:
 # latest-wins dedup (ReplacingMergeTree semantics)
 # ---------------------------------------------------------------------------
 
-def latest(
-    df: DataFrame,
-    keys: Sequence[str],
-    version: str,
-    method: str = "max_by",
-) -> DataFrame:
+def latest(df: DataFrame, keys: Sequence[str], version: str) -> DataFrame:
     """Keep the newest row per key — the engine's ReplacingMergeTree+FINAL.
 
     Every reader of an append-only table MUST go through this (forgetting it
     silently double-counts; the reference has the identical trap with FINAL).
 
-    Two physical strategies, same result:
-
-    - ``max_by`` (default): ``groupBy(keys).agg(max(struct(version, *rest)))``
-      — partial aggregation combines map-side, so only one candidate row per
-      key per partition is shuffled. Preferred at scale: shuffle volume is
-      O(distinct keys), not O(rows).
-    - ``window``: ``row_number() over (partition by keys order by version
-      desc) = 1`` — shuffles *all* rows; kept because it preserves exact
-      input column order/types for any column type (maps aren't orderable
-      inside the max struct).
+    ``groupBy(keys).agg(max(struct(version, *rest)))``: partial aggregation
+    combines map-side, so only one candidate row per key per partition is
+    shuffled — shuffle volume is O(distinct keys), not O(rows). The input
+    column order is kept. Every non-key column must be orderable (no map
+    columns: they cannot sit inside the max struct).
 
     Ties on ``version`` break deterministically by the remaining columns
     (struct comparison is lexicographic field-by-field).
     """
     keys = list(keys)
-    if method == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys).orderBy(F.desc(version))
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
     rest = [c for c in df.columns if c not in keys]
     if version not in rest:
         raise ValueError(f"version column {version!r} must not be a key")

@@ -157,7 +157,7 @@ class BeaconPipeline:
                             failed_range=[raw_table, start_slot, end_slot])
             raise
 
-    def transform_pending(self, ledger_current: DataFrame, raw_table: str, limit: int = 50):
+    def transform_pending(self, ledger_current: list[dict], raw_table: str, limit: int = 50):
         """Discovery + execution: the reference's transform-batch loop body.
 
         Contiguous pending chunks coalesce into one merged `transform_range`
@@ -168,7 +168,7 @@ class BeaconPipeline:
             raise ValueError("transform_pending requires a ProgressManifest")
         todo = untransformed_chunks(
             ledger_current, self.progress.current(), raw_table, limit=limit
-        ).collect()
+        )
         results = []
         for run_ranges in _coalesce_ranges([(r["start_slot"], r["end_slot"]) for r in todo]):
             s, e = run_ranges[0][0], run_ranges[-1][1]

@@ -59,19 +59,6 @@ def _swap_in(path: str, tmp: str, write) -> None:
     shutil.rmtree(old)
 
 
-def compact_manifest(spark: SparkSession, path: str, keys: list[str],
-                     version: str, schema) -> None:
-    """Latest-wins rewrite for a control manifest (ledger / progress): the
-    append-per-status-change model accumulates one tiny file per transition
-    — this collapses the directory to current state in one file."""
-    if not os.path.isdir(path):
-        return
-    df = spark.read.schema(schema).parquet(path)
-    deduped = latest(df, keys, version, method="window").coalesce(1)
-    tmp = path + "__compact_tmp"
-    _swap_in(path, tmp, lambda: deduped.write.mode("overwrite").parquet(tmp))
-
-
 class ParquetSink:
     """Structured-table writer into the Parquet lake (default backend).
 

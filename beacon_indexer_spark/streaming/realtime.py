@@ -17,7 +17,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from beacon_indexer_spark.config import EngineConfig
-from beacon_indexer_spark.control.ledger import FAILED
+from beacon_indexer_spark.control.ledger import COMPLETED, FAILED
 from beacon_indexer_spark.plans.pipeline import BeaconPipeline
 from beacon_indexer_spark.plans.transform import TRANSFORMS
 from beacon_indexer_spark.schemas.raw import raw_envelope
@@ -53,16 +53,10 @@ class RealtimeLoop:
             return self._cursor
         candidates: list[int] = []
         if self.pipeline.progress is not None:
-            from pyspark.sql import functions as F
-
-            row = (
-                self.pipeline.progress.current()
-                .filter(F.col("status") == "completed")
-                .agg(F.max("end_slot").alias("mx"))
-                .collect()
-            )
-            if row and row[0]["mx"] is not None:
-                candidates.append(((row[0]["mx"] + 1) // cs) * cs)
+            done = [r["end_slot"] for r in self.pipeline.progress.current()
+                    if r["status"] == COMPLETED]
+            if done:
+                candidates.append(((max(done) + 1) // cs) * cs)
         if self.lake.exists("raw_blocks"):
             mx = self.lake.table_stats("raw_blocks")["max_slot"]
             if mx is not None:

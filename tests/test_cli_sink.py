@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -86,7 +87,7 @@ def test_cli_status_verbose_and_gaps_golden_contract(
     )
     ledger.append(L.generate_chunks(spark, SLOT0, SLOT0 + 9, 5, "blocks"))
     # one claimed-stale chunk + one completed, plus a failed transform range
-    two = ledger.current().limit(1)
+    two = ledger.current()[:1]
     ledger.mark(two, L.CLAIMED)
     from beacon_indexer_spark.control.ledger import ProgressManifest
 
@@ -312,12 +313,12 @@ def test_cli_maintain_fix(spark, capsys, seeded_lake, tmp_path):
     pipe = BeaconPipeline(seeded_lake, progress=prog, tables={"raw_blocks": ["blocks"]})
     pipe.transform_range("raw_blocks", SLOT0, SLOT0 + 9)
     prog.record("raw_blocks", SLOT0, SLOT0 + 9, L.FAILED, error_message="crash")
-    assert prog.current().collect()[0]["status"] == "failed"
+    assert prog.current()[0]["status"] == "failed"
 
     out = _run(capsys, ["--lake-dir", seeded_lake.base_dir, "maintain", "fix"], spark)
     assert out["fixed_ranges"] == [[SLOT0, SLOT0 + 9]]
     # range is completed again and blocks are intact (overwrite, not dup)
-    assert prog.current().collect()[0]["status"] == "completed"
+    assert prog.current()[0]["status"] == "completed"
     assert seeded_lake.read_latest("blocks").count() == 10
 
 
@@ -471,6 +472,21 @@ def test_cli_curate_rerun_drops_stale_reports(spark, capsys, tmp_path):
     # the core outputs are untouched by the cleanup
     assert lake.read("curation_keep_list").count() == 2
     assert lake.read("curation_manifest").count() == 2
+
+    # a misspelt --reports name fails before the first write: the previous
+    # run's tables keep their files
+    def files(table):
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(lake.path(table)) for f in fs
+        )
+
+    core = ("curation_keep_list", "curation_manifest", "curation_summary")
+    before = {t: files(t) for t in core}
+    with pytest.raises(SystemExit, match="bogus"):
+        main(["--lake-dir", lake_dir, "curate", "run", "--docs", docs_path,
+              "--reports", "bogus"], spark=spark)
+    assert {t: files(t) for t in core} == before
 
 
 def test_cli_curate_stages_clusters_once(spark, capsys, tmp_path):

@@ -104,7 +104,7 @@ def test_lake_stats(lake, spark):
 # ---------------------------------------------------------------------------
 
 def test_generate_chunks_alignment(spark):
-    chunks = L.generate_chunks(spark, 1050, 3999, 1000, "blocks").orderBy("start_slot").collect()
+    chunks = L.generate_chunks(spark, 1050, 3999, 1000, "blocks")
     assert [(c["start_slot"], c["end_slot"]) for c in chunks] == [
         (1000, 1999), (2000, 2999), (3000, 3999),
     ]
@@ -113,10 +113,8 @@ def test_generate_chunks_alignment(spark):
 
 
 def test_generate_chunks_skips_completed(spark):
-    done = spark.createDataFrame(
-        [(1000, 1999, "blocks")], "start_slot long, end_slot long, loader_name string"
-    )
-    chunks = L.generate_chunks(spark, 1000, 2999, 1000, "blocks", completed=done).collect()
+    done = [{"start_slot": 1000, "end_slot": 1999, "loader_name": "blocks"}]
+    chunks = L.generate_chunks(spark, 1000, 2999, 1000, "blocks", completed=done)
     assert [(c["start_slot"], c["end_slot"]) for c in chunks] == [(2000, 2999)]
 
 
@@ -138,20 +136,20 @@ def test_ledger_lifecycle(spark, tmp_path):
     led = L.ChunkLedger(spark, str(tmp_path / "ledger"))
     chunks = L.generate_chunks(spark, 0, 2999, 1000, "blocks")
     led.append(chunks)
-    assert led.with_status(L.PENDING).count() == 3
-    first = led.current().orderBy("start_slot").limit(1)
+    assert len(led.with_status(L.PENDING)) == 3
+    first = sorted(led.current(), key=lambda r: r["start_slot"])[:1]
     led.mark(first, L.CLAIMED, worker_id="w0")
     led.mark(first, L.COMPLETED, worker_id="w0")
-    cur = {r["chunk_id"]: r["status"] for r in led.current().collect()}
+    cur = {r["chunk_id"]: r["status"] for r in led.current()}
     assert cur["blocks_0_999"] == "completed"
     assert sum(1 for s in cur.values() if s == "pending") == 2
-    counts = led.counts().collect()[0].asDict()
+    counts = led.counts()[0]
     assert counts["total"] == 3 and counts["completed"] == 1 and counts["pending"] == 2
     # fail one, then reset
-    second = led.current().filter(F.col("chunk_id") == "blocks_1000_1999")
+    second = [r for r in led.current() if r["chunk_id"] == "blocks_1000_1999"]
     led.mark(second, L.FAILED)
     assert led.reset(statuses=(L.FAILED,)) == 1
-    assert led.with_status(L.PENDING).count() == 2
+    assert len(led.with_status(L.PENDING)) == 2
 
 
 def test_progress_and_discovery(spark, tmp_path):
@@ -162,10 +160,10 @@ def test_progress_and_discovery(spark, tmp_path):
     led.mark(led.current(), L.COMPLETED)  # all loaded
     prog.record("raw_blocks", 0, 999, L.COMPLETED, processed_count=42)
     todo = L.untransformed_chunks(led.current(), prog.current(), "raw_blocks")
-    assert sorted(r["start_slot"] for r in todo.collect()) == [1000, 2000]
+    assert sorted(r["start_slot"] for r in todo) == [1000, 2000]
     chk = L.integrity_check(led, prog, "raw_blocks")
     assert chk == {"failed_chunks": 0, "untransformed_chunks": 2}
-    stats = prog.stats().collect()[0].asDict()
+    stats = prog.stats()[0]
     assert stats["completed"] == 1 and stats["max_completed_slot"] == 999
     assert stats["total_processed"] == 42
 
@@ -174,8 +172,81 @@ def test_progress_latest_wins(spark, tmp_path):
     prog = L.ProgressManifest(spark, str(tmp_path / "p"))
     prog.record("raw_blocks", 0, 999, L.PROCESSING)
     prog.record("raw_blocks", 0, 999, L.COMPLETED, processed_count=10)
-    cur = prog.current().collect()
+    cur = prog.current()
     assert len(cur) == 1 and cur[0]["status"] == "completed"
+
+
+def test_control_plane_launches_no_spark_job(spark, tmp_path):
+    """The ledger and the progress manifest are read and written on the
+    driver: a whole load → transform → maintain lifecycle launches no
+    Spark job."""
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    first = jobs.nextJobId()
+    led = L.ChunkLedger(spark, str(tmp_path / "ledger"))
+    prog = L.ProgressManifest(spark, str(tmp_path / "progress"))
+    led.append(L.generate_chunks(spark, 0, 2999, 1000, "blocks"))
+    led.mark(sorted(led.current(), key=lambda r: r["start_slot"])[:2], L.COMPLETED)
+    chunks = L.generate_chunks(spark, 0, 3999, 1000, "blocks",
+                               completed=led.with_status(L.COMPLETED))
+    assert [c["start_slot"] for c in chunks] == [2000, 3000]
+    led.append(chunks)
+    prog.record_many([("raw_blocks", 0, 999, L.COMPLETED, 5, 0, None),
+                      ("raw_blocks", 1000, 1999, L.PROCESSING, 0, 0, None)])
+    todo = L.untransformed_chunks(led.current(), prog.current(), "raw_blocks")
+    assert [c["start_slot"] for c in todo] == [1000]
+    assert L.integrity_check(led, prog, "raw_blocks") == {
+        "failed_chunks": 0, "untransformed_chunks": 1}
+    led.mark(led.with_status(L.PENDING)[:1], L.FAILED)
+    assert led.reset(statuses=(L.FAILED,)) == 1
+    assert prog.reset_stale(dt.timedelta(0)) == 1
+    led.compact()
+    prog.compact()
+    assert len(led.current()) == 4 and len(prog.current()) == 2
+    assert jobs.nextJobId() == first
+
+
+def test_manifest_reads_spark_written_files(spark, tmp_path):
+    """Manifests written by Spark (INT96 timestamps, ``_SUCCESS``, ``.crc``
+    and empty part files) read latest-wins on the driver; new appends land
+    beside them and Spark reads the mixed directory; the ``.``-prefixed
+    temp file of an interrupted append is skipped by both readers."""
+    from beacon_indexer_spark.schemas.raw import LOAD_STATE_CHUNKS, TRANSFORMER_PROGRESS
+
+    utc = dt.timezone.utc
+    t1 = dt.datetime(2024, 1, 1, 12, 0, 0, 123456, tzinfo=utc)
+    t2 = dt.datetime(2024, 1, 1, 13, 0, 0, 654321, tzinfo=utc)
+    led_dir, prog_dir = str(tmp_path / "ledger"), str(tmp_path / "progress")
+    chunk = ("blocks_0_999", 0, 999, "blocks")
+    for rows in ([(*chunk, "pending", None, t1, t1)], [(*chunk, "completed", "w0", t1, t2)], []):
+        spark.createDataFrame(rows, LOAD_STATE_CHUNKS).write.mode("append").parquet(led_dir)
+    for status, t in (("processing", t1), ("completed", t2)):
+        spark.createDataFrame(
+            [("raw_blocks", 0, 999, status, 10, 0, None, t)], TRANSFORMER_PROGRESS
+        ).write.mode("append").parquet(prog_dir)
+    names = os.listdir(led_dir)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    led, prog = L.ChunkLedger(spark, led_dir), L.ProgressManifest(spark, prog_dir)
+    assert led.current() == [{
+        "chunk_id": "blocks_0_999", "start_slot": 0, "end_slot": 999,
+        "loader_name": "blocks", "status": "completed", "worker_id": "w0",
+        "created_at": t1, "updated_at": t2,
+    }]
+    assert [(r["status"], r["processed_at"]) for r in prog.current()] == [("completed", t2)]
+
+    for d in (led_dir, prog_dir):
+        with open(os.path.join(d, ".part-interrupted.parquet"), "wb") as f:
+            f.write(b"PAR1 torn")
+    led.append(L.generate_chunks(spark, 1000, 1999, 1000, "blocks"))
+    prog.record("raw_blocks", 1000, 1999, L.COMPLETED, 5)
+    assert sorted((r["chunk_id"], r["status"]) for r in led.current()) == [
+        ("blocks_0_999", "completed"), ("blocks_1000_1999", "pending")]
+    assert len(prog.current()) == 2
+    by_spark = spark.read.schema(LOAD_STATE_CHUNKS).parquet(led_dir).collect()
+    assert sorted((r["chunk_id"], r["status"]) for r in by_spark) == [
+        ("blocks_0_999", "completed"), ("blocks_0_999", "pending"),
+        ("blocks_1000_1999", "pending")]
+    assert spark.read.schema(TRANSFORMER_PROGRESS).parquet(prog_dir).count() == 3
 
 
 def test_gap_analysis(spark):
@@ -203,7 +274,7 @@ def test_pipeline_end_to_end_and_repair(spark, tmp_path, lake):
     counts = pipe.transform_range("raw_blocks", SLOT0, SLOT0 + 4)
     assert counts["blocks"] == 5
     assert counts["attestations"] == 5
-    assert prog.completed_ranges("raw_blocks").count() == 1
+    assert len(prog.completed_ranges("raw_blocks")) == 1
 
     blocks = lake.read_latest("blocks")
     assert sorted(r["proposer_index"] for r in blocks.collect()) == [100, 101, 102, 103, 104]
@@ -234,7 +305,7 @@ def test_pipeline_sub_day_repair_keeps_rest_of_day(spark, tmp_path, lake):
 
     pipe.repair_range("raw_blocks", SLOT0 + 5, SLOT0 + 9)
     assert lake.read_latest("blocks").count() == 20
-    done = prog.completed_ranges("raw_blocks").collect()
+    done = prog.completed_ranges("raw_blocks")
     assert (SLOT0 + 5, SLOT0 + 9) in {(r["start_slot"], r["end_slot"]) for r in done}
 
 
@@ -279,7 +350,7 @@ def test_pipeline_discovery_loop(spark, tmp_path, lake):
     # two contiguous chunks coalesce into ONE merged transform job
     assert results == [(SLOT0, SLOT0 + 19, {"blocks": 20})]
     # ...but progress granularity stays per-chunk (discovery contract)
-    done = prog.completed_ranges("raw_blocks").collect()
+    done = prog.completed_ranges("raw_blocks")
     assert sorted((r["start_slot"], r["end_slot"]) for r in done) == [
         (SLOT0, SLOT0 + 9), (SLOT0 + 10, SLOT0 + 19)
     ]
@@ -293,7 +364,7 @@ def test_pipeline_failure_records_progress(spark, tmp_path, lake):
     # raw_blocks table doesn't exist on disk → read fails → FAILED recorded
     with pytest.raises(Exception):
         pipe.transform_range("raw_blocks", 0, 10)
-    cur = prog.current().collect()
+    cur = prog.current()
     assert len(cur) == 1 and cur[0]["status"] == "failed"
     assert cur[0]["error_message"]
 

@@ -538,7 +538,7 @@ def test_realtime_soak_head_advances_with_reorg(spark, tmp_path):
     # progress: exactly one completed chunk per window, re-process included
     chunks = sorted(
         (r["start_slot"], r["end_slot"])
-        for r in prog.completed_ranges("raw_blocks").collect()
+        for r in prog.completed_ranges("raw_blocks")
     )
     assert chunks == [
         (SLOT0 + i * 10, SLOT0 + i * 10 + 9) for i in range(5)
@@ -567,7 +567,7 @@ def test_untransformed_chunks_filters_by_loader(spark, tmp_path):
     led.append(L.generate_chunks(spark, 0, 1999, 1000, "validators"))
     led.mark(led.current(), L.COMPLETED)
     todo = L.untransformed_chunks(led.current(), prog.current(), "raw_blocks",
-                                  limit=None).collect()
+                                  limit=None)
     # only the blocks-loader chunk, exactly once (no validators ranges, no
     # duplicate for the doubly-loaded [0,999] range)
     assert [(r["start_slot"], r["loader_name"]) for r in todo] == [(0, "blocks")]

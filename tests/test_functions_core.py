@@ -36,7 +36,7 @@ def test_payload_hash_col_agrees_with_python(spark):
     assert row["h"] == payload_hash(data)
 
 
-def test_latest_both_methods(spark):
+def test_latest_wins_ties_and_column_order(spark):
     rows = [
         (1, "a", 10, "old"),
         (1, "a", 20, "new"),
@@ -45,15 +45,12 @@ def test_latest_both_methods(spark):
         (2, "a", 7, "y"),  # tie on version -> deterministic (max by remaining cols)
     ]
     df = spark.createDataFrame(rows, "slot int, k string, v int, val string")
-    for method in ("max_by", "window"):
-        out = latest(df, ["slot", "k"], "v", method=method)
-        got = {(r.slot, r.k): r.val for r in out.collect()}
-        assert got[(1, "a")] == "new"
-        assert got[(1, "b")] == "only"
-        assert len(got) == 3
-    # max_by tie-break is deterministic: max of remaining columns
     out = latest(df, ["slot", "k"], "v")
     got = {(r.slot, r.k): r.val for r in out.collect()}
+    assert got[(1, "a")] == "new"
+    assert got[(1, "b")] == "only"
+    assert len(got) == 3
+    # tie-break is deterministic: max of remaining columns
     assert got[(2, "a")] == "y"
     assert out.columns == df.columns
 

@@ -151,8 +151,6 @@ def test_health_reports_failed_transform_then_recovers(spark, tmp_path, monkeypa
     import urllib.error
     import urllib.request
 
-    from pyspark.sql import functions as F
-
     # a fresh health state and server slot, both restored at teardown
     monkeypatch.setattr(O, "_health_state", {"status": "starting", "operation": ""})
     monkeypatch.setattr(O, "_metrics_server", None)
@@ -175,7 +173,7 @@ def test_health_reports_failed_transform_then_recovers(spark, tmp_path, monkeypa
         assert body["status"] == "failed" and "sink down" in body["error"]
         assert body["failed_range"] == ["raw_blocks", SLOT0, SLOT0 + 4]
         # the progress row keeps the error text, not a slot number
-        failed = prog.current().filter(F.col("status") == L.FAILED).collect()
+        failed = [r for r in prog.current() if r["status"] == L.FAILED]
         assert [r["error_message"] for r in failed] == ["sink down"]
 
         pipe.sink = ParquetSink(lake)
@@ -281,14 +279,8 @@ def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys):
     lake.write("raw_blocks", spark.createDataFrame(rows, schema=raw_envelope()))
     chunks = L.generate_chunks(spark, SLOT0, SLOT0 + 19, 10, "blocks")
     ledger.append(chunks)
-    from pyspark.sql import functions as F
-
-    ledger.mark(
-        ledger.current().filter(F.col("start_slot") == SLOT0), L.COMPLETED
-    )
-    ledger.mark(
-        ledger.current().filter(F.col("start_slot") == SLOT0 + 10), L.FAILED
-    )
+    ledger.mark([c for c in ledger.current() if c["start_slot"] == SLOT0], L.COMPLETED)
+    ledger.mark([c for c in ledger.current() if c["start_slot"] == SLOT0 + 10], L.FAILED)
 
     rc = main(
         ["--lake-dir", lake.base_dir, "maintain", "fix"],
@@ -305,7 +297,7 @@ def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys):
     assert report["missing"] == 0
     assert lake.read_latest("blocks").count() == 20
     # ledger shows no failed chunks anymore
-    assert ledger.with_status(L.FAILED).count() == 0
+    assert ledger.with_status(L.FAILED) == []
 
 
 # ---------------------------------------------------------------------------
@@ -324,10 +316,10 @@ def test_record_many_single_append(spark, tmp_path):
         [("raw_blocks", i * 10, i * 10 + 9, L.COMPLETED, 10, 0, None) for i in range(8)]
     )
     assert _n_parquet_files(prog.path) == 1
-    assert prog.current().count() == 8
+    assert len(prog.current()) == 8
 
 
-def test_control_compact_bounds_files(spark, tmp_path):
+def test_control_compact_bounds_files(spark, tmp_path, monkeypatch):
     led = L.ChunkLedger(spark, str(tmp_path / "ledger"))
     chunks = L.generate_chunks(spark, SLOT0, SLOT0 + 49, 10, "blocks")
     led.append(chunks)
@@ -336,7 +328,7 @@ def test_control_compact_bounds_files(spark, tmp_path):
     assert _n_parquet_files(led.path) > 1
     led.compact()
     assert _n_parquet_files(led.path) == 1
-    cur = led.current().collect()
+    cur = led.current()
     assert len(cur) == 5 and all(r["status"] == L.COMPLETED for r in cur)
 
     prog = L.ProgressManifest(spark, str(tmp_path / "progress"))
@@ -344,7 +336,20 @@ def test_control_compact_bounds_files(spark, tmp_path):
         prog.record("raw_blocks", i * 10, i * 10 + 9, L.COMPLETED, 10)
     prog.compact()
     assert _n_parquet_files(prog.path) == 1
-    assert prog.current().count() == 4
+    assert len(prog.current()) == 4
+
+    # compaction deletes only the files it read: an append that lands
+    # while it runs survives
+    read = prog._read
+
+    def read_then_append(files):
+        rows = read(files)
+        prog.record("raw_blocks", 40, 49, L.COMPLETED, 10)
+        return rows
+
+    monkeypatch.setattr(prog, "_read", read_then_append)
+    prog.compact()
+    assert len(prog.current()) == 5
 
 
 def test_maintain_status_verbose_inspection(spark, tmp_path, capsys):
