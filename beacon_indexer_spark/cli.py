@@ -7,10 +7,12 @@
     python -m beacon_indexer_spark curate run --docs PATH|TABLE [--prefix P]
     python -m beacon_indexer_spark maintain status|gaps|integrity|reset|fix|compact|rollup|profile
 
-Lifecycle parity (SURVEY §3): backfill = chunk plan → distributed fetch →
-raw lake → ledger; transform = discovery anti-join → parse fan-out →
-structured lake → progress; maintain fix = reset failed → re-transform
-with partition overwrite (the DELETE-free repair).
+Lifecycle parity (SURVEY §3): backfill = chunk plan → ledger → fetch of
+exactly the planned chunks → raw lake → chunks completed or failed
+(``plans.pipeline.load_chunks``); transform = discovery anti-join → parse
+fan-out → structured lake → progress; maintain fix = reload failed load
+chunks through the same ``load_chunks`` → re-transform failed ranges with
+partition overwrite (the DELETE-free repair) → catch up.
 """
 
 from __future__ import annotations
@@ -24,17 +26,15 @@ from pyspark.sql import functions as F
 
 from beacon_indexer_spark.config import NETWORKS, default_config
 from beacon_indexer_spark.control import ledger as L
-from beacon_indexer_spark.plans.pipeline import BeaconPipeline
+from beacon_indexer_spark.plans.pipeline import BeaconPipeline, load_chunks
 from beacon_indexer_spark.schemas.structured import RAW_TO_STRUCTURED
 from beacon_indexer_spark.sources.beacon_api import (
     BeaconAPI,
     FetchConfig,
     LOADERS,
     bootstrap_schedule,
-    fetch_slot_list_distributed,
-    fetch_slots_distributed,
+    fetch_slots_distributed,  # noqa: F401 — perfbench/trace.py wraps this name
 )
-from beacon_indexer_spark.sources.beacon_api import FetchMetrics
 from beacon_indexer_spark.sources.storage import ParquetLake, make_sink
 from beacon_indexer_spark.streaming.realtime import RealtimeLoop
 
@@ -138,24 +138,6 @@ ROLLUP_SPECS: dict = {
 }
 
 
-def _fetch_range(spark, fetch_cfg, spec, start, end, schedule, chunk_size,
-                 api_factory, metrics=None):
-    """Distributed fetch of one loader over a slot range. Daily-snapshot
-    loaders (validators, pending queues) fetch only the last slot of each
-    UTC day in it, as the realtime loop does."""
-    if spec.daily:
-        day_ends = L.daily_slots(spark, start, end, schedule.genesis_time,
-                                 schedule.seconds_per_slot)
-        return fetch_slot_list_distributed(
-            spark, fetch_cfg, spec, day_ends, schedule,
-            slots_per_task=chunk_size, api_factory=api_factory, metrics=metrics,
-        )
-    return fetch_slots_distributed(
-        spark, fetch_cfg, spec, start, end, schedule,
-        slots_per_task=chunk_size, api_factory=api_factory, metrics=metrics,
-    )
-
-
 def _services(args, spark: SparkSession):
     if args.bootstrap:
         schedule, _, _ = bootstrap_schedule(BeaconAPI(args.beacon_url))
@@ -194,28 +176,17 @@ def main(
         fetch_cfg = FetchConfig(base_url=args.beacon_url)
         for name in names:
             spec = LOADERS[name]
+            # the plan is the work: chunks completed by an earlier run are
+            # not planned again, so they are not fetched again
             chunks = L.generate_chunks(
                 spark, args.start_slot, args.end_slot, cfg.chunk_size, name,
                 completed=ledger.with_status(L.COMPLETED),
             )
             ledger.append(chunks)
-            fm = FetchMetrics(spark, name)
-            df = _fetch_range(
-                spark, fetch_cfg, spec, args.start_slot, args.end_slot,
-                lake.schedule, cfg.chunk_size, api_factory, metrics=fm,
-            )
-            lake.write(spec.raw_table, df)
-            fm.fold()
-            # mark ONLY this run's range completed — stale pending chunks
-            # from an interrupted earlier backfill must stay pending
-            first = (args.start_slot // cfg.chunk_size) * cfg.chunk_size
-            ledger.mark(
-                [c for c in ledger.with_status(L.PENDING)
-                 if c["loader_name"] == name and c["start_slot"] >= first
-                 and c["end_slot"] <= args.end_slot],
-                L.COMPLETED,
-            )
-            out[name] = lake.table_stats(spec.raw_table)
+            load_chunks(lake, ledger, spec, chunks, fetch_cfg, cfg.chunk_size,
+                        api_factory)
+            if lake.exists(spec.raw_table):
+                out[name] = lake.table_stats(spec.raw_table)
 
     elif (args.command, args.subcommand) == ("load", "realtime"):
         loop = RealtimeLoop(
@@ -339,24 +310,14 @@ def main(
         # transform failed ranges with partition overwrite → catch up
         # anything loaded-but-untransformed. One command, zero gaps after.
         loader_name = args.raw_table.removeprefix("raw_")
-        spec = LOADERS[loader_name]
         failed_loads = [
             c for c in ledger.with_status(L.FAILED) if c["loader_name"] == loader_name
         ]
-        load_ranges = [(c["start_slot"], c["end_slot"]) for c in failed_loads]
-        if load_ranges:
-            fetch_cfg = FetchConfig(base_url=args.beacon_url)
-            from beacon_indexer_spark.plans.pipeline import _coalesce_ranges
-
-            for run in _coalesce_ranges(load_ranges):
-                s, e = run[0][0], run[-1][1]
-                df = _fetch_range(
-                    spark, fetch_cfg, spec, s, e, lake.schedule,
-                    cfg.chunk_size, api_factory,
-                )
-                lake.write(spec.raw_table, df)
-            ledger.mark(failed_loads, L.COMPLETED)
-        out["reloaded_ranges"] = load_ranges
+        load_chunks(lake, ledger, LOADERS[loader_name], failed_loads,
+                    FetchConfig(base_url=args.beacon_url), cfg.chunk_size, api_factory)
+        out["reloaded_ranges"] = sorted(
+            (c["start_slot"], c["end_slot"]) for c in failed_loads
+        )
         failed = [
             r for r in progress.current()
             if r["raw_table_name"] == args.raw_table and r["status"] == L.FAILED

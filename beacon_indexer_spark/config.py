@@ -67,6 +67,18 @@ class ForkSchedule:
         end_ts = self.slot_to_timestamp(end_slot) // day * day + day
         return max(0, -(-(first_ts - g) // sps)), (end_ts - 1 - g) // sps
 
+    def day_end_slots(self, start_slot: int, end_slot: int) -> list[int]:
+        """The last slot of each UTC day that ends inside [start_slot,
+        end_slot]: the fetch targets of the daily-snapshot loaders
+        (validators, pending queues). One step per day."""
+        out, s = [], start_slot
+        while s <= end_slot:
+            last = self.utc_day_bounds(s, s)[1]
+            if last <= end_slot:
+                out.append(last)
+            s = last + 1
+        return out
+
     def as_rows(self) -> list[tuple[str, int, int]]:
         """(fork, activation_epoch, activation_slot) rows for a broadcast
         fork-schedule DataFrame; FAR_FUTURE forks excluded."""

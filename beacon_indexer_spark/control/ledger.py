@@ -92,7 +92,9 @@ def daily_slots(
 ) -> DataFrame:
     """Validator daily-snapshot targets: the last slot of each UTC day in
     range (reference P9, ``src/loaders/validators.py:116-149``) — a pure
-    column predicate over a generated range, no driver loop."""
+    column predicate over a generated range. The loaders use the driver-side
+    ``ForkSchedule.day_end_slots``; this frame form serves
+    ``perfbench/backfill.py`` and checks that rule against Spark's dates."""
     return (
         spark.range(start_slot, end_slot + 1)
         .select(F.col("id").alias("slot"))

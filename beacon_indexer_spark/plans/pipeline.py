@@ -1,16 +1,20 @@
-"""End-to-end batch pipeline: raw lake → transform → structured lake.
+"""End-to-end batch pipeline: beacon API → raw lake → transform → structured lake.
 
-The Spark shape of the reference's ``transform run`` lifecycle (SURVEY §3.2):
-discovery (anti-join) → range read → latest-wins parse projections → one
-write per table → progress record. Steps that were processes/asyncio in the
-reference collapse into one Spark job per chunk range; the repair
-entry point (reference ``maintain fix``, ``src/services/maintenance.py:77-138``)
-becomes re-transform + dynamic partition overwrite.
+``load_chunks`` is the load half (SURVEY §3.1): ledger chunks → one
+distributed fetch → one raw write → chunks marked completed or failed.
+The transform half is the Spark shape of the reference's ``transform run``
+lifecycle (SURVEY §3.2): discovery (anti-join) → range read → latest-wins
+parse projections → one write per table → progress record. Steps that
+were processes/asyncio in the reference collapse into one Spark job per
+chunk range; the repair entry point (reference ``maintain fix``,
+``src/services/maintenance.py:77-138``) becomes re-transform + dynamic
+partition overwrite.
 """
 
 from __future__ import annotations
 
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -19,11 +23,13 @@ from beacon_indexer_spark.config import ForkSchedule
 from beacon_indexer_spark.control.ledger import (
     COMPLETED,
     FAILED,
+    ChunkLedger,
     ProgressManifest,
     untransformed_chunks,
 )
 from beacon_indexer_spark.plans.transform import TRANSFORMS, TransformResult, transform_blocks
 from beacon_indexer_spark.schemas.structured import RAW_TO_STRUCTURED
+from beacon_indexer_spark.sources import beacon_api as B
 from beacon_indexer_spark.sources.storage import ParquetLake, ParquetSink
 
 
@@ -31,7 +37,8 @@ def _coalesce_ranges(
     ranges: list[tuple[int, int]]
 ) -> list[list[tuple[int, int]]]:
     """Group sorted chunk ranges into runs of contiguous ranges
-    (end + 1 == next start). Each run becomes one merged transform job."""
+    (end + 1 == next start). Each run becomes one merged transform job,
+    and one fetch range of ``load_chunks``."""
     runs: list[list[tuple[int, int]]] = []
     for r in sorted(ranges):
         if runs and runs[-1][-1][1] + 1 == r[0]:
@@ -75,6 +82,58 @@ def write_tables(sink, outs: TransformResult, mode: str = "append") -> dict[str,
     finally:
         outs.unpersist()
     return counts
+
+
+def load_chunks(
+    lake: ParquetLake,
+    ledger: ChunkLedger,
+    loader: B.LoaderSpec,
+    chunks: list[dict],
+    fetch_cfg: B.FetchConfig,
+    chunk_size: int,
+    api_factory=None,
+) -> None:
+    """Load exactly the ledger ``chunks`` of ``loader`` into its raw table:
+    every slot of each contiguous run of chunks (daily-snapshot loaders:
+    the UTC day ends in it) is fetched by one distributed stage of
+    ``chunk_size``-slot tasks and written once, then the chunks are marked
+    completed. On any failure they are marked failed, counted, and
+    reported on ``/health``, and the error propagates."""
+    from beacon_indexer_spark import observability as O
+
+    if not chunks:
+        return
+    spark, sched = lake.spark, lake.schedule
+    runs = [(r[0][0], r[-1][1]) for r in
+            _coalesce_ranges([(c["start_slot"], c["end_slot"]) for c in chunks])]
+    try:
+        fm = B.FetchMetrics(spark, loader.name)
+        if loader.daily:
+            slots = [s for lo, hi in runs for s in sched.day_end_slots(lo, hi)]
+            frames = [B.fetch_slot_list_distributed(
+                spark, fetch_cfg, loader,
+                spark.createDataFrame([(s,) for s in slots], "slot long"), sched,
+                slots_per_task=chunk_size, api_factory=api_factory, metrics=fm,
+            )] if slots else []
+        else:
+            frames = [B.fetch_slots_distributed(
+                spark, fetch_cfg, loader, lo, hi, sched,
+                slots_per_task=chunk_size, api_factory=api_factory, metrics=fm,
+            ) for lo, hi in runs]
+        if frames:
+            lake.write(loader.raw_table, reduce(DataFrame.union, frames))
+            fm.fold()
+        ledger.mark(chunks, COMPLETED)
+    except Exception as e:  # noqa: BLE001 — record then re-raise
+        ledger.mark(chunks, FAILED)
+        O.METRICS.inc("beacon_indexer_chunks_total",
+                      {"loader": loader.name, "status": FAILED}, len(chunks))
+        O.update_health(status="failed", operation=f"load {loader.name}",
+                        error=str(e)[:500],
+                        failed_range=[loader.name, runs[0][0], runs[-1][1]])
+        raise
+    O.METRICS.inc("beacon_indexer_chunks_total",
+                  {"loader": loader.name, "status": COMPLETED}, len(chunks))
 
 
 class BeaconPipeline:

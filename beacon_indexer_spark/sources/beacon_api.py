@@ -438,8 +438,9 @@ def fetch_slot_list_distributed(
 ) -> DataFrame:
     """Distributed fetch of an explicit slot list (column ``slot``) — the
     backfill path for daily-snapshot loaders (validators, pending queues),
-    fed by ``control.ledger.daily_slots``. Same fork gating, envelope and
-    ``metrics`` as :func:`fetch_slots_distributed`."""
+    fed by ``ForkSchedule.day_end_slots`` in ``plans.pipeline.load_chunks``.
+    Same fork gating, envelope and ``metrics`` as
+    :func:`fetch_slots_distributed`."""
     gate = _first_fetchable_slot(loader, schedule)
     if gate is None:
         return spark.createDataFrame([], raw_envelope())

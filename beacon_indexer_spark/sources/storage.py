@@ -216,48 +216,6 @@ class ParquetLake:
         _swap_in(self.path(table), tmp.path(table),
                  lambda: tmp.write(table, deduped, mode="overwrite"))
 
-    def write_bucketed(
-        self,
-        table: str,
-        df: DataFrame,
-        bucket_cols: list[str],
-        num_buckets: int = 32,
-        sort_cols: list[str] | None = None,
-        mode: str = "overwrite",
-    ) -> None:
-        """Hash-bucketed external table for CO-LOCATED joins/aggregations:
-        pre-shuffles `df` by `bucket_cols` at WRITE time so every later
-        equi-join or groupBy on that key between same-bucketed tables
-        runs with ZERO Exchange — at 100 TB the shuffle of a fact⋈fact
-        join is paid once at ingest instead of per query (the classic
-        bucketed-warehouse layout; optional per-bucket sort additionally
-        enables sort-merge joins without a runtime sort).
-
-        The explicit `repartition(num_buckets, keys)` before the write
-        makes each task hold exactly one bucket → ONE file per bucket,
-        not tasks×buckets small files. Bucket metadata lives in the
-        session catalog (`saveAsTable` with an explicit path = external
-        table); in production point the session at a shared metastore so
-        the layout outlives the session — the data files themselves are
-        plain parquet either way, readable (bucket-blind) by any reader.
-        """
-        writer = (
-            df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
-            .write.mode(mode)
-            .format("parquet")
-            .option("path", self.path(table))
-            .bucketBy(num_buckets, *bucket_cols)
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.saveAsTable(table)
-
-    def read_bucketed(self, table: str) -> DataFrame:
-        """Catalog read that preserves bucket metadata (a bare
-        `spark.read.parquet(path)` sees the same rows but loses the
-        co-location guarantee and re-shuffles on join)."""
-        return self.spark.table(table)
-
     def refresh_rollup(
         self,
         source_table: str,

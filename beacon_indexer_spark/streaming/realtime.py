@@ -25,7 +25,6 @@ from beacon_indexer_spark.sources.beacon_api import (
     BeaconAPI,
     BeaconAPIError,
     LOADERS,
-    LoaderSpec,
     fetch_slots_local,
 )
 from beacon_indexer_spark.sources.storage import ParquetLake
@@ -66,17 +65,13 @@ class RealtimeLoop:
         base = self.start_slot if self.start_slot is not None else 0
         return (base // cs) * cs
 
-    def _loader_slots(self, spec: LoaderSpec, ws: int, we: int) -> list[int]:
-        sched = self.lake.schedule
-        slots = range(ws, we + 1)
-        if spec.daily:
-            return [s for s in slots if sched.utc_day_bounds(s, s)[1] == s]
-        return list(slots)
-
     def process_window(self, ws: int, we: int) -> dict[str, int]:
         """Fetch + load + transform one closed window. Returns rows-written
-        per raw table. A loader failure records FAILED progress and
-        re-raises (chunk fails loudly, reference base.py:99-100)."""
+        per raw table. A fetch failure writes no progress row (nothing was
+        loaded, so nothing is there to transform or repair): it is counted,
+        reported on ``/health`` with the loader and window, and re-raised,
+        and ``run`` retries the window because its cursor stays put
+        (chunk fails loudly, reference base.py:99-100)."""
         from beacon_indexer_spark import observability as O
 
         sched = self.lake.schedule
@@ -84,20 +79,17 @@ class RealtimeLoop:
         names = self.loaders or self.config.enabled_loaders
         for name in names:
             spec = LOADERS[name]
+            slots = sched.day_end_slots(ws, we) if spec.daily else range(ws, we + 1)
             try:
-                rows = fetch_slots_local(
-                    self.api, spec, self._loader_slots(spec, ws, we), sched
-                )
-            except BeaconAPIError:
+                rows = fetch_slots_local(self.api, spec, slots, sched)
+            except BeaconAPIError as e:
                 O.METRICS.inc("beacon_indexer_chunks_total",
-                              {"loader": name, "status": "failed"})
-                if self.pipeline.progress:
-                    self.pipeline.progress.record(
-                        spec.raw_table, ws, we, FAILED, error_message="fetch failed"
-                    )
+                              {"loader": name, "status": FAILED})
+                O.update_health(status="failed", operation=f"load {name}",
+                                error=str(e)[:500], failed_range=[name, ws, we])
                 raise
             O.METRICS.inc("beacon_indexer_chunks_total",
-                          {"loader": name, "status": "completed"})
+                          {"loader": name, "status": COMPLETED})
             O.METRICS.inc("beacon_indexer_fetch_rows_total",
                           {"loader": name}, len(rows))
             O.METRICS.set_gauge("beacon_indexer_highest_raw_slot", we,

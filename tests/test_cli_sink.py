@@ -322,6 +322,64 @@ def test_cli_maintain_fix(spark, capsys, seeded_lake, tmp_path):
     assert seeded_lake.read_latest("blocks").count() == 10
 
 
+def test_cli_backfill_loads_each_chunk_once(spark, capsys, tmp_path, monkeypatch):
+    """`load backfill` fetches exactly the ledger chunks it plans: an
+    unaligned first run fetches its floor-aligned first chunk whole, an
+    identical second run fetches nothing, and a daily loader over a range
+    with no UTC day end launches no Spark job and still succeeds."""
+    from beacon_indexer_spark.control import ledger as L
+
+    monkeypatch.setenv("BIS_CHUNK_SIZE", "10")
+    lake_dir, log = str(tmp_path / "lake"), str(tmp_path / "requests.log")
+
+    # nested closure → cloudpickle ships it by value to the executors,
+    # which record each request in a file the driver reads back
+    def fake_api():
+        from beacon_indexer_spark.sources.beacon_api import BeaconAPI
+
+        def transport(url, params, timeout):
+            with open(log, "a") as f:
+                f.write(url + "\n")
+            return 200, '{"data": {}}'
+
+        return BeaconAPI("http://fake", transport=transport, sleep=lambda s: None)
+
+    def backfill(start, end, loaders="blocks"):
+        rc = main(["--lake-dir", lake_dir, "load", "backfill",
+                   "--start-slot", str(start), "--end-slot", str(end),
+                   "--loaders", loaders], spark=spark, api_factory=fake_api)
+        assert rc == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def fetched():
+        with open(log) as f:
+            return sorted(int(u.rsplit("/", 1)[1]) for u in f.read().split())
+
+    lake = ParquetLake(spark, lake_dir, GNOSIS)
+    ledger = L.ChunkLedger(spark, f"{lake_dir}/_control/load_state_chunks")
+    out = backfill(SLOT0 + 5, SLOT0 + 19)
+    assert fetched() == list(range(SLOT0, SLOT0 + 20))
+    assert out["blocks"]["rows"] == 20 and out["blocks"]["min_slot"] == SLOT0
+    assert sorted((c["start_slot"], c["end_slot"], c["status"])
+                  for c in ledger.current()) == [
+        (SLOT0, SLOT0 + 9, L.COMPLETED), (SLOT0 + 10, SLOT0 + 19, L.COMPLETED),
+    ]
+
+    backfill(SLOT0 + 5, SLOT0 + 19)
+    assert len(fetched()) == 20
+    assert lake.read("raw_blocks").count() == 20
+
+    # validators fetch only UTC day ends, and this range holds none
+    assert GNOSIS.day_end_slots(SLOT0, SLOT0 + 19) == []
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    out = backfill(SLOT0, SLOT0 + 19, loaders="validators")
+    assert spark.sparkContext._jsc.sc().dagScheduler().nextJobId() == jobs
+    assert "validators" not in out and not lake.exists("raw_validators")
+    assert [c["status"] for c in ledger.current()
+            if c["loader_name"] == "validators"] == [L.COMPLETED] * 2
+    assert len(fetched()) == 20
+
+
 def test_cli_maintain_rollup(spark, capsys, seeded_lake):
     out = _run(
         capsys,

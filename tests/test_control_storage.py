@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from beacon_indexer_spark.config import GNOSIS
+from beacon_indexer_spark.config import GNOSIS, MAINNET
 from beacon_indexer_spark.control import ledger as L
 from beacon_indexer_spark.plans.pipeline import BeaconPipeline
 from beacon_indexer_spark.schemas.raw import raw_envelope
@@ -130,6 +130,12 @@ def test_daily_slots(spark):
         d1 = dt.datetime.fromtimestamp(GNOSIS.slot_to_timestamp(s), dt.UTC).date()
         d2 = dt.datetime.fromtimestamp(GNOSIS.slot_to_timestamp(s + 1), dt.UTC).date()
         assert d1 != d2
+    # the driver-side rule the loaders use selects the same slots
+    assert GNOSIS.day_end_slots(0, 3 * day) == slots
+    m_day = 86400 // MAINNET.seconds_per_slot
+    got = L.daily_slots(spark, 5, 2 * m_day + 5, MAINNET.genesis_time,
+                        MAINNET.seconds_per_slot)
+    assert MAINNET.day_end_slots(5, 2 * m_day + 5) == sorted(r["slot"] for r in got.collect())
 
 
 def test_ledger_lifecycle(spark, tmp_path):
@@ -417,60 +423,3 @@ def test_refresh_rollup_incremental(lake, spark):
     lake.compact("raw_blocks")
     r4 = lake.refresh_rollup("raw_blocks", "rollup_daily_blocks", agg)
     assert r4["refreshed_dates"] == []
-
-
-# ---------------------------------------------------------------------------
-# bucketed tables (co-located joins)
-# ---------------------------------------------------------------------------
-
-def test_write_bucketed_join_has_no_exchange(lake, spark):
-    """Two tables bucketed on the same key join WITHOUT any shuffle
-    Exchange — the co-location contract write_bucketed exists for."""
-    left = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-    )
-    spark.sql("DROP TABLE IF EXISTS bkt_left")
-    spark.sql("DROP TABLE IF EXISTS bkt_right")
-    lake.write_bucketed("bkt_left", left, ["k"], num_buckets=8, sort_cols=["k"])
-    lake.write_bucketed("bkt_right", right, ["k"], num_buckets=8, sort_cols=["k"])
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = lake.read_bucketed("bkt_left").join(
-                lake.read_bucketed("bkt_right"), "k"
-            )
-            assert j.count() == 1000
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            # and the files really are one per bucket
-            import os
-            files = [
-                f for f in os.listdir(lake.path("bkt_left"))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 8
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
-def test_bucketed_groupby_has_no_exchange(lake, spark):
-    """A groupBy on the bucket key aggregates in place (no Exchange)."""
-    df = spark.range(0, 500).select(
-        (F.col("id") % 50).alias("k"), F.col("id").alias("v")
-    )
-    spark.sql("DROP TABLE IF EXISTS bkt_agg")
-    lake.write_bucketed("bkt_agg", df, ["k"], num_buckets=4)
-    try:
-        agg = lake.read_bucketed("bkt_agg").groupBy("k").agg(F.sum("v").alias("s"))
-        assert agg.count() == 50
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_agg")

@@ -308,6 +308,40 @@ def test_realtime_processes_complete_windows_only(spark, tmp_path):
     assert loop._next_window_start() == SLOT0 + 20
 
 
+def test_realtime_fetch_failure_writes_no_progress(spark, tmp_path, monkeypatch):
+    """A window whose fetch fails loaded nothing, so it gets no progress
+    row (a failed row would send `maintain fix` to "repair" a window with
+    no raw rows and record it completed). /health names the loader and
+    window, and the cursor stays put: the next poll retries the window."""
+    from beacon_indexer_spark import observability as O
+
+    monkeypatch.setattr(O, "_health_state", {"status": "starting", "operation": ""})
+    lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
+    prog = ProgressManifest(spark, str(tmp_path / "prog"))
+    pipe = BeaconPipeline(lake, progress=prog, tables={"raw_blocks": ["blocks"]})
+    requested = []
+
+    def transport(url, params, timeout):
+        if "/headers/head" in url:
+            return 200, json.dumps(
+                {"data": {"header": {"message": {"slot": str(SLOT0 + 25)}}}}
+            )
+        requested.append(int(url.rsplit("/", 1)[1]))
+        return 500, "node down"
+
+    cfg = EngineConfig(chunk_size=10, realtime_slot_delay=2)
+    loop = RealtimeLoop(api=_api(transport), lake=lake, pipeline=pipe, config=cfg,
+                        loaders=("blocks",), sleep=lambda s: None, start_slot=SLOT0)
+    assert loop.run(max_iterations=2) == 0
+    assert prog.current() == []
+    health = O.get_health()
+    assert health["status"] == "failed" and "node down" in health["error"]
+    assert health["failed_range"] == ["blocks", SLOT0, SLOT0 + 9]
+    # each poll retried the same window's first slot (3 attempts a poll)
+    assert requested == [SLOT0] * 6
+    assert not lake.exists("raw_blocks")
+
+
 def test_realtime_daily_loader_filters_slots(spark, tmp_path):
     lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
     pipe = BeaconPipeline(lake)

@@ -245,9 +245,23 @@ def test_cli_sink_clickhouse_routes_structured_writes(
 # maintain fix full chain: poison a LOAD chunk → fix reloads + retransforms
 # ---------------------------------------------------------------------------
 
-def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys):
-    # nested closure → cloudpickle ships it by value (the test module is
+def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys, monkeypatch):
+    import urllib.error
+    import urllib.request
+
+    monkeypatch.setenv("BIS_CHUNK_SIZE", "10")
+    monkeypatch.setattr(O, "_health_state", {"status": "starting", "operation": ""})
+    monkeypatch.setattr(O, "_metrics_server", None)
+    monkeypatch.setattr(O, "_metrics_registry", None)
+
+    # nested closures → cloudpickle ships them by value (the test module is
     # not importable on executor workers); only package imports inside
+    def _down_api():
+        from beacon_indexer_spark.sources.beacon_api import BeaconAPI
+
+        return BeaconAPI("http://fake", transport=lambda u, p, t: (500, "node down"),
+                         sleep=lambda s: None)
+
     def _fake_api():
         import json as _json
 
@@ -274,19 +288,41 @@ def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys):
 
     lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
     ledger = L.ChunkLedger(spark, f"{lake.base_dir}/_control/load_state_chunks")
-    # chunk 1 loaded fine; chunk 2 failed mid-fetch (no raw rows on disk)
+    # chunk 1 loaded fine; chunk 2 fails in a real backfill's fetch (no raw
+    # rows on disk)
     rows = [FX.raw_row(SLOT0 + i, FX.block_payload(SLOT0 + i)) for i in range(10)]
     lake.write("raw_blocks", spark.createDataFrame(rows, schema=raw_envelope()))
-    chunks = L.generate_chunks(spark, SLOT0, SLOT0 + 19, 10, "blocks")
+    chunks = L.generate_chunks(spark, SLOT0, SLOT0 + 9, 10, "blocks")
     ledger.append(chunks)
-    ledger.mark([c for c in ledger.current() if c["start_slot"] == SLOT0], L.COMPLETED)
-    ledger.mark([c for c in ledger.current() if c["start_slot"] == SLOT0 + 10], L.FAILED)
+    ledger.mark(chunks, L.COMPLETED)
+    server = O.start_metrics_server(0)
+    url = f"http://127.0.0.1:{server.server_address[1]}/health"
+    try:
+        with pytest.raises(Exception, match="node down"):
+            main(["--lake-dir", lake.base_dir, "load", "backfill",
+                  "--start-slot", str(SLOT0), "--end-slot", str(SLOT0 + 19)],
+                 spark=spark, api_factory=_down_api)
+        assert [(c["start_slot"], c["end_slot"]) for c in ledger.with_status(L.FAILED)] \
+            == [(SLOT0 + 10, SLOT0 + 19)]
+        assert O.METRICS.counter_value(
+            "beacon_indexer_chunks_total", {"loader": "blocks", "status": "failed"}) == 1
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(url, timeout=10)
+        assert err.value.code == 503
+        body = json.loads(err.value.read())
+        assert body["status"] == "failed" and body["error"]
+        assert body["failed_range"] == ["blocks", SLOT0 + 10, SLOT0 + 19]
 
-    rc = main(
-        ["--lake-dir", lake.base_dir, "maintain", "fix"],
-        spark=spark, api_factory=_fake_api,
-    )
-    assert rc == 0
+        rc = main(
+            ["--lake-dir", lake.base_dir, "maintain", "fix"],
+            spark=spark, api_factory=_fake_api,
+        )
+        assert rc == 0
+        with urllib.request.urlopen(url, timeout=10) as resp:
+            assert resp.status == 200
+    finally:
+        server.shutdown()
+        server.server_close()
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["reloaded_ranges"] == [[SLOT0 + 10, SLOT0 + 19]]
     # the reloaded chunk went through discovery → transformed (with the
@@ -298,6 +334,30 @@ def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys):
     assert lake.read_latest("blocks").count() == 20
     # ledger shows no failed chunks anymore
     assert ledger.with_status(L.FAILED) == []
+
+
+def test_benchmark_tracer_installs_and_uninstalls(spark):
+    """perfbench/trace.py wraps package functions by name, so a rename of
+    any traced name fails here rather than in a traced benchmark run.
+    Installing and removing the wrappers launches no Spark job."""
+    from perfbench.harness import SparkCounters
+    from perfbench.trace import Tracer
+
+    from beacon_indexer_spark import cli
+
+    counters = SparkCounters(spark)
+    jobs = counters.jobs()
+    traced = (cli.fetch_slots_distributed, B.fetch_slot_list_distributed,
+              L.generate_chunks, RealtimeLoop.run)
+    tracer = Tracer(counters, "tier1")
+    tracer.install()
+    try:
+        assert cli.fetch_slots_distributed.__wrapped__ is traced[0]
+    finally:
+        tracer.uninstall()
+    assert (cli.fetch_slots_distributed, B.fetch_slot_list_distributed,
+            L.generate_chunks, RealtimeLoop.run) == traced
+    assert counters.jobs() == jobs
 
 
 # ---------------------------------------------------------------------------
