@@ -62,24 +62,36 @@ def generate_chunks(
     completed: list[dict] | None = None,
 ) -> list[dict]:
     """Partition [start_slot, end_slot] into CHUNK_SIZE-aligned pending
-    chunks, floor-aligning the start (reference behavior) and skipping
-    ranges already completed by this loader (reference
-    ``src/services/loader.py:492-528``). The chunk id is the range, so
-    re-planning is idempotent (the reference uses uuid4 + dedup-by-range;
-    deterministic ids make the dedup structural)."""
-    done = {
+    chunks, floor-aligning the start (reference behavior) and planning only
+    the slots this loader's completed chunks do not cover (reference
+    ``src/services/loader.py:492-528``). A chunk that is partly covered,
+    such as the rest of an earlier run's partial last chunk, shrinks to its
+    uncovered pieces, so no slot is fetched twice and completed chunks
+    never overlap. The chunk id is the range, so re-planning is idempotent
+    (the reference uses uuid4 + dedup-by-range; deterministic ids make the
+    dedup structural)."""
+    done = sorted(
         (c["start_slot"], c["end_slot"])
         for c in completed or ()
         if c["loader_name"] == loader_name
-    }
+    )
+    ranges = []
+    for s in range((start_slot // chunk_size) * chunk_size, end_slot + 1, chunk_size):
+        lo, hi = s, min(s + chunk_size - 1, end_slot)
+        for ds, de in done:
+            if de < lo or ds > hi:
+                continue
+            if ds > lo:
+                ranges.append((lo, ds - 1))
+            lo = de + 1
+        if lo <= hi:
+            ranges.append((lo, hi))
     now = _now()
-    starts = range((start_slot // chunk_size) * chunk_size, end_slot + 1, chunk_size)
-    ranges = [(s, min(s + chunk_size - 1, end_slot)) for s in starts]
     return [
         {"chunk_id": f"{loader_name}_{s}_{e}", "start_slot": s, "end_slot": e,
          "loader_name": loader_name, "status": PENDING, "worker_id": None,
          "created_at": now, "updated_at": now}
-        for s, e in ranges if (s, e) not in done
+        for s, e in ranges
     ]
 
 

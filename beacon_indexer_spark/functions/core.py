@@ -14,15 +14,18 @@ Reference parity (citations into /root/reference):
 - ``hex_byte_length`` — len(hex)//2 (src/parsers/data_column_sidecars.py:67-74)
 - ``last_slot_of_day`` — daily validator snapshot predicate
                       (src/utils/time_utils.py:10-27)
+- ``run_concurrently`` — independent Spark actions from driver threads
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import Column, DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ColumnOrName = Column | str
@@ -179,3 +182,20 @@ def hex_array_byte_length(c: ColumnOrName) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + (F.length(F.regexp_replace(F.lower(x), "^0x", "")) / 2).cast("long"),
     )
+
+
+# ---------------------------------------------------------------------------
+# driver threads
+# ---------------------------------------------------------------------------
+
+def run_concurrently(thunks: Sequence[Callable], max_workers: int) -> list:
+    """Call independent zero-argument thunks from a pool of at most
+    ``max_workers`` driver threads; results come back in argument order.
+    Spark runs jobs from separate driver threads concurrently, so their
+    jobs interleave on the scheduler. Threads inherit the caller's local
+    properties and session tags. Every call settles before the first
+    failure, in argument order, is re-raised."""
+    inherit = inheritable_thread_target(SparkSession.active())
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        futs = [pool.submit(inherit(fn)) for fn in thunks]
+        return [f.result() for f in futs]

@@ -187,6 +187,31 @@ def get_health() -> dict:
         return dict(_health_state)
 
 
+def error_text(e: BaseException, limit: int = 500) -> str:
+    """``e`` in at most ``limit`` characters, for ``/health`` and the
+    progress ``error_message``. A failure inside a Spark task reaches the
+    driver as a Py4J error whose first line only names the JVM call ("An
+    error occurred while calling o160.parquet."), followed by a Java trace
+    of many kilobytes. Its cause is the exception line that ends the
+    task's Python traceback, or else the last ``Caused by:`` line; that
+    cause is kept whole, after as much of the first line as fits."""
+    lines = str(e).splitlines()
+    py_cause = java_cause = None
+    in_traceback = False
+    for line in lines[1:]:
+        if line.endswith("Traceback (most recent call last):"):
+            in_traceback = True
+        elif in_traceback and line[:1] not in ("", " ", "\t"):
+            py_cause, in_traceback = line, False
+        elif line.startswith("Caused by: "):
+            java_cause = line[len("Caused by: "):]
+    cause = py_cause or java_cause
+    if cause is None:
+        return str(e)[:limit]
+    sep = " caused by: "
+    return (lines[0][: max(0, limit - len(sep) - len(cause))] + sep + cause)[:limit]
+
+
 def start_metrics_server(port: int = 9090, registry: MetricsRegistry | None = None):
     """``/metrics`` (Prometheus text) + ``/health`` (JSON) on a daemon
     thread — reference observability.py:158-198, stdlib-only. Threaded so

@@ -14,9 +14,9 @@ partition overwrite.
 from __future__ import annotations
 
 import time
-from functools import reduce
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from beacon_indexer_spark.config import ForkSchedule
@@ -27,6 +27,7 @@ from beacon_indexer_spark.control.ledger import (
     ProgressManifest,
     untransformed_chunks,
 )
+from beacon_indexer_spark.functions.core import run_concurrently
 from beacon_indexer_spark.plans.transform import TRANSFORMS, TransformResult, transform_blocks
 from beacon_indexer_spark.schemas.structured import RAW_TO_STRUCTURED
 from beacon_indexer_spark.sources import beacon_api as B
@@ -55,30 +56,43 @@ def transform_tables(
     tables: list[str] | None = None,
     insert_version: int | None = None,
 ) -> TransformResult:
-    """Uniform transform entry: any raw table → {structured_table: df}."""
+    """Uniform transform entry: any raw table → {structured_table: build}."""
     if raw_table == "raw_blocks":
         return transform_blocks(raw, schedule, tables=tables, insert_version=insert_version)
     fn = TRANSFORMS[raw_table]
     name = RAW_TO_STRUCTURED[raw_table][0]
     if tables is not None and name not in tables:
         return TransformResult()
-    return TransformResult({name: fn(raw, schedule, insert_version=insert_version)})
+    return TransformResult({name: partial(fn, raw, schedule, insert_version=insert_version)})
 
 
 def write_tables(sink, outs: TransformResult, mode: str = "append") -> dict[str, int]:
-    """Write each transformed frame once; returns {table: rows_written}.
+    """Write each transformed table once; returns {table: rows_written}.
     Each count is an ``Observation`` on the written frame (no job of its
-    own), so ``sink.write`` must execute the frame. Releases the shared
-    parse cache of ``transform_blocks`` whether or not the writes succeed."""
+    own), so ``sink.write`` must execute the frame.
+
+    The first table's write fills the shared parse cache of
+    ``transform_blocks``, so it runs alone; the other tables are then built
+    and written from a pool of at most ``defaultParallelism`` driver
+    threads, so ``sink.write`` is called from several threads at once. A
+    failure is re-raised once every write has settled, and the parse cache
+    is released after all of them."""
     from beacon_indexer_spark import observability as O
 
-    counts: dict[str, int] = {}
+    def write(name: str) -> int:
+        obs = Observation()
+        sink.write(name, outs[name].observe(obs, F.count(F.lit(1)).alias("rows")), mode=mode)
+        rows = obs.get["rows"]
+        O.METRICS.inc("beacon_indexer_rows_written_total", {"table": name}, rows)
+        return rows
+
+    first, rest = list(outs)[:1], list(outs)[1:]
     try:
-        for name, df in outs.items():
-            obs = Observation()
-            sink.write(name, df.observe(obs, F.count(F.lit(1)).alias("rows")), mode=mode)
-            counts[name] = obs.get["rows"]
-            O.METRICS.inc("beacon_indexer_rows_written_total", {"table": name}, counts[name])
+        counts = {name: write(name) for name in first}
+        if rest:
+            workers = min(len(rest), SparkSession.active().sparkContext.defaultParallelism)
+            counts.update(zip(rest, run_concurrently(
+                [partial(write, name) for name in rest], workers)))
     finally:
         outs.unpersist()
     return counts
@@ -129,7 +143,7 @@ def load_chunks(
         O.METRICS.inc("beacon_indexer_chunks_total",
                       {"loader": loader.name, "status": FAILED}, len(chunks))
         O.update_health(status="failed", operation=f"load {loader.name}",
-                        error=str(e)[:500],
+                        error=O.error_text(e),
                         failed_range=[loader.name, runs[0][0], runs[-1][1]])
         raise
     O.METRICS.inc("beacon_indexer_chunks_total",
@@ -205,14 +219,15 @@ class BeaconPipeline:
                             last_good_slot=end_slot, error=None, failed_range=None)
             return counts
         except Exception as e:  # noqa: BLE001 — record then re-raise
+            err = O.error_text(e)
             if self.progress:
                 self.progress.record_many(
-                    [(raw_table, lo, hi, FAILED, 0, 0, str(e)[:500]) for lo, hi in ranges]
+                    [(raw_table, lo, hi, FAILED, 0, 0, err) for lo, hi in ranges]
                 )
             O.METRICS.inc("beacon_indexer_transform_failures_total",
                           {"loader": raw_table})
             O.update_health(status="failed", operation=f"transform {raw_table}",
-                            error=str(e)[:500],
+                            error=err,
                             failed_range=[raw_table, start_slot, end_slot])
             raise
 
@@ -341,19 +356,9 @@ class CurationRun:
             # don't read each other — so materialize them from two driver
             # threads and let the scheduler interleave their jobs. Each
             # staged frame is still computed exactly once.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_clusters = pool.submit(
-                    inheritable_thread_target(_stage_clusters)
-                )
-                fut_contam = pool.submit(
-                    inheritable_thread_target(self._contamination)
-                )
-                self.clusters = fut_clusters.result()
-                fut_contam.result()
+            self.clusters, _ = run_concurrently(
+                [_stage_clusters, self._contamination], max_workers=2
+            )
 
     def _spine(self) -> DataFrame:
         return self.docs.select(

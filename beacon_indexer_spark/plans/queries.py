@@ -31,6 +31,7 @@ from beacon_indexer_spark.functions.core import (
     last_slot_of_day,
     latest,
     popcount_hex,
+    run_concurrently,
 )
 from beacon_indexer_spark.operators import dedup as D
 from beacon_indexer_spark.operators import profile as PR
@@ -197,23 +198,6 @@ def _hist_prefix(hist: DataFrame, key: str, val, out):
     shifted = hist.withColumn(key, F.col(key) - F.lit(mn))
     res = _exclusive_prefix(shifted, key, val, out, max_key=mx - mn)
     return hist, res.withColumn(key, F.col(key) + F.lit(mn))
-
-
-def _parallel_build(*fns):
-    """Construct several INDEPENDENT query fragments from driver threads
-    (the overlap-independent-jobs idiom): each fragment's eager
-    construction-time jobs (bucket-cap probes, checkpoint
-    materializations, CC rounds) interleave on the scheduler instead of
-    running serially. Results return in argument order; each fragment is
-    still built exactly once. Use ONLY for fragments with no data
-    dependency on each other."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futs = [pool.submit(inheritable_thread_target(fn)) for fn in fns]
-        return [f.result() for f in futs]
 
 
 def _dd_minhash_base(x: str) -> str:
@@ -10282,7 +10266,7 @@ def q_dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver threads so their construction-time probe/checkpoint jobs
     # interleave instead of running serially (r12, §2.6 idiom; A/B
     # measured 2.5 s vs 3.1 s serial)
-    mh, hp = _parallel_build(
+    mh, hp = run_concurrently([
         lambda: D.minhash_lsh_candidates(
             docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS,
             shingle_n=3,
@@ -10290,7 +10274,7 @@ def q_dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: D.simhash_hamming_pairs(
             docs, "doc_id", "text", max_dist=3
         ).select("id_a", "id_b", F.lit(1).alias("__h")),
-    )
+    ], max_workers=2)
     j = mh.join(hp, ["id_a", "id_b"], "full_outer")
     return j.agg(
         F.sum(F.coalesce(F.col("__m"), F.lit(0))).cast("long").alias("n_minhash"),
@@ -20953,10 +20937,10 @@ def q_similarity_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sample is reduced against the fitted centroids only on the driver,
     # after both exist) — build them from two driver threads so the two
     # serial collect chains interleave (r12, overlap-independent-jobs)
-    cents, samp = _parallel_build(
+    cents, samp = run_concurrently([
         lambda: kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=2),
         lambda: S.ivf_centroids(emb, "vec_id", "embedding", k=16),
-    )
+    ], max_workers=2)
     cbs = S.pq_residual_codebooks(
         emb, cents, "vec_id", "embedding", m=8, k=16, sample=samp
     )
@@ -21404,10 +21388,10 @@ def q_similarity_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _ts(spark, sf_dir, "embeddings").localCheckpoint(eager=False)
     # ^ same shared-scan barrier as q_similarity_ivfpq_residual, and the
     # same concurrent fit+sample staging (r12, overlap-independent-jobs)
-    cents, samp = _parallel_build(
+    cents, samp = run_concurrently([
         lambda: kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=2),
         lambda: S.ivf_centroids(emb, "vec_id", "embedding", k=16),
-    )
+    ], max_workers=2)
     cbs = S.pq_residual_codebooks(
         emb, cents, "vec_id", "embedding", m=8, k=16, sample=samp
     )

@@ -17,8 +17,11 @@ Scale notes: each transform's ``dedup_raw`` is the one wide operation and
 the only latest-wins step (shuffle by slot, map-side combined via max_by);
 callers pass the raw range as read. Every projection afterwards is narrow.
 ``transform_blocks`` caches its deduped+parsed frame, so its 13 tables
-share one parse; ``plans.pipeline.write_tables`` writes each table once,
-counts its rows while writing, and releases that cache.
+share one parse, and returns each table as a deferred build.
+``plans.pipeline.write_tables`` writes each table once and counts its rows
+while writing: first ``blocks``, whose write fills the cache, then the
+other twelve, built and written from a bounded pool of driver threads, so
+Spark runs their small jobs concurrently. It then releases the cache.
 """
 
 from __future__ import annotations
@@ -78,12 +81,23 @@ def dedup_raw(raw: DataFrame) -> DataFrame:
 
 
 class TransformResult(dict):
-    """{table: DataFrame} plus a handle on the shared cached parse frame so
-    writers can release it after the fan-out writes (otherwise every
-    transformed range leaks one cached DataFrame for the session lifetime).
-    Single-table results carry no parse cache (``parsed`` stays None)."""
+    """{table: build}: each value builds its table's DataFrame (plan only,
+    no Spark job) and ``result[table]`` calls it; ``result[table] = df``
+    stores a built frame. ``plans.pipeline.write_tables`` writes the first
+    table alone, since that write fills the shared cached parse frame
+    (``parsed``), then calls the other builds, and ``sink.write``, from
+    pool threads. Call ``unpersist()`` once the tables are written
+    (otherwise every transformed range leaks one cached DataFrame for the
+    session lifetime). Single-table results carry no parse cache
+    (``parsed`` stays None)."""
 
     parsed: DataFrame | None = None
+
+    def __getitem__(self, table: str) -> DataFrame:
+        return super().__getitem__(table)()
+
+    def __setitem__(self, table: str, df: DataFrame) -> None:
+        super().__setitem__(table, lambda: df)
 
     def unpersist(self) -> None:
         if self.parsed is not None:
@@ -134,20 +148,14 @@ def transform_blocks(
     execution_payloads, transactions, withdrawals, bls_changes,
     blob_commitments, execution_requests}.
 
-    ``tables`` is the loader allow-list (reference P8); None = all. The
-    parse frame is cached for the fan-out; call ``unpersist()`` on the
-    result once its tables are written.
+    ``tables`` is the loader allow-list (reference P8); None = all. Each
+    table comes back as a deferred build (``TransformResult``), ``blocks``
+    first. The parse frame is cached for the fan-out; call ``unpersist()``
+    on the result once its tables are written.
     """
     iv = insert_version if insert_version is not None else time.time_ns()
     want = set(tables) if tables is not None else None
-    out = TransformResult()
-    parsed = out.parsed = _parse_blocks(raw, schedule, want).cache()
-
-    def wanted(name: str) -> bool:
-        return want is None or name in want
-
-    def add(name: str, df: DataFrame) -> None:
-        out[name] = _stamp(df, schedule, iv)
+    parsed = _parse_blocks(raw, schedule, want).cache()
 
     def fan_out(arr: Column, index: str, alias: str, *cols: Column) -> DataFrame:
         """One row per element (``alias``) of ``arr``, with its position."""
@@ -157,10 +165,8 @@ def transform_blocks(
     body = F.col(_B)
     cnt = lambda c: F.coalesce(F.size(c), F.lit(0)).cast("int")  # noqa: E731
 
-    if wanted("blocks"):
-        add(
-        "blocks",
-        parsed.filter(F.col("msg").isNotNull()).select(
+    def _build_blocks() -> DataFrame:
+        return parsed.filter(F.col("msg").isNotNull()).select(
             "slot",
             safe_int_col("msg.proposer_index").alias("proposer_index"),
             F.col("msg.parent_root").alias("parent_root"),
@@ -188,8 +194,7 @@ def transform_blocks(
                 + cnt(body["execution_requests"]["withdrawals"])
                 + cnt(body["execution_requests"]["consolidations"])
             ).alias("execution_requests_count"),
-        ),
-    )
+        )
 
     def _build_attestations() -> DataFrame:
         return fan_out(
@@ -378,6 +383,7 @@ def transform_blocks(
         )
 
     builders = {
+        "blocks": _build_blocks,
         "attestations": _build_attestations,
         "deposits": _build_deposits,
         "voluntary_exits": _build_voluntary_exits,
@@ -391,10 +397,15 @@ def transform_blocks(
         "blob_commitments": _build_blob_commitments,
         "execution_requests": _build_execution_requests,
     }
-    for name, build in builders.items():
-        if wanted(name):
-            add(name, build())
 
+    def stamped(build):
+        return lambda: _stamp(build(), schedule, iv)
+
+    out = TransformResult({
+        name: stamped(build) for name, build in builders.items()
+        if want is None or name in want
+    })
+    out.parsed = parsed
     return out
 
 

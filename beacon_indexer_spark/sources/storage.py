@@ -64,7 +64,9 @@ class ParquetSink:
 
     ``write`` must execute ``df``: ``plans.pipeline.write_tables`` counts
     rows with an ``Observation`` on the frame, and ``Observation.get``
-    blocks until the frame has run."""
+    blocks until the frame has run. ``write_tables`` calls ``write`` from
+    pool threads, several tables at once; each table has its own
+    directory, so concurrent writes never touch the same files."""
 
     def __init__(self, lake: "ParquetLake"):
         self.lake = lake
@@ -78,7 +80,9 @@ class ClickHouseSink:
     ClickHouse's ReplacingMergeTree is the upsert (repair overwrites become
     version-winning inserts, reference SURVEY §1.3), so ``mode`` is
     accepted for interface parity and ignored. Like every sink, ``write``
-    must execute ``df`` (``write_tables`` blocks on its ``Observation``)."""
+    must execute ``df`` (``write_tables`` blocks on its ``Observation``),
+    and is called from ``write_tables``' pool threads, several tables at
+    once: the ``MAX_CONCURRENT_WRITES`` insert bound holds per table."""
 
     def __init__(self, url: str, **kw):
         self.url = url

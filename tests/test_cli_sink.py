@@ -322,15 +322,10 @@ def test_cli_maintain_fix(spark, capsys, seeded_lake, tmp_path):
     assert seeded_lake.read_latest("blocks").count() == 10
 
 
-def test_cli_backfill_loads_each_chunk_once(spark, capsys, tmp_path, monkeypatch):
-    """`load backfill` fetches exactly the ledger chunks it plans: an
-    unaligned first run fetches its floor-aligned first chunk whole, an
-    identical second run fetches nothing, and a daily loader over a range
-    with no UTC day end launches no Spark job and still succeeds."""
-    from beacon_indexer_spark.control import ledger as L
-
-    monkeypatch.setenv("BIS_CHUNK_SIZE", "10")
-    lake_dir, log = str(tmp_path / "lake"), str(tmp_path / "requests.log")
+def _recording_backfill(spark, capsys, lake_dir, log):
+    """``backfill(start, end, loaders)`` runs `load backfill` against a fake
+    API that logs each requested slot to ``log``; ``fetched()`` reads the
+    log back, sorted."""
 
     # nested closure → cloudpickle ships it by value to the executors,
     # which record each request in a file the driver reads back
@@ -355,6 +350,20 @@ def test_cli_backfill_loads_each_chunk_once(spark, capsys, tmp_path, monkeypatch
         with open(log) as f:
             return sorted(int(u.rsplit("/", 1)[1]) for u in f.read().split())
 
+    return backfill, fetched
+
+
+def test_cli_backfill_loads_each_chunk_once(spark, capsys, tmp_path, monkeypatch):
+    """`load backfill` fetches exactly the ledger chunks it plans: an
+    unaligned first run fetches its floor-aligned first chunk whole, an
+    identical second run fetches nothing, and a daily loader over a range
+    with no UTC day end launches no Spark job and still succeeds."""
+    from beacon_indexer_spark.control import ledger as L
+
+    monkeypatch.setenv("BIS_CHUNK_SIZE", "10")
+    lake_dir = str(tmp_path / "lake")
+    backfill, fetched = _recording_backfill(spark, capsys, lake_dir,
+                                            str(tmp_path / "requests.log"))
     lake = ParquetLake(spark, lake_dir, GNOSIS)
     ledger = L.ChunkLedger(spark, f"{lake_dir}/_control/load_state_chunks")
     out = backfill(SLOT0 + 5, SLOT0 + 19)
@@ -378,6 +387,26 @@ def test_cli_backfill_loads_each_chunk_once(spark, capsys, tmp_path, monkeypatch
     assert [c["status"] for c in ledger.current()
             if c["loader_name"] == "validators"] == [L.COMPLETED] * 2
     assert len(fetched()) == 20
+
+
+def test_cli_backfill_extends_partial_last_chunk(spark, capsys, tmp_path, monkeypatch):
+    """A backfill that ends inside a chunk completes a partial last chunk;
+    a later, longer backfill fetches only the rest of that chunk, and the
+    completed chunks do not overlap."""
+    from beacon_indexer_spark.control import ledger as L
+
+    monkeypatch.setenv("BIS_CHUNK_SIZE", "10")
+    lake_dir = str(tmp_path / "lake")
+    backfill, fetched = _recording_backfill(spark, capsys, lake_dir,
+                                            str(tmp_path / "requests.log"))
+    backfill(SLOT0, SLOT0 + 14)
+    assert fetched() == list(range(SLOT0, SLOT0 + 15))
+    out = backfill(SLOT0, SLOT0 + 19)
+    assert fetched() == list(range(SLOT0, SLOT0 + 20))  # each slot once
+    assert out["blocks"]["rows"] == 20
+    ledger = L.ChunkLedger(spark, f"{lake_dir}/_control/load_state_chunks")
+    done = sorted((c["start_slot"], c["end_slot"]) for c in ledger.with_status(L.COMPLETED))
+    assert done == [(SLOT0, SLOT0 + 9), (SLOT0 + 10, SLOT0 + 14), (SLOT0 + 15, SLOT0 + 19)]
 
 
 def test_cli_maintain_rollup(spark, capsys, seeded_lake):

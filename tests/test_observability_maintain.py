@@ -14,6 +14,7 @@ from beacon_indexer_spark.config import GNOSIS, EngineConfig
 from beacon_indexer_spark.control import ledger as L
 from beacon_indexer_spark.plans.pipeline import BeaconPipeline, _coalesce_ranges
 from beacon_indexer_spark.schemas.raw import raw_envelope
+from beacon_indexer_spark.schemas.structured import RAW_TO_STRUCTURED
 from beacon_indexer_spark.sources import beacon_api as B
 from beacon_indexer_spark.sources.storage import ParquetLake, ParquetSink, make_sink
 from beacon_indexer_spark.streaming.realtime import RealtimeLoop
@@ -188,6 +189,62 @@ def test_health_reports_failed_transform_then_recovers(spark, tmp_path, monkeypa
         server.server_close()
 
 
+class _OneTableFailsSink(ParquetSink):
+    """Writes through to the lake, except table ``fail``, which raises at
+    once; ``done`` lists the tables whose writes finished."""
+
+    def __init__(self, lake, fail):
+        super().__init__(lake)
+        self.fail, self.done = fail, []
+
+    def write(self, table, df, mode="append"):
+        if table == self.fail:
+            raise RuntimeError(f"{table} sink down")
+        super().write(table, df, mode)
+        self.done.append(table)
+
+
+def test_failed_table_write_fails_range_after_other_writes(spark, tmp_path, monkeypatch):
+    """One of a blocks range's thirteen writes raises: the error propagates
+    only after the other twelve writes have finished, the range has a
+    failed progress row and no completed one, /health answers 503 with the
+    range, and no cached frame is left behind."""
+    import urllib.error
+    import urllib.request
+
+    monkeypatch.setattr(O, "_health_state", {"status": "starting", "operation": ""})
+    monkeypatch.setattr(O, "_metrics_server", None)
+    monkeypatch.setattr(O, "_metrics_registry", None)
+    lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
+    rows = [FX.raw_row(SLOT0 + i, FX.block_payload(SLOT0 + i)) for i in range(6)]
+    lake.write("raw_blocks", spark.createDataFrame(rows, schema=raw_envelope()))
+    prog = L.ProgressManifest(spark, str(tmp_path / "prog"))
+    # the first table after blocks, so the writes after it are still to come
+    sink = _OneTableFailsSink(lake, "attestations")
+    pipe = BeaconPipeline(lake, progress=prog, sink=sink)
+    cached = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    server = O.start_metrics_server(0)
+    url = f"http://127.0.0.1:{server.server_address[1]}/health"
+    try:
+        with pytest.raises(RuntimeError, match="attestations sink down"):
+            pipe.transform_range("raw_blocks", SLOT0, SLOT0 + 5)
+        tables = RAW_TO_STRUCTURED["raw_blocks"]
+        assert len(tables) == 13 and sink.done[0] == "blocks"
+        assert sorted(sink.done) == sorted(set(tables) - {"attestations"})
+        assert [(r["status"], r["error_message"]) for r in prog.current()] \
+            == [(L.FAILED, "attestations sink down")]
+        assert prog.completed_ranges("raw_blocks") == []
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(url, timeout=10)
+        assert err.value.code == 503
+        body = json.loads(err.value.read())
+        assert body["failed_range"] == ["raw_blocks", SLOT0, SLOT0 + 5]
+        assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == cached
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
 def test_make_sink_routing(spark, tmp_path):
     lake = ParquetLake(spark, str(tmp_path / "lake"), GNOSIS)
     assert isinstance(make_sink("parquet", lake), ParquetSink)
@@ -310,7 +367,8 @@ def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys, monkeypatch):
             urllib.request.urlopen(url, timeout=10)
         assert err.value.code == 503
         body = json.loads(err.value.read())
-        assert body["status"] == "failed" and body["error"]
+        # the executor's exception, not only the head of the Py4J message
+        assert body["status"] == "failed" and "node down" in body["error"]
         assert body["failed_range"] == ["blocks", SLOT0 + 10, SLOT0 + 19]
 
         rc = main(
@@ -336,15 +394,25 @@ def test_cli_maintain_fix_full_chain(spark, tmp_path, capsys, monkeypatch):
     assert ledger.with_status(L.FAILED) == []
 
 
-def test_benchmark_tracer_installs_and_uninstalls(spark):
+def test_benchmark_tracer_installs_and_uninstalls(spark, tmp_path):
     """perfbench/trace.py wraps package functions by name, so a rename of
     any traced name fails here rather than in a traced benchmark run.
-    Installing and removing the wrappers launches no Spark job."""
+    Installing and removing the wrappers launches no Spark job. The tracer
+    keeps one span stack for all threads, so a traced 13-table range, whose
+    writes run from a driver-thread pool, must still run, name exactly one
+    write (the first) ``transform.parse`` and write the same rows."""
     from perfbench.harness import SparkCounters
     from perfbench.trace import Tracer
 
     from beacon_indexer_spark import cli
 
+    def transform(name):
+        lake = ParquetLake(spark, str(tmp_path / name), GNOSIS)
+        rows = [FX.raw_row(SLOT0 + i, FX.block_payload(SLOT0 + i)) for i in range(6)]
+        lake.write("raw_blocks", spark.createDataFrame(rows, schema=raw_envelope()))
+        return BeaconPipeline(lake).transform_range("raw_blocks", SLOT0, SLOT0 + 5)
+
+    untraced = transform("untraced")
     counters = SparkCounters(spark)
     jobs = counters.jobs()
     traced = (cli.fetch_slots_distributed, B.fetch_slot_list_distributed,
@@ -353,11 +421,18 @@ def test_benchmark_tracer_installs_and_uninstalls(spark):
     tracer.install()
     try:
         assert cli.fetch_slots_distributed.__wrapped__ is traced[0]
+        assert counters.jobs() == jobs
+        assert transform("traced") == untraced and len(untraced) == 13
     finally:
         tracer.uninstall()
     assert (cli.fetch_slots_distributed, B.fetch_slot_list_distributed,
             L.generate_chunks, RealtimeLoop.run) == traced
-    assert counters.jobs() == jobs
+    names = [s.name for s in tracer.spans]
+    assert names.count("struct_write") == 13
+    assert names.count("transform.parse") == 1 and names.count("transform.fanout") == 12
+    parse = names.index("transform.parse")
+    assert names.index("transform.fanout") > parse
+    assert tracer.spans[names.index("struct_write")].parent == parse
 
 
 # ---------------------------------------------------------------------------
