@@ -192,10 +192,13 @@ def run_concurrently(thunks: Sequence[Callable], max_workers: int) -> list:
     """Call independent zero-argument thunks from a pool of at most
     ``max_workers`` driver threads; results come back in argument order.
     Spark runs jobs from separate driver threads concurrently, so their
-    jobs interleave on the scheduler. Threads inherit the caller's local
-    properties and session tags. Every call settles before the first
+    jobs interleave on the scheduler. Each thunk starts from its own copy
+    of the caller's local properties (so a job description it sets stays
+    its own) and the session tags. Every call settles before the first
     failure, in argument order, is re-raised."""
-    inherit = inheritable_thread_target(SparkSession.active())
+    session = SparkSession.active()
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futs = [pool.submit(inherit(fn)) for fn in thunks]
+        # one wrapper per thunk: a wrapper copies the properties once and
+        # installs that same object in every thread that runs it
+        futs = [pool.submit(inheritable_thread_target(session)(fn)) for fn in thunks]
         return [f.result() for f in futs]

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from beacon_indexer_spark.measure import stage
 from beacon_indexer_spark.operators.text import fingerprint, word_shingles
 
 # 15 hex chars = 60 bits — fits signed 64-bit exactly, both engines.
@@ -123,7 +124,7 @@ def minhash_signatures(
     ``shingled``: pass a pre-built ``(id_col, __sh)`` shingle-array frame
     (e.g. a checkpoint shared with an exact-Jaccard side) to skip the
     tokenize+shingle stage here — callers that consume the shingle sets
-    AND the signatures pay the regexp-heavy pass once (r13, §1.2). Its
+    AND the signatures pay the regexp-heavy pass once. Its
     columns must be exactly ``(id_col, "__sh")`` (a schema check, no job).
     """
     if shingled is None:
@@ -695,7 +696,7 @@ def connected_components(
     the materialized result (on a durable cluster job, swap in
     ``checkpoint()`` with a checkpoint dir for executor-loss resilience).
 
-    r12: the label frame's row count rides each round's existing
+    The label frame's row count rides each round's existing
     ``observe`` (plus one count on the init aggregation), and while it
     stays at or below ``broadcast_rows`` (the `broadcast_if_small`
     ceiling; ~tens of MB for a two-long-column frame) the per-round
@@ -711,6 +712,9 @@ def connected_components(
     observed row count as ``_bis_rows`` so `broadcast_if_small` can skip
     its probe job; ``node_col``/``label_col`` name the output columns at
     the source (a ``withColumnRenamed`` on top would shed the count).
+
+    The init job is described ``bis:<scope>:cc.init`` and round ``i``'s
+    job ``bis:<scope>:cc.round<i>``.
     """
     from pyspark.sql import Observation
 
@@ -718,9 +722,9 @@ def connected_components(
     # round's plan, but they don't need their own job — the init-label
     # checkpoint job materializes them once, and later rounds reuse the
     # stored blocks.
-    # No distinct (r12): every in-repo pair generator already emits
+    # No distinct: every in-repo pair generator already emits
     # DISTINCT (id_a < id_b) pairs, so the two directed projections
-    # cannot collide and the old edge-level distinct was a pure extra
+    # cannot collide and an edge-level distinct would be a pure extra
     # exchange + dedupe of the whole edge set. Duplicate edges from a
     # hypothetical non-distinct caller stay CORRECT (min-label over a
     # multigraph equals min-label over its simple graph) — they only pay
@@ -737,21 +741,22 @@ def connected_components(
     # confirmation pass — instead of two; chains still halve per round.
     # Correctness is invariant to init as long as each label is the min
     # of a reachable set containing the node itself.
-    # Eager checkpoint + observed count (r12): the construction-time cost
-    # is unchanged (the lazy form already executed these stages at
-    # plan→RDD conversion); eager materialisation is what makes the row
-    # count available to pick the per-round join strategy below.
+    # Eager checkpoint + observed count: a lazy checkpoint would run
+    # these stages at plan→RDD conversion anyway; eager materialisation
+    # is what makes the row count available to pick the per-round join
+    # strategy below.
     obs0 = Observation("cc_init")
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("__mn"))
-        .select(
-            F.col("src").alias("node"),
-            F.least(F.col("src"), F.col("__mn")).alias("label"),
+    with stage("cc.init"):
+        labels = (
+            edges.groupBy("src")
+            .agg(F.min("dst").alias("__mn"))
+            .select(
+                F.col("src").alias("node"),
+                F.least(F.col("src"), F.col("__mn")).alias("label"),
+            )
+            .observe(obs0, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
         )
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
     n_labels = int(obs0.get["n"] or 0)
     null_l = F.lit(None).cast(pairs.schema[id_a].dataType)
     for i in range(max_iter):
@@ -760,7 +765,7 @@ def connected_components(
         # lookup join while it provably fits
         bcast = broadcast_rows is not None and n_labels <= broadcast_rows
         lab = F.broadcast(labels) if bcast else labels
-        # ONE lookup join per round (r12): the neighbor propagation
+        # ONE lookup join per round: the neighbor propagation
         # (node dst learns label[src]) and the pointer jump / path
         # halving (node n learns label[label[n]] — doubles propagation
         # distance per round, turning long chains from O(diameter) into
@@ -770,7 +775,7 @@ def connected_components(
         # against the label frame — one broadcast (or one exchange pair)
         # per round instead of two.
         #
-        # r13: the old separate `own` union branch is redundant — the
+        # No separate `own` union branch: it would be redundant — the
         # pointer-jump delivery label[label[n]] <= label[n] (labels only
         # shrink toward the component min), so a node's own label never
         # wins the min; and the labels-branch request row (__out = n,
@@ -793,19 +798,20 @@ def connected_components(
             lab, requests["__key"] == lab["node"]
         ).select(F.col("__out").alias("node"), "label", "__old")
         obs = Observation(f"cc_round_{i}")
-        merged = (
-            looked_up
-            .groupBy("node")
-            .agg(F.min("label").alias("label"), F.max("__old").alias("__old"))
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") < F.col("__old"), 1).otherwise(0)
-                ).alias("changed"),
-                F.count(F.lit(1)).alias("n"),
+        with stage(f"cc.round{i}"):
+            merged = (
+                looked_up
+                .groupBy("node")
+                .agg(F.min("label").alias("label"), F.max("__old").alias("__old"))
+                .observe(
+                    obs,
+                    F.sum(
+                        F.when(F.col("label") < F.col("__old"), 1).otherwise(0)
+                    ).alias("changed"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .localCheckpoint()
             )
-            .localCheckpoint()
-        )
         labels = merged.select("node", "label")
         n_labels = int(obs.get["n"] or 0)
         # empty graph ⇒ sum over zero rows is NULL, which must read as
@@ -1233,22 +1239,23 @@ def fuzzy_name_pairs(
             F.max(F.length(F.col(name_col))).alias("mx"),
             # block-key cardinality rides the same probe: a keyed spread
             # on a low-cardinality key collapses to |blocks| populated
-            # partitions — worse than round-robin (r12 ADVICE)
-            F.countDistinct(*[F.col(c) for c in block_cols]).alias("nb"),
+            # partitions — worse than round-robin
+            # (a struct, so a key with a NULL part still counts)
+            F.countDistinct(F.struct(*[F.col(c) for c in block_cols])).alias("nb"),
         ).collect()[0]
         spread_bands = ((probe["mx"] or 0) - (probe["mn"] or 0)) // w + 1
         band_lengths = (
             probe["n"] > band_threshold_rows
             and spread_bands >= band_min_spread
         )
-        # r12 spread: a small-file scan hands the edit-distance stage a
+        # Spread: a small-file scan hands the edit-distance stage a
         # SINGLE partition (the verify kernel is CPU-dense, its bytes are
         # tiny — AQE's byte-based coalescing cannot help). Repartition by
         # the BLOCK KEY up to the session parallelism so a sort-merge
         # block join reuses the exchange and a broadcast join's probe
         # side runs wide. No-op whenever the input already has >= cores
         # partitions (any real deployment), like plans/queries._spread.
-        # r13: when the key is too coarse to fill the cores (docstring
+        # When the key is too coarse to fill the cores (docstring
         # tells callers to pick COARSE blocks), a keyed spread would run
         # |blocks|-wide — round-robin instead; the broadcast-join probe
         # side then runs full-width and the SMJ path pays the same block
@@ -1462,10 +1469,10 @@ def substring_dup_spans(
     occurrence counting is a ``groupBy(gram).count()`` — partial (map-
     side) aggregation shrinks the count shuffle to distinct grams — and
     the surviving dup-gram list equi-joins back to positions on gram,
-    where AQE's skew-join splitting applies. The r10 form (a gram-
-    partitioned window count) shuffled every occurrence to one task per
-    gram with neither defense: a boilerplate gram with 10⁸ occurrences
-    at corpus scale became one straggler task. Span merging is the
+    where AQE's skew-join splitting applies. A gram-partitioned window
+    count would shuffle every occurrence to one task per gram with
+    neither defense: a boilerplate gram with 10⁸ occurrences at corpus
+    scale becomes one straggler task. Span merging is the
     shared per-doc sessionize (`_merge_marked_spans`). No all-pairs
     stage anywhere; hot grams (boilerplate) cost their occurrence count,
     never its square.
@@ -1604,8 +1611,8 @@ def substring_dup_spans_keep_first(
     The first occurrence is the per-gram argmin of (doc_id, pos) —
     computed as ``min(struct(doc_id, pos))`` INSIDE the same partial-
     aggregated ``groupBy(gram)`` that counts occurrences ((doc_id, pos)
-    is unique within a gram, so the struct minimum IS row_number()==1 of
-    the r10 window form). No gram-partitioned window anywhere: the count
+    is unique within a gram, so the struct minimum IS row_number()==1
+    over a per-gram window). No gram-partitioned window anywhere: the count
     shuffle carries distinct grams (map-side combine), the join back to
     positions gets AQE skew-splitting, and the marked positions flow
     into the shared per-doc sessionize (`_merge_marked_spans`)."""

@@ -336,7 +336,7 @@ def ivf_assign_two_level(
         [(sid, dict(centroids)[sid]) for sid in groups], vec_col
     )
     sorted_sup = "array_sort(array(" + ", ".join(sup_structs) + "))"
-    # ONE form for every super_probe (r12): the sorted super array binds
+    # ONE form for every super_probe: the sorted super array binds
     # to a lambda variable via transform(slice(...)) so it computes once
     # per row; the selected supers' member arrays CASE-dispatch (only
     # the chosen groups' distances evaluate), NULL arms from EMPTY
@@ -345,7 +345,7 @@ def ivf_assign_two_level(
     # flatten, and one final sort + slice yields the nprobe member
     # lists. Measured at n=20k/k=128 this lambda-bound form is ~3x
     # faster than the per-rank re-inlined CASE chain it replaces and on
-    # par with the flat scan even at this modest k (SCALE.md r12).
+    # par with the flat scan even at this modest k (SCALE.md).
     arr_branches = " ".join(
         f"WHEN {int(sid)} THEN array("
         + ", ".join(_d2_structs(members, vec_col))
@@ -489,9 +489,8 @@ def _coarse_assign(
     adaptive k (n/250 lists at corpus scale) from turning assignment
     into an n·k pass. Same gate as `semantic_dedup_keep`.
 
-    RESULTS-AFFECTING DEFAULT (changed r11): callers with >=32
-    centroids previously got the exact flat coarse scan and now get the
-    two-level approximation without a call-site change — boundary
+    RESULTS-AFFECTING DEFAULT: callers with >=32 centroids get the
+    two-level approximation, not the exact flat coarse scan — boundary
     vectors near a super-group frontier can land in a different list,
     moving top-k membership/recall. Pass ``hier_threshold=None`` (or any
     value > len(centroids)) to pin the exact flat path; the measured
@@ -568,7 +567,7 @@ def ivf_exact_scored(
     nprobe: int = 2,
 ) -> DataFrame:
     """ONE corpus scan serving BOTH the probe-limited IVF top-k and the
-    exact brute-force control (r13, §1.2/§2.4). Every ANN quality gate
+    exact brute-force control. Every ANN quality gate
     (recall, nDCG, the streaming freshness monitor) composes `ivf_topk`
     + `brute_force_topk` over the SAME corpus and queries — two corpus
     scans, two cosine passes and a pair join — yet the exact control
@@ -1166,7 +1165,7 @@ def semantic_dedup_keep(
         .select("id_a", "id_b")
     )
     # output columns named at the source so CC's observed row count stays
-    # on the frame and broadcast_if_small skips its probe job (r12)
+    # on the frame and broadcast_if_small skips its probe job
     groups = connected_components(dup, node_col="vec_id", label_col="group_id")
     spine = vectors.select(F.col(id_col).cast("long").alias("vec_id"))
     joined = spine.join(

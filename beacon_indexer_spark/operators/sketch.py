@@ -124,7 +124,7 @@ def kmv_jaccard(
     bottom-k fills). Below that the estimator degrades to a
     1/prefilter_denom distinct-sample — unbiased for union_est but
     coarse for jaccard_est (few or zero survivors). For small sets
-    where the pre-r11 exact behavior is wanted, pass
+    where exact behavior is wanted, pass
     ``prefilter_denom=1``: the prefilter becomes a no-op and every
     distinct key reaches the bottom-k window (fine at small scale; the
     default 16 exists so 100 TB unions never shuffle their full

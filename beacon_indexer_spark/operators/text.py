@@ -49,8 +49,8 @@ def _exclusive_prefix(
 
     ``val`` / ``out`` may be single column names or equal-length lists:
     several prefix sums over the SAME key share one window, one
-    aggregation and one recursion (r12 — callers that previously ran the
-    machinery twice and equi-joined the results pay it once).
+    aggregation and one recursion (callers that would otherwise run the
+    machinery twice and equi-join the results pay it once).
 
     EVERY window is partitioned (bounded fan-in — no unpartitioned window
     anywhere, at any input size): keys group into super-keys of ``fan``
@@ -151,7 +151,7 @@ def pack_documents(
     over buckets. Identical arithmetic to the global-order cumsum the
     oracle computes.
 
-    Local cost floor (sf0.1, local[32], measured r4): ~0.8 s min-of-8 =
+    Local cost floor (sf0.1, local[32], measured): ~0.8 s min-of-8 =
     ~0.17 s id-only probe job (column-pruned scan, fixed job-launch
     overhead) + ~0.3 s driver-side plan construction (py4j, independent of
     data size) + ~0.35 s exec (regex tokenize dominates). Down from 1.23 s
@@ -637,9 +637,9 @@ def build_postings(
     window pass and materializes `max_postings` entries — the aggregate
     state is bounded per term.
 
-    r13 (§2.4, §1.2): ONE tokenize pass and TWO exchanges, no joins —
-    the old shape tokenized twice (tf's map side and the distinct's) and
-    reassembled df/tf/head through a three-way join. Now a single
+    ONE tokenize pass and TWO exchanges, no joins (rather than
+    tokenizing twice, for tf's map side and the distinct's, and
+    reassembling df/tf/head through a three-way join): a single
     map-side-combined (term, id) count gives per-doc tf; the window
     re-keys it by term; and df/tf/postings all fold in ONE aggregate
     that reuses the window's partitioning (groupBy on the window's
@@ -844,11 +844,11 @@ def heaps_law_curve(
     prefix sum from `pack_documents` (every window partitioned; no
     global ORDER BY funnel).
 
-    r13 (§2.4, §1.2): the vocabulary and token-sum branches both fold
-    from ONE map-side-combined (term, bucket) aggregation — identical
-    subtrees, so ReuseExchange materializes the tokenize+explode pass
-    once where the old shape ran tokenize twice (explode for vocabulary,
-    size() for token sums). explode_outer keeps all-empty buckets alive
+    The vocabulary and token-sum branches both fold from ONE
+    map-side-combined (term, bucket) aggregation — identical subtrees,
+    so ReuseExchange materializes the tokenize+explode pass once rather
+    than tokenizing twice (explode for vocabulary, size() for token
+    sums). explode_outer keeps all-empty buckets alive
     (they must still emit a curve row). The joined per-bucket frame is
     lazily checkpointed BEFORE the key-domain probe, so the probe's
     first() materializes the blocks the prefix pass then reads — the old

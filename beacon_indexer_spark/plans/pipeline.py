@@ -28,6 +28,7 @@ from beacon_indexer_spark.control.ledger import (
     untransformed_chunks,
 )
 from beacon_indexer_spark.functions.core import run_concurrently
+from beacon_indexer_spark.measure import stage
 from beacon_indexer_spark.plans.transform import TRANSFORMS, TransformResult, transform_blocks
 from beacon_indexer_spark.schemas.structured import RAW_TO_STRUCTURED
 from beacon_indexer_spark.sources import beacon_api as B
@@ -76,12 +77,14 @@ def write_tables(sink, outs: TransformResult, mode: str = "append") -> dict[str,
     and written from a pool of at most ``defaultParallelism`` driver
     threads, so ``sink.write`` is called from several threads at once. A
     failure is re-raised once every write has settled, and the parse cache
-    is released after all of them."""
+    is released after all of them. Each write's jobs are described
+    ``bis:<scope>:write.<table>``."""
     from beacon_indexer_spark import observability as O
 
     def write(name: str) -> int:
         obs = Observation()
-        sink.write(name, outs[name].observe(obs, F.count(F.lit(1)).alias("rows")), mode=mode)
+        with stage(f"write.{name}"):
+            sink.write(name, outs[name].observe(obs, F.count(F.lit(1)).alias("rows")), mode=mode)
         rows = obs.get["rows"]
         O.METRICS.inc("beacon_indexer_rows_written_total", {"table": name}, rows)
         return rows
@@ -289,6 +292,10 @@ class CurationRun:
     `decision` — the manifest extended with the keep/trim/drop verdict
     and the final ``admit`` flag — all read the staged blocks, so one
     staged run emits the full curation decision.
+
+    The staging jobs are described ``bis:<scope>:curation.clusters`` and
+    ``bis:<scope>:curation.contamination``; the connected-components
+    rounds inside the first are ``cc.init`` and ``cc.round<i>``.
     """
 
     def __init__(
@@ -335,18 +342,19 @@ class CurationRun:
         self._contam: DataFrame | None = None
 
         def _stage_clusters() -> DataFrame:
-            pairs = minhash_lsh_candidates(
-                docs, id_col, text_col, k=k, bands=bands,
-                shingle_n=shingle_n, max_bucket=max_bucket,
-            )
-            # staged once: checkpoint-backed, conditionally broadcast-
-            # hinted (raw-crawl dup rates fall back to a shuffle join);
-            # node_col at the source keeps CC's observed row count on the
-            # frame so broadcast_if_small skips its probe job
-            return broadcast_if_small(
-                connected_components(pairs, node_col=id_col),
-                expect_rows_known=True,
-            )
+            with stage("curation.clusters"):
+                pairs = minhash_lsh_candidates(
+                    docs, id_col, text_col, k=k, bands=bands,
+                    shingle_n=shingle_n, max_bucket=max_bucket,
+                )
+                # staged once: checkpoint-backed, conditionally broadcast-
+                # hinted (raw-crawl dup rates fall back to a shuffle join);
+                # node_col at the source keeps CC's observed row count on
+                # the frame so broadcast_if_small skips its probe job
+                return broadcast_if_small(
+                    connected_components(pairs, node_col=id_col),
+                    expect_rows_known=True,
+                )
 
         if test_docs is None:
             self.clusters = _stage_clusters()
@@ -588,10 +596,11 @@ class CurationRun:
                 cross_corpus_contamination_spans,
             )
 
-            self._contam = cross_corpus_contamination_spans(
-                self.docs, self.test_docs, self.id_col, self.text_col,
-                k=self.decon_k,
-            ).localCheckpoint()
+            with stage("curation.contamination"):
+                self._contam = cross_corpus_contamination_spans(
+                    self.docs, self.test_docs, self.id_col, self.text_col,
+                    k=self.decon_k,
+                ).localCheckpoint()
         return self._contam
 
     def contamination_spans(self) -> DataFrame:

@@ -258,7 +258,6 @@ def ann_recall_monitor(
     if max_queries is not None:
         # staged: the sampled batch feeds the scoring join AND the
         # n_queries count — the md5 sort-limit job runs once, not twice
-        # (r13, §1.2)
         batch_df = (
             batch_df.withColumn(
                 "__r", F.md5(F.col(id_col).cast("string"))
@@ -269,7 +268,7 @@ def ann_recall_monitor(
             .localCheckpoint(eager=False)
         )
     if len(centroids) < _HIER_THRESHOLD:
-        # ONE corpus scan for both rankings (r13, §1.2): the exact
+        # ONE corpus scan for both rankings: the exact
         # control already scores every pair the IVF side could surface,
         # so IVF membership is a flag on the control's scored frame and
         # the exact∩approx join collapses into a window predicate.

@@ -1,35 +1,32 @@
-"""Benchmark harness: runs the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness: runs the engine's queries over the tables in
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line
+{"metric", "value", "unit", "queries", "sf"} last.
 
-Each query executes fully via the no-op sink (plan runs end-to-end,
-nothing collected to the driver).
+- ``python bench.py``: the full surface, sharded across fresh JVMs by
+  tools/bench_shards.py, which merges the shards into bench_reps.json.
+- ``SPARK_GRAFT_BENCH_ONLY=a,b python bench.py``: the named queries in
+  this JVM; their reps go to bench_reps_subset.json.
 
-Headline methodology (round 12): a FULL-surface run (no
-SPARK_GRAFT_BENCH_ONLY) shards the query surface across fresh JVMs via
-tools/bench_shards.py and reports the merged sharded minima — the
-methodology-stable artifact (hash-stable shard assignment + bounded JVM
-aging; see bench_shards.py's module docstring for the round-10
-forensics). Three rounds running, deep-single-JVM driver runs carried
-load-clean phantom outliers (r11: embedding_residual_energy 6.80 s vs
-~1 s on every quiet-box run of the same code); the sharded run is the
-number the round should be judged on. SPARK_GRAFT_BENCH_SINGLE_JVM=1
-forces the legacy one-JVM full run (written to bench_reps_single.json,
-never the headline artifact).
+Each rep is one ``measure.measure`` call: build the query frame, then run
+its plan to completion with the rows discarded on the executors. A
+query's value is its minimum over $SPARK_GRAFT_BENCH_REPS reps (default
+4; this box shows ±35% run-to-run noise on identical plans).
 
-Self-adjudication fields in the reps artifact (all advisory — they
-flag which numbers NOT to trust, they never change the numbers):
-- rep_task_sec / rep_gc_sec: per-rep executor task-time and GC-time
-  deltas from Spark's AppStatusStore. A wall-time spike WITHOUT a
-  matching task-time spike is scheduler/environment stall, not plan
-  cost — exactly the r11 phantom-regression signature.
-- dispersion: per-query cross-rep wall spread (max/min) with the
-  task-time ratio alongside; dispersion_flags lists queries whose wall
-  spread exceeds 2x (and 0.3 s absolute) — the artifact names its own
-  outliers instead of leaving them for cross-run forensics.
-- load_median / load_flag: loadavg flag now fires on PERSISTENCE
-  (median of per-rep samples above 1.2x cores), not a single 1-min
-  sample that lags short reps; load_max stays recorded for reference.
+Fields of the reps artifact that flag which numbers not to trust (they
+never change the numbers):
+- rep_task_sec / rep_gc_sec: per rep, the executor run time and GC time
+  of the rep's Spark jobs, summed over their stages in the status store
+  (so at most wall time × cores). A wall-time spike without a task-time
+  spike is a scheduler or environment stall, not plan cost.
+- dispersion / dispersion_flags: per-query cross-rep wall spread
+  (max/min) with the task-time ratio alongside; a query is flagged when
+  its spread exceeds 2x and 0.3 s.
+- load_median / load_flag: the 1-min loadavg sampled after each rep;
+  the flag fires when the median sample exceeds 1.2 × cores.
+- canary: a few cheap, stable queries re-timed after the loop. A canary
+  slower at the end than its in-loop minimum (drift > 1.2) means the box
+  got busier mid-run; drift < 1/1.2 is the JVM warming up.
 """
 
 from __future__ import annotations
@@ -39,41 +36,21 @@ import os
 import re
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from beacon_indexer_spark.measure import job_table, measure  # noqa: E402
 from beacon_indexer_spark.plans.queries import QUERIES  # noqa: E402
 from beacon_indexer_spark.session import get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+CANARIES = ("top_users", "events_hourly", "event_type_stats")
 
 # wall-spread thresholds for the per-query dispersion flag: ratio alone
 # would flag 0.01 s vs 0.03 s scheduler jitter on trivial queries, so an
 # absolute floor rides along
 DISPERSION_RATIO = 2.0
 DISPERSION_MIN_SPREAD_SEC = 0.3
-
-
-def _exec_totals(spark) -> tuple[int, int]:
-    """Cumulative (task-time ms, GC ms) across executors from the
-    AppStatusStore — the same numbers the UI's executors page shows,
-    available with the UI disabled. Best-effort: returns (-1, -1) if the
-    private accessor moves in a future Spark (callers then record null
-    deltas rather than dying — the bench must survive its own
-    instrumentation)."""
-    try:
-        it = spark.sparkContext._jsc.sc().statusStore().executorList(
-            True
-        ).iterator()
-        dur = gc = 0
-        while it.hasNext():
-            e = it.next()
-            dur += e.totalDuration()
-            gc += e.totalGCTime()
-        return dur, gc
-    except Exception:  # noqa: BLE001 - instrumentation must not kill reps
-        return -1, -1
 
 
 def dispersion_of(
@@ -104,168 +81,74 @@ def dispersion_of(
     return disp, sorted(flags)
 
 
-def run_subset() -> None:
-    """In-process min-of-N run over $SPARK_GRAFT_BENCH_ONLY (or, with
-    SPARK_GRAFT_BENCH_SINGLE_JVM=1, the full surface) in ONE JVM."""
+def run_subset(only: str) -> None:
+    """Min-of-N over the comma-separated queries ``only`` in ONE JVM."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4")))
+    selected = {k: QUERIES[k] for k in only.split(",") if k}
 
     spark = get_spark(app_name="bis-bench", master=f"local[{cpus}]")
 
-    # warm the JVM + parquet footers + Python/Arrow workers once (not timed).
-    # Subset runs may point at a partial directory (tools/
-    # gen_scaled_testdata.py generates only the tables the subset reads),
-    # where table_counts' all-table scan would fail — warm with the first
-    # selected query instead.
-    only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only_env:
-        first = only_env.split(",")[0]
-        QUERIES[first](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    else:
-        QUERIES["table_counts"](spark, sf_dir).collect()
+    def rep(name: str) -> tuple[float, float, float]:
+        """(wall s, task s, GC s) of one build and execution."""
+        m = measure(spark, lambda: selected[name](spark, sf_dir), name)
+        jobs = job_table(spark, m.first_job, m.end_job)
+        return (round(m.total_s, 4), round(sum(j.task_s for j in jobs), 3),
+                round(sum(j.gc_s for j in jobs), 3))
+
+    # warm the JVM, the Parquet footers and the Python/Arrow workers (not
+    # timed) with the first query, a pandas UDF pass and two reps of each
+    # canary, so the canaries' loop minima carry no codegen warm-up
     import pandas as pd  # noqa: F401 - warms the Arrow/pandas worker path
 
     def _noop(batches):
-        for pdf in batches:
-            yield pdf
+        yield from batches
 
+    rep(next(iter(selected)))
     n_workers = spark.sparkContext.defaultParallelism
     spark.range(0, n_workers * 8, numPartitions=n_workers).mapInPandas(
         _noop, "id long"
     ).collect()
-    # steady-state warmup for the drift-canary baselines: the first few
-    # timed queries otherwise carry residual JIT/codegen warmup in their
-    # loop minima, which the end-of-run canary re-time then reads as
-    # "drift" (r6 measured top_users loop-min 2x its end-min on a solo
-    # box). Two untimed reps of each canary query settles codegen before
-    # the loop starts timing.
-    for cname in ("top_users", "events_hourly", "event_type_stats"):
-        if not only_env or cname in only_env.split(","):
-            if cname in QUERIES:
-                for _ in range(2):
-                    QUERIES[cname](spark, sf_dir).write.mode(
-                        "overwrite"
-                    ).format("noop").save()
+    canaries = [c for c in CANARIES if c in selected]
+    for name in canaries * 2:
+        rep(name)
 
-    # min-of-N per query (default 4): this box shows ±35% run-to-run noise
-    # on identical plans — at 2 reps noise masqueraded as regression on
-    # eleven queries in round 3; the minimum is the standard steady-state
-    # microbenchmark statistic and stays honest (every rep runs the full
-    # plan through the no-op sink)
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4"))
-    only = only_env
-    selected = (
-        {k: QUERIES[k] for k in only.split(",") if k} if only else QUERIES
-    )
-    timings: dict[str, float] = {}
-    # every rep's raw time is reported alongside the min, so round-over-
-    # round deltas can separate methodology (rep count, run-to-run noise)
-    # from real plan change
     rep_times: dict[str, list[float]] = {}
-    # per-rep 1-min loadavg sample: cross-run ambient load is invisible to
-    # the intra-run canary; a load trace lets the artifact adjudicate
-    # itself. The flag fires on the run's MEDIAN sample (persistent
-    # co-running load), not the max — a single 1-min-average sample both
-    # lags short reps and legitimately approaches n_cores while this
-    # bench itself is the thing loading the box.
-    rep_loads: dict[str, list[float]] = {}
-    # per-rep executor task-time/GC deltas (ms → s): the adjudication
-    # signal the loadavg guard lacks. Environment stalls move wall time
-    # but not task time; real plan cost moves both together.
     rep_task: dict[str, list[float]] = {}
     rep_gc: dict[str, list[float]] = {}
-    n_cores = os.cpu_count() or 8
-    load_limit = 1.2 * n_cores
-    load_baseline = os.getloadavg()[0]
-    load_samples: list[float] = []
-    for name, fn in selected.items():
-        rep_times[name] = []
-        rep_loads[name] = []
-        rep_task[name] = []
-        rep_gc[name] = []
-        for _ in range(max(1, reps)):
-            task0, gc0 = _exec_totals(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            rep_times[name].append(round(time.perf_counter() - t0, 4))
-            task1, gc1 = _exec_totals(spark)
-            ok = task0 >= 0 and task1 >= 0
-            rep_task[name].append(
-                round((task1 - task0) / 1000.0, 3) if ok else None
-            )
-            rep_gc[name].append(
-                round((gc1 - gc0) / 1000.0, 3) if ok else None
-            )
-            load1 = os.getloadavg()[0]
-            rep_loads[name].append(round(load1, 2))
-            load_samples.append(load1)
-        timings[name] = min(rep_times[name])
+    rep_loads: dict[str, list[float]] = {}
+    for name in selected:
+        runs = []
+        for _ in range(reps):
+            runs.append(rep(name))
+            rep_loads.setdefault(name, []).append(round(os.getloadavg()[0], 2))
+        rep_times[name], rep_task[name], rep_gc[name] = map(list, zip(*runs))
+    timings = {name: min(ts) for name, ts in rep_times.items()}
 
-    # drift canary: re-time a few cheap, stable queries AFTER the full
-    # loop and compare to their in-loop minima. Rounds 3 and 5 both saw
-    # contended driver benches where untouched queries drifted ~1.3×
-    # uniformly and environment noise masqueraded as plan regressions —
-    # the canary separates the two: large first-vs-last drift on queries
-    # whose plans never change means the RUN is contaminated, not the code
-    canary_names = [
-        n for n in ("top_users", "events_hourly", "event_type_stats")
-        if n in selected
-    ]
-    canary: dict[str, dict[str, float]] = {}
-    for name in canary_names:
-        times = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            selected[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            times.append(round(time.perf_counter() - t0, 4))
-        end_min = min(times)
+    canary = {}
+    for name in canaries:
+        end_min = min(rep(name)[0] for _ in range(2))
         loop_min = timings[name]
         canary[name] = {
             "loop_min": loop_min,
             "end_min": end_min,
             "drift": round(end_min / loop_min, 3) if loop_min > 0 else 1.0,
         }
-    drift_vals = [c["drift"] for c in canary.values()]
-    max_drift = max(drift_vals) if drift_vals else 1.0
-    # contention flag: any canary SLOWER at run end than its in-loop min
-    # means the box got busier mid-run (the r3/r5 driver-bench failure
-    # mode) — round-over-round deltas from this run are unreliable.
-    # End-faster-than-loop (drift < 1) is the JVM growing warmer over a
-    # 100+-query session — ~0.7-0.95 on sub-second queries even solo
-    # (measured) — so it gets its own informational flag, not the
-    # contamination flag
-    drift_flag = any(d > 1.2 for d in drift_vals)
-    warmup_flag = any(d < 1 / 1.2 for d in drift_vals)
+    drift_vals = [c["drift"] for c in canary.values()] or [1.0]
 
+    n_cores = os.cpu_count() or 8
+    load_limit = 1.2 * n_cores
+    load_samples = [x for xs in rep_loads.values() for x in xs]
+    load_median = round(statistics.median(load_samples), 2)
     dispersion, dispersion_flags = dispersion_of(rep_times, rep_task)
-    load_median = (
-        round(statistics.median(load_samples), 2) if load_samples else 0.0
-    )
-
-    total = round(sum(timings.values()), 4)
-    # The headline MUST be the last stdout line and stay short enough for a
-    # tail-buffer capture to parse (round 3's line carried the full per-rep
-    # arrays inline and was truncated past parseability). Per-rep raw times
-    # go to a side file + an earlier stdout line; the final line carries
-    # 3-decimal mins only.
-    # subset runs (SPARK_GRAFT_BENCH_ONLY) record to a side file so the
-    # committed full-surface bench_reps.json can't be clobbered by a
-    # scale-measurement run; the legacy single-JVM full run records to
-    # bench_reps_single.json — bench_reps.json is reserved for the
-    # sharded headline artifact
-    reps_name = (
-        "bench_reps_subset.json" if only else "bench_reps_single.json"
-    )
-    with open(os.path.join(REPO, reps_name), "w") as f:
+    with open(os.path.join(REPO, "bench_reps_subset.json"), "w") as f:
         json.dump(
             {
                 "sf": sf,
-                "n_reps": max(1, reps),
+                "n_reps": reps,
                 "reps": rep_times,
                 "rep_loads": rep_loads,
                 "rep_task_sec": rep_task,
@@ -274,29 +157,28 @@ def run_subset() -> None:
                 "dispersion_flags": dispersion_flags,
                 "n_cores": n_cores,
                 "load_limit": round(load_limit, 2),
-                "load_baseline": round(load_baseline, 2),
                 "load_median": load_median,
-                "load_max": round(max(load_samples), 2) if load_samples else 0.0,
-                "load_flag": bool(
-                    load_samples and load_median > load_limit
-                ),
+                "load_max": max(load_samples),
+                "load_flag": load_median > load_limit,
                 "canary": canary,
-                "canary_max_drift": max_drift,
-                "canary_drift_flag": drift_flag,
-                "canary_warmup_flag": warmup_flag,
+                "canary_max_drift": max(drift_vals),
+                "canary_drift_flag": any(d > 1.2 for d in drift_vals),
+                "canary_warmup_flag": any(d < 1 / 1.2 for d in drift_vals),
             },
             f,
         )
+    # the headline must be the last stdout line and short enough for a
+    # tail-buffer capture to parse: per-rep times go on an earlier line
     print(json.dumps({"reps": rep_times}))
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total_runtime",
-                "value": total,
+                "value": round(sum(timings.values()), 4),
                 "unit": "sec",
                 "queries": {k: round(v, 3) for k, v in timings.items()},
                 "sf": sf,
-                "n_reps": max(1, reps),
+                "n_reps": reps,
             },
             separators=(",", ":"),
         )
@@ -305,12 +187,10 @@ def run_subset() -> None:
 
 
 def main() -> None:
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") or os.environ.get(
-        "SPARK_GRAFT_BENCH_SINGLE_JVM"
-    ):
-        run_subset()
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    if only:
+        run_subset(only)
         return
-    # full-surface default: fresh-JVM shards (the headline methodology)
     from tools.bench_shards import main as shards_main
 
     shards_main()

@@ -17,10 +17,15 @@ from beacon_indexer_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def suite_session():
+    """The suite's session; `tools/record_plan_counts.py` records the
+    PLAN_COUNTS.json baseline on the same settings."""
+    return get_spark(app_name="bis-tests", shuffle_partitions=8)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="bis-tests", shuffle_partitions=8)
-    yield spark
+    yield suite_session()
 
 
 @pytest.fixture(scope="session")

@@ -8,6 +8,7 @@ import os
 import pytest
 
 from beacon_indexer_spark.cli import main
+from beacon_indexer_spark.measure import job_count
 from beacon_indexer_spark.schemas.raw import raw_envelope
 from beacon_indexer_spark.sources import clickhouse as CH
 from beacon_indexer_spark.sources.storage import ParquetLake
@@ -380,9 +381,9 @@ def test_cli_backfill_loads_each_chunk_once(spark, capsys, tmp_path, monkeypatch
 
     # validators fetch only UTC day ends, and this range holds none
     assert GNOSIS.day_end_slots(SLOT0, SLOT0 + 19) == []
-    jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    jobs = job_count(spark)
     out = backfill(SLOT0, SLOT0 + 19, loaders="validators")
-    assert spark.sparkContext._jsc.sc().dagScheduler().nextJobId() == jobs
+    assert job_count(spark) == jobs
     assert "validators" not in out and not lake.exists("raw_validators")
     assert [c["status"] for c in ledger.current()
             if c["loader_name"] == "validators"] == [L.COMPLETED] * 2

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from beacon_indexer_spark.config import GNOSIS, MAINNET
 from beacon_indexer_spark.control import ledger as L
+from beacon_indexer_spark.measure import job_count, job_table
 from beacon_indexer_spark.plans.pipeline import BeaconPipeline
 from beacon_indexer_spark.schemas.raw import raw_envelope
 from beacon_indexer_spark.sources.storage import ParquetLake
@@ -186,8 +187,7 @@ def test_control_plane_launches_no_spark_job(spark, tmp_path):
     """The ledger and the progress manifest are read and written on the
     driver: a whole load → transform → maintain lifecycle launches no
     Spark job."""
-    jobs = spark.sparkContext._jsc.sc().dagScheduler()
-    first = jobs.nextJobId()
+    first = job_count(spark)
     led = L.ChunkLedger(spark, str(tmp_path / "ledger"))
     prog = L.ProgressManifest(spark, str(tmp_path / "progress"))
     led.append(L.generate_chunks(spark, 0, 2999, 1000, "blocks"))
@@ -208,7 +208,7 @@ def test_control_plane_launches_no_spark_job(spark, tmp_path):
     led.compact()
     prog.compact()
     assert len(led.current()) == 4 and len(prog.current()) == 2
-    assert jobs.nextJobId() == first
+    assert job_count(spark) == first
 
 
 def test_manifest_reads_spark_written_files(spark, tmp_path):
@@ -326,14 +326,18 @@ def test_transform_range_writes_each_table_once(spark, lake):
     rows.append(FX.raw_row(SLOT0, FX.block_payload(SLOT0, proposer=99),
                            retrieved_at=FX.T0 + dt.timedelta(hours=1)))
     lake.write("raw_blocks", _raw_df(spark, rows))
-    jobs = spark.sparkContext._jsc.sc().dagScheduler()
-    first = jobs.nextJobId()
+    first = job_count(spark)
     counts = BeaconPipeline(lake).transform_range("raw_blocks", SLOT0, SLOT0 + 5)
-    launched = jobs.nextJobId() - first
+    launched = job_count(spark) - first
     # 13 writes sharing one cached parse that the first write fills; a
     # count job per table, or a concurrent write racing that fill, adds jobs
     assert launched == 16, launched
     assert len(counts) == 13
+    # after the raw read's schema job, each job names the table write that
+    # launched it, though the writes run from several threads at once
+    descs = [j.description for j in job_table(spark, first, first + launched)]
+    assert descs[0] == "", descs
+    assert set(descs[1:]) == {f"bis:engine:write.{t}" for t in counts}, descs
     # the fixture carries no execution requests: an empty table counts 0
     assert counts["execution_requests"] == 0 and not lake.exists("execution_requests")
     for table, n in counts.items():

@@ -8,6 +8,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from beacon_indexer_spark.measure import job_count
 from beacon_indexer_spark.operators import dedup as D
 from beacon_indexer_spark.operators import similarity as S
 
@@ -274,17 +275,11 @@ def test_pairs_from_buckets_lazy_no_probe_job(spark):
     rows += [("b%d" % b, "k2", 1000 + b * 10 + i) for b in range(3) for i in range(3)]
     keyed = spark.createDataFrame(rows, "band string, key string, id long")
 
-    sc = spark.sparkContext
-    group = "lazy-pairs-probe-test"
-    sc.setJobGroup(group, "plan construction must spawn no jobs")
-    try:
-        lazy = D._pairs_from_buckets(
-            keyed, "id", "band", "key", max_bucket=10, probe=False
-        )
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setJobGroup("", "")
-    assert list(jobs) == []  # zero jobs at plan-construction time
+    first = job_count(spark)
+    lazy = D._pairs_from_buckets(
+        keyed, "id", "band", "key", max_bucket=10, probe=False
+    )
+    assert job_count(spark) == first  # zero jobs at plan-construction time
     # both branches are planned (in-row explode + overflow join union)
     plan = lazy._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" in plan
@@ -320,6 +315,22 @@ def test_hamming_recall_independent_of_bands(spark):
     assert results[0] == results[1] == results[2]
     assert all((0, i) in results[0] for i in range(1, 5))
     assert (0, 5) not in results[0]
+
+
+def test_fuzzy_spread_counts_block_keys_with_a_null_part(spark):
+    """The block-key cardinality probe counts keys with a NULL part: with
+    one block column always NULL and at least defaultParallelism distinct
+    values in the other, the under-parallel input is spread by the block
+    key, not round-robin."""
+    n = spark.sparkContext.defaultParallelism
+    rows = [(i, "name %d" % i, None, "c%d" % i) for i in range(2 * n)]
+    df = spark.createDataFrame(
+        rows, "id long, name string, region string, city string").coalesce(1)
+    out = D.fuzzy_name_pairs(df, "id", "name", ["region", "city"], max_dist=1)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan
+    assert "hashpartitioning(region#" in plan
+    assert out.collect() == []  # a NULL key part never joins
 
 
 def test_fuzzy_band_adaptive_plans_equivalent(spark):

@@ -12,6 +12,7 @@ import re
 
 import pytest
 
+from beacon_indexer_spark.measure import job_count
 from beacon_indexer_spark.plans.queries import QUERIES
 
 # brute-force cosine is the *documented* exact-baseline cross join
@@ -228,7 +229,7 @@ def test_no_driver_collect_in_query_plans():
 
 def test_capped_lsh_plan_audits_without_jobs(spark):
     """Explain/audit callers can build the CAPPED LSH candidate plan with
-    probe=False: zero jobs at construction (job-group assertion), and the
+    probe=False: zero jobs at construction, and the
     lazy both-branches plan still satisfies the audit's core invariant —
     the overflow branch pairs via an EQUI-join on the bucket key, never a
     cartesian product."""
@@ -239,16 +240,10 @@ def test_capped_lsh_plan_audits_without_jobs(spark):
          for i in range(12)],
         "doc_id long, text string",
     )
-    sc = spark.sparkContext
-    group = "audit-lazy-lsh"
-    sc.setJobGroup(group, "plan construction must spawn no jobs")
-    try:
-        lazy = minhash_lsh_candidates(docs, "doc_id", "text", max_bucket=4,
-                                      probe=False)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setJobGroup("", "")
-    assert list(jobs) == []
+    first = job_count(spark)
+    lazy = minhash_lsh_candidates(docs, "doc_id", "text", max_bucket=4,
+                                  probe=False)
+    assert job_count(spark) == first
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -1,39 +1,29 @@
 """Sharded bench_reps refresh: run the full query surface as N fresh-JVM
-shards and merge into bench_reps.json.
+shards and merge them into bench_reps.json. A full-surface
+`python bench.py` delegates here.
 
-Why: round-9's single-JVM 315-query run drifted +7.6% aggregate vs round 8
-on files with a zero-line diff. Round-10 forensics (SCALE.md "Bench noise
-verdict") pinned it on JVM state, not plans: a query's min-of-4 depends on
-how deep in the run it sits (JIT warmup) and how aged the JVM is (code
-cache / GC pressure grows with the surface). Sharding fixes the comparison
-baseline two ways:
+Why shards: a query's min-of-N in one long JVM depends on how deep in the
+run it sits (JIT warm-up) and how aged the JVM is (code cache, GC
+pressure), so a single-JVM full run drifts with the surface's size
+(SCALE.md "Bench noise verdict"). Two rules keep runs comparable:
 
-- **Hash-stable shard assignment** (crc32(name) % n): adding queries next
-  round does not move existing queries between shards, so each query keeps
-  a comparable JVM-age context round over round.
-- **Fresh JVM per shard** (~80 queries): bounded code-cache/GC aging, so
-  surface growth in one shard cannot slow queries in another.
+- **Hash-stable shard assignment** (crc32(name) % n): adding queries does
+  not move existing queries between shards.
+- **Fresh JVM per shard** (~85 queries): bounded JVM aging, so growth in
+  one shard cannot slow queries in another.
 
-Within a shard, queries run sorted by name (insertion order in QUERIES
-changes as the file grows; sorted order is stable).
+Within a shard, queries run sorted by name. Sharded minima run ~14% above
+deep-warm single-JVM minima (the fresh-JVM warm-up), so compare sharded
+runs to sharded runs only. Single-shard canary drift spikes up to ~1.8
+occur on quiet boxes; treat simultaneous >1.5 drift on several shards as
+contamination.
 
-Reading the artifact: sharded minima run ~14% above deep-warm single-JVM
-minima (median, measured round 10) — the fresh-JVM warmup tax is the
-price of comparability; compare sharded runs to sharded runs only. The
-per-shard canary drift is noisier here than in a 300-query JVM (the end
-re-time is min-of-2 in a ~3-minute-old JVM vs the loop's min-of-4):
-single-shard spikes up to ~1.8 appeared on back-to-back quiet-box runs —
-treat simultaneous >1.5 drift on MULTIPLE shards as contamination,
-single-shard spikes as variance.
-
-Round 12: this IS the headline path — a full-surface `python bench.py`
-delegates here, the merged artifact lands in BOTH bench_reps.json and
+The merged artifact lands in both bench_reps.json and
 bench_reps_sharded.json, and the last stdout line is the driver-format
 headline ({"metric", "value", "unit", "queries", "sf"}) built from the
-sharded minima. Per-query self-adjudication (rep_task_sec/rep_gc_sec
-deltas + dispersion flags, see bench.py's module docstring) merges
-through from the shard artifacts. A failed shard retries once before
-the run aborts.
+sharded minima. The per-query flags (rep_task_sec/rep_gc_sec,
+dispersion; see bench.py's module docstring) merge through from the
+shard artifacts. A failed shard retries once before the run aborts.
 
 Usage:
     python bench.py                         # full surface → sharded headline
@@ -83,7 +73,6 @@ def main() -> None:
         if not shard:
             continue
         env = dict(os.environ, SPARK_GRAFT_BENCH_ONLY=",".join(shard))
-        env.pop("SPARK_GRAFT_BENCH_SINGLE_JVM", None)
         print(
             f"shard {i}: {len(shard)} queries "
             f"({shard[0]}..{shard[-1]})",

@@ -1,18 +1,17 @@
-"""Per-query cost breakdown for the optimization rounds: where does a
-bench second actually go at sf0.1?
+"""Where does a query's time go? For each named query, runs ITERS
+(default 3) builds and executions through ``measure.measure`` (the
+bench's timed region) and reports the last one:
 
-For each named query (comma list in argv[1]) runs ITERS (default 3)
-iterations of the bench's exact timed region — build (query function
-call) + noop-sink execution — and reports the LAST iteration's split,
-plus the job count of that iteration:
-
-- build_s:  steady-state Python-side DataFrame construction, including
-            any eager probe jobs the constructor runs
-- exec_s:   steady-state noop-sink execution of the freshly built plan
-- total_s:  build + exec (comparable to the bench's per-rep number)
-- jobs:     Spark jobs launched during the last build+exec (broadcast
-            jobs, checkpoint materialisations, probes — serial job
-            latency is pure fixed overhead at sf0.1)
+- build_s / exec_s / total_s: driver-side build (including any eager
+  probe and checkpoint jobs it runs), execution with the rows discarded
+  on the executors, and their sum (comparable to a bench rep)
+- jobs, Exchanges and scans of the final physical plan
+- task_s / gc_s / shuffle_mb: executor run time, GC time and shuffle
+  writes of those jobs
+- then one line per job, from the status store: its id, wall duration,
+  gap since the previous job ended (driver-side build time and serial
+  scheduling overhead; negative when jobs overlap) and its description,
+  which names the operator that launched it (``bis:<query>:<operator>``)
 
 Usage: python tools/profile_query.py name1,name2,... [iters]
 """
@@ -21,10 +20,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from beacon_indexer_spark.measure import job_table, measure  # noqa: E402
 from beacon_indexer_spark.plans.queries import QUERIES  # noqa: E402
 from beacon_indexer_spark.session import get_spark  # noqa: E402
 
@@ -43,25 +42,23 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     spark = get_spark(app_name="bis-profile", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
-    # warm like bench.py
-    QUERIES["table_counts"](spark, sf_dir).collect()
-    st = spark.sparkContext.statusTracker()
 
-    print(f"{'query':42s} {'build':>7s} {'exec':>7s} {'total':>7s} {'jobs':>5s}")
+    print(f"{'query':42s} {'build':>7s} {'exec':>7s} {'total':>7s} {'jobs':>5s} "
+          f"{'exch':>5s} {'scans':>5s} {'task':>7s} {'gc':>6s} {'shuf_mb':>8s}")
     for name in names:
-        fn = QUERIES[name]
-        build = ex = 0.0
-        jobs = 0
         for _ in range(iters):
-            j0 = len(st.getJobIdsForGroup(None) or [])
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            t2 = time.perf_counter()
-            j1 = len(st.getJobIdsForGroup(None) or [])
-            build, ex, jobs = t1 - t0, t2 - t1, j1 - j0
-        print(f"{name:42s} {build:7.3f} {ex:7.3f} {build + ex:7.3f} {jobs:5d}")
+            m = measure(spark, lambda: QUERIES[name](spark, sf_dir), name)
+        jobs = job_table(spark, m.first_job, m.end_job)
+        print(f"{name:42s} {m.build_s:7.3f} {m.exec_s:7.3f} {m.total_s:7.3f} "
+              f"{m.jobs:5d} {m.exchanges:5d} {m.scans:5d} "
+              f"{sum(j.task_s for j in jobs):7.3f} {sum(j.gc_s for j in jobs):6.3f} "
+              f"{sum(j.shuffle_bytes for j in jobs) / 1e6:8.2f}")
+        prev_end = None
+        for j in jobs:
+            gap = (j.start_ms - prev_end) / 1000.0 if prev_end else 0.0
+            prev_end = j.end_ms
+            print(f"  job {j.id:5d}  dur={j.duration_s:7.3f}s  gap={gap:7.3f}s  "
+                  f"{j.description}")
         sys.stdout.flush()
     spark.stop()
 
