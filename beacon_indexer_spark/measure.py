@@ -46,23 +46,29 @@ def job_count(spark: SparkSession) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
-def plan_counts(plan) -> tuple[int, int]:
-    """(Exchanges, scans) of a physical plan (a JVM ``SparkPlan``):
-    shuffle and broadcast exchanges, file and DataSource V2 scans. Under
-    adaptive execution only the final plan counts, entered through its
-    query stages; reused exchanges, cached relations and subqueries do
-    not count."""
+def plan_nodes(plan) -> Iterator:
+    """The nodes of a physical plan (a JVM ``SparkPlan``). Under adaptive
+    execution these are the final plan's, entered through its query
+    stages; the plans of cached relations and subqueries are not
+    entered."""
     kind = plan.getClass().getSimpleName()
     if kind == "AdaptiveSparkPlanExec":
-        return plan_counts(plan.executedPlan())
-    if kind.endswith("QueryStageExec"):  # shuffle, broadcast, result stages
-        return plan_counts(plan.plan())
-    exchanges, scans = int(kind in EXCHANGES), int(kind in SCANS)
-    children = plan.children().iterator()
-    while children.hasNext():
-        e, s = plan_counts(children.next())
-        exchanges, scans = exchanges + e, scans + s
-    return exchanges, scans
+        yield from plan_nodes(plan.executedPlan())
+    elif kind.endswith("QueryStageExec"):  # shuffle, broadcast, result stages
+        yield from plan_nodes(plan.plan())
+    else:
+        yield plan
+        children = plan.children().iterator()
+        while children.hasNext():
+            yield from plan_nodes(children.next())
+
+
+def plan_counts(plan) -> tuple[int, int]:
+    """(Exchanges, scans) of a physical plan's ``plan_nodes``: shuffle and
+    broadcast exchanges, file and DataSource V2 scans. Reused exchanges do
+    not count."""
+    kinds = [n.getClass().getSimpleName() for n in plan_nodes(plan)]
+    return sum(k in EXCHANGES for k in kinds), sum(k in SCANS for k in kinds)
 
 
 @dataclass(frozen=True)

@@ -92,16 +92,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one row (min id) per identical-content group — the dedup'd
-    corpus. Implemented as latest-wins on (fingerprint) with version=-id."""
-    fp = df.withColumn("__fp", fingerprint(text_col))
-    w_keep = (
-        fp.groupBy("__fp").agg(F.min(F.col(id_col)).alias(id_col))
-    )
-    return df.join(w_keep, id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # minhash + LSH
 # ---------------------------------------------------------------------------
@@ -156,7 +146,8 @@ def minhash_signatures(
 
 def _bucket_pairs(ids: Column) -> Column:
     """All (id_a < id_b) pairs within a sorted id array — in-bucket pair
-    expansion, array<struct<id_a,id_b>>."""
+    expansion, array<struct<id_a,id_b>>. The entries may be structs that
+    lead with the id; each pair side is then the whole struct."""
     return F.flatten(
         F.transform(
             ids,
@@ -491,30 +482,36 @@ def _shingle_pair_counts(
 
     Shingle-blocked pair generation WITHOUT a self-join: group each
     shingle's (sorted, distinct) doc list, expand in-block pairs, count
-    pair occurrences = |intersection|. The tokenize+shingle tree runs
-    once for the intersection and once (narrow, no shuffle) for sizes."""
-    sh = shingle_sets(df, id_col, text_col, shingle_n)
-    sizes = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.size(F.array_distinct(word_shingles(text_col, shingle_n))).alias("n"),
+    pair occurrences = |intersection|. Each list entry carries its doc's
+    shingle-set size ``n``, so the sizes ride along with the pairs and the
+    documents are tokenized and shingled once, with no size join."""
+    sh = df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.array_distinct(word_shingles(text_col, shingle_n)).alias("__sh"),
+    ).select(
+        F.struct("id", F.size("__sh").alias("n")).alias("__doc"),
+        F.explode("__sh").alias("shingle"),
     )
     blocked = (
         sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_set(F.col(id_col))).alias("__ids"))
+        .agg(F.array_sort(F.collect_set("__doc")).alias("__ids"))
         .filter(F.size("__ids") > 1)
     )
     if df_cap is not None:
         blocked = blocked.filter(F.size("__ids") <= df_cap)
     inter = (
         blocked.select(F.explode(_bucket_pairs(F.col("__ids"))).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        .groupBy(
+            F.col("p.id_a.id").alias("id_a"),
+            F.col("p.id_b.id").alias("id_b"),
+            F.col("p.id_a.n").alias("n_a"),
+            F.col("p.id_b.n").alias("n_b"),
+        )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     if candidates is not None:
         inter = inter.join(candidates, ["id_a", "id_b"], "left_semi")
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
-    return inter.join(sa, "id_a").join(sb, "id_b")
+    return inter
 
 
 def ngram_containment_pairs(

@@ -17,7 +17,11 @@ Scale notes: each transform's ``dedup_raw`` is the one wide operation and
 the only latest-wins step (shuffle by slot, map-side combined via max_by);
 callers pass the raw range as read. Every projection afterwards is narrow.
 ``transform_blocks`` caches its deduped+parsed frame, so its 13 tables
-share one parse, and returns each table as a deferred build.
+share one parse, and returns each table as a deferred build. The cached
+frame is flat, one column per message and body field (``_parse_blocks``),
+so each table scans only its own subtrees of the cache; adaptive
+execution sizes the cache's partitions from the data (``session``), and
+each table's write runs that many tasks.
 ``plans.pipeline.write_tables`` writes each table once and counts its rows
 while writing: first ``blocks``, whose write fills the cache, then the
 other twelve, built and written from a bounded pool of driver threads, so
@@ -109,7 +113,8 @@ class TransformResult(dict):
 # blocks family (raw_blocks → 13 tables)
 # ---------------------------------------------------------------------------
 
-_B = "body"  # alias root for the parsed block body
+# the message fields the builders read besides the body
+_MESSAGE_FIELDS = ("proposer_index", "parent_root", "state_root")
 
 
 def _parse_blocks(
@@ -117,23 +122,28 @@ def _parse_blocks(
 ) -> DataFrame:
     """Dedup + single-pass superset parse + fork column. The parse schema is
     pruned to the requested tables' fields (schemas/payloads.py) so a narrow
-    allow-list never tokenizes the unrequested JSON subtrees."""
-    deduped = dedup_raw(raw)
-    p = F.from_json("payload", P.block_payload_schema(tables))
-    return (
-        deduped.select(
-            F.col("slot").cast("long").alias("slot"),
-            p.alias("p"),
-        )
-        .select(
-            "slot",
-            F.coalesce(
-                F.col("p.version"), fork_from_slot(F.col("slot"), schedule)
-            ).alias("version"),
-            F.col("p.data.message").alias("msg"),
-            F.col("p.data.signature").alias("signature"),
-        )
-        .withColumn(_B, F.col("msg.body"))
+    allow-list never tokenizes the unrequested JSON subtrees.
+
+    The frame is flat: ``slot``, ``version``, ``signature``,
+    ``has_message``, the message fields in ``_MESSAGE_FIELDS`` and one
+    column per body field of the pruned schema. ``transform_blocks``
+    caches it, and a cached frame's scan prunes top-level columns only, so
+    each table's scan reads just the body subtrees it projects."""
+    schema = P.block_payload_schema(tables)
+    body_fields = schema["data"].dataType["message"].dataType["body"].dataType.names
+    msg = F.col("p.data.message")
+    return dedup_raw(raw).select(
+        F.col("slot").cast("long").alias("slot"),
+        F.from_json("payload", schema).alias("p"),
+    ).select(
+        "slot",
+        F.coalesce(F.col("p.version"), fork_from_slot(F.col("slot"), schedule)).alias(
+            "version"
+        ),
+        F.col("p.data.signature").alias("signature"),
+        msg.isNotNull().alias("has_message"),
+        *(msg[f].alias(f) for f in _MESSAGE_FIELDS),
+        *(msg["body"][f].alias(f) for f in body_fields),
     )
 
 
@@ -162,43 +172,42 @@ def transform_blocks(
         rows = parsed.select("slot", F.posexplode(arr).alias(index, alias))
         return rows.select("slot", F.col(index).cast("int"), *cols)
 
-    body = F.col(_B)
     cnt = lambda c: F.coalesce(F.size(c), F.lit(0)).cast("int")  # noqa: E731
 
     def _build_blocks() -> DataFrame:
-        return parsed.filter(F.col("msg").isNotNull()).select(
+        return parsed.filter(F.col("has_message")).select(
             "slot",
-            safe_int_col("msg.proposer_index").alias("proposer_index"),
-            F.col("msg.parent_root").alias("parent_root"),
-            F.col("msg.state_root").alias("state_root"),
+            safe_int_col("proposer_index").alias("proposer_index"),
+            F.col("parent_root"),
+            F.col("state_root"),
             F.col("signature"),
             F.col("version"),
-            F.col(f"{_B}.randao_reveal").alias("randao_reveal"),
-            F.col(f"{_B}.graffiti").alias("graffiti"),
-            F.col(f"{_B}.eth1_data.deposit_root").alias("eth1_deposit_root"),
-            safe_int_col(f"{_B}.eth1_data.deposit_count").alias("eth1_deposit_count"),
-            F.col(f"{_B}.eth1_data.block_hash").alias("eth1_block_hash"),
-            cnt(body["attestations"]).alias("attestations_count"),
-            cnt(body["deposits"]).alias("deposits_count"),
-            cnt(body["voluntary_exits"]).alias("voluntary_exits_count"),
-            cnt(body["proposer_slashings"]).alias("proposer_slashings_count"),
-            cnt(body["attester_slashings"]).alias("attester_slashings_count"),
+            F.col("randao_reveal"),
+            F.col("graffiti"),
+            F.col("eth1_data.deposit_root").alias("eth1_deposit_root"),
+            safe_int_col("eth1_data.deposit_count").alias("eth1_deposit_count"),
+            F.col("eth1_data.block_hash").alias("eth1_block_hash"),
+            cnt(F.col("attestations")).alias("attestations_count"),
+            cnt(F.col("deposits")).alias("deposits_count"),
+            cnt(F.col("voluntary_exits")).alias("voluntary_exits_count"),
+            cnt(F.col("proposer_slashings")).alias("proposer_slashings_count"),
+            cnt(F.col("attester_slashings")).alias("attester_slashings_count"),
             F.coalesce(
-                popcount_hex(body["sync_aggregate"]["sync_committee_bits"]), F.lit(0)
+                popcount_hex(F.col("sync_aggregate.sync_committee_bits")), F.lit(0)
             ).cast("int").alias("sync_aggregate_participation"),
-            cnt(body["execution_payload"]["transactions"]).alias("transactions_count"),
-            cnt(body["execution_payload"]["withdrawals"]).alias("withdrawals_count"),
-            cnt(body["blob_kzg_commitments"]).alias("blob_kzg_commitments_count"),
+            cnt(F.col("execution_payload.transactions")).alias("transactions_count"),
+            cnt(F.col("execution_payload.withdrawals")).alias("withdrawals_count"),
+            cnt(F.col("blob_kzg_commitments")).alias("blob_kzg_commitments_count"),
             (
-                cnt(body["execution_requests"]["deposits"])
-                + cnt(body["execution_requests"]["withdrawals"])
-                + cnt(body["execution_requests"]["consolidations"])
+                cnt(F.col("execution_requests.deposits"))
+                + cnt(F.col("execution_requests.withdrawals"))
+                + cnt(F.col("execution_requests.consolidations"))
             ).alias("execution_requests_count"),
         )
 
     def _build_attestations() -> DataFrame:
         return fan_out(
-            body["attestations"], "attestation_index", "a",
+            F.col("attestations"), "attestation_index", "a",
             safe_int_col("a.data.index").alias("committee_index"),
             F.col("a.aggregation_bits").alias("aggregation_bits"),
             F.col("a.committee_bits").alias("committee_bits"),  # Electra+
@@ -213,7 +222,7 @@ def transform_blocks(
 
     def _build_deposits() -> DataFrame:
         return fan_out(
-            body["deposits"], "deposit_index", "d",
+            F.col("deposits"), "deposit_index", "d",
             F.col("d.data.pubkey").alias("pubkey"),
             F.col("d.data.withdrawal_credentials").alias("withdrawal_credentials"),
             safe_int_col("d.data.amount").alias("amount"),
@@ -223,7 +232,7 @@ def transform_blocks(
 
     def _build_voluntary_exits() -> DataFrame:
         return fan_out(
-            body["voluntary_exits"], "exit_index", "v",
+            F.col("voluntary_exits"), "exit_index", "v",
             safe_int_col("v.message.epoch").alias("epoch"),
             safe_int_col("v.message.validator_index").alias("validator_index"),
             F.col("v.signature").alias("signature"),
@@ -244,7 +253,7 @@ def transform_blocks(
             ]
 
         return fan_out(
-            body["proposer_slashings"], "slashing_index", "s", *_header(1), *_header(2)
+            F.col("proposer_slashings"), "slashing_index", "s", *_header(1), *_header(2)
         )
 
     def _build_attester_slashings() -> DataFrame:
@@ -268,7 +277,7 @@ def transform_blocks(
             )
         )
         return fan_out(
-            body["attester_slashings"], "slashing_index", "s",
+            F.col("attester_slashings"), "slashing_index", "s",
             *_att_side(1),
             *_att_side(2),
             slashed.alias("slashed_validators"),
@@ -276,19 +285,20 @@ def transform_blocks(
         )
 
     def _build_sync_aggregates() -> DataFrame:
-        sagg = parsed.filter(body["sync_aggregate"]["sync_committee_bits"].isNotNull())
+        bits = F.col("sync_aggregate.sync_committee_bits")
+        sagg = parsed.filter(bits.isNotNull())
         return sagg.select(
             "slot",
-            body["sync_aggregate"]["sync_committee_bits"].alias("sync_committee_bits"),
-            body["sync_aggregate"]["sync_committee_signature"].alias(
+            bits.alias("sync_committee_bits"),
+            F.col("sync_aggregate.sync_committee_signature").alias(
                 "sync_committee_signature"
             ),
-            popcount_hex(body["sync_aggregate"]["sync_committee_bits"])
+            popcount_hex(bits)
             .cast("int")
             .alias("participation_count"),
         )
 
-    ep = F.col(f"{_B}.execution_payload")
+    ep = F.col("execution_payload")
 
     def _build_execution_payloads() -> DataFrame:
         epl = parsed.filter(ep["block_hash"].isNotNull())
@@ -351,7 +361,7 @@ def transform_blocks(
 
     def _build_bls_changes() -> DataFrame:
         return fan_out(
-            body["bls_to_execution_changes"], "change_index", "c",
+            F.col("bls_to_execution_changes"), "change_index", "c",
             safe_int_col("c.message.validator_index").alias("validator_index"),
             F.col("c.message.from_bls_pubkey").alias("from_bls_pubkey"),
             F.col("c.message.to_execution_address").alias("to_execution_address"),
@@ -360,11 +370,11 @@ def transform_blocks(
 
     def _build_blob_commitments() -> DataFrame:
         return fan_out(
-            body["blob_kzg_commitments"], "commitment_index", "k", F.col("k").alias("commitment")
+            F.col("blob_kzg_commitments"), "commitment_index", "k", F.col("k").alias("commitment")
         )
 
     def _build_execution_requests() -> DataFrame:
-        er = F.col(f"{_B}.execution_requests")
+        er = F.col("execution_requests")
         reqs = parsed.filter(
             (F.coalesce(F.size(er["deposits"]), F.lit(0)) > 0)
             | (F.coalesce(F.size(er["withdrawals"]), F.lit(0)) > 0)

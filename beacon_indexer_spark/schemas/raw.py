@@ -2,9 +2,11 @@
 
 Every slot-based raw table shares the envelope (reference
 src/loaders/base.py:48-57, migrations/003_raw_tables.sql:2-106):
-``(slot, payload, payload_hash, retrieved_at [, block_root])`` with dedup key
+``(slot, payload, payload_hash, retrieved_at)`` with dedup key
 ``(slot, payload_hash)`` and latest-wins version ``retrieved_at``. The
-``payload`` is the verbatim canonical-JSON API response.
+``payload`` is the verbatim canonical-JSON API response. The reference's
+optional ``block_root`` column of ``raw_blocks`` is not declared: no
+fetcher fills it, and the root stays readable from the payload.
 """
 
 from __future__ import annotations
@@ -15,17 +17,16 @@ RAW_KEY = ("slot", "payload_hash")
 RAW_VERSION = "retrieved_at"
 
 
-def raw_envelope(extra: list[T.StructField] | None = None) -> T.StructType:
-    fields = [
+def raw_envelope() -> T.StructType:
+    return T.StructType([
         T.StructField("slot", T.LongType(), False),
         T.StructField("payload", T.StringType(), True),
         T.StructField("payload_hash", T.StringType(), False),
         T.StructField("retrieved_at", T.TimestampType(), False),
-    ]
-    return T.StructType(fields + (extra or []))
+    ])
 
 
-RAW_BLOCKS = raw_envelope([T.StructField("block_root", T.StringType(), True)])
+RAW_BLOCKS = raw_envelope()
 RAW_VALIDATORS = raw_envelope()
 RAW_REWARDS = raw_envelope()
 RAW_PENDING_CONSOLIDATIONS = raw_envelope()

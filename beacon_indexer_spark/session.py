@@ -6,6 +6,12 @@ partition sizing, Arrow for the few Pandas-UDF paths, dynamic partition
 overwrite for the repair path that replaces the reference's
 ``ALTER TABLE ... DELETE`` mutations, reference
 ``src/services/maintenance.py:207-275``).
+
+Adaptive execution also plans cached frames, so it sizes a cached plan's
+shuffle partitions from the data like any other plan's. The one cache it
+affects in a pipeline run is ``plans.transform.transform_blocks``' parse
+of a blocks range, which its twelve fan-out writes scan with as many
+tasks as it has partitions.
 """
 
 from __future__ import annotations
@@ -48,6 +54,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce a cached plan's shuffle too (off by default, which
+        # leaves the blocks parse cache at spark.sql.shuffle.partitions and
+        # every fan-out write at that many tasks and files); the cached
+        # plans are that parse and dedup's probe=False audit persist
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")

@@ -34,6 +34,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from beacon_indexer_spark.config import ForkSchedule
 from beacon_indexer_spark.functions.core import latest, slot_timestamp
@@ -41,6 +42,27 @@ from beacon_indexer_spark.schemas.raw import RAW_KEY, RAW_TABLES, RAW_VERSION
 from beacon_indexer_spark.schemas.structured import STRUCTURED_TABLES
 
 _UNPARTITIONED = {"genesis", "specs", "raw_genesis", "raw_specs", "time_helpers"}
+
+
+def _stored_schema(declared: T.StructType) -> T.StructType:
+    """A raw table's schema as ``ParquetLake.write`` stores it: the declared
+    columns, then the stamps ``_prepare`` adds. A table with a ``slot``
+    gains ``slot_timestamp``, ``inserted_at`` and the ``date`` partition,
+    which a read lists last; the one-row config tables gain
+    ``inserted_at``."""
+    ts = T.TimestampType()
+    if "slot" not in declared.names:
+        return T.StructType([*declared, T.StructField("inserted_at", ts)])
+    return T.StructType([
+        *declared,
+        T.StructField("slot_timestamp", ts),
+        T.StructField("inserted_at", ts),
+        T.StructField("date", T.DateType()),
+    ])
+
+
+# passed to every raw read, so a read infers no schema with a Spark job
+_RAW_STORED = {t: _stored_schema(s) for t, s in RAW_TABLES.items()}
 
 
 def _swap_in(path: str, tmp: str, write) -> None:
@@ -194,8 +216,13 @@ class ParquetLake:
 
     def read(self, table: str) -> DataFrame:
         """Raw append-only read — duplicates (re-orgs, re-transforms)
-        included. Most callers want :meth:`read_latest`."""
-        return self.spark.read.parquet(self.path(table))
+        included. Most callers want :meth:`read_latest`. A raw table is
+        read with the schema its writes store; other tables' schemas are
+        inferred from their files."""
+        reader = self.spark.read
+        if table in _RAW_STORED:
+            reader = reader.schema(_RAW_STORED[table])
+        return reader.parquet(self.path(table))
 
     def read_latest(self, table: str, slot_range: tuple[int, int] | None = None) -> DataFrame:
         """FINAL-semantics read: latest version per table key, optional

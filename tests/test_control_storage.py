@@ -12,7 +12,7 @@ from beacon_indexer_spark.config import GNOSIS, MAINNET
 from beacon_indexer_spark.control import ledger as L
 from beacon_indexer_spark.measure import job_count, job_table
 from beacon_indexer_spark.plans.pipeline import BeaconPipeline
-from beacon_indexer_spark.schemas.raw import raw_envelope
+from beacon_indexer_spark.schemas.raw import RAW_TABLES, raw_envelope
 from beacon_indexer_spark.sources.storage import ParquetLake
 from tests import fixtures as FX
 
@@ -66,6 +66,24 @@ def test_lake_write_layout_and_latest(lake, spark):
     # storage stamps present
     cols = set(lake.read("raw_blocks").columns)
     assert {"slot_timestamp", "date", "inserted_at"} <= cols
+
+
+def test_raw_read_uses_the_stored_schema(lake, spark):
+    """Every raw table reads back without a schema-inference job, with the
+    schema Spark infers from the files ``ParquetLake.write`` stored: the
+    same column names and types, in the same order."""
+    for i, (table, declared) in enumerate(RAW_TABLES.items()):
+        if "slot" in declared.names:
+            df = _raw_df(spark, [FX.raw_row(SLOT0 + i, FX.block_payload(SLOT0 + i))])
+        else:
+            df = spark.createDataFrame([("{}", "h", FX.T0)], declared)
+        lake.write(table, df)
+        first = job_count(spark)
+        read = lake.read(table)
+        assert job_count(spark) == first, table
+        inferred = spark.read.parquet(lake.path(table))
+        assert [(f.name, f.dataType) for f in read.schema] \
+            == [(f.name, f.dataType) for f in inferred.schema], table
 
 
 def test_lake_slot_range_pushdown(lake, spark):
@@ -320,7 +338,8 @@ def test_transform_range_writes_each_table_once(spark, lake):
     re-fetch and a later re-org payload: one row per slot, the later
     payload wins, each table is written once with its rows counted during
     that write (the returned counts equal the rows read back), and the
-    range launches exactly its 16 Spark jobs."""
+    range launches exactly its 15 Spark jobs, each named by its table's
+    write."""
     rows = [FX.raw_row(SLOT0 + i, FX.block_payload(SLOT0 + i, proposer=i)) for i in range(6)]
     rows.append(FX.raw_row(SLOT0 + 1, FX.block_payload(SLOT0 + 1, proposer=1)))
     rows.append(FX.raw_row(SLOT0, FX.block_payload(SLOT0, proposer=99),
@@ -330,14 +349,14 @@ def test_transform_range_writes_each_table_once(spark, lake):
     counts = BeaconPipeline(lake).transform_range("raw_blocks", SLOT0, SLOT0 + 5)
     launched = job_count(spark) - first
     # 13 writes sharing one cached parse that the first write fills; a
-    # count job per table, or a concurrent write racing that fill, adds jobs
-    assert launched == 16, launched
+    # schema-inference read, a count job per table, or a concurrent write
+    # racing that fill adds jobs
+    assert launched == 15, launched
     assert len(counts) == 13
-    # after the raw read's schema job, each job names the table write that
-    # launched it, though the writes run from several threads at once
+    # each job names the table write that launched it, though the writes
+    # run from several threads at once
     descs = [j.description for j in job_table(spark, first, first + launched)]
-    assert descs[0] == "", descs
-    assert set(descs[1:]) == {f"bis:engine:write.{t}" for t in counts}, descs
+    assert set(descs) == {f"bis:engine:write.{t}" for t in counts}, descs
     # the fixture carries no execution requests: an empty table counts 0
     assert counts["execution_requests"] == 0 and not lake.exists("execution_requests")
     for table, n in counts.items():

@@ -13,6 +13,7 @@ import datetime as dt
 import pytest
 
 from beacon_indexer_spark.config import GNOSIS, MAINNET
+from beacon_indexer_spark.measure import plan_nodes
 from beacon_indexer_spark.plans import transform as T
 from beacon_indexer_spark.schemas.raw import raw_envelope
 from tests import fixtures as FX
@@ -289,3 +290,38 @@ def test_allowlist_prunes_parse_schema(spark):
     a = sorted(repr(sorted(r.asDict().items())) for r in narrow["attestations"].collect())
     b = sorted(repr(sorted(r.asDict().items())) for r in full["attestations"].collect())
     assert a == b and len(a) == 3
+
+
+def test_parse_cache_is_narrow_and_adaptively_sized(spark):
+    """A small blocks range's cached parse is coalesced to at most
+    ``defaultParallelism`` partitions (adaptive execution sizes the cached
+    plan), and a fan-out table's scan of it reads only its own body
+    subtree: the voluntary_exits scan carries no execution payload and no
+    attestations."""
+    rows = [FX.raw_row(27_000_000 + i, FX.block_payload(27_000_000 + i, version="deneb"))
+            for i in range(4)]
+    out = T.transform_blocks(_raw_df(spark, rows), GNOSIS, insert_version=1)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        assert out["blocks"].count() == 4  # fills the cache
+        new = set(jsc.getPersistentRDDs().keys()) - before
+        assert len(new) == 1, new
+        parts = jsc.getPersistentRDDs()[new.pop()].getNumPartitions()
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert parts <= spark.sparkContext.defaultParallelism and parts < shuffle_parts, parts
+
+        exits = out["voluntary_exits"]
+        scans = [n for n in plan_nodes(exits._jdf.queryExecution().executedPlan())
+                 if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
+        assert scans, "voluntary_exits does not read the parse cache"
+        read = []
+        for scan in scans:
+            attrs = scan.output().iterator()
+            while attrs.hasNext():
+                a = attrs.next()
+                read.append(f"{a.name()}:{a.dataType().json()}")
+        assert not [r for r in read if "execution_payload" in r or "attestations" in r], read
+        assert exits.count() == 4
+    finally:
+        out.unpersist()
