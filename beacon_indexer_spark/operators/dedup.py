@@ -26,27 +26,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from beacon_indexer_spark.measure import stage
-from beacon_indexer_spark.operators.text import fingerprint, word_shingles
+from beacon_indexer_spark.operators.text import fingerprint, tokens, word_shingles
 
 # 15 hex chars = 60 bits — fits signed 64-bit exactly, both engines.
 _HEX_PREFIX_LEN = 15
 
-# persisted handles created by probe=False (lazy both-branches) plans in
-# _pair_occurrences — plan annotations, not data-path actions. A session
-# that EXECUTES many such plans can release their caches deterministically:
-_LAZY_CACHES: list = []
-
-
-def release_lazy_caches() -> int:
-    """Unpersist every DataFrame cached by ``probe=False`` lazy plans and
-    return how many were released. Safe to call any time: unpersist on a
-    never-executed persist is a no-op, and blocks are dropped lazily so
-    in-flight jobs are unaffected."""
-    n = len(_LAZY_CACHES)
-    while _LAZY_CACHES:
-        _LAZY_CACHES.pop().unpersist()
-    return n
-
+# The row ceiling below which a measured node- or cluster-sized frame is
+# broadcast into its join: ~tens of MB for two long columns, low hundreds
+# at the ceiling. Shared by `connected_components`, `broadcast_if_small`
+# and `graph.pagerank`.
+BROADCAST_ROWS = 4_000_000
 
 def _md5_long(c: Column, salt: int) -> Column:
     """Deterministic 60-bit integer hash of a string, salted: engine-portable
@@ -164,7 +153,6 @@ def _pairs_from_buckets(
     id_col: str,
     *bucket_cols: str,
     max_bucket: int | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """(bucket → ids) groupBy, then expand pairs inside each bucket.
 
@@ -192,18 +180,9 @@ def _pairs_from_buckets(
     checkpoint. The probe is an eager action at plan-construction time —
     deliberate: it is how the physical plan is chosen, exactly like AQE's
     runtime re-planning.
-
-    ``probe=False`` builds the LAZY both-branches plan instead: in-row
-    expansion for buckets ≤ cap, distributed join for buckets > cap,
-    unioned unconditionally over a lazy checkpoint of the aggregation —
-    identical results, ZERO jobs at plan construction (asserted by
-    tests/test_dedup_scale.py::test_pairs_from_buckets_lazy_no_probe_job).
-    Use it from explain/audit paths that must not execute anything; the
-    eager probe stays the default because the clean no-overflow case then
-    skips the overflow branches' plan nodes entirely.
     """
     return _pair_occurrences(
-        keyed, id_col, *bucket_cols, max_bucket=max_bucket, probe=probe
+        keyed, id_col, *bucket_cols, max_bucket=max_bucket
     ).distinct()
 
 
@@ -213,7 +192,6 @@ def _pair_occurrences(
     *bucket_cols: str,
     df_cap: int | None = None,
     max_bucket: int | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Shared core of `_pairs_from_buckets` (distinct pairs) and
     `_counted_pairs_from_buckets` (shared-key counts): one row per
@@ -222,10 +200,7 @@ def _pair_occurrences(
 
     The probe is skipped entirely — no checkpoint, no extra job — when
     ``df_cap`` already bounds every bucket at or below ``max_bucket``
-    (overflow is impossible by construction). ``probe=False`` keeps the
-    cap but defers the decision to execution: both branches are planned
-    over a LAZY checkpoint (one materialization when the query runs, no
-    job now) — for callers that only explain/audit the plan.
+    (overflow is impossible by construction).
     """
     grouped = (
         keyed.groupBy(*bucket_cols)
@@ -237,7 +212,8 @@ def _pair_occurrences(
     cap_active = max_bucket is not None and not (
         df_cap is not None and df_cap <= max_bucket
     )
-    if cap_active and probe:
+    has_overflow = False
+    if cap_active:
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -245,24 +221,6 @@ def _pair_occurrences(
             obs, F.max(F.size("__ids")).alias("max_sz")
         ).localCheckpoint()
         has_overflow = (obs.get["max_sz"] or 0) > max_bucket
-    elif cap_active:
-        # lazy both-branches plan: no probe job. persist(), not a lazy
-        # localCheckpoint — converting an AQE plan to an RDD (which
-        # checkpointing does even with eager=False) already executes its
-        # shuffle stages; persist is a pure plan annotation, and at
-        # execution the first branch materializes the aggregation once
-        # for both filters. MEMORY_AND_DISK so a huge aggregation spills
-        # instead of evicting. The persisted handle is REGISTERED so a
-        # long-lived session that EXECUTES many probe=False plans can
-        # release the accumulated cache deterministically via
-        # release_lazy_caches() instead of waiting on LRU pressure.
-        from pyspark import StorageLevel
-
-        grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-        _LAZY_CACHES.append(grouped)
-        has_overflow = True
-    else:
-        has_overflow = False
     in_row = grouped if not has_overflow else grouped.filter(
         F.size("__ids") <= max_bucket
     )
@@ -292,7 +250,6 @@ def minhash_lsh_candidates(
     shingle_n: int = 3,
     max_bucket: int | None = 65536,
     sigs: DataFrame | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via LSH banding.
 
@@ -311,7 +268,7 @@ def minhash_lsh_candidates(
         df, id_col, text_col, k=k, bands=bands, shingle_n=shingle_n, sigs=sigs
     )
     return _pairs_from_buckets(
-        keyed, id_col, "band", "key", max_bucket=max_bucket, probe=probe
+        keyed, id_col, "band", "key", max_bucket=max_bucket
     )
 
 
@@ -665,7 +622,7 @@ def connected_components(
     max_iter: int = 25,
     node_col: str = "node",
     label_col: str = "cluster_id",
-    broadcast_rows: int | None = 4_000_000,
+    broadcast_rows: int | None = BROADCAST_ROWS,
 ) -> DataFrame:
     """Duplicate-cluster assignment from candidate pairs: (node, cluster_id)
     where cluster_id = the minimum id reachable through the pair graph —
@@ -680,11 +637,10 @@ def connected_components(
     equi-join (the neighbor and pointer-jump lookups union their request
     sets first) + a map-side-combined min agg — O(|E|+|V|) shuffle per
     round, nothing driver-side but the convergence counter. Convergence is
-    detected in the SAME job that materializes the round (ONE job per
-    round): each node's previous label rides through the union as
-    ``__old`` (max-folded in the same aggregate), and an ``observe``
-    metric counts improved labels while the checkpoint executes — no
-    separate join+count job.
+    detected in the job that materializes the round: each node's previous
+    label rides through the union as ``__old`` (max-folded in the same
+    aggregate), and an ``observe`` metric counts improved labels while the
+    checkpoint executes — no separate join+count job.
 
     Every round's result is ``localCheckpoint``ed: an iterative plan that
     references the previous round twice (label union + convergence join)
@@ -710,8 +666,13 @@ def connected_components(
     its probe job; ``node_col``/``label_col`` name the output columns at
     the source (a ``withColumnRenamed`` on top would shed the count).
 
-    The init job is described ``bis:<scope>:cc.init`` and round ``i``'s
-    job ``bis:<scope>:cc.round<i>``.
+    Jobs, read from their stage lists: init runs two, described
+    ``bis:<scope>:cc.init`` (the init aggregate's shuffle-map stage and
+    the checkpoint). Below the ceiling each round runs three, described
+    ``bis:<scope>:cc.round<i>``: the label frame's broadcast, the min
+    aggregate's shuffle-map stage, and the checkpoint's result stage,
+    which carries the ``observe`` metrics. Adaptive execution submits
+    each query stage as a job of its own.
     """
     from pyspark.sql import Observation
 
@@ -829,7 +790,7 @@ def connected_components(
 
 def broadcast_if_small(
     df: DataFrame,
-    max_rows: int = 4_000_000,
+    max_rows: int = BROADCAST_ROWS,
     expect_rows_known: bool = False,
 ) -> DataFrame:
     """Conditional broadcast for frames whose size is DATA-dependent —
@@ -1376,9 +1337,7 @@ def token_kgram_positions(
     empties dropped — the corpus-wide normalization shared with the
     shingle engine. Narrow map only (no shuffle); documents shorter than
     ``k`` tokens emit nothing."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     return (
         df.select(
             F.col(id_col).cast("long").alias("doc_id"),
@@ -1501,9 +1460,7 @@ def substring_dup_rate(
     covered = spans.groupBy("doc_id").agg(
         F.sum("n_tokens").cast("long").alias("dup_tokens")
     )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     sizes = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.size(toks).cast("long").alias("doc_tokens"),
@@ -1570,9 +1527,7 @@ def strip_spans(
     sp = spans.groupBy(F.col("doc_id").alias("__sid")).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     base = df.select(
         F.col(id_col).cast("long").alias("doc_id"), toks.alias("__toks")
     )

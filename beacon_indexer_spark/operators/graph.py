@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from beacon_indexer_spark.operators.dedup import BROADCAST_ROWS
+
 PAGERANK_SCALE = 10**12
 
 
@@ -64,10 +66,15 @@ def pagerank(
             f"scale <= {fit} (rank mass can concentrate on one hub, so "
             "the worst-case incoming sum is the whole |V|*scale mass)"
         )
+    # the measured |V| fixes the rank-degree join: below the broadcast
+    # ceiling the degree side is broadcast, and every iteration reuses
+    # that one broadcast (left to adaptive execution, the first
+    # iteration's build side varied from run to run)
+    deg_side = F.broadcast(deg) if n_nodes <= BROADCAST_ROWS else deg
     ranks = deg.select("src", F.lit(scale).cast("long").alias("__r"))
     base = (100 - damping_pct) * scale
     for _ in range(iterations):
-        share = ranks.join(deg, "src").select(
+        share = ranks.join(deg_side, "src").select(
             "src", F.expr("__r div __d").alias("__s")
         )
         contrib = (

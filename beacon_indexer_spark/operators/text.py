@@ -929,9 +929,7 @@ def hashed_classifier_score(
     identically (the `quantized_topk` discipline), and the label
     derives from the UNROUNDED score."""
     half = (n_weights - 1) // 2
-    toks = F.filter(
-        F.split(F.lower(_col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens(F.lower(_col(text_col)))
 
     def w(t: Column) -> Column:
         h = F.conv(

@@ -14,9 +14,9 @@ partition overwrite.
 from __future__ import annotations
 
 import time
-from functools import partial, reduce
+from functools import cached_property, partial, reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from beacon_indexer_spark.config import ForkSchedule
@@ -29,6 +29,14 @@ from beacon_indexer_spark.control.ledger import (
 )
 from beacon_indexer_spark.functions.core import run_concurrently
 from beacon_indexer_spark.measure import stage
+from beacon_indexer_spark.operators.dedup import (
+    broadcast_if_small,
+    connected_components,
+    cross_corpus_contamination_spans,
+    minhash_lsh_candidates,
+)
+from beacon_indexer_spark.operators.sampling import leakage_safe_split, split_assign
+from beacon_indexer_spark.operators.text import quality_score, token_count, tokens
 from beacon_indexer_spark.plans.transform import TRANSFORMS, TransformResult, transform_blocks
 from beacon_indexer_spark.schemas.structured import RAW_TO_STRUCTURED
 from beacon_indexer_spark.sources import beacon_api as B
@@ -269,33 +277,95 @@ class BeaconPipeline:
         )
 
 
-class CurationRun:
-    """The STAGED curation pipeline: compute the LSH→connected-components
-    duplicate-cluster frame ONCE, then derive the keep-list, the curation
-    manifest, and the executive summary from that one staged frame.
+# ---------------------------------------------------------------- curation
+#
+# The curation policy. Each rule is written once, here: `CurationRun`'s
+# methods and the streaming decision (`streaming.curation.admit_decision`)
+# build their columns from these, so batch and streaming curation cannot
+# drift apart.
 
-    This is the only implementation of the dedup outputs: the spine
-    queries in plans/queries.py (`doc_keep_list`, `doc_curation_manifest`,
-    `corpus_dedup_summary`, ...) each build one run and return one of its
-    frames, so the DuckDB oracle gate checks this code. The CC output is
+DEFAULT_SPLIT_FRACS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
+
+
+def doc_token_count(text_col: str) -> Column:
+    """A document's lowercase whitespace token count: the unit the
+    decontamination spans are measured in, so the denominator of its
+    contamination rate."""
+    return F.size(tokens(F.lower(F.col(text_col)))).cast("long")
+
+
+def quality_pass(q6: Column, threshold: float) -> Column:
+    """1 when the rounded quality score reaches ``threshold``, else 0."""
+    return (q6 >= threshold).cast("int")
+
+
+def included(keep: Column, q_pass: Column) -> Column:
+    """1 for a kept copy that passes the quality gate, else 0."""
+    return (keep.cast("boolean") & q_pass.cast("boolean")).cast("int")
+
+
+def contaminated_tokens(spans: DataFrame) -> DataFrame:
+    """(doc_id, contam_tokens) from contamination spans. Spans are
+    disjoint maximal runs, so their lengths sum to the exact count."""
+    return spans.groupBy("doc_id").agg(
+        F.sum("n_tokens").cast("long").alias("contam_tokens")
+    )
+
+
+def contamination(
+    contam_tokens: Column,
+    doc_tokens: Column,
+    drop_threshold: float,
+    trim_threshold: float,
+) -> tuple[Column, Column, Column]:
+    """(contam_tokens, contam_rate, verdict) of a document, from its
+    contaminated-token count (NULL when no span touches it) and its
+    token count: 'drop' above ``drop_threshold``, 'trim' at
+    ``trim_threshold`` or above, otherwise 'keep'. The rate is reported
+    rounded to 6 places; the verdict reads it unrounded."""
+    ct = F.coalesce(contam_tokens, F.lit(0)).cast("long")
+    rate = ct / F.greatest(doc_tokens, F.lit(1))
+    verdict = (
+        F.when(rate > drop_threshold, "drop")
+        .when(rate >= trim_threshold, "trim")
+        .otherwise("keep")
+    )
+    return ct, F.round(rate, 6), verdict
+
+
+def admitted(include: Column, verdict: Column) -> Column:
+    """1 for an included document that decontamination does not drop. A
+    trimmed document stays admitted; `strip_spans` removes its spans on
+    the way out."""
+    return (include.cast("boolean") & (verdict != "drop")).cast("int")
+
+
+class CurationRun:
+    """Batch curation of one corpus: LSH→connected-components duplicate
+    clusters, the keep policy, the quality gate, the split and, with
+    ``test_docs``, benchmark decontamination. It is the only
+    implementation of these outputs: the spine and decontamination
+    queries in plans/queries.py (`doc_curation_manifest`,
+    `corpus_dedup_summary`, `doc_contamination_verdict`, ...) each build
+    a run and return one of its frames, so the DuckDB oracle gate checks
+    this code.
+
+    Building a run launches no Spark job. The cluster frame is staged on
+    first access of ``clusters``, once per run: it is
     `localCheckpoint`-backed and carries its observed row count, so
     `broadcast_if_small` decides broadcast or shuffle join without a
-    probe job, and every derived frame reads the staged blocks — one
-    signature/banding pass per run, machine-asserted by
-    tests/test_custom_joins_curation.py::test_curation_run_stages_clusters_once.
+    probe job, and every method that reads it shares one signature and
+    banding pass (tests/test_custom_joins_curation.py). A run used only
+    for decontamination never stages it.
 
-    With ``test_docs`` set, the run also stages benchmark DECONTAMINATION
-    on the same discipline: the contamination-span frame is computed once
-    (lazily, localCheckpoint-backed) and `contamination_spans` /
-    `contamination_verdict` (column-identical to
-    `corpus_decontamination_spans` / `doc_contamination_verdict`) and
-    `decision` — the manifest extended with the keep/trim/drop verdict
-    and the final ``admit`` flag — all read the staged blocks, so one
-    staged run emits the full curation decision.
+    The contamination-span frame is staged only by `decision`, the one
+    method that reads both frames; it stages the two from two driver
+    threads. `contamination_spans` and `contamination_verdict` have a
+    single consumer each and read the spans unstaged.
 
     The staging jobs are described ``bis:<scope>:curation.clusters`` and
     ``bis:<scope>:curation.contamination``; the connected-components
-    rounds inside the first are ``cc.init`` and ``cc.round<i>``.
+    jobs inside the first are ``cc.init`` and ``cc.round<i>``.
     """
 
     def __init__(
@@ -315,12 +385,6 @@ class CurationRun:
         drop_threshold: float = 0.5,
         trim_threshold: float = 0.05,
     ) -> None:
-        from beacon_indexer_spark.operators.dedup import (
-            broadcast_if_small,
-            connected_components,
-            minhash_lsh_candidates,
-        )
-
         if keep_policy not in ("min_id", "best_quality"):
             raise ValueError(
                 f"keep_policy must be 'min_id' or 'best_quality', got {keep_policy!r}"
@@ -330,48 +394,48 @@ class CurationRun:
         self.text_col = text_col
         self.quality_threshold = quality_threshold
         self.keep_policy = keep_policy
-        self.split_fracs = split_fracs or [
-            ("train", 0.8), ("val", 0.1), ("test", 0.1)
-        ]
-        # decontamination stage (optional): the held-out eval corpus whose
+        self.split_fracs = split_fracs or DEFAULT_SPLIT_FRACS
+        self._pairs = partial(
+            minhash_lsh_candidates, docs, id_col, text_col, k=k, bands=bands,
+            shingle_n=shingle_n, max_bucket=max_bucket,
+        )
+        # decontamination (optional): the held-out eval corpus whose
         # k-gram spans must be flagged/stripped from the training docs
         self.test_docs = test_docs
         self.decon_k = decon_k
         self.drop_threshold = drop_threshold
         self.trim_threshold = trim_threshold
-        self._contam: DataFrame | None = None
 
-        def _stage_clusters() -> DataFrame:
-            with stage("curation.clusters"):
-                pairs = minhash_lsh_candidates(
-                    docs, id_col, text_col, k=k, bands=bands,
-                    shingle_n=shingle_n, max_bucket=max_bucket,
-                )
-                # staged once: checkpoint-backed, conditionally broadcast-
-                # hinted (raw-crawl dup rates fall back to a shuffle join);
-                # node_col at the source keeps CC's observed row count on
-                # the frame so broadcast_if_small skips its probe job
-                return broadcast_if_small(
-                    connected_components(pairs, node_col=id_col),
-                    expect_rows_known=True,
-                )
-
-        if test_docs is None:
-            self.clusters = _stage_clusters()
-        else:
-            # the two stagings are INDEPENDENT — the LSH→CC cluster chain
-            # (bucket probe + per-round CC jobs) and the decon gram join
-            # don't read each other — so materialize them from two driver
-            # threads and let the scheduler interleave their jobs. Each
-            # staged frame is still computed exactly once.
-            self.clusters, _ = run_concurrently(
-                [_stage_clusters, self._contamination], max_workers=2
+    @cached_property
+    def clusters(self) -> DataFrame:
+        """(doc_id, cluster_id) of every document in a duplicate cluster,
+        staged on first access: checkpoint-backed and broadcast-hinted
+        below the ceiling (raw-crawl dup rates fall back to a shuffle
+        join). ``node_col`` at the source keeps CC's observed row count
+        on the frame, so `broadcast_if_small` skips its probe job."""
+        with stage("curation.clusters"):
+            return broadcast_if_small(
+                connected_components(self._pairs(), node_col=self.id_col),
+                expect_rows_known=True,
             )
 
-    def _spine(self) -> DataFrame:
-        return self.docs.select(
-            F.col(self.id_col).cast("long").alias(self.id_col)
-        )
+    def _clustered(self, spine: DataFrame) -> tuple[DataFrame, Column]:
+        """``spine`` left-joined to the cluster frame, and the resolved
+        cluster id (a singleton is its own cluster)."""
+        joined = spine.join(self.clusters, self.id_col, "left")
+        return joined, F.coalesce(F.col("cluster_id"), F.col(self.id_col))
+
+    def _id(self) -> Column:
+        return F.col(self.id_col).cast("long").alias(self.id_col)
+
+    def _q6(self) -> Column:
+        return F.round(quality_score(self.text_col), 6).alias("q6")
+
+    def _policy_cols(self) -> list[Column]:
+        """The id, and q6 when the keep policy ranks by it."""
+        if self.keep_policy == "best_quality":
+            return [self._id(), self._q6()]
+        return [self._id()]
 
     def _keep_col(self, cid):
         """The keep verdict under the configured policy, evaluated over a
@@ -393,37 +457,23 @@ class CurationRun:
         """(doc_id, cluster_id, [q6,] keep) — `doc_keep_list` (min_id
         policy) / `doc_keep_best` (best_quality policy), reading the
         staged cluster frame."""
-        from beacon_indexer_spark.operators.text import quality_score
-
-        spine = self._spine()
-        if self.keep_policy == "best_quality":
-            spine = self.docs.select(
-                F.col(self.id_col).cast("long").alias(self.id_col),
-                F.round(quality_score(self.text_col), 6).alias("q6"),
-            )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
+        joined, cid = self._clustered(self.docs.select(*self._policy_cols()))
         cols = [self.id_col, cid.cast("long").alias("cluster_id")]
         if self.keep_policy == "best_quality":
             cols.append(F.col("q6"))
         return joined.select(*cols, self._keep_col(cid).alias("keep"))
 
-    def manifest(self) -> DataFrame:
-        """(doc_id, cluster_id, keep, q6, q_pass, split, include) —
-        `doc_curation_manifest`; under ``best_quality`` the keep flag
-        follows `doc_keep_best`."""
-        from beacon_indexer_spark.operators.sampling import split_assign
-        from beacon_indexer_spark.operators.text import quality_score
-
+    def _manifest(self, *extra: Column) -> DataFrame:
+        """`manifest`'s columns, followed by the ``extra`` docs columns."""
         spine = self.docs.select(
-            F.col(self.id_col).cast("long").alias(self.id_col),
-            F.round(quality_score(self.text_col), 6).alias("q6"),
+            self._id(),
+            self._q6(),
             split_assign(F.col(self.id_col), self.split_fracs).alias("split"),
+            *extra,
         )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
+        joined, cid = self._clustered(spine)
         keep = self._keep_col(cid)
-        q_pass = (F.col("q6") >= self.quality_threshold).cast("int")
+        q_pass = quality_pass(F.col("q6"), self.quality_threshold)
         return joined.select(
             self.id_col,
             cid.cast("long").alias("cluster_id"),
@@ -431,10 +481,15 @@ class CurationRun:
             "q6",
             q_pass.alias("q_pass"),
             "split",
-            (keep.cast("boolean") & q_pass.cast("boolean"))
-            .cast("int")
-            .alias("include"),
+            included(keep, q_pass).alias("include"),
+            *spine.columns[3:],
         )
+
+    def manifest(self) -> DataFrame:
+        """(doc_id, cluster_id, keep, q6, q_pass, split, include) —
+        `doc_curation_manifest`; under ``best_quality`` the keep flag
+        follows `doc_keep_best`."""
+        return self._manifest()
 
     def summary(self) -> DataFrame:
         """One-row rollup — `corpus_dedup_summary`."""
@@ -465,8 +520,7 @@ class CurationRun:
         """(cluster_size, n_clusters, n_docs) — `dedup_cluster_size_dist`,
         reading the staged cluster frame (singletons included via the
         coalesce-to-own-id spine)."""
-        joined = self._spine().join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
+        joined, cid = self._clustered(self.docs.select(self._id()))
         sizes = joined.select(cid.alias("__cid")).groupBy("__cid").agg(
             F.count(F.lit(1)).alias("__sz")
         )
@@ -487,21 +541,11 @@ class CurationRun:
         """Docs spine + resolved cluster id + configured keep verdict —
         the shared base for the budget/length rollups. Carries q6 when
         the policy needs it."""
-        from beacon_indexer_spark.operators.text import (
-            quality_score,
-            token_count,
-        )
-
-        cols = [F.col(self.id_col).cast("long").alias(self.id_col)]
-        if self.keep_policy == "best_quality":
-            cols.append(F.round(quality_score(self.text_col), 6).alias("q6"))
-        spine = self.docs.select(
-            *cols,
+        joined, cid = self._clustered(self.docs.select(
+            *self._policy_cols(),
             F.col(source_col).alias("source"),
             token_count(self.text_col).cast("long").alias("__nt"),
-        )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
+        ))
         return joined.select(
             self.id_col,
             "source",
@@ -570,138 +614,86 @@ class CurationRun:
         """(doc_id, cluster_id, split, naive_split, moved) —
         `split_leakage_guard`: split verdicts hash the staged CLUSTER id
         so near-copies never straddle the eval boundary."""
-        from beacon_indexer_spark.operators.sampling import leakage_safe_split
-
         return leakage_safe_split(
             self.docs, self.clusters, self.id_col,
             train_rate=train_rate, salt=salt,
         )
 
-    # ------------------------------------------------ decontamination stage
+    # ------------------------------------------------ decontamination
 
-    def _contamination(self) -> DataFrame:
-        """Staged contamination-span frame: `cross_corpus_contamination_
-        spans` of the training docs against ``test_docs``, computed ONCE
-        per run (localCheckpoint-backed, lazily on first access so runs
-        without a decon stage pay nothing). Every decon-derived frame
-        reads these blocks — one gram join per run, same staging
-        discipline as the LSH→CC cluster frame."""
+    def _spans(self) -> DataFrame:
+        """`cross_corpus_contamination_spans` of the training docs
+        against ``test_docs``, unstaged."""
         if self.test_docs is None:
             raise ValueError(
                 "CurationRun built without test_docs; pass the held-out "
                 "eval corpus to enable the decontamination stage"
             )
-        if self._contam is None:
-            from beacon_indexer_spark.operators.dedup import (
-                cross_corpus_contamination_spans,
-            )
+        return cross_corpus_contamination_spans(
+            self.docs, self.test_docs, self.id_col, self.text_col,
+            k=self.decon_k,
+        )
 
-            with stage("curation.contamination"):
-                self._contam = cross_corpus_contamination_spans(
-                    self.docs, self.test_docs, self.id_col, self.text_col,
-                    k=self.decon_k,
-                ).localCheckpoint()
-        return self._contam
+    @cached_property
+    def _staged_spans(self) -> DataFrame:
+        """The span frame, staged once per run (localCheckpoint)."""
+        with stage("curation.contamination"):
+            return self._spans().localCheckpoint()
 
     def contamination_spans(self) -> DataFrame:
-        """(doc_id, span_start, span_end, n_tokens) — column-identical to
-        `corpus_decontamination_spans`, reading the staged span frame."""
-        return self._contamination().select(
+        """(doc_id, span_start, span_end, n_tokens) —
+        `corpus_decontamination_spans`."""
+        return self._spans().select(
             "doc_id", "span_start", "span_end", "n_tokens"
         )
 
     def contamination_verdict(self) -> DataFrame:
         """(doc_id, doc_tokens, contam_tokens, contam_rate, verdict) —
-        column-identical to `doc_contamination_verdict`: per-doc
-        contaminated-token coverage with the keep/trim/drop policy
-        (drop above ``drop_threshold``, trim at ``trim_threshold``+)."""
-        covered = self._contamination().groupBy("doc_id").agg(
-            F.sum("n_tokens").cast("long").alias("contam_tokens")
-        )
-        toks = F.filter(
-            F.split(F.lower(F.col(self.text_col)), r"\s+"), lambda t: t != ""
-        )
+        `doc_contamination_verdict`: each training doc's
+        contaminated-token share and the keep/trim/drop verdict."""
         base = self.docs.select(
             F.col(self.id_col).cast("long").alias("doc_id"),
-            F.size(toks).cast("long").alias("doc_tokens"),
+            doc_token_count(self.text_col).alias("doc_tokens"),
         )
-        rate = F.coalesce("contam_tokens", F.lit(0)) / F.greatest(
-            "doc_tokens", F.lit(1)
+        ct, rate, verdict = contamination(
+            F.col("contam_tokens"), F.col("doc_tokens"),
+            self.drop_threshold, self.trim_threshold,
         )
+        covered = contaminated_tokens(self._spans())
         return base.join(covered, "doc_id", "left").select(
             "doc_id",
             "doc_tokens",
-            F.coalesce("contam_tokens", F.lit(0))
-            .cast("long")
-            .alias("contam_tokens"),
-            F.round(rate, 6).alias("contam_rate"),
-            F.when(rate > self.drop_threshold, "drop")
-            .when(rate >= self.trim_threshold, "trim")
-            .otherwise("keep")
-            .alias("verdict"),
+            ct.alias("contam_tokens"),
+            rate.alias("contam_rate"),
+            verdict.alias("verdict"),
         )
 
     def decision(self) -> DataFrame:
-        """The FULL curation decision from one staged run: `manifest()`'s
-        dedup/quality/split columns extended with the decon verdict —
-        (doc_id, cluster_id, keep, q6, q_pass, split, include,
-        contam_tokens, contam_rate, contam_verdict, admit), where
-        ``admit`` = include AND contam_verdict != 'drop' (trimmed docs
-        stay admitted; their spans are stripped by `strip_spans` on the
-        way out). Both staged frames (clusters, contamination spans) are
-        read from checkpoint blocks — no LSH/CC or gram join re-runs.
+        """The full curation decision: `manifest`'s columns extended with
+        the decontamination verdict — (doc_id, cluster_id, keep, q6,
+        q_pass, split, include, contam_tokens, contam_rate,
+        contam_verdict, admit). It stages the clusters and the spans
+        concurrently; every column then reads their checkpoint blocks.
 
-        One corpus scan computes q6, split AND the token count the
-        contamination rate divides by; the tiny per-doc coverage
+        One corpus scan computes q6, split and the token count the
+        contamination rate divides by; the small per-doc coverage
         aggregate (contaminated docs only) left-joins in, so the verdict
         costs no second corpus scan or corpus-sized join."""
-        from beacon_indexer_spark.operators.sampling import split_assign
-        from beacon_indexer_spark.operators.text import quality_score
-
-        toks = F.filter(
-            F.split(F.lower(F.col(self.text_col)), r"\s+"), lambda t: t != ""
+        run_concurrently(
+            [lambda: self.clusters, lambda: self._staged_spans], max_workers=2
         )
-        spine = self.docs.select(
-            F.col(self.id_col).cast("long").alias(self.id_col),
-            F.round(quality_score(self.text_col), 6).alias("q6"),
-            split_assign(F.col(self.id_col), self.split_fracs).alias("split"),
-            F.size(toks).cast("long").alias("__doc_tokens"),
+        man = self._manifest(doc_token_count(self.text_col).alias("__doc_tokens"))
+        covered = contaminated_tokens(self._staged_spans).withColumnRenamed(
+            "doc_id", self.id_col
         )
-        joined = spine.join(self.clusters, self.id_col, "left")
-        covered = self._contamination().groupBy("doc_id").agg(
-            F.sum("n_tokens").cast("long").alias("contam_tokens")
+        ct, rate, verdict = contamination(
+            F.col("contam_tokens"), F.col("__doc_tokens"),
+            self.drop_threshold, self.trim_threshold,
         )
-        joined = joined.join(
-            covered.withColumnRenamed("doc_id", self.id_col),
-            self.id_col,
-            "left",
-        )
-        cid = F.coalesce(F.col("cluster_id"), F.col(self.id_col))
-        keep = self._keep_col(cid)
-        q_pass = (F.col("q6") >= self.quality_threshold).cast("int")
-        include = (keep.cast("boolean") & q_pass.cast("boolean")).cast("int")
-        rate = F.coalesce("contam_tokens", F.lit(0)) / F.greatest(
-            "__doc_tokens", F.lit(1)
-        )
-        verdict = (
-            F.when(rate > self.drop_threshold, "drop")
-            .when(rate >= self.trim_threshold, "trim")
-            .otherwise("keep")
-        )
-        return joined.select(
-            self.id_col,
-            cid.cast("long").alias("cluster_id"),
-            keep.alias("keep"),
-            "q6",
-            q_pass.alias("q_pass"),
-            "split",
-            include.alias("include"),
-            F.coalesce("contam_tokens", F.lit(0))
-            .cast("long")
-            .alias("contam_tokens"),
-            F.round(rate, 6).alias("contam_rate"),
+        return man.join(covered, self.id_col, "left").select(
+            *man.columns[:-1],  # all but __doc_tokens
+            ct.alias("contam_tokens"),
+            rate.alias("contam_rate"),
             verdict.alias("contam_verdict"),
-            (include.cast("boolean") & (verdict != "drop"))
-            .cast("int")
-            .alias("admit"),
+            admitted(F.col("include"), verdict).alias("admit"),
         )

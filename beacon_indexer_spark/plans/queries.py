@@ -40,7 +40,11 @@ from beacon_indexer_spark.operators import sampling as SP
 from beacon_indexer_spark.operators import similarity as S
 from beacon_indexer_spark.operators import sketch as KV
 from beacon_indexer_spark.operators import text as X
-from beacon_indexer_spark.plans.pipeline import CurationRun
+from beacon_indexer_spark.plans.pipeline import (
+    DEFAULT_SPLIT_FRACS,
+    CurationRun,
+    quality_pass,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -765,15 +769,28 @@ WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.1
 
 _MINHASH_K = 8
 _MINHASH_BANDS = 4
-_SPLIT_FRACS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
+
+
+def _run(docs: DataFrame, **kw) -> CurationRun:
+    """A curation run with the query surface's LSH constants."""
+    return CurationRun(
+        docs, k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3, **kw
+    )
 
 
 def _curation(spark: SparkSession, sf_dir: str, **kw) -> CurationRun:
-    """The staged curation run over the documents table with the query
-    surface's LSH and split constants."""
-    return CurationRun(
-        _ts(spark, sf_dir, "documents"), k=_MINHASH_K, bands=_MINHASH_BANDS,
-        shingle_n=3, split_fracs=_SPLIT_FRACS, **kw,
+    """The curation run over the documents table."""
+    return _run(_ts(spark, sf_dir, "documents"), **kw)
+
+
+def _src0_curation(spark: SparkSession, sf_dir: str) -> CurationRun:
+    """The curation run over the documents outside source 'src0', with
+    src0 as the held-out benchmark that decontamination checks them
+    against."""
+    docs = _ts(spark, sf_dir, "documents")
+    return _run(
+        docs.filter(F.col("source") != "src0"),
+        test_docs=docs.filter(F.col("source") == "src0"),
     )
 
 
@@ -4477,7 +4494,7 @@ def q_doc_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregate."""
     docs = _ts(spark, sf_dir, "documents")
     base = docs.select(
-        SP.split_assign(F.col("doc_id"), _SPLIT_FRACS).alias("split"),
+        SP.split_assign(F.col("doc_id"), DEFAULT_SPLIT_FRACS).alias("split"),
         "lang",
         X.token_count("text").alias("__nt"),
     )
@@ -5435,7 +5452,7 @@ FROM q LEFT JOIN cl ON cl.doc_id = q.doc_id
 
 
 def q_doc_curation_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL curation decision from ONE staged run — this query
+    """The FULL curation decision from ONE run — this query
     executes `plans/pipeline.py CurationRun.decision()`, so the decon
     stage is oracle-gated end-to-end like the other spine queries: src0
     plays the held-out benchmark, the rest of the corpus is the training
@@ -5445,14 +5462,7 @@ def q_doc_curation_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived column reads the staged blocks; the oracle re-derives the
     identical decision from raw SQL (train-restricted LSH→CC recursive
     closure + gram-join decon)."""
-    docs = _ts(spark, sf_dir, "documents")
-    train = docs.filter(F.col("source") != "src0")
-    test = docs.filter(F.col("source") == "src0")
-    run = CurationRun(
-        train, k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3,
-        split_fracs=_SPLIT_FRACS, test_docs=test, decon_k=8,
-    )
-    return run.decision()
+    return _src0_curation(spark, sf_dir).decision()
 
 
 def _oracle_doc_curation_decision_sql() -> str:
@@ -7745,7 +7755,7 @@ def q_doc_quality_vs_dup_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = (
         F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
     ).cast("int")
-    q_pass = (F.col("__q6") >= 0.5).cast("int")
+    q_pass = quality_pass(F.col("__q6"), run.quality_threshold)
     return (
         joined.select(
             q_pass.alias("q_pass"), keep.alias("keep"), F.col("__nt")
@@ -20395,20 +20405,15 @@ ORDER BY source
 def q_corpus_decontamination_spans(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Benchmark decontamination (operators/dedup.py
-    cross_corpus_contamination_spans): documents from source 'src0' play
-    the held-out evaluation set; every span in the REST of the corpus
-    covered by an 8-token shingle that appears anywhere in src0 is
-    flagged for removal before training. The test side reduces to a
-    DISTINCT gram set (bounded by the benchmark size); the train side
-    pays one equi-join — strictly cheaper than full substring dedup, no
-    self-pairing anywhere."""
-    docs = _ts(spark, sf_dir, "documents")
-    test = docs.filter(F.col("source") == "src0")
-    train = docs.filter(F.col("source") != "src0")
-    return D.cross_corpus_contamination_spans(
-        train, test, "doc_id", "text", k=8
-    ).select("doc_id", "span_start", "span_end", "n_tokens")
+    """Benchmark decontamination (`CurationRun.contamination_spans`, over
+    operators/dedup.py cross_corpus_contamination_spans): documents from
+    source 'src0' play the held-out evaluation set; every span in the
+    REST of the corpus covered by an 8-token shingle that appears
+    anywhere in src0 is flagged for removal before training. The test
+    side reduces to a DISTINCT gram set (bounded by the benchmark size);
+    the train side pays one equi-join — strictly cheaper than full
+    substring dedup, no self-pairing anywhere."""
+    return _src0_curation(spark, sf_dir).contamination_spans()
 
 
 _DECON_SPANS_CTE = r"""
@@ -20455,20 +20460,16 @@ FROM spans
 def q_corpus_decontaminated_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Span REMOVAL applied (operators/dedup.py strip_spans): the train
-    corpus with every src0-contaminated span stripped — per doc the
+    """Span REMOVAL applied (operators/dedup.py strip_spans over
+    `CurationRun.contamination_spans`): the train corpus with every
+    src0-contaminated span stripped — per doc the
     original/kept token counts and the md5 of the reconstructed clean
     text, which pins the rebuilt string byte-for-byte against the
     oracle's independent reconstruction (positions → anti-range filter →
     ordered string_agg). One HOF filter per doc, tokens never explode on
     the Spark side."""
-    docs = _ts(spark, sf_dir, "documents")
-    test = docs.filter(F.col("source") == "src0")
-    train = docs.filter(F.col("source") != "src0")
-    spans = D.cross_corpus_contamination_spans(
-        train, test, "doc_id", "text", k=8
-    )
-    out = D.strip_spans(train, spans, "doc_id", "text")
+    run = _src0_curation(spark, sf_dir)
+    out = D.strip_spans(run.docs, run.contamination_spans(), "doc_id", "text")
     return out.select(
         "doc_id",
         "orig_tokens",
@@ -20508,44 +20509,15 @@ WHERE t.source <> 'src0'
 def q_doc_contamination_verdict(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Per-document decontamination ACTION (the layer a curation run
-    executes on top of `corpus_decontamination_spans`): every train doc
+    """Per-document decontamination ACTION
+    (`CurationRun.contamination_verdict`, on top of
+    `corpus_decontamination_spans`): every train doc
     gets a total verdict from its src0-contaminated token fraction —
     'keep' (< 5% contaminated), 'trim' (5-50%: strip the spans, keep the
     rest), 'drop' (> 50%: mostly benchmark text). The span aggregation
     is a per-doc sum of disjoint maximal runs (exact); docs with no
     contamination report rate 0 through the left join."""
-    docs = _ts(spark, sf_dir, "documents")
-    test = docs.filter(F.col("source") == "src0")
-    train = docs.filter(F.col("source") != "src0")
-    spans = D.cross_corpus_contamination_spans(
-        train, test, "doc_id", "text", k=8
-    )
-    covered = spans.groupBy("doc_id").agg(
-        F.sum("n_tokens").cast("long").alias("contam_tokens")
-    )
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
-    base = train.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(toks).cast("long").alias("doc_tokens"),
-    )
-    rate = F.coalesce("contam_tokens", F.lit(0)) / F.greatest(
-        "doc_tokens", F.lit(1)
-    )
-    return base.join(covered, "doc_id", "left").select(
-        "doc_id",
-        "doc_tokens",
-        F.coalesce("contam_tokens", F.lit(0))
-        .cast("long")
-        .alias("contam_tokens"),
-        F.round(rate, 6).alias("contam_rate"),
-        F.when(rate > 0.5, "drop")
-        .when(rate >= 0.05, "trim")
-        .otherwise("keep")
-        .alias("verdict"),
-    )
+    return _src0_curation(spark, sf_dir).contamination_verdict()
 
 
 ORACLE_DOC_CONTAMINATION_VERDICT = (
@@ -20577,55 +20549,23 @@ def q_corpus_decontamination_summary(
     `corpus_dedup_summary` convention): keep/trim/drop document counts,
     affected-doc count, and the contaminated-token share of the training
     corpus — the numbers a curation run reports before deciding whether
-    span-stripping is worth a rewrite. Composes the per-doc verdict
-    (doc_contamination_verdict semantics) and reduces it to one row:
-    everything after the gram equi-join is |train docs| rows into one
-    aggregate."""
-    docs = _ts(spark, sf_dir, "documents")
-    test = docs.filter(F.col("source") == "src0")
-    train = docs.filter(F.col("source") != "src0")
-    spans = D.cross_corpus_contamination_spans(
-        train, test, "doc_id", "text", k=8
-    )
-    covered = spans.groupBy("doc_id").agg(
-        F.sum("n_tokens").cast("long").alias("contam_tokens")
-    )
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
-    base = train.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(toks).cast("long").alias("doc_tokens"),
-    )
-    rate = F.coalesce("contam_tokens", F.lit(0)) / F.greatest(
-        "doc_tokens", F.lit(1)
-    )
-    per_doc = base.join(covered, "doc_id", "left").select(
-        "doc_tokens",
-        F.coalesce("contam_tokens", F.lit(0)).alias("ct"),
-        F.when(rate > 0.5, "drop")
-        .when(rate >= 0.05, "trim")
-        .otherwise("keep")
-        .alias("verdict"),
-    )
+    span-stripping is worth a rewrite. One aggregate over the per-doc
+    verdict (`CurationRun.contamination_verdict`): everything after the
+    gram equi-join is |train docs| rows into one row."""
+    per_doc = _src0_curation(spark, sf_dir).contamination_verdict()
     return per_doc.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum((F.col("verdict") == "keep").cast("int"))
-        .cast("long")
-        .alias("n_keep"),
-        F.sum((F.col("verdict") == "trim").cast("int"))
-        .cast("long")
-        .alias("n_trim"),
-        F.sum((F.col("verdict") == "drop").cast("int"))
-        .cast("long")
-        .alias("n_drop"),
-        F.sum((F.col("ct") > 0).cast("int"))
+        *[
+            F.sum((F.col("verdict") == v).cast("int")).cast("long").alias(f"n_{v}")
+            for v in ("keep", "trim", "drop")
+        ],
+        F.sum((F.col("contam_tokens") > 0).cast("int"))
         .cast("long")
         .alias("docs_affected"),
         F.sum("doc_tokens").cast("long").alias("total_tokens"),
-        F.sum("ct").cast("long").alias("contam_tokens"),
+        F.sum("contam_tokens").cast("long").alias("contam_tokens"),
         F.round(
-            F.sum("ct").cast("double")
+            F.sum("contam_tokens").cast("double")
             / F.greatest(F.sum("doc_tokens"), F.lit(1)).cast("double"),
             6,
         ).alias("contam_token_share"),

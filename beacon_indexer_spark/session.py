@@ -56,8 +56,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE coalesce a cached plan's shuffle too (off by default, which
         # leaves the blocks parse cache at spark.sql.shuffle.partitions and
-        # every fan-out write at that many tasks and files); the cached
-        # plans are that parse and dedup's probe=False audit persist
+        # every fan-out write at that many tasks and files); the blocks
+        # parse is the package's only cached plan
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,13 +1,11 @@
-"""Streaming curation decision: the per-micro-batch ``admit`` verdict —
+"""Streaming curation decision: the per-micro-batch ``admit`` verdict,
 the Structured Streaming analogue of ``CurationRun.decision()``
 (plans/pipeline.py).
 
-Batch curation stages LSH->CC clustering, quality scoring, split
-assignment, and substring decontamination over the WHOLE corpus. A
-streaming ingest can't re-pair the stored corpus per batch; instead each
-of the three expensive stages runs in its proven incremental form
-(per-batch cost O(batch) against a stored index, the invariant
-`incremental_duplicates` / the substring-ingest path established):
+Batch curation clusters the WHOLE corpus (LSH->CC). A streaming ingest
+can't re-pair the stored corpus per batch, so dedup and decontamination
+run in their incremental form, with per-batch cost O(batch) against a
+stored index:
 
 - **dedup**: the batch's `minhash_band_keys` equi-join the ACCUMULATED
   band-key index (plus the batch's own earlier-id keys, so within-batch
@@ -20,11 +18,13 @@ of the three expensive stages runs in its proven incremental form
   pinned by the parity tests.
 - **decontamination**: the held-out eval corpus reduces ONCE to a stored
   DISTINCT k-gram index; each batch's `token_kgram_positions` equi-join
-  it, spans merge per doc, and the keep/trim/drop verdict applies the
-  same thresholds as the batch stage. The eval corpus is static, so this
-  index never grows with the stream.
-- **quality / split**: narrow per-row expressions (`quality_score`,
-  `split_assign`), identical in batch and streaming by construction.
+  it and spans merge per doc. The eval corpus is static, so this index
+  never grows with the stream.
+
+Everything else is the batch policy itself: the token count, quality
+gate, split, keep/trim/drop verdict, ``include`` and ``admit`` columns
+come from the rules next to `CurationRun` in plans/pipeline.py, so batch
+and streaming apply them identically by construction.
 
 ``admit`` = not-duplicate AND quality-pass AND contamination verdict !=
 'drop' — column-compatible with `CurationRun.decision()` (``dup_of``
@@ -43,6 +43,23 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beacon_indexer_spark.operators.dedup import (
+    _merge_marked_spans,
+    minhash_band_keys,
+    token_kgram_positions,
+)
+from beacon_indexer_spark.operators.sampling import split_assign
+from beacon_indexer_spark.operators.text import quality_score
+from beacon_indexer_spark.plans.pipeline import (
+    DEFAULT_SPLIT_FRACS,
+    admitted,
+    contaminated_tokens,
+    contamination,
+    doc_token_count,
+    included,
+    quality_pass,
+)
+
 
 def admit_decision(
     batch_df: DataFrame,
@@ -60,7 +77,6 @@ def admit_decision(
     decon_k: int = 8,
     drop_threshold: float = 0.5,
     trim_threshold: float = 0.05,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """The pure per-batch curation decision — a function of (batch,
     stored band-key index, eval-corpus distinct grams), no file IO:
@@ -70,29 +86,19 @@ def admit_decision(
     ``stored_keys`` is the accumulated (id, band, key) LSH index (None =
     empty corpus); ``batch_keys`` optionally supplies the batch's own
     band keys pre-staged (callers sharing one `minhash_band_keys` frame
-    across both sides); ``eval_grams`` the eval corpus's DISTINCT
-    ``gram`` column (None = no decon stage). Used by `StreamingCuration`
-    inside foreachBatch and exposed directly so the decision is
-    oracle-checkable as a batch query (`doc_streaming_admit` in
-    plans/queries.py runs it against a recursive-free DuckDB mirror of
-    the online semantics)."""
-    from beacon_indexer_spark.operators.dedup import (
-        _merge_marked_spans,
-        minhash_band_keys,
-        token_kgram_positions,
-    )
-    from beacon_indexer_spark.operators.sampling import split_assign
-    from beacon_indexer_spark.operators.text import quality_score
-
+    across both sides; without it the batch's keys are banded here and
+    localCheckpointed, since both sides of the dedup join read them);
+    ``eval_grams`` the eval corpus's DISTINCT ``gram`` column (None = no
+    decon stage). Used by `StreamingCuration` inside foreachBatch and
+    exposed directly so the decision is oracle-checkable as a batch query
+    (`doc_streaming_admit` in plans/queries.py runs it against a
+    recursive-free DuckDB mirror of the online semantics)."""
     idc = id_col
-    split_fracs = split_fracs or [("train", 0.8), ("val", 0.1), ("test", 0.1)]
     # ---- dedup: batch keys vs stored index + earlier-id batch keys
     if batch_keys is None:
         batch_keys = minhash_band_keys(
             batch_df, idc, text_col, k=k, bands=bands, shingle_n=shingle_n
-        )
-        if checkpoint:
-            batch_keys = batch_keys.localCheckpoint()
+        ).localCheckpoint()
     cand = batch_keys.select(
         "band", "key",
         F.col(idc).alias("__old"),
@@ -119,36 +125,27 @@ def admit_decision(
     if eval_grams is not None:
         grams = token_kgram_positions(batch_df, idc, text_col, decon_k)
         marked = grams.join(eval_grams, "gram").select("doc_id", "pos")
-        covered = (
+        covered = contaminated_tokens(
             _merge_marked_spans(marked, decon_k)
-            .groupBy("doc_id")
-            .agg(F.sum("n_tokens").cast("long").alias("contam_tokens"))
-            .withColumnRenamed("doc_id", idc)
-        )
+        ).withColumnRenamed("doc_id", idc)
     else:
         covered = batch_df.select(
             F.col(idc).cast("long").alias(idc)
         ).limit(0).withColumn("contam_tokens", F.lit(0).cast("long"))
     # ---- narrow per-row stages + assembly
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
     spine = batch_df.select(
         F.col(idc).cast("long").alias(idc),
         F.round(quality_score(text_col), 6).alias("q6"),
-        split_assign(F.col(idc), split_fracs).alias("split"),
-        F.size(toks).cast("long").alias("__doc_tokens"),
+        split_assign(F.col(idc), split_fracs or DEFAULT_SPLIT_FRACS).alias("split"),
+        doc_token_count(text_col).alias("__doc_tokens"),
     )
     joined = spine.join(dups, idc, "left").join(covered, idc, "left")
     keep = F.col("dup_of").isNull().cast("int")
-    q_pass = (F.col("q6") >= quality_threshold).cast("int")
-    include = (keep.cast("boolean") & q_pass.cast("boolean")).cast("int")
-    contam_tokens = F.coalesce("contam_tokens", F.lit(0)).cast("long")
-    rate = contam_tokens / F.greatest("__doc_tokens", F.lit(1))
-    verdict = (
-        F.when(rate > drop_threshold, "drop")
-        .when(rate >= trim_threshold, "trim")
-        .otherwise("keep")
+    q_pass = quality_pass(F.col("q6"), quality_threshold)
+    include = included(keep, q_pass)
+    contam_tokens, rate, verdict = contamination(
+        F.col("contam_tokens"), F.col("__doc_tokens"),
+        drop_threshold, trim_threshold,
     )
     return joined.select(
         idc,
@@ -160,11 +157,9 @@ def admit_decision(
         "split",
         include.alias("include"),
         contam_tokens.alias("contam_tokens"),
-        F.round(rate, 6).alias("contam_rate"),
+        rate.alias("contam_rate"),
         verdict.alias("contam_verdict"),
-        (include.cast("boolean") & (verdict != "drop"))
-        .cast("int")
-        .alias("admit"),
+        admitted(include, verdict).alias("admit"),
     )
 
 
@@ -196,10 +191,6 @@ class StreamingCuration:
         drop_threshold: float = 0.5,
         trim_threshold: float = 0.05,
     ) -> None:
-        from beacon_indexer_spark.operators.dedup import (
-            token_kgram_positions,
-        )
-
         self.spark = spark
         self.band_index_path = band_index_path
         self.id_col = id_col
@@ -208,9 +199,7 @@ class StreamingCuration:
         self.bands = bands
         self.shingle_n = shingle_n
         self.quality_threshold = quality_threshold
-        self.split_fracs = split_fracs or [
-            ("train", 0.8), ("val", 0.1), ("test", 0.1)
-        ]
+        self.split_fracs = split_fracs
         self.decon_k = decon_k
         self.drop_threshold = drop_threshold
         self.trim_threshold = trim_threshold
@@ -274,8 +263,6 @@ class StreamingCuration:
         keys, admitted or not: future copies of a rejected duplicate
         must still hit SOME stored fingerprint, and the min-id aggregate
         keeps verdicts deterministic)."""
-        from beacon_indexer_spark.operators.dedup import minhash_band_keys
-
         minhash_band_keys(
             batch_df, self.id_col, self.text_col,
             k=self.k, bands=self.bands, shingle_n=self.shingle_n,

@@ -731,27 +731,45 @@ def test_curation_run_decon_matches_standalone(spark):
 
 
 def test_curation_run_decon_stages_once(spark):
-    """Decon-derived frames must read the staged localCheckpoint blocks:
-    after the first access, verdict/decision plans scan ExistingRDD and
-    never re-run the gram pipeline (fingerprint: token_kgram_positions'
-    array_join gram constructor must not reappear)."""
+    """decision() reads both staged frames: its plan scans checkpoint
+    blocks and never re-runs the gram pipeline (token_kgram_positions'
+    array_join gram constructor) or the banding aggregation, and a
+    second decision() reuses the same staged spans."""
     from beacon_indexer_spark.plans.pipeline import CurationRun
 
     train, test = _decon_corpora(spark)
     run = CurationRun(train, k=8, bands=4, shingle_n=3,
                       test_docs=test, decon_k=4)
-    for frame in (
-        run.contamination_spans(),
-        run.contamination_verdict(),
-        run.decision(),
-    ):
+    first = run.decision()
+    staged = run._staged_spans
+    for frame in (first, run.decision()):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "Scan ExistingRDD" in plan
         assert "array_join" not in plan, (
             "gram pipeline re-ran instead of reading the staged span frame"
         )
-    # the stage is computed once: both derived frames share one checkpoint
-    assert run._contamination() is run._contamination()
+        assert "collect_set" not in plan
+    assert run._staged_spans is staged
+
+
+def test_curation_run_builds_lazily(spark):
+    """Building a run launches no Spark job, and a decontamination-only
+    method never stages the duplicate clusters."""
+    from beacon_indexer_spark.measure import job_count, job_table, measure
+    from beacon_indexer_spark.plans.pipeline import CurationRun
+
+    train, test = _decon_corpora(spark)
+    first = job_count(spark)
+    run = CurationRun(train, k=8, bands=4, shingle_n=3,
+                      test_docs=test, decon_k=4)
+    assert job_count(spark) == first
+    m = measure(spark, run.contamination_verdict, "decon", collect=True)
+    assert {r["doc_id"] for r in m.rows} == {1, 2, 3}
+    descs = {j.description for j in job_table(spark, m.first_job, m.end_job)}
+    assert not any(
+        d.startswith(("bis:decon:curation.clusters", "bis:decon:cc."))
+        for d in descs
+    ), descs
 
 
 def test_curation_run_without_test_docs_rejects_decon(spark):

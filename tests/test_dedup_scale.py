@@ -8,7 +8,6 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from beacon_indexer_spark.measure import job_count
 from beacon_indexer_spark.operators import dedup as D
 from beacon_indexer_spark.operators import similarity as S
 
@@ -265,33 +264,6 @@ def test_pagerank_overflow_guard(spark):
         pagerank(pairs, iterations=1, scale=10**18)
     got = pagerank(pairs, iterations=1, scale=10**9).collect()
     assert len(got) == 51
-
-
-def test_pairs_from_buckets_lazy_no_probe_job(spark):
-    """probe=False must build the capped both-branches plan WITHOUT
-    running any Spark job at construction (explain/audit callers), and
-    still produce identical pairs when executed."""
-    rows = [("hot", "k1", i) for i in range(30)]
-    rows += [("b%d" % b, "k2", 1000 + b * 10 + i) for b in range(3) for i in range(3)]
-    keyed = spark.createDataFrame(rows, "band string, key string, id long")
-
-    first = job_count(spark)
-    lazy = D._pairs_from_buckets(
-        keyed, "id", "band", "key", max_bucket=10, probe=False
-    )
-    assert job_count(spark) == first  # zero jobs at plan-construction time
-    # both branches are planned (in-row explode + overflow join union)
-    plan = lazy._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" in plan
-    assert _pairs(lazy) == _pairs(
-        D._pairs_from_buckets(keyed, "id", "band", "key", max_bucket=10)
-    )
-    # the lazy plan's persist() handle is registered for deterministic
-    # release — a long-lived session executing many probe=False plans must
-    # not accumulate cached blocks until LRU pressure (ADVICE r6)
-    released = D.release_lazy_caches()
-    assert released >= 1
-    assert D.release_lazy_caches() == 0  # registry drains
 
 
 def test_hamming_recall_independent_of_bands(spark):

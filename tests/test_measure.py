@@ -55,7 +55,8 @@ def test_two_shuffle_plan_counts_two_exchanges(spark, sf_dir):
 
 def test_curation_run_jobs_name_their_operator(spark):
     """A CurationRun measured as a query: its staging, connected-components
-    and execution jobs carry the query's scope and their operator."""
+    and execution jobs carry the query's scope and their operator, and a
+    connected-components round runs three jobs."""
     from beacon_indexer_spark.plans.pipeline import CurationRun
 
     docs = spark.createDataFrame(
@@ -68,13 +69,18 @@ def test_curation_run_jobs_name_their_operator(spark):
     try:
         m = measure(spark, lambda: CurationRun(docs, k=8, bands=4, shingle_n=3)
                     .summary(), "spine")
-        descs = {j.description for j in job_table(spark, m.first_job, m.end_job)}
+        jobs = [j.description for j in job_table(spark, m.first_job, m.end_job)]
     finally:
         # release the run's checkpoints now: left to the context cleaner,
         # they vanish at some later GC, under another test's cache checks
         for rdd_id, rdd in jsc.getPersistentRDDs().items():
             if rdd_id not in cached:
                 rdd.unpersist(True)
+    descs = set(jobs)
     assert {"bis:spine:curation.clusters", "bis:spine:cc.init",
             "bis:spine:cc.round0", "bis:spine:exec"} <= descs, descs
     assert all(d.startswith("bis:spine:") for d in descs), descs
+    # one round, and three jobs in it: the label broadcast, the min
+    # aggregate's shuffle-map stage and the checkpoint
+    assert jobs.count("bis:spine:cc.round0") == 3, jobs
+    assert "bis:spine:cc.round1" not in descs, descs

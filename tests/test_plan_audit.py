@@ -12,7 +12,6 @@ import re
 
 import pytest
 
-from beacon_indexer_spark.measure import job_count
 from beacon_indexer_spark.plans.queries import QUERIES
 
 # brute-force cosine is the *documented* exact-baseline cross join
@@ -227,26 +226,26 @@ def test_no_driver_collect_in_query_plans():
     assert hits == [], f"driver collect in query surface: {hits}"
 
 
-def test_capped_lsh_plan_audits_without_jobs(spark):
-    """Explain/audit callers can build the CAPPED LSH candidate plan with
-    probe=False: zero jobs at construction, and the
-    lazy both-branches plan still satisfies the audit's core invariant —
-    the overflow branch pairs via an EQUI-join on the bucket key, never a
-    cartesian product."""
+def test_capped_lsh_overflow_pairs_by_equi_join(spark):
+    """A bucket above ``max_bucket`` pairs through the overflow branch,
+    and that branch is an EQUI-join on the bucket key, never a cartesian
+    product; its pairs equal the uncapped in-row expansion's."""
     from beacon_indexer_spark.operators.dedup import minhash_lsh_candidates
 
+    # three groups of four identical docs: their band buckets hold 4 ids
     docs = spark.createDataFrame(
         [(i, "words shared across documents number %d" % (i % 3))
          for i in range(12)],
         "doc_id long, text string",
     )
-    first = job_count(spark)
-    lazy = minhash_lsh_candidates(docs, "doc_id", "text", max_bucket=4,
-                                  probe=False)
-    assert job_count(spark) == first
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
+    capped = minhash_lsh_candidates(docs, "doc_id", "text", max_bucket=3)
+    plan = capped._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"(SortMerge|BroadcastHash|ShuffledHash)Join \[band#\d+, key#\d+\]",
+                     plan), plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    uncapped = minhash_lsh_candidates(docs, "doc_id", "text", max_bucket=None)
+    assert sorted(capped.collect()) == sorted(uncapped.collect())
 
 
 def test_substring_dedup_two_shuffle_design(plans):
