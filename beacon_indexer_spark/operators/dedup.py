@@ -970,9 +970,8 @@ def hamming_hash_pairs(
     require a shared contiguous segment, the documented banded recall
     envelope) exactly once.
 
-    Scale shape (redesigned after the round-5 sf1 measurement caught the
-    doc-level banded scheme at 147 s / 159M candidates on 50k
-    concentrated signatures):
+    Scale shape (at sf1 a doc-level banded scheme measured 147 s / 159M
+    candidates on 50k concentrated signatures):
 
     1. SIGNATURE COMPRESSION. Fingerprints repeat — precisely when the
        corpus is dup-dense — so ALL pair generation runs over DISTINCT

@@ -1095,7 +1095,7 @@ def semantic_dedup_keep(
     the corpus in groups, where the hint would OOM (same guard as
     doc_keep_list: `broadcast_if_small`, shuffle-join fallback).
 
-    ``prefilter_bits`` (round-10) caps the within-cluster quadratic
+    ``prefilter_bits`` caps the within-cluster quadratic
     kernel: candidate buckets become (cluster, band, key) with banded
     sign-bit LSH keys (`embedding_band_keys`), so exact cosine runs only
     for pairs that BOTH share the coarse cluster AND collide in one of

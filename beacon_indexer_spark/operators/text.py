@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from beacon_indexer_spark.functions.core import _col, ColumnOrName
+from beacon_indexer_spark.operators.histogram import exclusive_prefix, hist_prefix
 
 # ---------------------------------------------------------------------------
 # tokenization
@@ -40,92 +41,6 @@ def bpe_ish_token_count(text: ColumnOrName) -> Column:
     return F.size(bpe_ish_tokens(text))
 
 
-def _exclusive_prefix(
-    sums, key: str, val, out, fan: int = 65536, _level: int = 0,
-    max_key: int | None = None,
-):
-    """Distributed exclusive prefix sum over integer-keyed rows:
-    ``out = sum(val) over all rows with key' < key``.
-
-    ``val`` / ``out`` may be single column names or equal-length lists:
-    several prefix sums over the SAME key share one window, one
-    aggregation and one recursion (callers that would otherwise run the
-    machinery twice and equi-join the results pay it once).
-
-    EVERY window is partitioned (bounded fan-in — no unpartitioned window
-    anywhere, at any input size): keys group into super-keys of ``fan``
-    (integer DIV — trunc-toward-zero, monotone, so grouping preserves key
-    order), the within-super exclusive cumsum windows over ≤ 2·fan rows
-    per partition, and the super totals recurse. Depth is static from key
-    bit-width: ceil(64 / log2(fan)) levels (4 at the default fan=65536),
-    after which ANY 64-bit key has collapsed to exactly 0 — the terminal
-    level is one group whose exclusive prefix is identically zero, no
-    window needed. Each level is a tiny map-side-combined groupBy + a
-    broadcast join back.
-
-    ``max_key`` (an upper bound on ``max(key)``, keys assumed >= 0 when
-    provided — callers probe it from data, see `pack_documents`) makes the
-    depth data-aware without losing the unconditional bound: recursion
-    stops as soon as the remaining key domain collapses to the single
-    super-key 0 (``max_key == 0``), so a domain fitting one fan costs one
-    level instead of the full static depth. The static `_level` guard
-    stays as the backstop, so a wrong bound can deepen cost, never
-    correctness — and depth never exceeds the static depth either way.
-    """
-    import math
-
-    from pyspark.sql import DataFrame, Window
-
-    assert isinstance(sums, DataFrame)
-    assert fan >= 2, "fan must be >= 2"
-    vals = [val] if isinstance(val, str) else list(val)
-    outs = [out] if isinstance(out, str) else list(out)
-    assert len(vals) == len(outs) and vals, "val/out must pair up"
-    if (max_key is not None and max_key <= 0) or _level >= math.ceil(
-        64 / math.log2(fan)
-    ):
-        # keys here have collapsed to the single value 0 (data-aware bound
-        # with keys >= 0, or x DIV fan^depth with fan^depth >= 2^64):
-        # exactly one group, nothing precedes it
-        for o in outs:
-            sums = sums.withColumn(o, F.lit(0).cast("long"))
-        return sums
-    sup = f"__sup{_level}"
-    wcols = [f"__within{i}" for i in range(len(vals))]
-    lv = sums.withColumn(sup, F.expr(f"CAST({key} DIV {fan} AS BIGINT)"))
-    w = (
-        Window.partitionBy(sup)
-        .orderBy(key)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = lv
-    for v, wc in zip(vals, wcols):
-        within = within.withColumn(
-            wc, F.coalesce(F.sum(v).over(w), F.lit(0))
-        )
-    if max_key is not None and 0 <= max_key < fan:
-        # single super-group (sup == 0 for every row, still ≤ fan rows per
-        # window partition): no predecessor groups exist, so the within-
-        # group cumsum IS the answer — skip the one-row recursion and its
-        # broadcast join entirely
-        for o, wc in zip(outs, wcols):
-            within = within.withColumn(o, F.col(wc).cast("long"))
-        return within.drop(sup, *wcols)
-    supoffs = [f"__supoff{_level}_{i}" for i in range(len(vals))]
-    supsums = [f"__supsum{i}" for i in range(len(vals))]
-    sup_sums = lv.groupBy(sup).agg(
-        *[F.sum(v).alias(s) for v, s in zip(vals, supsums)]
-    )
-    sup_off = _exclusive_prefix(
-        sup_sums, sup, supsums, supoffs, fan, _level + 1,
-        max_key=None if max_key is None else max_key // fan,
-    ).select(sup, *supoffs)
-    res = within.join(F.broadcast(sup_off), sup)
-    for o, so, wc in zip(outs, supoffs, wcols):
-        res = res.withColumn(o, F.col(so) + F.col(wc))
-    return res.drop(sup, *wcols, *supoffs)
-
-
 def pack_documents(
     docs,
     id_col: str = "doc_id",
@@ -143,7 +58,7 @@ def pack_documents(
     single ORDER BY window funnels 100 TB through one partition): ids
     bucket into contiguous ranges of `range_size`; per-bucket token sums
     (tiny — one row per bucket) get an exclusive running total via the
-    recursive bounded-fan-in `_exclusive_prefix` (every level's window is
+    recursive bounded-fan-in `exclusive_prefix` (every level's window is
     partitioned, ≤ 65536 rows per partition, depth bounded by the 64-bit
     key width and cut data-aware by an id-only max/min probe — typical
     corpora run ONE level), broadcast back; the per-document prefix is
@@ -154,9 +69,11 @@ def pack_documents(
     Local cost floor (sf0.1, local[32], measured): ~0.8 s min-of-8 =
     ~0.17 s id-only probe job (column-pruned scan, fixed job-launch
     overhead) + ~0.3 s driver-side plan construction (py4j, independent of
-    data size) + ~0.35 s exec (regex tokenize dominates). Down from 1.23 s
-    at the r3 static depth; the two driver-side components are constants
-    that vanish at cluster scale.
+    data size) + ~0.35 s exec (regex tokenize dominates); the static
+    64-bit depth cost 1.23 s. The two driver-side components are constants
+    that vanish at cluster scale. The probe reads the input ids rather
+    than going through `hist_prefix`, whose probe would force the
+    ``toks`` checkpoint at build time.
     """
     from pyspark.sql import DataFrame, Window
 
@@ -188,7 +105,7 @@ def pack_documents(
         if bounds["mx"] is not None and bounds["mn"] >= 0
         else None
     )
-    offsets = _exclusive_prefix(
+    offsets = exclusive_prefix(
         bucket_sums, "__bucket", "__bn", "__off", max_key=max_key
     ).select("__bucket", "__off")
     win = Window.partitionBy("__bucket").orderBy("id").rowsBetween(
@@ -849,11 +766,11 @@ def heaps_law_curve(
     so ReuseExchange materializes the tokenize+explode pass once rather
     than tokenizing twice (explode for vocabulary, size() for token
     sums). explode_outer keeps all-empty buckets alive
-    (they must still emit a curve row). The joined per-bucket frame is
-    lazily checkpointed BEFORE the key-domain probe, so the probe's
-    first() materializes the blocks the prefix pass then reads — the old
-    probe executed the whole join once at build and again at exec. Both
-    running totals share one window via the multi-value prefix.
+    (they must still emit a curve row). `hist_prefix` checkpoints the
+    joined per-bucket frame before its key-range probe, so the probe
+    materializes the blocks the prefix pass then reads; a probe of the
+    unstaged join would run the join once at build and again at exec.
+    Both running totals share one window via the multi-value prefix.
     """
     bucket = F.floor(F.col(id_col) / bucket_docs).cast("long")
     toks = docs.select(
@@ -875,21 +792,13 @@ def heaps_law_curve(
         .agg(F.count(F.lit(1)).alias("__new"))
     )
     per_bucket = tb.groupBy("bucket").agg(F.sum("__c").alias("__toks"))
-    frame = (
-        per_bucket.join(new_terms, "bucket", "left")
-        .select(
-            "bucket",
-            F.col("__toks").cast("long").alias("__toks"),
-            F.coalesce(F.col("__new"), F.lit(0)).cast("long").alias("__new"),
-        )
-        .localCheckpoint(eager=False)
+    frame = per_bucket.join(new_terms, "bucket", "left").select(
+        "bucket",
+        F.col("__toks").cast("long").alias("__toks"),
+        F.coalesce(F.col("__new"), F.lit(0)).cast("long").alias("__new"),
     )
-    # the bucket-key domain probe keeps the prefix-sum recursion at one
-    # level for any realistic corpus (same pattern as pack_documents)
-    mx = frame.select(F.max("bucket").alias("mx")).first()["mx"]
-    frame = _exclusive_prefix(
-        frame, "bucket", ["__toks", "__new"], ["__tprev", "__vprev"],
-        max_key=mx,
+    _, frame = hist_prefix(
+        frame, "bucket", ["__toks", "__new"], ["__tprev", "__vprev"]
     )
     return frame.select(
         "bucket",

@@ -35,6 +35,11 @@ from beacon_indexer_spark.functions.core import (
 )
 from beacon_indexer_spark.operators import dedup as D
 from beacon_indexer_spark.operators import profile as PR
+from beacon_indexer_spark.operators.histogram import (
+    hist_prefix,
+    hist_quantiles,
+    lower_quantile,
+)
 from beacon_indexer_spark.operators import relational as R
 from beacon_indexer_spark.operators import sampling as SP
 from beacon_indexer_spark.operators import similarity as S
@@ -170,38 +175,6 @@ def _ts(
 ) -> DataFrame:
     """``_spread(_t(...))`` with the split count memoized per table."""
     return _spread_as(_t(spark, sf_dir, name), spark, sf_dir, name, by=by)
-
-
-def _hist_prefix(hist: DataFrame, key: str, val, out):
-    """Bounded-depth exclusive prefix over a TINY aggregated histogram.
-
-    Lazily checkpoints ``hist`` (ONE materialization shared by the probe,
-    the prefix pass, and whatever totals the caller derives from the
-    returned frame), probes the key bounds — a job over the materialized
-    histogram blocks, not a corpus pass — and runs ``_exclusive_prefix``
-    at the data-aware depth instead of the static 64-bit depth (4 levels
-    of window + broadcast join, r12 measured as the dominant cost of the
-    histogram-statistics family at bench scale). Keys always shift to
-    start at zero first — an order-preserving translation, so prefix
-    sums are unchanged — and shift back after; the depth is therefore
-    bounded by the key RANGE (epoch-minute or 1e9-quantized keys with a
-    narrow spread stay at ONE window level), not the key magnitude.
-
-    Returns ``(hist, prefixed)``; callers MUST read totals off the
-    returned (checkpointed) ``hist`` so the upstream aggregation is
-    computed once. ``val``/``out`` may be lists (multi-val form)."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
-    hist = hist.localCheckpoint(eager=False)
-    b = hist.agg(F.min(key).alias("mn"), F.max(key).alias("mx")).first()
-    mn, mx = b["mn"], b["mx"]
-    if mn is None:
-        return hist, _exclusive_prefix(hist, key, val, out, max_key=0)
-    if mn == 0:
-        return hist, _exclusive_prefix(hist, key, val, out, max_key=mx)
-    shifted = hist.withColumn(key, F.col(key) - F.lit(mn))
-    res = _exclusive_prefix(shifted, key, val, out, max_key=mx - mn)
-    return hist, res.withColumn(key, F.col(key) + F.lit(mn))
 
 
 def _dd_minhash_base(x: str) -> str:
@@ -969,10 +942,10 @@ def q_embedding_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus in every bucket — measured 467k candidate pairs from 2,000
     vectors at sf0.1 (23% of ALL pairs — the blocking blocked nothing), and
     at any corpus size the per-bucket pair count stays quadratic in N.
-    Doubling the sign bits squares the bucket count per band; the r4 bench
-    cut candidates ~30× while planted-cluster recall at cosine ≈ 0.98
-    stays ≥ 0.95 by the band bound 1-(1-p^8)^4 (tests/test_near_dup_recall
-    asserts it against numpy ground truth)."""
+    Doubling the sign bits squares the bucket count per band; on the
+    bench corpus that cut candidates ~30× while planted-cluster recall at
+    cosine ≈ 0.98 stays ≥ 0.95 by the band bound 1-(1-p^8)^4
+    (tests/test_near_dup_recall asserts it against numpy ground truth)."""
     emb = _ts(spark, sf_dir, "embeddings")
     out = S.embedding_near_duplicates(
         emb, dim=64, threshold=0.35, n_bits=32, bands=4
@@ -1995,7 +1968,7 @@ FROM tk WHERE rank <= {topk}
 
 
 # ===========================================================================
-# Curation round 3: repetition, decontamination, quality gates, churn
+# Curation: repetition, decontamination, quality gates, churn
 # ===========================================================================
 
 def q_doc_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2175,7 +2148,7 @@ GROUP BY 1
 
 
 # ===========================================================================
-# round-4 additions: quantized ANN, exact-hamming verify, packing stats,
+# Quantized ANN, exact-hamming verify, packing stats,
 # per-source curation rollup, corpus vocabulary
 # ===========================================================================
 
@@ -2882,13 +2855,13 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     k_clusters SCALES WITH THE CORPUS — k = max(8, n/250) — because
     within-cluster exact cosine is quadratic in cluster size at fixed k
     (the SemDeDup paper runs k ~ 10k-100k for billion-vector corpora for
-    the same reason; the round-5 sf1 measurement of fixed k=8 showed the
-    16.7x super-linear step that motivates this). The one count() job is
+    the same reason; at sf1, fixed k=8 measured a 16.7x super-linear
+    step). The one count() job is
     a single-column pruned scan; the oracle computes the identical k
     from COUNT(*). At the driver-gate SFs (n <= 2000) k stays 8, so
     results there are unchanged.
 
-    Round-10: the within-cluster kernel is additionally LSH-pre-filtered
+    The within-cluster kernel is additionally LSH-pre-filtered
     (48 sign bits in 6 8-bit bands) — exact cosine runs only for pairs
     sharing BOTH the coarse cluster and some hyperplane band, so a
     collapsed cluster's cost is bounded by its band-bucket sizes, not
@@ -4386,7 +4359,7 @@ QUALIFY rnk <= 3
 
 
 # ===========================================================================
-# Curation round 4c: PII redaction, split assignment, KMV sketch, domain
+# Curation: PII redaction, split assignment, KMV sketch, domain
 # caps, inverted postings, table profiling, TPC-H Q17 shape
 # ===========================================================================
 
@@ -5041,11 +5014,11 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be d²/2 rows for a stop-shingle present in d documents — a
     scale-killer on real corpora ("the end of"-class trigrams, d ~ 1e6)."""
     docs = _ts(spark, sf_dir, "documents")
-    # ONE tokenize+shingle pass (r13, §1.2): the signature side and the
-    # exact-Jaccard side both read this staged shingle-array frame — the
-    # LSH probe job materializes it; the old shape ran the regexp-heavy
-    # shingle pipeline twice (once inside minhash_signatures, once for
-    # the exact side's explode).
+    # ONE tokenize+shingle pass: the signature side and the exact-Jaccard
+    # side both read this staged shingle-array frame — the LSH probe job
+    # materializes it; unstaged, the regexp-heavy shingle pipeline runs
+    # twice (once inside minhash_signatures, once for the exact side's
+    # explode).
     shingled = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         X.word_shingles("text", 3).alias("__sh"),
@@ -6022,9 +5995,9 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode over that one pair frame — the whole curve costs one extra
     pairs×5 aggregation, not 5 dedup runs."""
     docs = _ts(spark, sf_dir, "documents")
-    # ONE tokenize+shingle pass (r13, §1.2): the signature side and the
-    # exact-Jaccard side both read this staged shingle-array frame — the
-    # dedup_minhash_est move applied to the sweep.
+    # ONE tokenize+shingle pass: the signature side and the exact-Jaccard
+    # side both read this staged shingle-array frame (as in
+    # dedup_minhash_est).
     shingled = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         X.word_shingles("text", 3).alias("__sh"),
@@ -6038,7 +6011,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_n=3, sigs=sigs,
     ).localCheckpoint(eager=False)
     # staged once for its three consumers (sizes + both sides of
-    # candidate_common_shingles) — r12, measured faster than relying on
+    # candidate_common_shingles) — measured faster than relying on
     # in-job ReuseExchange here (the jac checkpoint splits the consumers
     # across jobs)
     sh = shingled.select(
@@ -6152,7 +6125,7 @@ def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-bounded), one join back through the same (id, shingle)
     frame, one per-doc aggregate — the `doc_tfidf` shuffle shape."""
     docs = _ts(spark, sf_dir, "documents")
-    # NOT checkpointed (r12, measured): both consumers land in one job
+    # NOT checkpointed (measured): both consumers land in one job
     # where ReuseExchange dedupes the distinct's exchange; a checkpoint
     # only adds a full materialization (0.90 s -> 1.39 s)
     sh = docs.select(
@@ -7406,7 +7379,7 @@ def q_doc_lsh_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.minhash_lsh_candidates(
         docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS, shingle_n=3
     ).localCheckpoint(eager=False)
-    # NOT checkpointed (r12, measured): all three consumers (sizes +
+    # NOT checkpointed (measured): all three consumers (sizes +
     # both sides of candidate_common_shingles) land in ONE final job,
     # where ReuseExchange already dedupes the distinct's exchange — a
     # checkpoint only adds a full materialization (2.96 s -> 3.86 s)
@@ -8049,12 +8022,12 @@ def q_embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _ts(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     cents = S.ivf_centroids(emb, k=8)
-    # ONE corpus scan for both rankings (r13, §1.2): IVF membership is a
-    # flag on the exact control's scored frame, so |exact ∩ approx| is a
-    # predicate over the exact top-5 rows — the old shape scanned the
-    # corpus twice (ivf_topk + brute_force_topk) and joined the two
-    # 25-row frames. Every query with any pair has exact-top-5 rows, so
-    # the per-query groups ARE the old bf-derived qids.
+    # ONE corpus scan for both rankings: IVF membership is a flag on the
+    # exact control's scored frame, so |exact ∩ approx| is a predicate
+    # over the exact top-5 rows, where ivf_topk + brute_force_topk would
+    # scan the corpus twice and join the two 25-row frames. Every query
+    # with any pair has exact-top-5 rows, so the per-query groups ARE
+    # the brute-force query ids.
     pairs = S.ivf_exact_scored(emb, queries, cents, k=5, nprobe=2)
     return (
         pairs.filter(F.col("rank") <= 5)
@@ -8616,7 +8589,7 @@ def q_events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("__c"))
     hist = per_user.groupBy("__c").agg(F.count(F.lit(1)).alias("__f"))
-    hist, h = _hist_prefix(hist, "__c", "__f", "__cum")
+    hist, h = hist_prefix(hist, "__c", "__f", "__cum")
     s1 = (
         F.col("__c")
         * (
@@ -8911,8 +8884,6 @@ def q_events_daily_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame
     use the bounded-fan partitioned prefix sum over the value
     histogram — zero windows anywhere, demonstrating global exact
     quantiles without a single-partition sort."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
     ev = _t(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("__d")).agg(
         F.count(F.lit(1)).cast("long").alias("__n")
@@ -8920,20 +8891,8 @@ def q_events_daily_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def _global_median(df: DataFrame, col: str) -> DataFrame:
         hist = df.groupBy(col).agg(F.count(F.lit(1)).alias("__c"))
-        hist = hist.localCheckpoint(eager=False)
-        # key-domain probe over the tiny histogram keeps the prefix-sum
-        # recursion at ONE level (the pack_documents pattern) instead of
-        # the static 64-bit depth — the probe job doubles as the
-        # checkpoint materialization
-        mx = hist.agg(F.max(col).alias("mx")).first()["mx"]
-        cum = _exclusive_prefix(hist, col, "__c", "__prev", max_key=mx)
-        cum = cum.withColumn("__cum", F.col("__prev") + F.col("__c"))
-        tot = hist.agg(F.sum("__c").alias("__t"))
-        return (
-            cum.crossJoin(F.broadcast(tot))
-            .filter(F.col("__cum") * 2 >= F.col("__t"))
-            .agg(F.min(col).alias("__med"))
-        )
+        _, med = hist_quantiles(hist, col, "__c", [1], 2)
+        return med.select(F.col(col).alias("__med"))
 
     med = _global_median(daily, "__n")
     dev = daily.crossJoin(F.broadcast(med)).select(
@@ -9439,21 +9398,14 @@ def q_customer_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     group at the crossing resolved in closed form with a ceiling
     division. The only non-integer outputs are the final display
     round()s."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
     o = _t(spark, sf_dir, "orders")
     percust = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("__r")
     )
     hist = percust.groupBy("__r").agg(F.count(F.lit(1)).alias("__f"))
     hist = hist.withColumn("__s", F.col("__r") * F.col("__f"))
-    hist = hist.localCheckpoint(eager=False)
-    mx = hist.agg(F.max("__r").alias("mx")).first()["mx"]
-    # both prefixes share one window + one recursion (multi-val form) —
-    # previously two full prefix passes equi-joined back on __r
-    j = _exclusive_prefix(
-        hist, "__r", ["__f", "__s"], ["__pf", "__ps"], max_key=mx
-    )
+    # both prefixes share one window + one recursion (multi-val form)
+    hist, j = hist_prefix(hist, "__r", ["__f", "__s"], ["__pf", "__ps"])
     tot = hist.agg(
         F.sum("__f").cast("long").alias("__N"),
         F.sum("__s").cast("long").alias("__T"),
@@ -9923,8 +9875,6 @@ def q_events_funnel_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFram
     the lag-minute VALUE HISTOGRAM through the bounded-fan partitioned
     prefix sum (no unpartitioned window at any user count) and the rank
     thresholds compare in exact int64 (100·cum ≥ q·n)."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
     ev = _t(spark, sf_dir, "events")
     fv = (
         ev.filter(F.col("event_type") == "view")
@@ -9948,21 +9898,15 @@ def q_events_funnel_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     hist = lag.groupBy("__m").agg(F.count(F.lit(1)).alias("__f"))
-    hist = hist.localCheckpoint(eager=False)
-    mx = hist.agg(F.max("__m").alias("mx")).first()
-    mx = mx["mx"] if mx["mx"] is not None else 0
-    cum = _exclusive_prefix(hist, "__m", "__f", "__prev", max_key=mx)
-    cum = cum.withColumn("__cum", F.col("__prev") + F.col("__f"))
-    tot = hist.agg(F.sum("__f").alias("__n"))
-    j = cum.crossJoin(F.broadcast(tot))
+    _, q = hist_quantiles(hist, "__m", "__f", (50, 90, 99), 100)
 
     def _q(pct: int) -> Column:
-        return F.min(
-            F.when(100 * F.col("__cum") >= pct * F.col("__n"), F.col("__m"))
-        )
+        return F.max(F.when(F.col("r") == pct, F.col("__m")))
 
-    return j.agg(
-        F.max("__n").cast("long").alias("n_conversions"),
+    # the rank rows sit in one partition already, so this one-row
+    # aggregate adds no exchange
+    return q.agg(
+        F.max("n").cast("long").alias("n_conversions"),
         _q(50).cast("long").alias("p50_minutes"),
         _q(90).cast("long").alias("p90_minutes"),
         _q(99).cast("long").alias("p99_minutes"),
@@ -10274,8 +10218,8 @@ def q_dedup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ts(spark, sf_dir, "documents")
     # the two detector pipelines are independent — build them from two
     # driver threads so their construction-time probe/checkpoint jobs
-    # interleave instead of running serially (r12, §2.6 idiom; A/B
-    # measured 2.5 s vs 3.1 s serial)
+    # interleave instead of running serially (A/B measured 2.5 s vs
+    # 3.1 s serial)
     mh, hp = run_concurrently([
         lambda: D.minhash_lsh_candidates(
             docs, "doc_id", "text", k=_MINHASH_K, bands=_MINHASH_BANDS,
@@ -10365,7 +10309,7 @@ def q_corpus_bigram_cond_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return s, tot
 
-    # r13 (§2.4, §1.2): ONE scan+explode for both gram orders — tokens
+    # ONE scan+explode for both gram orders — tokens
     # never contain whitespace (split on \s+), bigrams always do (space-
     # joined), so the unigram and bigram streams are disjoint and one
     # map-side-combined count over their concat serves both. The staged
@@ -10539,12 +10483,11 @@ def q_corpus_minhash_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums."""
     docs = _ts(spark, sf_dir, "documents")
     # ONE signature pass staged for all three consumers (banding via
-    # sigs=, the sig_a probe side, the sig_b build side) — previously the
-    # lazy plan re-ran the shingle+hash pipeline per branch (r12); the
-    # shingle set is likewise staged once for its three consumers
-    # (sizes + both sides of candidate_common_shingles)
-    # ONE tokenize+shingle pass shared by the signature and exact sides
-    # (r13, §1.2 — the dedup_minhash_est move applied to the sweep)
+    # sigs=, the sig_a probe side, the sig_b build side) — a lazy plan
+    # re-runs the shingle+hash pipeline per branch; the shingle set is
+    # likewise staged once for its three consumers (sizes + both sides
+    # of candidate_common_shingles), and ONE tokenize+shingle pass is
+    # shared by the signature and exact sides (as in dedup_minhash_est)
     shingled = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         X.word_shingles("text", 3).alias("__sh"),
@@ -10919,55 +10862,33 @@ def q_user_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     total event value), the boundary value and the cumulative share of
     all value held at or below it — the full concentration profile the
     single-threshold Pareto query summarizes. Cents-exact user LTVs
-    compress to a value histogram; both cumulatives ride the bounded-
-    fan prefix sum; decile ranks compare as 10·cum ≥ d·n in int64."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
+    compress to a value histogram; the decile boundaries are its exact
+    lower quantiles d/10, and the cumulatives at each boundary sum the
+    histogram rows at or below it (ten broadcast boundaries)."""
     ev = _t(spark, sf_dir, "events")
     per = ev.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("__v")
     )
     hist = per.groupBy("__v").agg(F.count(F.lit(1)).alias("__f"))
-    hist = hist.withColumn("__s", F.col("__v") * F.col("__f"))
-    hist = hist.localCheckpoint(eager=False)
-    mx = hist.agg(F.max("__v").alias("mx")).first()["mx"]
-    # both prefixes share one window + one recursion (multi-val form) —
-    # previously two full prefix passes equi-joined back on __v
-    j = _exclusive_prefix(
-        hist, "__v", ["__f", "__s"], ["__pf", "__ps"], max_key=mx
-    )
-    tot = hist.agg(
-        F.sum("__f").cast("long").alias("__N"),
-        F.sum("__s").cast("long").alias("__T"),
-    )
-    x = j.crossJoin(F.broadcast(tot)).select(
-        "__v",
-        (F.col("__pf") + F.col("__f")).alias("__cumf"),
-        (F.col("__ps") + F.col("__s")).alias("__cums"),
-        "__N",
-        "__T",
-    )
-    dec = (
-        x.select(
-            F.explode(F.sequence(F.lit(1), F.lit(10))).alias("decile"),
-            "__v", "__cumf", "__cums", "__N", "__T",
+    hist, dec = hist_quantiles(hist, "__v", "__f", range(1, 11), 10)
+    s = F.col("__v") * F.col("__f")
+    tot = hist.agg(F.sum(s).cast("long").alias("__T"))
+    cum = (
+        hist.join(
+            F.broadcast(dec.select("r", F.col("__v").alias("__b"))),
+            F.col("__v") <= F.col("__b"),
         )
-        .filter(10 * F.col("__cumf") >= F.col("decile") * F.col("__N"))
-        .groupBy("decile")
-        .agg(F.min("__v").alias("__b"))
+        .groupBy("r", "__b")
+        .agg(F.sum("__f").alias("__cumf"), F.sum(s).alias("__cums"))
     )
-    out = (
-        dec.join(x.withColumnRenamed("__v", "__b"), "__b")
-        .select(
-            "decile",
-            (F.col("__b").cast("double") / 100).alias("boundary_value"),
-            F.col("__cumf").cast("long").alias("cum_users"),
-            F.round(
-                F.col("__cums").cast("double") / F.col("__T").cast("double"), 6
-            ).alias("cum_value_share"),
-        )
+    return cum.crossJoin(F.broadcast(tot)).select(
+        F.col("r").alias("decile"),
+        (F.col("__b").cast("double") / 100).alias("boundary_value"),
+        F.col("__cumf").cast("long").alias("cum_users"),
+        F.round(
+            F.col("__cums").cast("double") / F.col("__T").cast("double"), 6
+        ).alias("cum_value_share"),
     )
-    return out
 
 
 ORACLE_USER_VALUE_DECILES = """
@@ -11245,8 +11166,6 @@ def q_doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the right prior for packing-capacity planning). ln values quantize
     to 1e-9 fixed-point (exact integer sums); the actual median runs on
     the token-count histogram through the bounded-fan prefix sum."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
     docs = _ts(spark, sf_dir, "documents")
     nt = docs.select(X.token_count("text").alias("__t")).filter(
         F.col("__t") > 0
@@ -11261,18 +11180,12 @@ def q_doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(li.cast(dec) * li.cast(dec)).alias("__sll"),
     )
     hist = nt.groupBy("__t").agg(F.count(F.lit(1)).alias("__f"))
-    hist = hist.localCheckpoint(eager=False)
-    mx = hist.agg(F.max("__t").alias("mx")).first()["mx"]
-    cum = _exclusive_prefix(hist, "__t", "__f", "__prev", max_key=mx or 0)
-    cum = cum.withColumn("__cum", F.col("__prev") + F.col("__f"))
-    med = (
-        cum.crossJoin(
-            F.broadcast(hist.agg(F.sum("__f").alias("__tot")))
-        )
-        .filter(2 * F.col("__cum") >= F.col("__tot"))
-        .agg(F.min("__t").cast("long").alias("__med"))
+    _, med = hist_quantiles(hist, "__t", "__f", [1], 2)
+    # left: a corpus without tokens still reads its one moments row
+    out = moments.join(
+        F.broadcast(med.select(F.col("__t").cast("long").alias("__med"))),
+        how="left",
     )
-    out = moments.crossJoin(F.broadcast(med))
     n = F.col("__n").cast("double")
     mu = F.col("__sl").cast("double") / 1e9 / n
     var = F.col("__sll").cast("double") / 1e18 / n - mu * mu
@@ -11912,11 +11825,11 @@ def q_supplier_latency_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("__d"),
         )
     )
-    # staged once (r12): the (supplier, day) histogram sits on the
+    # staged once: the (supplier, day) histogram sits on the
     # lineitem⋈orders shuffle join and feeds THREE consumers (the
     # per-supplier cumulative window, the per-supplier totals, and the
     # global day histogram whose bounds probe runs at build) — without
-    # the checkpoint the probe paid the join once and the exec paid it
+    # the checkpoint the probe pays the join once and the exec pays it
     # again per branch
     hist = lat.groupBy("suppkey", "__d").agg(
         F.count(F.lit(1)).alias("__c")
@@ -11937,30 +11850,12 @@ def q_supplier_latency_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("__n").cast("long").alias("n_items"),
         )
     )
-    # GLOBAL p90 through the bounded-fan prefix sum (never an
-    # unpartitioned window), over the same latency histogram re-keyed
-    # by day only. Latencies can be negative in dirty data — shift by
-    # the probed min so prefix keys are nonnegative.
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
+    # GLOBAL p90 off the same latency histogram re-keyed by day only
+    # (never an unpartitioned window; negative latencies in dirty data
+    # are fine, the prefix shifts keys by their probed minimum)
     ghist = hist.groupBy("__d").agg(F.sum("__c").alias("__c"))
-    ghist = ghist.localCheckpoint(eager=False)
-    bounds = ghist.agg(
-        F.min("__d").alias("mn"), F.max("__d").alias("mx")
-    ).first()
-    mn = bounds["mn"] or 0
-    gshift = ghist.select(
-        (F.col("__d") - F.lit(mn)).alias("__k"), "__d", "__c"
-    )
-    gcum = _exclusive_prefix(
-        gshift, "__k", "__c", "__prev", max_key=(bounds["mx"] or 0) - mn
-    ).withColumn("__cum", F.col("__prev") + F.col("__c"))
-    gtot = ghist.agg(F.sum("__c").alias("__gn"))
-    gp90 = (
-        gcum.crossJoin(F.broadcast(gtot))
-        .filter(100 * F.col("__cum") >= 90 * F.col("__gn"))
-        .agg(F.min("__d").alias("__g90"))
-    )
+    _, g = hist_quantiles(ghist, "__d", "__c", [90], 100)
+    gp90 = g.select(F.col("__d").alias("__g90"))
     sup = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("long").alias("suppkey"), "s_name"
     )
@@ -12730,7 +12625,7 @@ def q_corpus_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_tok = toks.groupBy("token").agg(F.count(F.lit(1)).alias("__c"))
     hist = per_tok.groupBy("__c").agg(F.count(F.lit(1)).alias("__f"))
-    hist, h = _hist_prefix(hist, "__c", "__f", "__cum")
+    hist, h = hist_prefix(hist, "__c", "__f", "__cum")
     dec = "decimal(38,0)"
     s1 = (
         F.col("__c").cast(dec)
@@ -13116,10 +13011,10 @@ def q_events_value_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__day", "__x",
     )
     # value prefix + day-rank prefix share one window/recursion
-    # (multi-val form) — previously two passes equi-joined on __k;
+    # (multi-val form), not two passes equi-joined on __k;
     # depth probe-bounded to ONE level (day-ordinal range ≪ 65536) and
     # the totals read the SAME checkpointed frame as the prefix
-    keyed, pre = _hist_prefix(
+    keyed, pre = hist_prefix(
         keyed.withColumn("__one", F.lit(1)),
         "__k", ["__x", "__one"], ["__pre", "__d0"],
     )
@@ -13830,19 +13725,14 @@ def q_customer_value_quadrants(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("__sp", F.lit(0)).cast("long").alias("__sp"),
     ).localCheckpoint(eager=False)
 
-    def _median(col: str):
+    def _median(col: str, out: str) -> DataFrame:
         hist = base.groupBy(F.col(col).alias("__k")).agg(
             F.count(F.lit(1)).alias("__f")
         )
-        hist, h = _hist_prefix(hist, "__k", "__f", "__cum")
-        tot = hist.agg(F.sum("__f").alias("__n"))
-        return (
-            h.crossJoin(F.broadcast(tot))
-            .filter(2 * (F.col("__cum") + F.col("__f")) >= F.col("__n"))
-            .agg(F.min("__k").alias("__med"))
-        )
-    med_bal = _median("__bal").select(F.col("__med").alias("__mb"))
-    med_sp = _median("__sp").select(F.col("__med").alias("__ms"))
+        _, med = hist_quantiles(hist, "__k", "__f", [1], 2)
+        return med.select(F.col("__k").alias(out))
+    med_bal = _median("__bal", "__mb")
+    med_sp = _median("__sp", "__ms")
     labeled = (
         base.crossJoin(F.broadcast(med_bal))
         .crossJoin(F.broadcast(med_sp))
@@ -14014,7 +13904,7 @@ def q_events_value_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one shared window/recursion for both ECDF prefixes (multi-val
     # form), probe-bounded depth off the checkpointed cents histogram
-    _hck, h = _hist_prefix(h, "__k", ["__fa", "__fb"], ["__pa", "__pb"])
+    _hck, h = hist_prefix(h, "__k", ["__fa", "__fb"], ["__pa", "__pb"])
     tot = _hck.agg(
         F.sum("__fa").cast("long").alias("__na"),
         F.sum("__fb").cast("long").alias("__nb"),
@@ -14785,8 +14675,6 @@ def q_customer_spend_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     staying big'. The timeline midpoint and the two per-half medians are
     ONE-ROW attaches; medians come from cents-histogram prefix sums
     (integer 2*cum >= n thresholds)."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
     orders = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("__c"),
@@ -14810,49 +14698,26 @@ def q_customer_spend_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of re-deriving the scan+crossJoin+groupBy per consumer.
 
     # BOTH per-half medians from ONE histogram + ONE prefix-sum pass: the
-    # composite key (half-1)*span + (sp-min) keeps halves contiguous and
-    # order-preserving (offset < span within each half), the within-half
-    # exclusive cumsum is the composite cumsum minus the preceding half's
-    # total, and the two 2*cum >= n thresholds pivot into a single
-    # broadcast row (m1, m2). Halving the serial broadcast-job chain is
-    # the whole point — at this query's scale fixed job latency, not
-    # data, dominates. The span comes from a probe over the checkpointed
-    # histogram, so the composite DOMAIN is 2x the actual spend spread —
-    # one or two prefix levels instead of the 2^42-magnitude static four.
-    hist = per.groupBy("__half", "__sp").agg(
-        F.count(F.lit(1)).alias("__f")
-    ).localCheckpoint(eager=False)
-    b = hist.agg(F.min("__sp").alias("mn"), F.max("__sp").alias("mx")).first()
-    mn, spn = b["mn"] or 0, (b["mx"] or 0) - (b["mn"] or 0) + 1
-    comp = hist.withColumn(
-        "__k",
-        (F.col("__half") - 1).cast("long") * F.lit(spn)
-        + (F.col("__sp") - F.lit(mn)),
+    # histogram counts each spend level once per half (zero where a half
+    # lacks it), both running counts share one window, and the two
+    # medians come out as a single broadcast row (m1, m2). Halving the
+    # serial broadcast-job chain is the whole point — at this query's
+    # scale fixed job latency, not data, dominates.
+    halves = (1, 2)
+    hist = per.groupBy("__sp").agg(*[
+        F.sum((F.col("__half") == h).cast("long")).alias(f"__f{h}")
+        for h in halves
+    ])
+    hist, pre = hist_prefix(
+        hist, "__sp", [f"__f{h}" for h in halves], [f"__c{h}" for h in halves]
     )
-    h = _exclusive_prefix(comp, "__k", "__f", "__cum", max_key=2 * spn - 1)
-    tots = hist.groupBy("__half").agg(F.sum("__f").alias("__n"))
-    n1 = tots.groupBy().pivot("__half", [1, 2]).sum("__n").select(
-        F.col("1").alias("__n1"), F.col("2").alias("__n2")
-    )
-    med = (
-        h.crossJoin(F.broadcast(n1))
-        .withColumn(
-            "__wcum",
-            F.col("__cum")
-            - F.when(F.col("__half") == 2, F.col("__n1")).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "__nh",
-            F.when(F.col("__half") == 2, F.col("__n2")).otherwise(F.col("__n1")),
-        )
-        .filter(2 * (F.col("__wcum") + F.col("__f")) >= F.col("__nh"))
-        .groupBy("__half")
-        .agg(F.min("__sp").alias("__med"))
-        .groupBy()
-        .pivot("__half", [1, 2])
-        .sum("__med")
-        .select(F.col("1").alias("__m1"), F.col("2").alias("__m2"))
-    )
+    tots = hist.agg(*[F.sum(f"__f{h}").alias(f"__n{h}") for h in halves])
+    med = pre.crossJoin(F.broadcast(tots)).agg(*[
+        lower_quantile(
+            "__sp", F.col(f"__c{h}") + F.col(f"__f{h}"), F.col(f"__n{h}"), 1, 2
+        ).alias(f"__m{h}")
+        for h in halves
+    ])
     h1 = per.filter(F.col("__half") == 1).select(
         "o_custkey", F.col("__sp").alias("__s1")
     )
@@ -15033,21 +14898,10 @@ def q_events_value_equidepth_hist(
     hist = ev.groupBy(
         F.round(F.col("value") * 100, 0).cast("long").alias("__k")
     ).agg(F.count(F.lit(1)).alias("__f"))
-    hist, h = _hist_prefix(hist, "__k", "__f", "__cum")
-    tot = hist.agg(F.sum("__f").alias("__n"))
-    bs = spark.createDataFrame(
-        [(b,) for b in range(1, 11)], "decile int"
-    ).select(F.col("decile").cast("long").alias("decile"))
-    j = (
-        h.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(bs))
-        .filter(
-            10 * (F.col("__cum") + F.col("__f"))
-            >= F.col("decile") * F.col("__n")
-        )
-    )
-    return j.groupBy("decile").agg(
-        (F.min("__k").cast("double") / 100.0).alias("upper_value")
+    _, q = hist_quantiles(hist, "__k", "__f", range(1, 11), 10)
+    return q.select(
+        F.col("r").alias("decile"),
+        (F.col("__k").cast("double") / 100.0).alias("upper_value"),
     )
 
 
@@ -15297,7 +15151,7 @@ def q_events_session_concurrency_peak(
     hist = deltas.groupBy("__m").agg(F.sum("__d").alias("__nd"))
     # probe-bounded: zero-basing the epoch-minute key collapses the
     # ~29M-magnitude domain to the data's actual minute RANGE (1 level)
-    hist, pre = _hist_prefix(hist, "__m", "__nd", "__p")
+    hist, pre = hist_prefix(hist, "__m", "__nd", "__p")
     scored = pre.select(
         "__m", (F.col("__p") + F.col("__nd")).alias("__conc")
     )
@@ -15455,7 +15309,7 @@ def q_events_km_conversion_survival(
     )
     # risk set n_i = total - (all subjects leaving strictly before day i);
     # probe-bounded depth (day range ≪ 65536 ⇒ ONE window level)
-    hist, pre = _hist_prefix(hist, "__day", "__a", "__left")
+    hist, pre = hist_prefix(hist, "__day", "__a", "__left")
     tot = hist.agg(F.sum("__a").cast("long").alias("__n_tot"))
     withn = pre.crossJoin(F.broadcast(tot)).select(
         "__day", "__d",
@@ -15472,7 +15326,7 @@ def q_events_km_conversion_survival(
         ).cast("long"),
     ).otherwise(F.lit(0))
     terms = withn.select("__day", lnq.alias("__l"))
-    _tck, cum = _hist_prefix(terms, "__day", "__l", "__pl")
+    _tck, cum = hist_prefix(terms, "__day", "__l", "__pl")
     curve = cum.select(
         "__day", (F.col("__pl") + F.col("__l")).alias("__cl")
     ).localCheckpoint(eager=False)
@@ -15691,7 +15545,7 @@ FROM per_q
 
 
 # ===========================================================================
-# Round-8 wave 15: Poisson-bootstrap CI, Mann-Kendall/Theil-Sen robust
+# Poisson-bootstrap CI, Mann-Kendall/Theil-Sen robust
 # trend, dup-graph triangle census
 # ===========================================================================
 
@@ -16057,7 +15911,7 @@ FROM w CROSS JOIN ec CROSS JOIN tri
 
 
 # ===========================================================================
-# Round-8 wave 16: shuffle-skew salting audit, bloom-join sizing planner,
+# Shuffle-skew salting audit, bloom-join sizing planner,
 # converter-activity enrichment
 # ===========================================================================
 
@@ -16292,7 +16146,7 @@ FROM cells CROSS JOIN tot
 
 
 # ===========================================================================
-# Round-8 wave 17: Simpson's-paradox audit, Neyman sampling allocation,
+# Simpson's-paradox audit, Neyman sampling allocation,
 # Wald-Wolfowitz runs test
 # ===========================================================================
 
@@ -16506,13 +16360,8 @@ def q_events_daily_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__d", F.coalesce("__c", F.lit(0)).alias("__c")
     ).localCheckpoint(eager=False)
     hist = filled.groupBy("__c").agg(F.count(F.lit(1)).alias("__f"))
-    hist, h = _hist_prefix(hist, "__c", "__f", "__cum")
-    nd = filled.agg(F.count(F.lit(1)).cast("long").alias("__n"))
-    med = (
-        h.crossJoin(F.broadcast(nd))
-        .filter(2 * (F.col("__cum") + F.col("__f")) >= F.col("__n"))
-        .agg(F.min("__c").alias("__med"))
-    )
+    _, med = hist_quantiles(hist, "__c", "__f", [1], 2)
+    med = med.select(F.col("__c").alias("__med"))
     sided = filled.crossJoin(F.broadcast(med)).select(
         "__d",
         F.when(F.col("__c") > F.col("__med"), 1).otherwise(0).alias("__s"),
@@ -16610,7 +16459,7 @@ FROM zc
 
 
 # ===========================================================================
-# Round-8 wave 18: DOW seasonality strength, exact midrank AUC, expected
+# DOW seasonality strength, exact midrank AUC, expected
 # shortfall
 # ===========================================================================
 
@@ -16751,7 +16600,7 @@ def q_embedding_label_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("__y").cast("long").alias("__p"),
         F.sum(1 - F.col("__y")).cast("long").alias("__g"),
     )
-    hist, h = _hist_prefix(hist, "__q", "__g", "__gb")
+    hist, h = hist_prefix(hist, "__q", "__g", "__gb")
     dec = "decimal(38,0)"
     agg = h.agg(
         F.sum("__p").cast("long").alias("n_pos"),
@@ -16837,26 +16686,23 @@ def q_events_value_expected_shortfall(
     hist = ev.groupBy(
         F.round(F.col("value") * 100, 0).cast("long").alias("__k")
     ).agg(F.count(F.lit(1)).cast("long").alias("__f"))
-    hist, h = _hist_prefix(hist, "__k", "__f", "__cum")
-    h = h.localCheckpoint(eager=False)  # consumed by the VaR + tail branches
-    tot = hist.agg(F.sum("__f").cast("long").alias("__n"))
-    var_ = (
-        h.crossJoin(F.broadcast(tot))
-        .filter(20 * (F.col("__cum") + F.col("__f")) >= 19 * F.col("__n"))
-        .agg(F.min("__k").alias("__vk"))
-    )
+    hist, var_ = hist_quantiles(hist, "__k", "__f", [19], 20)
     dec = "decimal(38,0)"
+    # the tail sums read the checkpointed histogram; n rides along with
+    # the VaR row (the tail aggregate keeps one row, NULLs included)
     tail = (
-        h.crossJoin(F.broadcast(var_))
+        hist.crossJoin(
+            F.broadcast(var_.select(F.col("__k").alias("__vk"), "n"))
+        )
         .filter(F.col("__k") >= F.col("__vk"))
         .agg(
             F.sum("__f").cast("long").alias("__tn"),
             F.sum((F.col("__k") * F.col("__f")).cast(dec)).alias("__ts"),
             F.min("__vk").alias("__vk"),
+            F.max("n").alias("__n"),
         )
     )
-    j = tail.crossJoin(F.broadcast(tot))
-    return j.select(
+    return tail.select(
         F.col("__n").alias("n_events"),
         (F.col("__vk").cast("double") / 100.0).alias("var_95"),
         F.round(
@@ -16898,7 +16744,7 @@ FROM tail CROSS JOIN tot
 
 
 # ===========================================================================
-# Round-8 wave 19: top principal component via distributed Gramian + power
+# Top principal component via distributed Gramian + power
 # iteration, seasonal-naive forecast backtest, lang x source NMI
 # ===========================================================================
 
@@ -16922,11 +16768,11 @@ def q_embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
         lambda x: F.round(x.cast("double") * 1e6, 0).cast("long"),
     )
-    # r12: the n×d² outer-product pass runs as ONE vectorized integer
+    # the n×d² outer-product pass runs as ONE vectorized integer
     # matmul per Arrow batch (operators/similarity.py gramian_partials)
     # instead of a posexplode over interpreted nested HOF lambdas that
-    # materialized a 4096-element array per row — same exact integer
-    # partials, summed to the same DECIMAL totals; the shuffle now
+    # materialize a 4096-element array per row — same exact integer
+    # partials, summed to the same DECIMAL totals; the shuffle
     # carries #batches × d² cells, never n × d². The isNotNull filter
     # mirrors posexplode's null-array behavior (emits nothing).
     parts = S.gramian_partials(
@@ -17000,7 +16846,7 @@ def q_embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.array(*([F.lit(0.125)] * d))
     st = one
     for step in range(3):
-        # r12: a lazy checkpoint BARRIER per iteration step. Without it
+        # a lazy checkpoint BARRIER per iteration step. Without it
         # Catalyst collapses the three projections and substitutes the
         # previous step's vector EXPRESSION at each of matvec's d²
         # references — an exponentially nested tree that cost ~3.8 s to
@@ -17315,7 +17161,7 @@ FROM j
 
 
 # ===========================================================================
-# Round-8 wave 20: cross-modal dup agreement, A/A-test validator, Markov
+# Cross-modal dup agreement, A/A-test validator, Markov
 # stationary distribution
 # ===========================================================================
 
@@ -17787,7 +17633,7 @@ FROM stat LEFT JOIN emp USING (state) CROSS JOIN tt
 
 
 # ===========================================================================
-# Round-8 wave 21: PSI drift monitor, dual-sourcing audit, kNN-graph
+# PSI drift monitor, dual-sourcing audit, kNN-graph
 # reciprocity
 # ===========================================================================
 
@@ -17800,8 +17646,9 @@ def q_doc_length_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram), both halves are binned against them, and
     PSI = Σ (p_cur − p_ref)·ln(p_cur/p_ref) with 0.5-Laplace smoothing
     runs as ten 1e-9-quantized integer terms. Everything after the
-    |distinct lengths| histogram is 10-row arithmetic."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
+    |distinct lengths| histogram is 10-row arithmetic. Edges, bins and
+    score are the drift monitors' rules (streaming/drift.py)."""
+    from beacon_indexer_spark.streaming import drift
 
     docs = _ts(spark, sf_dir, "documents")
     w = F.size(X.tokens(F.lower(F.col("text")))).cast("long")
@@ -17814,42 +17661,14 @@ def q_doc_length_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE aggregation pass over the corpus: the (length, half) histogram
     # is tiny (|distinct lengths| × 2 rows) and every downstream frame —
-    # reference histogram, totals, edges, per-bin counts — derives from
-    # it. r12: previously halves itself was checkpointed and re-read by
-    # three separate aggregations; the prefix sum also ran the full
-    # static 64-bit depth, now bounded by a max-length probe on the
-    # checkpointed histogram (a ~hundreds-of-rows job, not a corpus pass).
+    # reference histogram, edges, per-bin counts — derives from it
     hist2 = halves.groupBy("__w", "__ref").agg(
         F.count(F.lit(1)).cast("long").alias("__f")
     ).localCheckpoint(eager=False)
-    mx = hist2.agg(F.max("__w").alias("mx")).first()["mx"]
-    rhist = hist2.filter("__ref").select("__w", "__f")
-    rh = _exclusive_prefix(
-        rhist, "__w", "__f", "__cum", max_key=mx if mx is not None else 0
+    _, edges = drift.equidepth_edges(
+        hist2.filter("__ref").select("__w", "__f"), "__w", "__f", 10
     )
-    rtot = rhist.agg(F.sum("__f").cast("long").alias("__nr"))
-    bins = spark.createDataFrame(
-        [(b,) for b in range(1, 11)], "bin int"
-    ).select(F.col("bin").cast("long").alias("bin"))
-    edges = (
-        rh.crossJoin(F.broadcast(rtot))
-        .crossJoin(F.broadcast(bins))
-        .filter(
-            10 * (F.col("__cum") + F.col("__f"))
-            >= F.col("bin") * F.col("__nr")
-        )
-        .groupBy("bin")
-        .agg(F.min("__w").alias("__edge"))
-    )
-    assigned = (
-        hist2.crossJoin(F.broadcast(edges))
-        .filter(
-            (F.col("__w") <= F.col("__edge")) | (F.col("bin") == 10)
-        )
-        .groupBy("__w", "__ref", "__f")
-        .agg(F.min("bin").alias("bin"))
-    )
-    per_bin = assigned.groupBy("bin").agg(
+    per_bin = drift.assign_bins(hist2, edges, "__w", 10).groupBy("bin").agg(
         F.sum(F.when(F.col("__ref"), F.col("__f")).otherwise(0))
         .cast("long")
         .alias("__r"),
@@ -17857,38 +17676,12 @@ def q_doc_length_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("__c"),
     )
-    dense = bins.join(F.broadcast(per_bin), "bin", "left").select(
+    dense = edges.join(F.broadcast(per_bin), "bin", "left").select(
         "bin",
         F.coalesce("__r", F.lit(0)).alias("__r"),
         F.coalesce("__c", F.lit(0)).alias("__c"),
     )
-    tots = hist2.agg(
-        F.sum(F.when(F.col("__ref"), F.col("__f")).otherwise(0))
-        .cast("long")
-        .alias("n_ref"),
-        F.sum(F.when(~F.col("__ref"), F.col("__f")).otherwise(0))
-        .cast("long")
-        .alias("n_cur"),
-    )
-    jd = dense.crossJoin(F.broadcast(tots))
-    pr = (F.col("__r").cast("double") + 0.5) / (
-        F.col("n_ref").cast("double") + 5.0
-    )
-    pc = (F.col("__c").cast("double") + 0.5) / (
-        F.col("n_cur").cast("double") + 5.0
-    )
-    term = F.round((pc - pr) * F.log(pc / pr) * 1e9, 0).cast("long")
-    psiq = jd.agg(F.sum(term).cast("long").alias("__pq"))
-    out = psiq.crossJoin(F.broadcast(tots))
-    psi = F.col("__pq").cast("double") / 1e9
-    return out.select(
-        "n_ref", "n_cur",
-        F.round(psi, 6).alias("psi"),
-        F.when(psi < 0.1, "stable")
-        .when(psi < 0.25, "moderate")
-        .otherwise("shifted")
-        .alias("verdict"),
-    )
+    return drift.psi_score(dense, "__r", "__c", 10)
 
 
 def _oracle_doc_length_psi_drift_sql() -> str:
@@ -18085,7 +17878,7 @@ FROM tot CROSS JOIN mutual
 
 
 # ===========================================================================
-# Round-8 wave 22: chunk-dedup savings planner, price-dispersion audit,
+# Chunk-dedup savings planner, price-dispersion audit,
 # audit-sample-size planner
 # ===========================================================================
 
@@ -18352,7 +18145,7 @@ FROM n0c
 
 
 # ===========================================================================
-# Round-8 wave 23: Holt exponential smoothing, duplicate-invoice screen,
+# Holt exponential smoothing, duplicate-invoice screen,
 # Elias-gamma postings compression estimate
 # ===========================================================================
 
@@ -18597,7 +18390,7 @@ FROM agg
 
 
 # ===========================================================================
-# Round-8 wave 24: revenue reconciliation, TWAP, junk-token profile
+# Revenue reconciliation, TWAP, junk-token profile
 # ===========================================================================
 
 
@@ -18812,7 +18605,7 @@ FROM tok GROUP BY 1
 
 
 # ===========================================================================
-# Round-8 wave 25: embedding ingestion drift, Cramér's V association,
+# Embedding ingestion drift, Cramér's V association,
 # attribution model comparison
 # ===========================================================================
 
@@ -18954,10 +18747,10 @@ def q_part_brand_type_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     the observed-cells identity χ² = Σ o²·N/(r_b·c_t) − N so zero cells
     never materialize; each cell term is 1e-6-quantized for an
     order-free sum; margins attach as broadcast joins."""
-    # no checkpoint (r12): all four consumers of `cells` land in the ONE
+    # no checkpoint: all four consumers of `cells` land in the ONE
     # final-aggregate job, where ReuseExchange already dedupes the cell
     # aggregation's exchange — a lazy checkpoint here only adds its
-    # build-time stage execution (the change-4 lesson applied)
+    # build-time stage execution
     p = _t(spark, sf_dir, "part")
     cells = p.groupBy("p_brand", "p_type").agg(
         F.count(F.lit(1)).cast("long").alias("__o")
@@ -19138,7 +18931,7 @@ FROM fl JOIN lin USING (event_type)
 
 
 # ===========================================================================
-# Round-8 wave 26: fingerprint-aggressiveness ladder, exact midrank
+# Fingerprint-aggressiveness ladder, exact midrank
 # Spearman, SPC control chart
 # ===========================================================================
 
@@ -19227,7 +19020,7 @@ def q_part_size_price_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def rank_map(c: str) -> DataFrame:
         hist = p.groupBy(c).agg(F.count(F.lit(1)).alias("__f"))
-        _hck, h = _hist_prefix(hist, c, "__f", "__cb")
+        _hck, h = hist_prefix(hist, c, "__f", "__cb")
         return h.select(
             c, (2 * F.col("__cb") + F.col("__f") + 1).alias(f"__r{c}")
         )
@@ -19404,7 +19197,7 @@ FROM lim
 
 
 # ===========================================================================
-# Round-8 wave 27: term burstiness, max drawdown, micro/macro conversion
+# Term burstiness, max drawdown, micro/macro conversion
 # ===========================================================================
 
 
@@ -19471,7 +19264,7 @@ def q_events_value_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("__c")
     )
-    _dck, h = _hist_prefix(daily, "__d", "__c", "__cb")
+    _dck, h = hist_prefix(daily, "__d", "__c", "__cb")
     cum = h.select(
         "__d", (F.col("__cb") + F.col("__c")).alias("__cum")
     ).localCheckpoint(eager=False)
@@ -20876,7 +20669,7 @@ def q_similarity_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Lloyd fit and the PQ codebook SAMPLE are independent (the
     # sample is reduced against the fitted centroids only on the driver,
     # after both exist) — build them from two driver threads so the two
-    # serial collect chains interleave (r12, overlap-independent-jobs)
+    # serial collect chains interleave
     cents, samp = run_concurrently([
         lambda: kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=2),
         lambda: S.ivf_centroids(emb, "vec_id", "embedding", k=16),
@@ -21327,7 +21120,7 @@ def q_similarity_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _ts(spark, sf_dir, "embeddings").localCheckpoint(eager=False)
     # ^ same shared-scan barrier as q_similarity_ivfpq_residual, and the
-    # same concurrent fit+sample staging (r12, overlap-independent-jobs)
+    # same concurrent fit+sample staging
     cents, samp = run_concurrently([
         lambda: kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=2),
         lambda: S.ivf_centroids(emb, "vec_id", "embedding", k=16),
@@ -21578,42 +21371,22 @@ def q_events_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFram
     (operators/sketches.py bottomk_sample: the 256 rows with smallest
     md5(event_id) — a uniform RNG-free sample gathered by TakeOrdered,
     merge-closed so the streaming path accumulates losslessly, asserted
-    in tests/test_stateful_stream.py). Both sides use the same discrete
-    rule — value at integer rank ceil(q·n) = (q10·n+9) DIV 10, picked
-    from a cents histogram via the bounded-fan-in exclusive prefix sum —
-    so the comparison isolates SAMPLING error, not rule mismatch. The
+    in tests/test_stateful_stream.py). Both sides use the drift monitors'
+    decile rule (`streaming.drift.value_deciles`: the value at integer
+    rank ceil(q·n), off a cents histogram) — so the comparison isolates
+    SAMPLING error, not rule mismatch. The
     exact side's histogram is |distinct cents|-bounded, never a raw-row
     sort; integer ranks keep both engines bit-identical (no 0.1·n
     float-boundary surprises)."""
     from beacon_indexer_spark.operators import sketches as K
+    from beacon_indexer_spark.streaming.drift import value_deciles
 
     e = _t(spark, sf_dir, "events")
     samp = K.bottomk_sample(e, "value", "event_id", k=256)
-    qf = spark.createDataFrame(
-        [(i,) for i in range(1, 10)], "q10 long"
-    )
-
-    def deciles(vals: DataFrame, out: str) -> DataFrame:
-        hist = vals.groupBy(
-            F.round(F.col("value") * 100, 0).cast("long").alias("__k")
-        ).agg(F.count(F.lit(1)).cast("long").alias("__f"))
-        hist, h = _hist_prefix(hist, "__k", "__f", "__cum")
-        tot = hist.agg(F.sum("__f").cast("long").alias("__n"))
-        return (
-            h.crossJoin(F.broadcast(tot))
-            .crossJoin(F.broadcast(qf))
-            .filter(
-                F.col("__cum") + F.col("__f")
-                >= F.expr("CAST((q10 * __n + 9) DIV 10 AS BIGINT)")
-            )
-            .groupBy("q10")
-            .agg((F.min("__k").cast("double") / 100.0).alias(out))
-        )
-
-    est = deciles(samp.select("value"), "est")
-    exact = deciles(
-        e.select(F.col("value").cast("double").alias("value")), "exact"
-    )
+    est = value_deciles(samp).withColumnRenamed("dec", "est")
+    exact = value_deciles(
+        e.select(F.col("value").cast("double").alias("value"))
+    ).withColumnRenamed("dec", "exact")
     return est.join(exact, "q10").select(
         (F.col("q10").cast("double") / 10.0).alias("q"),
         "est",
@@ -21788,10 +21561,10 @@ def q_embedding_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _ts(spark, sf_dir, "embeddings")
     cents = S.ivf_centroids(emb, k=8)
     queries = emb.filter(F.col("vec_id") < 5)
-    # ONE corpus scan for both rankings (r13, §1.2), checkpoint-staged
-    # because the two DCG aggregations are separate consumers — the old
-    # shape ran ivf_topk + brute_force_topk (two corpus scans, two
-    # cosine passes); the surviving frame is <= 2k rows per query.
+    # ONE corpus scan for both rankings, checkpoint-staged because the
+    # two DCG aggregations are separate consumers (ivf_topk +
+    # brute_force_topk would be two corpus scans and two cosine passes);
+    # the surviving frame is <= 2k rows per query.
     pairs = S.ivf_exact_scored(
         emb, queries, cents, k=10, nprobe=2
     ).localCheckpoint(eager=False)

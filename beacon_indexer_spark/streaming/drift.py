@@ -1,15 +1,26 @@
-"""Streaming distribution-drift monitor: per-micro-batch PSI against a
-stored reference.
+"""Streaming distribution-drift monitors, and the drift rules they and
+the batch drift queries share.
 
 The reference has nothing like this (its pipeline trusts the beacon node);
 a training-data ingest loop needs the classic model-monitoring read — "is
 what I'm ingesting TODAY still distributed like the corpus I validated" —
-continuously, not as a post-hoc batch audit. The batch analogue is
-`doc_length_psi_drift` in plans/queries.py (oracle-checked); this module
-is the streaming composition: build the reference decile bins ONCE
-(`psi_reference`), then score every micro-batch against them inside
-`foreachBatch` (`batch_psi`) and append the verdict row to a monitor
-table.
+continuously, not as a post-hoc batch audit. The monitors build a
+reference ONCE (`psi_reference`, `quantile_reference`), then score every
+micro-batch against it inside `foreachBatch` (`batch_psi`,
+`batch_quantile_drift`) and append the verdict row to a monitor table.
+
+Each rule is written here once:
+
+- the decile rule (`value_deciles`): exact lower deciles of a value at
+  cent resolution, off `operators/histogram.py:hist_quantiles`;
+- the PSI rule: equidepth edges (`equidepth_edges`), bin assignment
+  (`assign_bins`), the score over per-bin counts with 0.5-Laplace terms
+  quantized to 1e-9 and the `PSI_STABLE`/`PSI_MODERATE` verdict
+  (`psi_score`).
+
+The oracle-checked queries `doc_length_psi_drift` and
+`events_value_quantile_sketch` in plans/queries.py are built from these
+rules, so the DuckDB oracle gate checks the monitors' own code.
 
 Scale: the reference build is one |distinct values| histogram +
 equidepth thresholds (the optimizer-statistics shape); each batch pays
@@ -24,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from beacon_indexer_spark.operators.histogram import hist_quantiles
+
 PSI_STABLE = 0.1
 PSI_MODERATE = 0.25
 
@@ -31,41 +44,30 @@ QD_STABLE = 0.10
 QD_MODERATE = 0.25
 
 
+def value_deciles(values: DataFrame) -> DataFrame:
+    """(q10, dec): the exact lower deciles q10/10 (q10 = 1..9) of the
+    ``value`` column, rounded to cents: the smallest value whose
+    cumulative count reaches ceil(q10·n/10)."""
+    hist = values.groupBy(
+        F.round(F.col("value") * 100, 0).cast("long").alias("__k")
+    ).agg(F.count(F.lit(1)).cast("long").alias("__f"))
+    _, q = hist_quantiles(hist, "__k", "__f", range(1, 10), 10)
+    return q.select(
+        F.col("r").alias("q10"),
+        (F.col("__k").cast("double") / 100.0).alias("dec"),
+    )
+
+
 def quantile_reference(
     df: DataFrame, value_col: str, id_col: str, k: int = 256
 ) -> DataFrame:
-    """(q10, ref) reference deciles from a bottom-k priority sample
-    (operators/sketches.py) — persist once, feed batch_quantile_drift.
-    Deciles use the integer-rank (q10·n+9) DIV 10 rule over the sample's
-    cents histogram (the events_value_quantile_sketch convention)."""
+    """(q10, ref) reference deciles (`value_deciles`) of a bottom-k
+    priority sample (operators/sketches.py) — persist once, feed
+    batch_quantile_drift."""
     from beacon_indexer_spark.operators.sketches import bottomk_sample
 
     samp = bottomk_sample(df, value_col, id_col, k=k)
-    return _sample_deciles(samp).withColumnRenamed("dec", "ref")
-
-
-def _sample_deciles(samp: DataFrame) -> DataFrame:
-    """(q10, dec) deciles of a bounded (pri, value) sample frame."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
-    hist = samp.groupBy(
-        F.round(F.col("value") * 100, 0).cast("long").alias("__k")
-    ).agg(F.count(F.lit(1)).cast("long").alias("__f"))
-    h = _exclusive_prefix(hist, "__k", "__f", "__cum")
-    tot = hist.agg(F.sum("__f").cast("long").alias("__n"))
-    qf = samp.sparkSession.createDataFrame(
-        [(i,) for i in range(1, 10)], "q10 long"
-    )
-    return (
-        h.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(qf))
-        .filter(
-            F.col("__cum") + F.col("__f")
-            >= F.expr("CAST((q10 * __n + 9) DIV 10 AS BIGINT)")
-        )
-        .groupBy("q10")
-        .agg((F.min("__k").cast("double") / 100.0).alias("dec"))
-    )
+    return value_deciles(samp).withColumnRenamed("dec", "ref")
 
 
 def batch_quantile_drift(
@@ -86,7 +88,7 @@ def batch_quantile_drift(
 
     n = batch_df.select(F.count(F.lit(1)).cast("long").alias("n_rows"))
     samp = bottomk_sample(batch_df, value_col, id_col, k=k)
-    cur = _sample_deciles(samp)
+    cur = value_deciles(samp)
     shift = (
         reference.join(cur, "q10", "left")
         .select(
@@ -109,44 +111,74 @@ def batch_quantile_drift(
     )
 
 
+def equidepth_edges(hist: DataFrame, key: str, count: str, bins: int):
+    """(bin, edge): the upper edges of ``bins`` equidepth bins of a
+    histogram — edge b is the exact lower quantile b/bins of the key.
+    Returns ``(hist, edges)``, the histogram checkpointed as
+    `hist_quantiles` returns it."""
+    hist, q = hist_quantiles(hist, key, count, range(1, bins + 1), bins)
+    return hist, q.select(F.col("r").alias("bin"), F.col(key).alias("edge"))
+
+
+def assign_bins(hist: DataFrame, edges: DataFrame, key: str, bins: int) -> DataFrame:
+    """Every row of ``hist`` with ``bin``: the first bin whose upper edge
+    holds its key; the last bin also takes every key above its edge."""
+    return (
+        hist.crossJoin(F.broadcast(edges.select("bin", "edge")))
+        .filter((F.col(key) <= F.col("edge")) | (F.col("bin") == bins))
+        .groupBy(*hist.columns)
+        .agg(F.min("bin").alias("bin"))
+    )
+
+
+def psi_score(dense: DataFrame, ref: str, cur: str, bins: int) -> DataFrame:
+    """One row (n_ref, n_cur, psi, verdict) from per-bin counts ``dense``
+    (one row per bin, reference count ``ref`` and current count ``cur``):
+    PSI = Σ (p_cur − p_ref)·ln(p_cur/p_ref) with 0.5-Laplace smoothing,
+    which keeps empty bins finite, each term quantized to an integer
+    count of 1e-9. The verdict reads the unrounded PSI against
+    `PSI_STABLE` and `PSI_MODERATE`; psi is rounded to 6 places."""
+    tots = dense.agg(
+        F.sum(ref).cast("long").alias("n_ref"),
+        F.sum(cur).cast("long").alias("n_cur"),
+    )
+    jd = dense.crossJoin(F.broadcast(tots))
+    pr = (F.col(ref).cast("double") + 0.5) / (
+        F.col("n_ref").cast("double") + 0.5 * bins
+    )
+    pc = (F.col(cur).cast("double") + 0.5) / (
+        F.col("n_cur").cast("double") + 0.5 * bins
+    )
+    term = F.round((pc - pr) * F.log(pc / pr) * 1e9, 0).cast("long")
+    out = jd.agg(
+        F.max("n_ref").alias("n_ref"),
+        F.max("n_cur").alias("n_cur"),
+        (F.sum(term).cast("double") / 1e9).alias("__psi"),
+    )
+    psi = F.col("__psi")
+    return out.select(
+        "n_ref",
+        "n_cur",
+        F.round(psi, 6).alias("psi"),
+        F.when(psi < PSI_STABLE, "stable")
+        .when(psi < PSI_MODERATE, "moderate")
+        .otherwise("shifted")
+        .alias("verdict"),
+    )
+
+
 def psi_reference(df: DataFrame, value_col: str, bins: int = 10) -> DataFrame:
     """(bin, edge, ref_n): equidepth bin upper edges of `value_col` on the
     reference corpus plus the reference count per bin. Persist this once
     (it IS the monitoring contract) and feed it to `batch_psi`."""
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
-
     hist = df.groupBy(F.col(value_col).cast("long").alias("__w")).agg(
         F.count(F.lit(1)).cast("long").alias("__f")
     )
-    h = _exclusive_prefix(hist, "__w", "__f", "__cum")
-    tot = hist.agg(F.sum("__f").cast("long").alias("__n"))
-    bdf = (
-        df.sparkSession.createDataFrame(
-            [(b,) for b in range(1, bins + 1)], "bin int"
-        ).select(F.col("bin").cast("long").alias("bin"))
-    )
-    edges = (
-        h.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(bdf))
-        .filter(
-            bins * (F.col("__cum") + F.col("__f"))
-            >= F.col("bin") * F.col("__n")
-        )
-        .groupBy("bin")
-        .agg(F.min("__w").alias("edge"))
-    )
-    assigned = (
-        hist.crossJoin(F.broadcast(edges))
-        .filter(
-            (F.col("__w") <= F.col("edge")) | (F.col("bin") == bins)
-        )
-        .groupBy("__w", "__f")
-        .agg(F.min("bin").alias("bin"))
-    )
-    per_bin = assigned.groupBy("bin").agg(
+    hist, edges = equidepth_edges(hist, "__w", "__f", bins)
+    per_bin = assign_bins(hist, edges, "__w", bins).groupBy("bin").agg(
         F.sum("__f").cast("long").alias("ref_n")
     )
-    return bdf.join(edges, "bin").join(per_bin, "bin", "left").select(
+    return edges.join(per_bin, "bin", "left").select(
         "bin", "edge", F.coalesce("ref_n", F.lit(0)).alias("ref_n")
     )
 
@@ -158,55 +190,28 @@ def batch_psi(
     bins: int | None = None,
 ) -> DataFrame:
     """One monitor row (n_rows, psi, verdict) scoring `batch_df` against
-    a `psi_reference` frame. Laplace 0.5 smoothing keeps empty bins
-    finite; bins has one row per reference decile so the join is a tiny
-    broadcast. Pass `bins` (the reference row count, fixed for the life
-    of the monitoring contract) when wiring into foreachBatch to avoid
-    an extra Spark action per micro-batch; left None it is counted once
-    per call. A zero-row batch reads verdict 'empty' — quiet periods are
-    not distribution shift."""
+    a `psi_reference` frame (`psi_score`); bins has one row per reference
+    decile so the join is a tiny broadcast. Pass `bins` (the reference
+    row count, fixed for the life of the monitoring contract) when wiring
+    into foreachBatch to avoid an extra Spark action per micro-batch;
+    left None it is counted once per call. A zero-row batch reads verdict
+    'empty' — quiet periods are not distribution shift."""
     if bins is None:
         bins = reference.count()
     hist = batch_df.groupBy(
         F.col(value_col).cast("long").alias("__w")
     ).agg(F.count(F.lit(1)).cast("long").alias("__f"))
-    assigned = (
-        hist.crossJoin(F.broadcast(reference.select("bin", "edge")))
-        .filter(
-            (F.col("__w") <= F.col("edge")) | (F.col("bin") == bins)
-        )
-        .groupBy("__w", "__f")
-        .agg(F.min("bin").alias("bin"))
-    )
-    cur = assigned.groupBy("bin").agg(
+    cur = assign_bins(hist, reference, "__w", bins).groupBy("bin").agg(
         F.sum("__f").cast("long").alias("__c")
     )
     dense = reference.join(cur, "bin", "left").select(
         "bin", "ref_n", F.coalesce("__c", F.lit(0)).alias("__c")
     )
-    tots = dense.agg(
-        F.sum("ref_n").cast("long").alias("__nr"),
-        F.sum("__c").cast("long").alias("__nc"),
-    )
-    jd = dense.crossJoin(F.broadcast(tots))
-    pr = (F.col("ref_n").cast("double") + 0.5) / (
-        F.col("__nr").cast("double") + 0.5 * bins
-    )
-    pc = (F.col("__c").cast("double") + 0.5) / (
-        F.col("__nc").cast("double") + 0.5 * bins
-    )
-    term = F.round((pc - pr) * F.log(pc / pr) * 1e9, 0).cast("long")
-    out = jd.agg(
-        F.max("__nc").alias("n_rows"),
-        (F.sum(term).cast("double") / 1e9).alias("__psi"),
-    )
-    return out.select(
-        "n_rows",
-        F.round(F.col("__psi"), 6).alias("psi"),
-        F.when(F.col("n_rows") == 0, "empty")
-        .when(F.col("__psi") < PSI_STABLE, "stable")
-        .when(F.col("__psi") < PSI_MODERATE, "moderate")
-        .otherwise("shifted")
+    return psi_score(dense, "ref_n", "__c", bins).select(
+        F.col("n_cur").alias("n_rows"),
+        "psi",
+        F.when(F.col("n_cur") == 0, "empty")
+        .otherwise(F.col("verdict"))
         .alias("verdict"),
     )
 

@@ -8,6 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 from beacon_indexer_spark.operators import dedup as D
+from beacon_indexer_spark.operators import histogram as H
 from beacon_indexer_spark.operators import relational as R
 from beacon_indexer_spark.operators import sampling as SP
 from beacon_indexer_spark.operators import text as X
@@ -314,7 +315,7 @@ def test_exclusive_prefix_data_aware_depth(spark):
     for max_key in (20, None):
         got = {
             r["k"]: r["out"]
-            for r in X._exclusive_prefix(
+            for r in H.exclusive_prefix(
                 df, "k", "v", "out", fan=4, max_key=max_key
             ).collect()
         }

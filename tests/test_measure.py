@@ -84,3 +84,17 @@ def test_curation_run_jobs_name_their_operator(spark):
     # aggregate's shuffle-map stage and the checkpoint
     assert jobs.count("bis:spine:cc.round0") == 3, jobs
     assert "bis:spine:cc.round1" not in descs, descs
+
+
+def test_histogram_probe_jobs_name_their_operator(spark, sf_dir):
+    """A statistics-family query measured as a query: the jobs that stage
+    its value histogram and probe the key range are tagged ``hist.probe``
+    under the query's scope, and they are its only build-time jobs."""
+    from beacon_indexer_spark.plans.queries import QUERIES, _t
+
+    name = "events_value_equidepth_hist"
+    _t(spark, sf_dir, "events")  # the schema read is not the query's job
+    m = measure(spark, lambda: QUERIES[name](spark, sf_dir), name, collect=True)
+    jobs = [j.description for j in job_table(spark, m.first_job, m.end_job)]
+    assert f"bis:{name}:hist.probe" in jobs, jobs
+    assert set(jobs) == {f"bis:{name}:hist.probe", f"bis:{name}:exec"}, jobs

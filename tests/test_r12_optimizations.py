@@ -2,10 +2,11 @@
 operator changes the optimization round made. Every test pins a
 RESULT-equivalence claim the optimization relies on:
 
-- `_exclusive_prefix` multi-value form == N independent single-value runs
-- `_hist_prefix` (probe-bounded depth, zero-base key shift) == the plain
+- `exclusive_prefix` multi-value form == N independent single-value runs
+- `hist_prefix` (probe-bounded depth, zero-base key shift) == the plain
   static-depth prefix, including negative keys, a zero-spread key domain,
-  and the empty frame
+  and the empty frame; `hist_quantiles` == a sorted-list lower quantile
+  on the same inputs, with ties and r = den
 - `gramian_partials` (Arrow-batch integer matmul) == the JVM
   posexplode-of-outer-products pass, cell for cell, as exact integers
 - `connected_components` without the edge-level distinct labels a
@@ -56,13 +57,18 @@ def _brute_prefix(rows, vcol):
     return out
 
 
+def _lower_quantile(values, r, den):
+    """The value at 1-based rank ceil(r·n/den) of the sorted values."""
+    return values[-(-r * len(values) // den) - 1]
+
+
 def test_exclusive_prefix_multival_matches_single(spark, keyed):
-    from beacon_indexer_spark.operators.text import _exclusive_prefix
+    from beacon_indexer_spark.operators.histogram import exclusive_prefix
 
     shifted = keyed.withColumn("k", F.col("k") + F.lit(70000))
-    multi = _exclusive_prefix(shifted, "k", ["v1", "v2"], ["p1", "p2"])
-    s1 = _exclusive_prefix(shifted, "k", "v1", "p1")
-    s2 = _exclusive_prefix(shifted, "k", "v2", "p2")
+    multi = exclusive_prefix(shifted, "k", ["v1", "v2"], ["p1", "p2"])
+    s1 = exclusive_prefix(shifted, "k", "v1", "p1")
+    s2 = exclusive_prefix(shifted, "k", "v2", "p2")
     assert _rows(multi, "k", "p1", "p2") == sorted(
         (a[0], a[1], b[1])
         for a, b in zip(_rows(s1, "k", "p1"), _rows(s2, "k", "p2"))
@@ -70,28 +76,55 @@ def test_exclusive_prefix_multival_matches_single(spark, keyed):
 
 
 def test_hist_prefix_matches_brute_force_with_negative_keys(spark, keyed):
-    from beacon_indexer_spark.plans.queries import _hist_prefix
+    from beacon_indexer_spark.operators.histogram import (
+        hist_prefix,
+        hist_quantiles,
+    )
 
     rows = [(r["k"], r["v1"], r["v2"]) for r in keyed.collect()]
-    hist, pre = _hist_prefix(keyed, "k", ["v1", "v2"], ["p1", "p2"])
+    hist, pre = hist_prefix(keyed, "k", ["v1", "v2"], ["p1", "p2"])
     got = _rows(pre, "k", "p1", "p2")
     b1, b2 = _brute_prefix(rows, "v1"), _brute_prefix(rows, "v2")
     assert got == sorted((k, b1[k], b2[k]) for k, _, _ in rows)
     # the returned hist frame still carries the ORIGINAL (unshifted) keys
     assert _rows(hist, "k") == sorted((k,) for k, _, _ in rows)
 
+    # quantiles over the v1 counts (ties: several keys reach a rank's
+    # threshold; the lowest wins), against the sorted raw values
+    ranks, den = [1, 2, 5, 9, 10], 10
+    _, q = hist_quantiles(keyed, "k", "v1", ranks, den)
+    values = sorted(k for k, v1, _ in rows for _ in range(v1))
+    assert _rows(q, "r", "k", "n") == [
+        (r, _lower_quantile(values, r, den), len(values)) for r in ranks
+    ]
+
 
 def test_hist_prefix_single_key_and_empty(spark):
-    from beacon_indexer_spark.plans.queries import _hist_prefix
+    from beacon_indexer_spark.operators.histogram import (
+        hist_prefix,
+        hist_quantiles,
+    )
 
     one = spark.createDataFrame([(42, 7)], "k long, v long")
-    _, pre = _hist_prefix(one, "k", "v", "p")
+    _, pre = hist_prefix(one, "k", "v", "p")
     assert _rows(pre, "k", "p") == [(42, 0)]
+    # a single key is every quantile, r = den included
+    _, q = hist_quantiles(one, "k", "v", [1, 2], 2)
+    assert _rows(q, "r", "k", "n") == [(1, 42, 7), (2, 42, 7)]
+
+    # ties at the lower median: two keys, equal counts, r/den = 1/2
+    two = spark.createDataFrame([(-5, 3), (8, 3)], "k long, v long")
+    _, q = hist_quantiles(two, "k", "v", [1, 2], 2)
+    assert _rows(q, "r", "k") == [(1, -5), (2, 8)]
 
     empty = spark.createDataFrame([], "k long, v long")
-    _, pre = _hist_prefix(empty, "k", "v", "p")
+    _, pre = hist_prefix(empty, "k", "v", "p")
     assert pre.count() == 0
     assert "p" in pre.columns
+    # an empty histogram has no quantile rows, so a caller's GROUP BY
+    # shape (no row) holds; one-row callers left-join for their NULL
+    _, q = hist_quantiles(empty, "k", "v", [1], 2)
+    assert q.count() == 0 and q.columns == ["r", "k", "n"]
 
 
 # --------------------------------------------------------------- gramian

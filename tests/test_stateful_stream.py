@@ -335,6 +335,23 @@ def test_streaming_embedding_incremental_dedup(spark, tmp_path):
     assert verdicts[12] is None  # far vector passes
 
 
+def test_psi_reference_runs_at_probe_bounded_depth(spark):
+    """The reference's equidepth edges come off `hist_quantiles`, whose
+    prefix sum runs at the depth the probed key range needs: 13 jobs on
+    this 400-row reference, where the static 64-bit depth ran 30."""
+    from beacon_indexer_spark.measure import measure
+    from beacon_indexer_spark.streaming.drift import psi_reference
+
+    ref = spark.createDataFrame(
+        [(i, 10 + (i % 20)) for i in range(400)], "id long, w long"
+    )
+    m = measure(spark, lambda: psi_reference(ref, "w"), "psi_ref", collect=True)
+    assert sorted(tuple(r) for r in m.rows) == [
+        (b, 9 + 2 * b, 40) for b in range(1, 11)
+    ]
+    assert m.jobs <= 15, m.jobs
+
+
 def test_batch_psi_empty_batch_reads_empty(spark):
     """A zero-row micro-batch must read verdict 'empty', never 'shifted':
     Laplace smoothing turns an empty histogram into a uniform
