@@ -10317,8 +10317,8 @@ def q_corpus_bigram_cond_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through the aggregate onto the grouping key (so the four `_h`
     # consumers would NOT hit ReuseExchange — their pre-aggregate filters
     # differ) and re-reading the vocabulary-sized checkpoint blocks beats
-    # re-running the regexp tokenize+explode+aggregate per consumer (the
-    # old shape paid that pipeline 4×: s-chain and tot for each order).
+    # re-running the regexp tokenize+explode+aggregate per consumer
+    # (unstaged, the s-chain and tot of each order pay that pipeline: 4×).
     grams = (
         docs.select(
             F.explode(
